@@ -292,22 +292,29 @@ def _wave_partitions(spark: SparkSession, state: CrawlState) -> int | None:
 
 
 def run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
+    n_part = _wave_partitions(spark, state)
+    if n_part is None:
+        return _run_wave(spark, state, wave)
+    # session conf is the only per-wave override channel; snapshot and
+    # restore it (ADVICE r05) so non-crawl SQL in the same session never
+    # inherits a frontier-derived partition count — on every exit path,
+    # a failing selection job included. Partition count never changes
+    # results, so the background seen-delta job racing the restore is at
+    # most a perf wobble.
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
+    try:
+        return _run_wave(spark, state, wave)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
     import os as _os
     import time as _time
 
     _timing = _os.environ.get("SPARK_GRAFT_WAVE_TIMING") == "1"
     _t0 = _time.time()
-
-    _n_part = _wave_partitions(spark, state)
-    _prev_part = None
-    if _n_part is not None:
-        # session conf is the only per-wave override channel; snapshot
-        # and restore it (ADVICE r05) so non-crawl SQL in the same
-        # session never inherits a frontier-derived partition count.
-        # Partition count never changes results, so the background
-        # seen-delta job racing the restore is at most a perf wobble.
-        _prev_part = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(_n_part))
 
     def _mark(label: str) -> None:
         nonlocal _t0
@@ -840,8 +847,6 @@ def run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         _mark("stage_commit")
     finally:
         ex.shutdown(wait=True)
-        if _prev_part is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", _prev_part)
 
     # stats from the already-written lineage parquet (one tiny read — no
     # recount jobs over the big frames)

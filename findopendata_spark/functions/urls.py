@@ -49,10 +49,12 @@ from pyspark.sql import functions as F
 # (userinfo), '%' (an invalid escape would make java.net.URI throw where
 # passthrough would not), uppercase or whitespace/control; '/' allowed
 # mid-string but not as the final char (trailing-slash strip) nor first
-# after the scheme (empty authority -> URI returns null authority)
+# after the scheme (empty authority -> URI returns null authority).
+# Anchored with \z, not $: Java's $ also matches before a final line
+# terminator, so "https://a.example.net/d/1\n" would pass unchanged.
 _CANONICAL_RE = (
     r"^https?://[a-z0-9]"
-    r"(?:[a-z0-9._~!$&'()*+,;=/-]*[a-z0-9._~!$&'()*+,;=-])?$"
+    r"(?:[a-z0-9._~!$&'()*+,;=/-]*[a-z0-9._~!$&'()*+,;=-])?\z"
 )
 
 

@@ -151,7 +151,15 @@ class IncrementalIndexes:
         postings = latest_only(
             self.cat.read_appended(spark, f"trigram_postings_{field}")
         ).drop("wave")
-        sizes = latest_only(sizes_all).drop("wave")
+        # n_grams=0 rows (below-threshold docs, shrink tombstones) stay in
+        # the table so latest-wave-wins can retire older postings, but
+        # are not index entries: a rebuild has no row for such a doc, and
+        # kept here they would surface as jaccard-0 top-k fillers
+        sizes = (
+            latest_only(sizes_all)
+            .filter(F.col("n_grams") > 0)
+            .drop("wave")
+        )
         return {"postings": postings, "sizes": sizes}
 
     # -- IVF ---------------------------------------------------------------

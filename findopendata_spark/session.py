@@ -30,6 +30,17 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
 
+    # Generated classes the codegen cache keeps resident (see
+    # spark.sql.codegen.cache.maxEntries below) keep their JIT-compiled
+    # code in the code cache too. A C1-only JVM (-XX:TieredStopAtLevel=1)
+    # reserves just 48 MB for it, which the 50-query registry filled:
+    # "Out of space in CodeCache for adapters" then kills the JVM.
+    # 240 MB is HotSpot's tiered default. Listed first, so a flag in
+    # SPARK_GRAFT_JVM_OPTS still wins.
+    jvm_opts = "-XX:ReservedCodeCacheSize=240m " + os.environ.get(
+        "SPARK_GRAFT_JVM_OPTS", "-XX:+UseParallelGC"
+    )
+
     # Under spark-submit the master comes from the launcher (--master
     # yarn/k8s/local-cluster...); calling .master() here would silently
     # override it (SparkConf() has no JVM attached pre-launch, so reading
@@ -61,15 +72,9 @@ def get_spark(
         # than ParallelGC on a 10M-row parse_url+xxhash benchmark). Applies
         # only at JVM launch — benchmarks start each level in a fresh
         # process. On a real cluster this goes in executor.extraJavaOptions.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:+UseParallelGC"),
-        )
+        .config("spark.driver.extraJavaOptions", jvm_opts)
         # same GC for separate executor JVMs (local-cluster / real cluster)
-        .config(
-            "spark.executor.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:+UseParallelGC"),
-        )
+        .config("spark.executor.extraJavaOptions", jvm_opts)
         # FAIR scheduling: the wave stages its five per-wave outputs from
         # concurrent driver threads; under FIFO the big frontier write's
         # stages hog every slot and the small writes queue serially
@@ -95,6 +100,16 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # Generated-code cache sized to keep a steady-state crawl wave
+        # resident. Spark's default (100 entries) is smaller than one
+        # wave's working set, so every wave re-generated, Janino-compiled
+        # and JIT-compiled the previous wave's classes. Measured working
+        # sets: one perfbench crawl_revisit wave compiles ~131 distinct
+        # classes, the 6-query perfbench subset ~71 per pass, q14 alone 58
+        # on its first run. At 1000 a wave compiles 6 classes instead of
+        # ~130, and on a 4-core host its CPU time fell 20% and peak PSS 7%.
+        # Static SQL conf: settable only here, before the session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

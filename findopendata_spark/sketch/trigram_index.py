@@ -41,17 +41,31 @@ from pyspark.sql import functions as F
 _CACHE: dict[tuple[str, str, str], dict] = {}
 
 
+_TRIGRAM_RE = r"(?s)(?=([^\p{Cs}].{2}))"
+
+
 def trigram_set_expr(col):
-    """Distinct lowercase character trigrams as an array column."""
+    r"""Distinct lowercase character trigrams as an array column, in order
+    of first occurrence; empty for strings under 3 code points and for
+    null. Grams are code points, as Spark's ``length``/``substr`` count
+    them.
+
+    One codegen'd ``regexp_extract_all`` whose pattern compiles once per
+    task: a zero-width match at every position, capturing the three code
+    points that start there. Two pitfalls of the obvious ``(?=(.{3}))``:
+
+    - without ``(?s)``, ``.`` does not match ``\n``, so every gram that
+      spans a line break is dropped;
+    - Java strings are UTF-16 and the matcher retries one code *unit*
+      later, so on a non-BMP character (emoji) it also matches at the low
+      surrogate and emits a gram that starts mid-pair. ``[^\p{Cs}]``
+      refuses a lone surrogate as the first character; ``.`` consumes a
+      whole surrogate pair as one code point.
+    """
     t = F.lower(col)
     return F.when(
         F.length(t) >= 3,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.length(t) - 2),
-                lambda i: F.substr(t, i, F.lit(3)),
-            )
-        ),
+        F.array_distinct(F.regexp_extract_all(t, F.lit(_TRIGRAM_RE), 1)),
     ).otherwise(F.array().cast("array<string>"))
 
 
@@ -110,7 +124,7 @@ def trigram_index(spark: SparkSession, sf_dir: str, field: str) -> dict:
     from findopendata_spark.dedup import spread_scan
 
     # single-row-group parquet = single-task scan (guide §2.5): spread
-    # the docs BEFORE the interpreted trigram transform, so the build
+    # the docs BEFORE the trigram extraction, so the build
     # parallelizes AND the cached postings/sizes inherit >= parallelism
     # partitions — every warm probe then scans the cache in parallel
     # instead of walking all postings on one core.

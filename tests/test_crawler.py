@@ -877,3 +877,58 @@ def test_fetch_partitions_not_host_skewed(spark, tmp_path):
     assert biggest < n_hot * 0.5, (
         f"fetch output skewed: biggest file {biggest} vs hot {n_hot}"
     )
+
+
+def test_wave_restores_partitions_when_selection_fails(spark, tmp_path,
+                                                       monkeypatch):
+    """The per-wave shuffle-partitions override is restored on every
+    exit path — including a job that fails during selection, before the
+    wave's staging executor exists."""
+    from findopendata_spark.catalog import SnapshotCatalog
+    from findopendata_spark.crawler import wave as W
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    assert prev != "7"
+    st = W.CrawlState(
+        SnapshotCatalog(str(tmp_path / "crawl_fail")),
+        CrawlConfig(per_host_wave_budget=10, wave_partitions=7), GCFG,
+    )
+    W.init_state(spark, st)
+
+    def failing_host(url):
+        # evaluated per row inside the selection checkpoint job
+        return F.coalesce(
+            F.raise_error(F.lit("injected selection failure")).cast("string"),
+            url,
+        )
+
+    monkeypatch.setattr(W, "url_host", failing_host)
+    with pytest.raises(Exception, match="injected selection failure"):
+        W.run_wave(spark, st, 1)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_steady_state_wave_reuses_generated_code(spark, tmp_path):
+    """A steady-state wave finds its generated classes in Spark's codegen
+    cache instead of compiling them again. With the default 100-entry
+    cache every wave evicted and recompiled ~130 classes; sized for the
+    wave's working set, only the classes that inline the wave id as a
+    literal are new (6). Bulk seeds keep the seen filter from
+    rebuilding and the pre-rank is pinned on, so wave 3 runs the same
+    plan shapes as wave 2."""
+    cfg = CrawlConfig(per_host_wave_budget=10, index_fields=("text",),
+                      two_phase_topk="always")
+    gcfg = G.GraphConfig(graph_size=5_000, out_links_min=2, out_links_max=4)
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    after_wave: list[tuple[int, int]] = []
+    crawl(spark, str(tmp_path / "crawl_codegen"), waves=3, cfg=cfg,
+          gcfg=gcfg, bulk_seeds=2_000,
+          log=lambda s: after_wave.append((s["fetched"], compiles.getCount())))
+    assert len(after_wave) == 3
+    fetched, n3 = after_wave[2]
+    assert fetched > 0
+    compiled_in_wave_3 = n3 - after_wave[1][1]
+    assert compiled_in_wave_3 <= 10, compiled_in_wave_3

@@ -376,8 +376,15 @@ def test_trigram_upsert_shrink_to_empty(spark, tmp_path):
 
     inc = idx.trigram_index(spark, "text")
     assert inc["postings"].filter("doc_id = 'd1'").count() == 0
+    # the tombstone stays in the table (it is what retires d1's wave-0
+    # postings) but is no index entry: a rebuild has no row for d1
+    raw = {
+        (r["doc_id"], r["wave"]): r["n_grams"]
+        for r in idx.cat.read_appended(spark, "trigram_sizes_text").collect()
+    }
+    assert raw[("d1", 1)] == 0 and raw[("d1", 0)] > 0
     sizes = {r["doc_id"]: r["n_grams"] for r in inc["sizes"].collect()}
-    assert sizes["d1"] == 0 and sizes["d2"] > 0
+    assert "d1" not in sizes and sizes["d2"] > 0
     # exactly one surviving sizes row per doc (upsert, not append)
     assert (
         inc["sizes"].groupBy("doc_id").count().filter("count > 1").count()
@@ -454,3 +461,45 @@ def test_trigram_upsert_multi_recrawl_and_compaction(spark, tmp_path):
     latest2 = [("d1", "lambda mu nu xi"), ("d2", "delta epsilon"),
                ("d3", "stable text")]
     assert probe_counts() == rebuild_counts(latest2)
+
+
+def test_trigram_incremental_title_fillers_equal_rebuild(spark, docs, tmp_path):
+    """ADVICE r06: docs below the title field's length threshold append
+    n_grams=0 sizes rows. A probe with fewer than k matches pads with
+    jaccard-0 fillers from ``sizes``; those rows must not surface there,
+    because a rebuild has no entry for such docs. Incremental == rebuild,
+    fillers included."""
+    from findopendata_spark.sketch.trigram_index import (
+        _field_grams,
+        trigram_topk,
+    )
+
+    idx = IncrementalIndexes(SnapshotCatalog(str(tmp_path / "cat")))
+    half = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
+    idx.trigram_append(spark, docs.filter(F.col("doc_id") <= half), "title")
+    idx.trigram_append(spark, docs.filter(F.col("doc_id") > half), "title")
+    n_short = docs.filter(F.length("text") < 80).count()
+    assert n_short > 0, "fixture has no below-threshold doc — test inert"
+
+    grams = _field_grams(docs, "title")
+    full = {
+        "postings": grams.select("doc_id", F.explode("g").alias("gram")),
+        "sizes": grams.select("doc_id", F.size("g").alias("n_grams")),
+    }
+    qrow = grams.orderBy("doc_id").limit(1).collect()[0]
+    q_id, q_g = qrow["doc_id"], list(qrow["g"])
+    k = docs.count()  # more than can match: the tail is all fillers
+
+    inc = idx.trigram_index(spark, "title")
+    assert inc["sizes"].count() == full["sizes"].count()
+
+    def ranked(index):
+        return [
+            (r["doc_id"], r["jaccard"])
+            for r in trigram_topk(index, q_id, q_g, k=k, round_digits=6)
+            .orderBy(F.desc("jaccard"), F.asc("doc_id")).collect()
+        ]
+
+    want = ranked(full)
+    assert 0 < sum(j > 0 for _, j in want) < len(want) < k
+    assert ranked(inc) == want

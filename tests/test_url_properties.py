@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import itertools
 
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from findopendata_spark.functions.urls import (
@@ -121,3 +122,34 @@ def test_guarded_canonicalizer_matches_uri_reference(spark):
             .collect()
         )
         assert bad == [], bad[:5]
+
+
+def test_guarded_canonicalizer_throws_where_uri_reference_throws(spark):
+    """Inputs on which the URI reference throws (ANSI ``parse_url``) must
+    not slip through the fast-path guard. Java's ``$`` also matches
+    before a final line terminator, so a ``$``-anchored guard returned
+    ``https://abc.example.net/d/1\\n`` unchanged instead of failing the
+    way the reference does; the guard is anchored with ``\\z``."""
+    base = "https://abc.example.net/d/1"
+    urls = [base + t for t in ("\n", "\r\n", "\r", "\u0085", " ")] + [
+        "http://", "http://a b.example.net/x", "https://abc.example.net/%zz",
+    ]
+
+    def outcome(fn, url):
+        df = spark.createDataFrame([(url,)], "url string")
+        try:
+            return ("ok", df.select(fn(F.col("url"))).collect()[0][0])
+        except PySparkException as e:  # the failure is the outcome
+            return ("throws", type(e).__name__)
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        for u in urls:
+            want = outcome(canonicalize_url_uri, u)
+            assert want[0] == "throws", (u, want)  # corpus precondition
+            assert outcome(canonicalize_url, u) == want, u
+        # the well-formed prefix still takes the fast path unchanged
+        assert outcome(canonicalize_url, base) == ("ok", base)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
