@@ -1,14 +1,13 @@
 """Engine configuration constants.
 
-Mirrors the reference's tunables (``configs-example.yaml:55-63`` and the
-pagination/retry defaults cited per field) so sketches and crawl behavior are
-shape-compatible, while everything else is Spark-native.
+Mirrors the reference's sketch tunables (``configs-example.yaml:55-63``) so
+sketches are shape-compatible, while everything else is Spark-native.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -30,18 +29,12 @@ class SketchConfig:
 class CrawlConfig:
     """Crawl-scheduler parameters.
 
-    Page sizes / retries mirror the reference scrollers
-    (``findopendata/ckan/__init__.py:8-9``,
-    ``findopendata/socrata/__init__.py:4``); politeness is explicit here
-    (the reference gets it implicitly from one serial scroll task per
-    endpoint, README.md:181-196).
+    Politeness is explicit here (the reference gets it implicitly from
+    one serial scroll task per endpoint, README.md:181-196). Every other
+    per-wave choice — the salted pre-rank, the shuffle-partition count
+    and the seen-probe mode — is derived from counts the wave already
+    tracks, not set here.
     """
-
-    page_size: int = 50                 # ckan/__init__.py:8-9
-    record_page_size: int = 25_000      # socrata/__init__.py:4
-    max_retries: int = 3                # ckan/__init__.py:8
-    retry_backoff_s: float = 5.0        # ckan/__init__.py:9
-    schema_inference_head: int = 25_000  # parsers/avro.py:87
 
     # politeness / frontier (north-rule additions; no reference analog)
     # priority_mode: 'bfs' = 1/(depth+1) (reference page-order analog,
@@ -52,26 +45,6 @@ class CrawlConfig:
     per_host_wave_budget: int = 50      # max URLs fetched per host per wave
     host_shards: int = 32               # bucket(K, host) partition count
     hot_host_salt: int = 8              # salt factor for skewed hosts
-    # salted pre-rank before the exact per-host top-k: "auto" skips the
-    # guard (one full frontier shuffle+sort) whenever frontier_count <=
-    # hot_host_salt * budget — no lane could meaningfully exceed the
-    # budget, so the pre-rank provably prunes ~nothing; "always"/"never"
-    # force it (the parity test runs both and compares)
-    two_phase_topk: str = "auto"        # "auto" | "always" | "never"
-    # r05: per-wave shuffle partitioning scaled to the TRACKED frontier
-    # size instead of the session's core-derived default. The XL-wave
-    # profile (BENCH/BASELINE.md r05) showed the scale-killer at 3x wave
-    # size was task GRANULARITY, not orchestration: 2*cores partitions
-    # put 9M-row map tasks on 2-core legs and a 255 s straggler task on
-    # the 8-core leg (stage wall == max task). "auto" sets
-    # spark.sql.shuffle.partitions per wave to
-    # clamp(ceil(frontier/wave_partition_rows), 2*defaultParallelism,
-    # 4096) — deterministic (results are partitioning-independent), no
-    # AQE barriers, and at the 10^10 frontier the 4096 cap keeps task
-    # counts bounded while waves stay ~2.4M rows/task. An int pins the
-    # count; "session" leaves the session value untouched.
-    wave_partitions: object = "auto"    # "auto" | "session" | int
-    wave_partition_rows: int = 150_000  # target frontier rows per task
     # per-wave index maintenance: trigram postings/sizes for these doc
     # fields are appended INSIDE each wave's atomic commit (reference
     # analog: per-harvest sketch upserts, indexing.py:119-168); probe
@@ -93,24 +66,6 @@ class CrawlConfig:
     bloom_bits_per_key: int = 10        # ~1% fpp
     bloom_num_hashes: int = 7
     bloom_shards: int = 16              # per-shard bitsets (10^10: ~1024)
-    seen_filter: str = "bloom"          # "bloom" | "cuckoo" prefilter
-    # probe mode: "broadcast" ships the whole shard dict to every executor
-    # (cheapest below ~100M keys — zero shuffle); "sharded" repartitions
-    # probe rows by shard id and ships each task exactly ONE shard via a
-    # cogroup (the 10^10 path: per-task filter bytes stay ~total/S)
-    seen_probe: str = "broadcast"
-
-
-@dataclass(frozen=True)
-class EngineConfig:
-    sketch: SketchConfig = field(default_factory=SketchConfig)
-    crawl: CrawlConfig = field(default_factory=CrawlConfig)
-
-    # download-format whitelist (reference: ckan_crawler.py:25)
-    accepted_formats: tuple[str, ...] = ("csv",)
-
-
-DEFAULT = EngineConfig()
 
 
 def testdata_dir(sf: str = "0.01") -> str:

@@ -65,7 +65,6 @@ class GraphConfig:
     media_pct: int = 40         # % of docs carrying a media span
     fail_ppt: int = 0           # per-attempt fetch failure rate (parts/1000)
     max_retries: int = 3        # bounded retry before a permanent failure
-    seed: int = 42
 
     @property
     def hot_host(self) -> str:

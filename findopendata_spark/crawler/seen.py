@@ -1,25 +1,31 @@
-"""Sharded URL-seen prefilter: Bloom or cuckoo shards behind one API.
+"""Sharded Bloom URL-seen prefilter — the one module that knows its format.
 
-BASELINE.json names a "partitioned Bloom/cuckoo URL-seen filter
-maintained as broadcast + per-partition shards". This module is that
-seam: ``CrawlConfig.seen_filter`` selects the family, and both are
-sharded by ``pmod(url_hash, n_shards)``:
+BASELINE.json names a partitioned URL-seen filter "maintained as
+broadcast + per-partition shards". This is a Bloom filter sharded by
+``pmod(url_hash, n_shards)``. Filters that also support deletion buy
+nothing here: the crawl never evicts a seen URL (``recrawl_stale``
+keeps recrawled URLs in the seen set).
 
-- **build**: groupBy(shard) → one executor-side vectorized build per
-  shard (numpy bit-scatter for Bloom, bulk cuckoo insert for cuckoo);
-  exactly S small shard blobs travel to the driver — never the keys,
+- **build**: groupBy(shard) → one executor-side numpy bit-scatter per
+  shard; exactly S small bitsets travel to the driver — never the keys,
   and never one partial bitset per input partition.
-- **delta**: per-wave new URLs take the same grouped path; for Bloom
-  the shard deltas OR into the driver copy, for cuckoo the existing
-  shard tables are broadcast and the executors insert into them.
-- **probe**: the shard dict is broadcast; each Arrow batch groups rows
-  by shard id and probes vectorized.
+- **delta**: per-wave new URLs take the same grouped path and their
+  shard bitsets OR into the driver copy.
+- **probe**: while the shards' total bytes fit Spark's own broadcast
+  limit (``spark.sql.autoBroadcastJoinThreshold``), the shard dict is
+  broadcast and each Arrow batch probes its rows grouped by shard id;
+  beyond it, probe rows are cogrouped with the shards by shard id so
+  each task deserializes exactly ONE shard.
 
-At 10^10 keys the monolithic bitset (~12.5 GB at 10 bits/key) cannot
-live on one driver; shards of ~m/S bits can be rebuilt, shipped, and
-(on a real cluster) pinned per-executor independently. Cuckoo trades
-~2 bytes/key for delete support (recrawl eviction) — see
-``crawler/cuckoo.py``.
+Format (:func:`_bitset` writes it, :func:`_hits` reads it): per shard a
+power-of-two bitset of ``m_bits_shard`` bits, bit i at byte ``i >> 3``,
+mask ``1 << (i & 7)``; a key sets the k positions ``h1 + i*h2`` (double
+hashing, Kirsch–Mitzenmacher 2006) over the splitmix-mixed ``url_hash``.
+Shard choice (``pmod``) and positions (mixed hashes) are decorrelated.
+
+At 10^10 keys a monolithic bitset (~12.5 GB at 10 bits/key) cannot live
+on one driver; shards of ~m/S bits can be rebuilt, shipped, and (on a
+real cluster) pinned per-executor independently.
 
 Reference analog: the URL-seen set is unique indexes + upserts in
 Postgres (``sql/create_crawler_tables.sql:45,78,104``).
@@ -33,139 +39,153 @@ import numpy as np
 import pandas as pd
 
 from findopendata_spark.config import CrawlConfig
-from findopendata_spark.crawler import cuckoo as CK
-from findopendata_spark.crawler.bloom import (
-    bloom_size_bits,
-    build_bloom_shards,
-    or_delta_shards,
-    with_maybe_seen_shards,
-)
+from findopendata_spark.crawler.graph import mix
 
 
-def _pow2(n: int) -> int:
-    return 1 << int(np.ceil(np.log2(max(n, 2))))
+def _positions(url_hash: np.ndarray, m_bits: int, k: int) -> np.ndarray:
+    """(len(h), k) bit positions of int64 hashes via double hashing."""
+    h = url_hash.view(np.uint64)
+    h1 = mix(h, 0xB100)
+    h2 = mix(h, 0xB200) | np.uint64(1)
+    i = np.arange(k, dtype=np.uint64)[None, :]
+    with np.errstate(over="ignore"):
+        return ((h1[:, None] + i * h2[:, None]) % np.uint64(m_bits)).astype(np.int64)
+
+
+def _bitset(url_hash: np.ndarray, m_bits: int, k: int) -> bytes:
+    """One shard's bitset over int64 hashes. A bool scatter + packbits is
+    ~10x faster than ``np.bitwise_or.at`` (an unbuffered ufunc)."""
+    bools = np.zeros(m_bits, dtype=bool)
+    bools[_positions(url_hash, m_bits, k).ravel()] = True
+    return np.packbits(bools, bitorder="little").tobytes()
+
+
+def _hits(bits: bytes, url_hash: np.ndarray, m_bits: int, k: int) -> np.ndarray:
+    """Membership of int64 hashes in one shard's bitset (both probes)."""
+    barr = np.frombuffer(bits, dtype=np.uint8)
+    pos = _positions(url_hash, m_bits, k)
+    return ((barr[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1).all(axis=1)
+
+
+def _build_shards(
+    df, m_bits_shard: int, k: int, n_shards: int
+) -> dict[int, bytes]:
+    """One bitset per shard of ``df.url_hash``; shards without keys are
+    all-zero."""
+    from pyspark.sql import functions as F
+
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        bits = _bitset(pdf["url_hash"].to_numpy(np.int64), m_bits_shard, k)
+        return pd.DataFrame({"shard_id": [int(key[0])], "bits": [bits]})
+
+    rows = (
+        df.select(
+            F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int").alias("shard_id"),
+            "url_hash",
+        )
+        .groupBy("shard_id")
+        .applyInPandas(fn, "shard_id int, bits binary")
+        .collect()
+    )
+    empty = b"\x00" * (m_bits_shard // 8)
+    shards = {i: empty for i in range(n_shards)}
+    for row in rows:
+        shards[int(row["shard_id"])] = bytes(row["bits"])
+    return shards
+
+
+def _broadcast_limit(spark) -> int:
+    """Spark's broadcast-join size limit in bytes; -1 means never
+    broadcast. (``spark.conf.get`` returns it as a string like
+    ``'10485760b'``; the parsed long lives on the session's SQLConf.)"""
+    return int(
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
 
 
 @dataclass
 class ShardedSeenFilter:
-    kind: str                    # "bloom" | "cuckoo"
     shards: dict[int, bytes]
     n_shards: int
-    k: int                       # bloom hash rounds (bloom only)
-    m_bits_shard: int            # bloom bitset bits per shard (bloom only)
-    n_buckets_shard: int         # cuckoo buckets per shard (cuckoo only)
+    k: int                       # hash rounds
+    m_bits_shard: int            # bitset bits per shard
     capacity: int                # total keys the filter is sized for
-    force_rebuild: bool = False  # set when a cuckoo insert dropped a key
+    force_rebuild: bool = False  # set when a delta update failed
 
     # -- construction -------------------------------------------------------
     @classmethod
     def build(cls, seen_df, n_keys: int, cfg: CrawlConfig) -> "ShardedSeenFilter":
         """Size for ``n_keys`` (callers pass count*headroom) and build all
-        shards from ``seen_df.url_hash`` executor-side.
-
-        Cuckoo inserts can *drop* keys when a bucket chain stays full
-        after MAX_KICKS; a dropped key is a false negative, which the
-        definite-new dedup path must never see (it skips the exact
-        anti-join). Build therefore retries at doubled capacity until
-        zero keys dropped (load factor halves each retry, so one retry
-        all but guarantees success)."""
+        shards from ``seen_df.url_hash`` executor-side."""
         s = cfg.bloom_shards
-        if cfg.seen_filter == "cuckoo":
-            n_buckets = _pow2(
-                max(n_keys // s, 1024) // int(CK.BUCKET_SLOTS * 0.95) + 1
-            )
-            for _ in range(8):  # each retry doubles bucket count
-                shards, dropped = _build_cuckoo_shards(seen_df, n_buckets, s)
-                if dropped == 0:
-                    return cls("cuckoo", shards, s, 0, 0, n_buckets, n_keys)
-                n_buckets *= 2
-                n_keys *= 2
-            raise RuntimeError(
-                "cuckoo seen-filter build kept dropping keys after 8 "
-                "capacity doublings — input hash distribution is degenerate"
-            )
-        m_shard = bloom_size_bits(max(n_keys // s, 1), cfg.bloom_bits_per_key)
-        shards = build_bloom_shards(seen_df, m_shard, cfg.bloom_num_hashes, s)
-        return cls(
-            "bloom", shards, s, cfg.bloom_num_hashes, m_shard, 0, n_keys
-        )
+        m = max(1024, max(n_keys // s, 1) * cfg.bloom_bits_per_key)
+        m_shard = 1 << int(np.ceil(np.log2(m)))  # pow2 → cheap masking semantics
+        shards = _build_shards(seen_df, m_shard, cfg.bloom_num_hashes, s)
+        return cls(shards, s, cfg.bloom_num_hashes, m_shard, n_keys)
 
-    def needs_rebuild(self, n_keys: int, cfg: CrawlConfig) -> bool:
+    def needs_rebuild(self, n_keys: int) -> bool:
         return self.force_rebuild or n_keys > self.capacity
 
     # -- incremental update ---------------------------------------------------
     def or_delta(self, spark, delta_df) -> None:
-        if self.kind == "cuckoo":
-            bc = spark.sparkContext.broadcast(self.shards)
-            try:
-                new_shards, dropped = _insert_cuckoo_shards(
-                    delta_df, bc, self.n_buckets_shard, self.n_shards
+        """OR the shard bitsets of ``delta_df.url_hash`` into the driver
+        copy; only the touched shards change."""
+        delta = _build_shards(delta_df, self.m_bits_shard, self.k, self.n_shards)
+        out = dict(self.shards)
+        for sid, bits in delta.items():
+            if any(bits):
+                acc = np.frombuffer(out[sid], dtype=np.uint8) | np.frombuffer(
+                    bits, dtype=np.uint8
                 )
-                self.shards.update(new_shards)
-                if dropped > 0:
-                    # A dropped key is a latent false negative: force a
-                    # full rebuild (at larger capacity) before the next
-                    # probe rather than silently continuing.
-                    self.force_rebuild = True
-            finally:
-                bc.unpersist()
-        else:
-            self.shards = or_delta_shards(
-                self.shards, delta_df, self.m_bits_shard, self.k, self.n_shards
-            )
-
-    def delete_delta(self, spark, delta_df) -> None:
-        """Evict keys (recrawl policy). Cuckoo shards delete in place
-        executor-side — the operation the cuckoo family exists for;
-        Bloom cannot unset bits, so bloom mode marks the filter for a
-        full rebuild from the (already-compacted) seen table before the
-        next probe."""
-        if self.kind == "cuckoo":
-            bc = spark.sparkContext.broadcast(self.shards)
-            try:
-                new_shards = _delete_cuckoo_shards(
-                    delta_df, bc, self.n_buckets_shard, self.n_shards
-                )
-                self.shards.update(new_shards)
-            finally:
-                bc.unpersist()
-        else:
-            self.force_rebuild = True
+                out[sid] = acc.tobytes()
+        self.shards = out
 
     # -- probe ----------------------------------------------------------------
     def with_maybe_seen(
-        self, spark, df, hash_col: str = "url_hash", mode: str = "broadcast",
-        debug_bytes: bool = False,
+        self, spark, df, hash_col: str = "url_hash", debug_bytes: bool = False,
     ):
-        if mode == "sharded":
-            return self._with_maybe_seen_sharded(
-                spark, df, hash_col, debug_bytes=debug_bytes
-            )
-        bc = spark.sparkContext.broadcast(self.shards)
-        if self.kind == "cuckoo":
-            return _with_maybe_seen_cuckoo(
-                df, bc, self.n_buckets_shard, self.n_shards, hash_col
-            )
-        return with_maybe_seen_shards(
-            df, bc, self.m_bits_shard, self.k, self.n_shards, hash_col
-        )
+        """Add boolean ``maybe_seen`` (no false negatives). Broadcasts the
+        shard dict when its bytes fit the session's broadcast limit — the
+        size up to which Spark itself ships a table to every executor —
+        and cogroups by shard id otherwise. ``debug_bytes`` (cogroup
+        only) appends ``_probe_bytes``, the filter bytes each task
+        deserialized — test instrumentation."""
+        limit = _broadcast_limit(spark)
+        if limit < 0 or sum(map(len, self.shards.values())) > limit:
+            return self._with_maybe_seen_sharded(spark, df, hash_col, debug_bytes)
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import BooleanType
+
+        shards_bc = spark.sparkContext.broadcast(self.shards)
+        m_bits, k, n_shards = self.m_bits_shard, self.k, self.n_shards
+
+        @F.pandas_udf(BooleanType())
+        def probe(h: pd.Series) -> pd.Series:
+            hv = h.to_numpy(np.int64)
+            sh = np.mod(hv, n_shards)
+            out = np.zeros(len(hv), dtype=bool)
+            shards = shards_bc.value
+            for s in np.unique(sh):
+                idx = np.nonzero(sh == s)[0]
+                out[idx] = _hits(shards[int(s)], hv[idx], m_bits, k)
+            return pd.Series(out)
+
+        return df.withColumn("maybe_seen", probe(F.col(hash_col)))
 
     def _with_maybe_seen_sharded(
-        self, spark, df, hash_col: str = "url_hash", debug_bytes: bool = False
+        self, spark, df, hash_col: str, debug_bytes: bool
     ):
         """Per-executor shard residency (VERDICT r02 item 6): probe rows
         repartition by shard id and COGROUP with a shards DataFrame, so
         each task deserializes exactly ONE shard's bytes — the probe
         shuffle carries only (row, shard_id), never the filter.
 
-        At 10^10 keys the broadcast mode ships every shard (~12.5 GB
-        total at 10 bits/key) to every executor per probe; this mode
-        caps per-task filter bytes at total/S. (Here the shards table is
-        built from the driver dict; at real scale it is the persisted
-        seen-filter table read straight from the catalog, and the same
-        cogroup applies.) ``debug_bytes`` appends a ``_probe_bytes``
-        column recording the filter bytes each task deserialized —
-        test instrumentation."""
+        At 10^10 keys a broadcast would ship every shard (~12.5 GB total
+        at 10 bits/key) to every executor per probe; this caps per-task
+        filter bytes at total/S. (Here the shards table is built from
+        the driver dict; at real scale it is the persisted seen-filter
+        table read straight from the catalog, and the same cogroup
+        applies.)"""
         from pyspark.sql import functions as F
         from pyspark.sql.types import (
             BooleanType,
@@ -174,11 +194,7 @@ class ShardedSeenFilter:
             StructType,
         )
 
-        from findopendata_spark.crawler.bloom import _positions
-
-        kind = self.kind
-        m_bits, k = self.m_bits_shard, self.k
-        n_buckets, n_shards = self.n_buckets_shard, self.n_shards
+        m_bits, k, n_shards = self.m_bits_shard, self.k, self.n_shards
         shards_df = spark.createDataFrame(
             [(i, bytearray(b)) for i, b in self.shards.items()],
             "shard_id int, bits binary",
@@ -196,17 +212,9 @@ class ShardedSeenFilter:
         def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             bits = bytes(right["bits"].iloc[0]) if len(right) else b""
             out = left.copy()
-            h = left[hash_col].to_numpy(np.int64)
-            if kind == "cuckoo":
-                cf = CK.CuckooFilter.from_bytes(bits, n_buckets)
-                ms = cf.contains_batch(h)
-            else:
-                barr = np.frombuffer(bits, dtype=np.uint8)
-                pos = _positions(h.view(np.uint64), m_bits, k)
-                ms = ((barr[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1).all(
-                    axis=1
-                )
-            out["maybe_seen"] = np.asarray(ms, dtype=bool)
+            out["maybe_seen"] = _hits(
+                bits, left[hash_col].to_numpy(np.int64), m_bits, k
+            )
             if debug_bytes:
                 out["_probe_bytes"] = np.int32(len(bits))
             return out
@@ -217,126 +225,3 @@ class ShardedSeenFilter:
             .applyInPandas(fn, out_schema)
         )
         return probed.drop("_sid")
-
-
-# ---------------------------------------------------------------------------
-# cuckoo shard plumbing (bloom's lives in bloom.py)
-# ---------------------------------------------------------------------------
-
-def _build_cuckoo_shards(
-    seen_df, n_buckets: int, n_shards: int
-) -> tuple[dict[int, bytes], int]:
-    """Returns (shards, total dropped-key count) — callers must treat any
-    drop as a build failure (a dropped key is a false negative)."""
-    from pyspark.sql import functions as F
-
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        cf = CK.CuckooFilter.__new__(CK.CuckooFilter)
-        cf.n_buckets = n_buckets
-        cf.table = np.zeros((n_buckets, CK.BUCKET_SLOTS), dtype=np.uint16)
-        cf.size = 0
-        inserted = cf.insert_batch(pdf["url_hash"].to_numpy(np.int64))
-        return pd.DataFrame(
-            {
-                "shard_id": [int(key[0])],
-                "bits": [cf.to_bytes()],
-                "dropped": [len(pdf) - inserted],
-            }
-        )
-
-    rows = (
-        seen_df.select(
-            F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int").alias("shard_id"),
-            "url_hash",
-        )
-        .groupBy("shard_id")
-        .applyInPandas(fn, "shard_id int, bits binary, dropped long")
-        .collect()
-    )
-    empty = np.zeros((n_buckets, CK.BUCKET_SLOTS), dtype=np.uint16).tobytes()
-    shards = {i: empty for i in range(n_shards)}
-    dropped = 0
-    for row in rows:
-        shards[int(row["shard_id"])] = bytes(row["bits"])
-        dropped += int(row["dropped"])
-    return shards, dropped
-
-
-def _insert_cuckoo_shards(
-    delta_df, shards_bc, n_buckets: int, n_shards: int
-) -> tuple[dict[int, bytes], int]:
-    """Insert delta keys into broadcast shard tables executor-side; only
-    the touched shards' new tables return to the driver. Returns
-    (new shards, dropped-key count)."""
-    from pyspark.sql import functions as F
-
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = int(key[0])
-        cf = CK.CuckooFilter.from_bytes(shards_bc.value[sid], n_buckets)
-        inserted = cf.insert_batch(pdf["url_hash"].to_numpy(np.int64))
-        return pd.DataFrame(
-            {
-                "shard_id": [sid],
-                "bits": [cf.to_bytes()],
-                "dropped": [len(pdf) - inserted],
-            }
-        )
-
-    rows = (
-        delta_df.select(
-            F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int").alias("shard_id"),
-            "url_hash",
-        )
-        .groupBy("shard_id")
-        .applyInPandas(fn, "shard_id int, bits binary, dropped long")
-        .collect()
-    )
-    shards = {int(r["shard_id"]): bytes(r["bits"]) for r in rows}
-    dropped = sum(int(r["dropped"]) for r in rows)
-    return shards, dropped
-
-
-def _delete_cuckoo_shards(
-    delta_df, shards_bc, n_buckets: int, n_shards: int
-) -> dict[int, bytes]:
-    """Delete keys from broadcast shard tables executor-side; only the
-    touched shards' new tables return to the driver (the eviction twin
-    of :func:`_insert_cuckoo_shards`)."""
-    from pyspark.sql import functions as F
-
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = int(key[0])
-        cf = CK.CuckooFilter.from_bytes(shards_bc.value[sid], n_buckets)
-        cf.delete_batch(pdf["url_hash"].to_numpy(np.int64))
-        return pd.DataFrame({"shard_id": [sid], "bits": [cf.to_bytes()]})
-
-    rows = (
-        delta_df.select(
-            F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int").alias("shard_id"),
-            "url_hash",
-        )
-        .groupBy("shard_id")
-        .applyInPandas(fn, "shard_id int, bits binary")
-        .collect()
-    )
-    return {int(r["shard_id"]): bytes(r["bits"]) for r in rows}
-
-
-def _with_maybe_seen_cuckoo(
-    df, shards_bc, n_buckets: int, n_shards: int, hash_col: str
-):
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import BooleanType
-
-    @F.pandas_udf(BooleanType())
-    def probe(h: pd.Series) -> pd.Series:
-        hv = h.to_numpy(np.int64)
-        sh = np.mod(hv, n_shards)
-        out = np.zeros(len(hv), dtype=bool)
-        for s in np.unique(sh):
-            idx = np.nonzero(sh == s)[0]
-            cf = CK.CuckooFilter.from_bytes(shards_bc.value[int(s)], n_buckets)
-            out[idx] = cf.contains_batch(hv[idx])
-        return pd.Series(out)
-
-    return df.withColumn("maybe_seen", probe(F.col(hash_col)))

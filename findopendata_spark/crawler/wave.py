@@ -72,7 +72,7 @@ class CrawlState:
     # see findopendata_spark.crawler.fetch for the adapter contract
     fetch_adapter: object | None = None
     # driver-side incremental seen-filter cache (rebuilt from tables on
-    # resume): sharded Bloom or cuckoo per cfg.seen_filter
+    # resume)
     _seen_filter: ShardedSeenFilter | None = None
     _seen_count: int = 0
     _frontier_count: int | None = None  # tracked incrementally per wave
@@ -263,32 +263,41 @@ def _get_seen_filter(spark, state: CrawlState, seen: DataFrame):
     outgrows the 4x headroom (keeps fpp ≈ target as the crawl expands).
     """
     _await_seen_delta(state)
-    cfg = state.cfg
     if state._seen_filter is None or state._seen_filter.needs_rebuild(
-        state._seen_count, cfg
+        state._seen_count
     ):
         n = seen.count()
-        state._seen_filter = ShardedSeenFilter.build(seen, max(n, 1) * 4, cfg)
+        state._seen_filter = ShardedSeenFilter.build(
+            seen, max(n, 1) * 4, state.cfg
+        )
         state._seen_count = n
     return state._seen_filter
 
 
+# r05: per-wave shuffle partitioning scaled to the TRACKED frontier size
+# instead of the session's core-derived default. The XL-wave profile
+# (BENCH/BASELINE.md r05) showed the scale-killer at 3x wave size was
+# task GRANULARITY, not orchestration: 2*cores partitions put 9M-row map
+# tasks on 2-core legs and a 255 s straggler task on the 8-core leg
+# (stage wall == max task). Each wave therefore sets
+# spark.sql.shuffle.partitions to clamp(ceil(frontier /
+# WAVE_PARTITION_ROWS), 2*defaultParallelism, 4096) — deterministic
+# (results are partitioning-independent), no AQE barriers, and at the
+# 10^10 frontier the 4096 cap keeps task counts bounded while waves stay
+# ~2.4M rows/task.
+WAVE_PARTITION_ROWS = 150_000  # target frontier rows per task
+
+
 def _wave_partitions(spark: SparkSession, state: CrawlState) -> int | None:
     """Shuffle-partition count for THIS wave, scaled to the tracked
-    frontier size (see CrawlConfig.wave_partitions). Returns None when
-    the session value should stand (mode "session", or no tracked count
-    yet — e.g. a fresh resume before the first footer count)."""
-    mode = getattr(state.cfg, "wave_partitions", "session")
-    if mode in (None, "session"):
-        return None
-    if isinstance(mode, int) and not isinstance(mode, bool):
-        return mode
+    frontier size. Returns None when the session value should stand: no
+    tracked count yet (e.g. a fresh resume before the first footer
+    count)."""
     fcount = state._frontier_count
     if fcount is None:
         return None
-    target = max(int(getattr(state.cfg, "wave_partition_rows", 150_000)), 1)
     floor = 2 * spark.sparkContext.defaultParallelism
-    return int(min(max(-(-fcount // target), floor), 4096))
+    return int(min(max(-(-fcount // WAVE_PARTITION_ROWS), floor), 4096))
 
 
 def run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
@@ -373,11 +382,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
     # frontier) keeps the guard on.
     budget = cfg.per_host_wave_budget
     fcount = state._frontier_count
-    mode = getattr(cfg, "two_phase_topk", "auto")
-    use_pre = mode == "always" or (
-        mode == "auto"
-        and (fcount is None or fcount > cfg.hot_host_salt * budget)
-    )
+    use_pre = fcount is None or fcount > cfg.hot_host_salt * budget
     # (r06 note: a "rank shortcut" — probe per-host counts, skip the
     # window when every host fits the budget — was implemented and
     # REVERTED: A/B'd at both legs it cost 1.5-2 s MORE than the window
@@ -541,7 +546,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         # spans joined in offset order (spans arrive offset-sorted from
         # the fetch UDF, so no sort is needed).
         f_index: list = []
-        for field in getattr(cfg, "index_fields", ()) or ():
+        for field in cfg.index_fields:
             # TOTAL grams (ADVICE r05): recrawled docs that shrank below
             # the field threshold still append an n_grams=0 tombstone so
             # latest-wave-wins retires their old postings
@@ -578,7 +583,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         # plain catalog tables IncrementalIndexes probes, so a crawl
         # catalog serves ivf_index()/sketch_read() with no extra step.
         extra_snaps: dict[str, str] = {}
-        if getattr(cfg, "index_ivf", False) or getattr(cfg, "index_sketch", False):
+        if cfg.index_ivf or cfg.index_sketch:
             flat_doc = docs.select(
                 "doc_id", "url_canon", "host",
                 F.array_join(
@@ -589,7 +594,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
                     " ",
                 ).alias("text"),
             )
-        if getattr(cfg, "index_ivf", False):
+        if cfg.index_ivf:
             from findopendata_spark.embedding import (
                 assign_cells,
                 hashing_embedding_expr,
@@ -634,7 +639,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
                 _timed, "index_ivf", cat.stage_append,
                 assigned, "ivf_assignments", wave,
             ))
-        if getattr(cfg, "index_sketch", False):
+        if cfg.index_sketch:
             from findopendata_spark.config import SketchConfig
             from findopendata_spark.sketch.column_sketch import sketch_columns
 
@@ -738,7 +743,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         # 6. URL-seen dedup: Bloom prefilter → exact anti-join on maybes only
         _mark("plan_build")
         seen_filter = f_seen_filter.result()  # built since wave start
-        cand = seen_filter.with_maybe_seen(spark, cand, mode=cfg.seen_probe)
+        cand = seen_filter.with_maybe_seen(spark, cand)
         cand = cand.localCheckpoint()  # probe runs once; both branches reuse
         _mark("cand_ckpt")
 
@@ -907,8 +912,8 @@ def recrawl_stale(
     fetch each). Refresh-at-enqueue matches run_wave's own stamp rule
     (new URLs record their enqueue wave, not their fetch wave), so the
     next staleness scan measures from the re-enqueue. No seen-filter
-    mutation is needed at all — membership is unchanged — which also
-    keeps Bloom mode rebuild-free.
+    mutation is needed at all — membership is unchanged — so the Bloom
+    filter, which cannot delete, never has to rebuild for a recrawl.
 
     The next ordinary wave then re-fetches them subject to the same
     budgets; the conservation and uniqueness invariants the crawler

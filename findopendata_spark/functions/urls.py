@@ -87,11 +87,6 @@ def canonicalize_url(url: Column) -> Column:
     )
 
 
-def url_host_uri(url: Column) -> Column:
-    """URI-based reference implementation (differential-test oracle)."""
-    return F.lower(F.parse_url(url, F.lit("HOST")))
-
-
 def canonicalize_url_uri(url: Column) -> Column:
     """URI-based reference implementation: the r05 production path —
     the guarded canonicalizer's fallback branch and the differential

@@ -69,21 +69,23 @@ def trigram_set_expr(col):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _field_grams(docs: DataFrame, field: str) -> DataFrame:
-    """(doc_id, g) for the indexed field — mirrors the query synthesis
-    q17/q41 use (title = first 40 chars, description = chars 41-240)."""
+def _field_rule(field: str):
+    """(condition, column) for an indexed field — mirrors the query
+    synthesis q17/q41 use (title = first 40 chars, description = chars
+    41-240); docs failing the condition have no grams for the field."""
     if field == "text":
-        src = docs.filter(F.length("text") >= 3)
-        col = F.col("text")
-    elif field == "title":
-        src = docs.filter(F.length("text") >= 80)
-        col = F.substring("text", 1, 40)
-    elif field == "description":
-        src = docs.filter(F.length("text") >= 80)
-        col = F.substring("text", 41, 200)
-    else:
-        raise ValueError(f"unknown trigram field: {field}")
-    return src.select("doc_id", trigram_set_expr(col).alias("g"))
+        return F.length("text") >= 3, F.col("text")
+    if field == "title":
+        return F.length("text") >= 80, F.substring("text", 1, 40)
+    if field == "description":
+        return F.length("text") >= 80, F.substring("text", 41, 200)
+    raise ValueError(f"unknown trigram field: {field}")
+
+
+def _field_grams(docs: DataFrame, field: str) -> DataFrame:
+    """(doc_id, g) for the docs that pass the field's condition."""
+    cond, col = _field_rule(field)
+    return docs.filter(cond).select("doc_id", trigram_set_expr(col).alias("g"))
 
 
 def _field_grams_total(docs: DataFrame, field: str) -> DataFrame:
@@ -95,17 +97,7 @@ def _field_grams_total(docs: DataFrame, field: str) -> DataFrame:
     wave — latest-wave-wins then retires the doc's OLD postings instead
     of serving stale content (ADVICE r05 shrink-to-empty hole). Exploded
     postings are unchanged (empty arrays explode to nothing)."""
-    if field == "text":
-        cond = F.length("text") >= 3
-        col = F.col("text")
-    elif field == "title":
-        cond = F.length("text") >= 80
-        col = F.substring("text", 1, 40)
-    elif field == "description":
-        cond = F.length("text") >= 80
-        col = F.substring("text", 41, 200)
-    else:
-        raise ValueError(f"unknown trigram field: {field}")
+    cond, col = _field_rule(field)
     g = F.when(cond, trigram_set_expr(col)).otherwise(
         F.array().cast("array<string>")
     )

@@ -11,6 +11,8 @@ before download (``:161-176``) — and must agree with the Spark engine on
 
 from __future__ import annotations
 
+import contextlib
+import dataclasses
 import shutil
 
 import numpy as np
@@ -21,11 +23,37 @@ from pyspark.sql import functions as F
 from findopendata_spark.config import CrawlConfig
 from findopendata_spark.crawler import crawl
 from findopendata_spark.crawler import graph as G
-from findopendata_spark.crawler.bloom import bloom_size_bits, build_bloom, with_maybe_seen
+from findopendata_spark.crawler.seen import ShardedSeenFilter
 
 GCFG = G.GraphConfig(graph_size=500)
 CCFG = CrawlConfig(per_host_wave_budget=10)
 WAVES = 4
+
+
+@contextlib.contextmanager
+def broadcast_limit(spark, n_bytes: int):
+    """Run with ``spark.sql.autoBroadcastJoinThreshold`` at ``n_bytes``
+    (-1: never broadcast) — the limit the seen probe compares its filter
+    size against — and restore the session value afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n_bytes))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_crawl_config_options_inventory():
+    """The crawl's user-set options, pinned: a new knob must show up here
+    as a reviewed diff. Per-wave choices (pre-rank, shuffle partitions,
+    seen-probe mode) are derived from tracked counts, not options."""
+    assert [f.name for f in dataclasses.fields(CrawlConfig)] == [
+        "priority_mode", "default_crawl_delay_s", "per_host_wave_budget",
+        "host_shards", "hot_host_salt", "index_fields", "index_ivf",
+        "index_ivf_dim", "index_ivf_cells", "index_sketch",
+        "bloom_bits_per_key", "bloom_num_hashes", "bloom_shards",
+    ]
 
 
 @pytest.fixture(scope="module")
@@ -250,23 +278,23 @@ def test_richness_priority_mode(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Bloom filter unit tests
+# Sharded Bloom seen-filter tests
 # ---------------------------------------------------------------------------
 
 def test_bloom_no_false_negatives_and_low_fp(spark):
+    """One shard — the whole key set in a single bitset."""
     rng = np.random.RandomState(7)
     keys = rng.randint(-(2**62), 2**62, size=5000, dtype=np.int64)
     fresh = rng.randint(-(2**62), 2**62, size=5000, dtype=np.int64)
     fresh = np.setdiff1d(fresh, keys)
     df = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
-    m = bloom_size_bits(len(keys), 10)
-    bloom = build_bloom(df, m, 7)
-    bc = spark.sparkContext.broadcast(bloom)
+    filt = ShardedSeenFilter.build(df, len(keys), CrawlConfig(bloom_shards=1))
+    assert list(filt.shards) == [0]
     probe_df = spark.createDataFrame(
         [(int(k), True) for k in keys] + [(int(k), False) for k in fresh],
         "url_hash long, member boolean",
     )
-    res = with_maybe_seen(probe_df, bc, m, 7).collect()
+    res = filt.with_maybe_seen(spark, probe_df).collect()
     members = [r for r in res if r["member"]]
     non = [r for r in res if not r["member"]]
     assert all(r["maybe_seen"] for r in members)  # zero false negatives
@@ -274,29 +302,10 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
     assert fp < 0.05
 
 
-# ---------------------------------------------------------------------------
-# Sharded seen-filter tests (Bloom + cuckoo modes)
-# ---------------------------------------------------------------------------
-
-def test_cuckoo_mode_wave_parity(spark, sim, tmp_path):
-    """The crawl under cfg.seen_filter='cuckoo' reproduces the same visit
-    ordering and seen set as the simulator (and hence the Bloom mode)."""
-    visits_sim, seen_sim = sim
-    cfg = CrawlConfig(per_host_wave_budget=10, seen_filter="cuckoo")
-    state = crawl(spark, str(tmp_path / "cuckoo"), waves=WAVES, cfg=cfg, gcfg=GCFG)
-    docs = state.cat.read_appended(spark, "docs")
-    engine = sorted(
-        (r["wave"], r["host"], r["url_canon"])
-        for r in docs.select("wave", "host", "url_canon").collect()
-    )
-    assert engine == sorted(visits_sim)
-    seen = state.cat.read_appended(spark, "seen")
-    assert {r["url_canon"] for r in seen.select("url_canon").collect()} == seen_sim
-
-
 def test_sharded_filter_no_false_negatives_both_modes(spark):
-    from findopendata_spark.crawler.seen import ShardedSeenFilter
-
+    """No false negatives and fp < 5% under both probes (broadcast, and
+    cogroup when the filter exceeds the broadcast limit), before and
+    after an incremental delta."""
     rng = np.random.RandomState(11)
     keys = rng.randint(-(2**62), 2**62, size=8000, dtype=np.int64)
     fresh = np.setdiff1d(
@@ -307,31 +316,27 @@ def test_sharded_filter_no_false_negatives_both_modes(spark):
         [(int(k), True) for k in keys] + [(int(k), False) for k in fresh],
         "url_hash long, member boolean",
     )
-    for mode in ("bloom", "cuckoo"):
-        cfg = CrawlConfig(seen_filter=mode)
-        filt = ShardedSeenFilter.build(df, len(keys) * 4, cfg)
-        res = filt.with_maybe_seen(spark, probe_df).collect()
-        members = [r for r in res if r["member"]]
-        non = [r for r in res if not r["member"]]
-        assert all(r["maybe_seen"] for r in members), mode
-        fp = sum(r["maybe_seen"] for r in non) / len(non)
-        assert fp < 0.05, (mode, fp)
-        # incremental delta: inserted keys become maybe_seen
-        delta = spark.createDataFrame([(int(k),) for k in fresh[:500]], "url_hash long")
-        filt.or_delta(spark, delta)
-        res2 = filt.with_maybe_seen(
-            spark, spark.createDataFrame([(int(k),) for k in fresh[:500]], "url_hash long")
-        ).collect()
-        assert all(r["maybe_seen"] for r in res2), mode
+    delta = spark.createDataFrame([(int(k),) for k in fresh[:500]], "url_hash long")
+    for limit in (10 << 20, -1):
+        filt = ShardedSeenFilter.build(df, len(keys) * 4, CrawlConfig())
+        with broadcast_limit(spark, limit):
+            res = filt.with_maybe_seen(spark, probe_df).collect()
+            members = [r for r in res if r["member"]]
+            non = [r for r in res if not r["member"]]
+            assert all(r["maybe_seen"] for r in members), limit
+            fp = sum(r["maybe_seen"] for r in non) / len(non)
+            assert fp < 0.05, (limit, fp)
+            # incremental delta: inserted keys become maybe_seen
+            filt.or_delta(spark, delta)
+            res2 = filt.with_maybe_seen(spark, delta).collect()
+            assert all(r["maybe_seen"] for r in res2), limit
 
 
 def test_shard_bitset_size_stays_bounded(spark):
     """Per-shard blob size is ~total/S and grows with keys/S, not with the
     partition count or total key count at fixed keys-per-shard — the
     10^10 scale invariant (no monolithic driver bitset)."""
-    from findopendata_spark.crawler.seen import ShardedSeenFilter
-
-    cfg = CrawlConfig()  # bloom, 16 shards
+    cfg = CrawlConfig()  # 16 shards
     for n_keys in (10_000, 40_000):
         rng = np.random.RandomState(n_keys)
         keys = rng.randint(-(2**62), 2**62, size=n_keys, dtype=np.int64)
@@ -420,40 +425,26 @@ def test_fetch_failure_accounting_and_resume(spark, tmp_path):
 def test_adaptive_topk_parity(spark, tmp_path):
     """The salted pre-rank is purely a skew guard — the exact per-host
     window IS the selection spec. With a budget large enough that
-    frontier_count <= salt * budget, 'auto' skips the guard (saving a
-    full frontier shuffle+sort); the crawl must be IDENTICAL to a run
-    with the guard forced on, and to one with it forced off."""
-    results = {}
-    for mode in ("always", "auto", "never"):
-        cfg = CrawlConfig(per_host_wave_budget=5000, hot_host_salt=8,
-                          two_phase_topk=mode)
-        d = str(tmp_path / f"topk_{mode}")
-        st = crawl(spark, d, waves=2, cfg=cfg, gcfg=GCFG)
-        seen = {
-            (r["url_canon"], r["first_wave"])
-            for r in st.cat.read_appended(spark, "seen").collect()
-        }
-        frontier = {
-            r["url_canon"] for r in st.cat.read(spark, "frontier").collect()
-        }
-        results[mode] = (seen, frontier)
-        shutil.rmtree(d, ignore_errors=True)
-    # seed frontier is small => budget*salt >= frontier => auto == never
-    assert results["auto"] == results["always"] == results["never"]
-    # and with a SMALL budget (pre-rank active and pruning), auto keeps
-    # the guard and still matches the forced-on run
-    small = {}
-    for mode in ("always", "auto"):
-        cfg = CrawlConfig(per_host_wave_budget=10, hot_host_salt=8,
-                          two_phase_topk=mode)
-        d = str(tmp_path / f"topk_small_{mode}")
-        st = crawl(spark, d, waves=2, cfg=cfg, gcfg=GCFG)
-        small[mode] = {
-            (r["url_canon"], r["first_wave"])
-            for r in st.cat.read_appended(spark, "seen").collect()
-        }
-        shutil.rmtree(d, ignore_errors=True)
-    assert small["auto"] == small["always"]
+    frontier_count <= salt * budget the wave skips the guard (saving a
+    full frontier shuffle+sort), and the crawl must still match the
+    simulator. (The budget-10 crawl, where the guard runs, is
+    test_visit_ordering_parity.)"""
+    cfg = CrawlConfig(per_host_wave_budget=5000, hot_host_salt=8)
+    frontiers: list[int] = []
+    st = crawl(spark, str(tmp_path / "topk"), waves=2, cfg=cfg, gcfg=GCFG,
+               log=lambda s: frontiers.append(s["frontier"]))
+    # every wave saw a tracked frontier at or below salt * budget, so
+    # none of them ran the pre-rank
+    assert len(frontiers) == 2
+    assert max(frontiers) <= cfg.hot_host_salt * cfg.per_host_wave_budget
+    visits_sim, seen_sim = simulate(spark, GCFG, cfg, 2)
+    docs = st.cat.read_appended(spark, "docs")
+    assert sorted(
+        (r["wave"], r["host"], r["url_canon"])
+        for r in docs.select("wave", "host", "url_canon").collect()
+    ) == sorted(visits_sim)
+    seen = st.cat.read_appended(spark, "seen")
+    assert {r["url_canon"] for r in seen.select("url_canon").collect()} == seen_sim
 
 
 def test_fetch_adapter_seam_flaky_http(spark, tmp_path):
@@ -537,11 +528,10 @@ def test_fetch_adapter_seam_flaky_http(spark, tmp_path):
 
 
 def test_sharded_probe_parity_and_residency(spark):
-    """VERDICT r03 item 6: the cogroup probe must (a) agree exactly with
-    the broadcast probe for both filter kinds, and (b) hand each task at
-    most ONE shard's bytes (per-task filter residency)."""
-    from findopendata_spark.crawler.seen import ShardedSeenFilter
-
+    """VERDICT r03 item 6: the cogroup probe, taken once the filter's
+    bytes exceed Spark's broadcast limit, must (a) agree exactly with the
+    broadcast probe, and (b) hand each task at most ONE shard's bytes
+    (per-task filter residency)."""
     n = 4000
     seen_df = (
         spark.range(n)
@@ -561,33 +551,33 @@ def test_sharded_probe_parity_and_residency(spark):
         )
         .withColumn("url_hash", F.xxhash64("url_canon"))
     )
-    for kind in ("bloom", "cuckoo"):
-        cfg = CrawlConfig(seen_filter=kind, bloom_shards=8)
-        filt = ShardedSeenFilter.build(seen_df, n * 4, cfg)
-        a = {
-            r["url_canon"]: r["maybe_seen"]
-            for r in filt.with_maybe_seen(spark, probe_df).collect()
-        }
-        sharded = filt.with_maybe_seen(
-            spark, probe_df, mode="sharded", debug_bytes=True
-        )
-        rows = sharded.collect()
-        b = {r["url_canon"]: r["maybe_seen"] for r in rows}
-        assert a == b, f"{kind}: sharded probe diverges from broadcast"
-        # every inserted key must still be maybe_seen (no false negatives)
-        inserted = {r["url_canon"] for r in seen_df.collect()}
-        assert all(b[u] for u in inserted), kind
-        # residency: each task saw exactly one shard's bytes
-        shard_bytes = {len(v) for v in filt.shards.values()}
-        assert {r["_probe_bytes"] for r in rows} <= shard_bytes, kind
+    filt = ShardedSeenFilter.build(seen_df, n * 4, CrawlConfig(bloom_shards=8))
+    total = sum(len(v) for v in filt.shards.values())
+    # a filter that fits the limit exactly is broadcast (no per-task
+    # byte column); one byte less and the probe cogroups
+    with broadcast_limit(spark, total):
+        broadcast = filt.with_maybe_seen(spark, probe_df, debug_bytes=True)
+        assert "_probe_bytes" not in broadcast.columns
+        a = {r["url_canon"]: r["maybe_seen"] for r in broadcast.collect()}
+    with broadcast_limit(spark, total - 1):
+        rows = filt.with_maybe_seen(spark, probe_df, debug_bytes=True).collect()
+    b = {r["url_canon"]: r["maybe_seen"] for r in rows}
+    assert a == b, "sharded probe diverges from broadcast"
+    # every inserted key must still be maybe_seen (no false negatives)
+    inserted = {r["url_canon"] for r in seen_df.collect()}
+    assert all(b[u] for u in inserted)
+    # residency: each task saw exactly one shard's bytes
+    shard_bytes = {len(v) for v in filt.shards.values()}
+    assert {r["_probe_bytes"] for r in rows} <= shard_bytes
 
 
 def test_wave_parity_sharded_probe_mode(spark, crawl_state, tmp_path):
-    """A crawl run with seen_probe='sharded' must produce the identical
-    seen set and frontier as the default broadcast-probe run."""
+    """A crawl whose session never broadcasts (so every wave takes the
+    cogroup probe) must produce the identical seen set and frontier as
+    the default broadcast-probe run."""
     d = str(tmp_path / "crawl_sharded")
-    cfg = CrawlConfig(per_host_wave_budget=10, seen_probe="sharded")
-    st = crawl(spark, d, waves=WAVES, cfg=cfg, gcfg=GCFG)
+    with broadcast_limit(spark, -1):
+        st = crawl(spark, d, waves=WAVES, cfg=CCFG, gcfg=GCFG)
     for table in ("seen",):
         a = crawl_state.cat.read_appended(spark, table)
         b = st.cat.read_appended(spark, table)
@@ -600,8 +590,7 @@ def test_wave_parity_sharded_probe_mode(spark, crawl_state, tmp_path):
     shutil.rmtree(d, ignore_errors=True)
 
 
-@pytest.mark.parametrize("filt", ["bloom", "cuckoo"])
-def test_recrawl_stale_refreshes_and_refetches(spark, tmp_path, filt):
+def test_recrawl_stale_refreshes_and_refetches(spark, tmp_path):
     """Freshness recrawl (reference: stale work list + freshness upsert):
     URLs last enqueued <= cutoff and not pending re-enter the frontier at
     recrawl priority and have their seen wave stamp refreshed via the
@@ -614,8 +603,8 @@ def test_recrawl_stale_refreshes_and_refetches(spark, tmp_path, filt):
     from findopendata_spark.crawler.wave import CrawlState, init_state, run_wave
     from findopendata_spark.catalog import SnapshotCatalog
 
-    cfg = CrawlConfig(per_host_wave_budget=10, seen_filter=filt)
-    d = str(tmp_path / f"recrawl_{filt}")
+    cfg = CrawlConfig(per_host_wave_budget=10)
+    d = str(tmp_path / "recrawl")
     state = crawl(spark, d, waves=2, cfg=cfg, gcfg=GCFG)
     cat = state.cat
 
@@ -781,18 +770,18 @@ def test_fetch_adapter_real_socket_loopback(spark, tmp_path):
 
 
 def test_wave_partitions_scale_with_frontier(spark, tmp_path):
-    """wave_partitions='auto' sizes shuffle partitions from the TRACKED
-    frontier count (r05: the XL-wave profile showed 2*cores partitions
+    """Each wave sizes shuffle partitions from the TRACKED frontier count
+    (r05: the XL-wave profile showed 2*cores partitions
     produce straggler tasks at 3x wave size — task granularity must
     follow data, not core count)."""
     from findopendata_spark.config import CrawlConfig
     from findopendata_spark.crawler.wave import CrawlState, _wave_partitions
     from findopendata_spark.catalog import SnapshotCatalog
 
-    def mk(fcount, **kw):
+    def mk(fcount):
         st = CrawlState(
             cat=SnapshotCatalog(str(tmp_path / "c")),
-            cfg=CrawlConfig(**kw), gcfg=None,
+            cfg=CrawlConfig(), gcfg=None,
         )
         st._frontier_count = fcount
         return st
@@ -804,35 +793,36 @@ def test_wave_partitions_scale_with_frontier(spark, tmp_path):
     assert _wave_partitions(spark, mk(8_400_000)) == max(56, floor)
     # 10^10 shape: capped
     assert _wave_partitions(spark, mk(10_000_000_000)) == 4096
-    # pinned int mode
-    assert _wave_partitions(spark, mk(8_400_000, wave_partitions=7)) == 7
-    # session mode / unknown count: leave the session value alone
-    assert _wave_partitions(spark, mk(8_400_000, wave_partitions="session")) is None
+    # unknown count: leave the session value alone
     assert _wave_partitions(spark, mk(None)) is None
 
 
-def test_wave_sets_adaptive_partitions(spark, tmp_path):
-    """An actual crawl under 'auto' RESTORES spark.sql.shuffle.partitions
-    to the session value after every wave (ADVICE r05: the override must
-    not leak into non-crawl SQL), and results are identical to a
-    'session' run — partitioning never changes content."""
+def test_wave_sets_adaptive_partitions(spark, tmp_path, monkeypatch):
+    """An actual crawl RESTORES spark.sql.shuffle.partitions to the
+    session value after every wave (ADVICE r05: the override must not
+    leak into non-crawl SQL), and results do not depend on the partition
+    count: a crawl at the 2*cores floor equals one at >= 20 partitions."""
     from findopendata_spark.config import CrawlConfig
     from findopendata_spark.crawler import crawl
+    from findopendata_spark.crawler import wave as W
     from findopendata_spark.crawler.graph import GraphConfig
 
     gcfg = GraphConfig(graph_size=5_000, out_links_min=2, out_links_max=4)
     outs = {}
-    for mode in ("auto", "session"):
+    # 2,000 bulk seeds: 150k rows/task hits the floor, 100 rows/task
+    # gives 20 partitions or more
+    default = W.WAVE_PARTITION_ROWS
+    for rows in (default, 100):
+        monkeypatch.setattr(W, "WAVE_PARTITION_ROWS", rows)
         spark.conf.set("spark.sql.shuffle.partitions", "32")
-        d = str(tmp_path / f"crawl_{mode}")
+        d = str(tmp_path / f"crawl_{rows}")
         st = crawl(spark, d, waves=2,
-                   cfg=CrawlConfig(per_host_wave_budget=50,
-                                   wave_partitions=mode),
+                   cfg=CrawlConfig(per_host_wave_budget=50),
                    gcfg=gcfg, bulk_seeds=2_000)
         seen = st.cat.read_appended(spark, "seen")
-        outs[mode] = sorted(r["url_canon"] for r in seen.collect())
+        outs[rows] = sorted(r["url_canon"] for r in seen.collect())
         assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
-    assert outs["auto"] == outs["session"]
+    assert outs[default] == outs[100]
     spark.conf.set("spark.sql.shuffle.partitions", "32")
 
 
@@ -858,7 +848,7 @@ def test_fetch_partitions_not_host_skewed(spark, tmp_path):
     try:
         st = crawl(spark, d, waves=1,
                    cfg=CrawlConfig(per_host_wave_budget=100_000,
-                                   hot_host_salt=32, wave_partitions=32),
+                                   hot_host_salt=32),
                    gcfg=gcfg, bulk_seeds=40_000)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
@@ -888,12 +878,13 @@ def test_wave_restores_partitions_when_selection_fails(spark, tmp_path,
     from findopendata_spark.crawler import wave as W
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    assert prev != "7"
     st = W.CrawlState(
         SnapshotCatalog(str(tmp_path / "crawl_fail")),
-        CrawlConfig(per_host_wave_budget=10, wave_partitions=7), GCFG,
+        CrawlConfig(per_host_wave_budget=10), GCFG,
     )
     W.init_state(spark, st)
+    # the wave overrides the session value
+    assert str(W._wave_partitions(spark, st)) != prev
 
     def failing_host(url):
         # evaluated per row inside the selection checkpoint job
@@ -914,20 +905,27 @@ def test_steady_state_wave_reuses_generated_code(spark, tmp_path):
     cache every wave evicted and recompiled ~130 classes; sized for the
     wave's working set, only the classes that inline the wave id as a
     literal are new (6). Bulk seeds keep the seen filter from
-    rebuilding and the pre-rank is pinned on, so wave 3 runs the same
-    plan shapes as wave 2."""
-    cfg = CrawlConfig(per_host_wave_budget=10, index_fields=("text",),
-                      two_phase_topk="always")
+    rebuilding and the frontier far above salt x budget, so the pre-rank
+    runs in every wave and wave 3 runs the same plan shapes as wave 2."""
+    cfg = CrawlConfig(per_host_wave_budget=10, index_fields=("text",))
     gcfg = G.GraphConfig(graph_size=5_000, out_links_min=2, out_links_max=4)
     compiles = (
         spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME()
     )
     after_wave: list[tuple[int, int]] = []
+    frontiers: list[int] = []
+
+    def log(s):
+        after_wave.append((s["fetched"], compiles.getCount()))
+        frontiers.append(s["frontier"])
+
     crawl(spark, str(tmp_path / "crawl_codegen"), waves=3, cfg=cfg,
-          gcfg=gcfg, bulk_seeds=2_000,
-          log=lambda s: after_wave.append((s["fetched"], compiles.getCount())))
+          gcfg=gcfg, bulk_seeds=2_000, log=log)
     assert len(after_wave) == 3
+    # waves 2 and 3 start from these tracked frontiers (wave 1 from the
+    # 2,000 seeds): all above salt x budget, so each ran the pre-rank
+    assert min(frontiers[:2]) > cfg.hot_host_salt * cfg.per_host_wave_budget
     fetched, n3 = after_wave[2]
     assert fetched > 0
     compiled_in_wave_3 = n3 - after_wave[1][1]
