@@ -34,4 +34,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for each queries() entry."""
-    return {k: v for k, v in Q.ORACLE_SQL.items() if v is not None}
+    return dict(Q.ORACLE_SQL)

@@ -418,6 +418,15 @@ def near_dup_pairs(
     )
 
 
+# Largest gram store allpairs_jaccard_pairs collects to the driver and
+# broadcasts for its verify stage, in bytes; bigger stores take the
+# shuffled-hash attach instead. The store is int64 ids, lengths and
+# offsets per doc plus one int64 per gram: 8 * (3 * n_docs + n_grams).
+# The documents corpus averages ~52 distinct word-3-grams per doc (2.1 MiB
+# at sf0.1), so this admits about the 500k docs the old row gate did.
+ALLPAIRS_BROADCAST_BYTES = 256 << 20
+
+
 def allpairs_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -564,10 +573,14 @@ def allpairs_jaccard_pairs(
     # send ONLY (a, b) pairs through Arrow: the r06a broadcast-hash
     # attach re-materialized both arrays per candidate row — ~8 GB of
     # Arrow traffic for 10M pairs — where the pair stream is 160 MB.
-    # Beyond broadcast range, fall back to the shuffled-hash attach.
-    n_docs = sets.count()
+    # Beyond broadcast range, fall back to the shuffled-hash attach. The
+    # gate is the store's bytes, not its doc count: a few docs with long
+    # gram arrays can outgrow the driver as surely as many short ones.
+    n_docs, n_grams = sets.agg(
+        F.count(F.lit(1)), F.coalesce(F.sum("s"), F.lit(0))
+    ).first()
     V = np.int64(n_grams_total + 1)
-    if n_docs <= 500_000:
+    if 8 * (3 * n_docs + n_grams) <= ALLPAIRS_BROADCAST_BYTES:
         spark = sets.sparkSession
         pdf = sets.select("_id", "g").toPandas()  # Arrow path, ~10 MB
         ids = pdf["_id"].to_numpy(np.int64)

@@ -4,6 +4,11 @@ Each query demonstrates an operator family from SURVEY.md §2 and has a
 DuckDB-oracle SQL twin in ORACLE_SQL (same column names/aliases — the
 driver's correctness gate hashes values after sorting columns by name).
 
+Every query registers with its oracle where it is defined
+(:func:`findopendata_spark.registry.query`). This module imports
+``queries2``-``queries9`` so all of them are registered, then publishes
+``QUERIES`` and ``ORACLE_SQL`` sorted by name.
+
 Design rules for oracle-stability:
 - every aggregate/computed column is aliased identically on both sides;
 - doubles are ``round()``-ed (2dp for sums, 4dp for ratios/similarities);
@@ -13,24 +18,35 @@ Design rules for oracle-stability:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+# the other query modules register their queries when imported
+from findopendata_spark import (  # noqa: F401
+    queries2,
+    queries3,
+    queries4,
+    queries5,
+    queries6,
+    queries7,
+    queries8,
+    queries9,
+)
 from findopendata_spark.functions.urls import canonicalize_url, canonicalize_url_sql
-
-
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _utc(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
+from findopendata_spark.registry import REGISTRY, QueryFn, load, query
 
 # ---------------------------------------------------------------- scans/aggs
 
+@query("""
+        SELECT l_returnflag, l_linestatus,
+               round(sum(l_quantity), 2) AS sum_qty,
+               round(sum(l_extendedprice), 2) AS sum_base_price,
+               round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+               count(*) AS count_order
+        FROM lineitem
+        WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        GROUP BY l_returnflag, l_linestatus
+    """)
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: filtered scan → hash agg (SURVEY §2.4 A3 counters).
 
@@ -53,6 +69,16 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT r_name,
+               round(sum(o_totalprice), 2) AS revenue,
+               count(*) AS n_orders
+        FROM orders
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation ON c_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey
+        GROUP BY r_name
+    """)
 def q02_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast-join chain region⋈nation⋈customer⋈orders (SURVEY §2.3 J3).
 
@@ -75,6 +101,14 @@ def q02_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT l_orderkey,
+               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        FROM lineitem
+        GROUP BY l_orderkey
+        ORDER BY revenue DESC, l_orderkey ASC
+        LIMIT 10
+    """)
 def q03_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Agg → global top-k (SURVEY §2.5 W1): TakeOrdered, no full sort."""
     li = load(spark, sf_dir, "lineitem")
@@ -90,6 +124,15 @@ def q03_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT p_partkey, strftime(last_ship_ts, '%Y-%m-%d') AS last_ship
+        FROM part
+        LEFT JOIN (
+            SELECT l_partkey, max(l_shipdate) AS last_ship_ts
+            FROM lineitem GROUP BY l_partkey
+        ) ls ON p_partkey = l_partkey
+        WHERE last_ship_ts IS NULL OR last_ship_ts < TIMESTAMP '2001-06-01'
+    """)
 def q04_needs_recompute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental work-list join (SURVEY §2.3 J1).
 
@@ -113,6 +156,18 @@ def q04_needs_recompute(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT user_id, event_id, round(value, 4) AS value, rn
+        FROM (
+            SELECT user_id, event_id, value, ts,
+                   row_number() OVER (
+                       PARTITION BY user_id
+                       ORDER BY value DESC, ts ASC, event_id ASC
+                   ) AS rn
+            FROM events
+        )
+        WHERE rn <= 3
+    """)
 def q05_top_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-k via window row_number (SURVEY §2.5 W1)."""
     ev = load(spark, sf_dir, "events")
@@ -126,6 +181,14 @@ def q05_top_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT event_type,
+               count(*) AS cnt,
+               round(sum(value), 2) AS sum_value,
+               count(DISTINCT user_id) AS n_users
+        FROM events
+        GROUP BY event_type
+    """)
 def q06_event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-counter aggregation shape (SURVEY §2.4 A3/A9)."""
     ev = load(spark, sf_dir, "events")
@@ -136,6 +199,13 @@ def q06_event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT md5(lower(trim(text))) AS fp,
+               count(*) AS n,
+               min(doc_id) AS keeper_doc_id
+        FROM documents
+        GROUP BY fp
+    """)
 def q07_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content fingerprint (training-data op: dedup-exact).
 
@@ -150,6 +220,18 @@ def q07_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_MESSY_URL_SQL = (
+    "concat('HTTPS://Portal-', lang, '.Example.ORG:443/data/', source, "
+    "'/?z=', CAST(doc_id % 7 AS VARCHAR), '&a=', CAST(doc_id % 3 AS VARCHAR), "
+    "'#section')"
+)
+
+
+@query(f"""
+    WITH m AS (SELECT doc_id, {_MESSY_URL_SQL} AS url_raw FROM documents)
+    SELECT doc_id, url_raw, {canonicalize_url_sql('url_raw')} AS url_canon
+    FROM m
+""")
 def q08_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization end-to-end (SURVEY §2.7 C2, north rule).
 
@@ -176,6 +258,12 @@ def q08_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT doc_id, n_chars,
+               len(string_split(trim(text), ' ')) AS n_tokens,
+               len(list_distinct(string_split(trim(text), ' '))) AS n_uniq_tokens
+        FROM documents
+    """)
 def q09_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting / doc stats (training-data op: text analysis)."""
     docs = load(spark, sf_dir, "documents")
@@ -188,6 +276,15 @@ def q09_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT lang,
+               count(*) AS n_docs,
+               CAST(sum(n_chars) AS BIGINT) AS total_chars,
+               CAST(sum(CASE WHEN len(string_split(trim(text), ' ')) >= 50
+                             THEN 1 ELSE 0 END) AS BIGINT) AS n_quality_docs
+        FROM documents
+        GROUP BY lang
+    """)
 def q10_lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language distribution + quality gate (training-data op)."""
     docs = load(spark, sf_dir, "documents")
@@ -205,6 +302,21 @@ def q10_lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        WITH q AS (
+            SELECT embedding::DOUBLE[] AS q_emb FROM embeddings
+            ORDER BY vec_id LIMIT 1
+        )
+        SELECT vec_id,
+               round(
+                   list_dot_product(embedding::DOUBLE[], q_emb) /
+                   (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) *
+                    sqrt(list_dot_product(q_emb, q_emb))), 4
+               ) AS cos_sim
+        FROM embeddings, q
+        ORDER BY cos_sim DESC, vec_id ASC
+        LIMIT 10
+    """)
 def q11_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k ANN baseline (training-data op: similarity).
 
@@ -239,9 +351,19 @@ def q11_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT strftime(make_timestamp(CAST(floor(epoch(ts) / 300) * 300 AS BIGINT)
+                                       * 1000000),
+                        '%Y-%m-%d %H:%M:%S') AS win_start,
+               event_type,
+               count(*) AS cnt,
+               round(sum(value), 2) AS sum_value
+        FROM events
+        GROUP BY win_start, event_type
+    """)
 def q12_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 5-min window aggregation (SURVEY §2.8 streaming analog)."""
-    _utc(spark)
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load(spark, sf_dir, "events")
     win = F.from_unixtime(
         F.floor(F.unix_timestamp("ts") / 300) * 300, "yyyy-MM-dd HH:mm:ss"
@@ -256,6 +378,14 @@ def q12_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT c_custkey, c_name, c_mktsegment
+        FROM customer
+        WHERE NOT EXISTS (
+            SELECT 1 FROM orders
+            WHERE o_custkey = c_custkey AND o_totalprice > 300000
+        )
+    """)
 def q13_no_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-join set difference (SURVEY §2.6 SO2/SO3 — URL-seen dedup shape)."""
     customer = load(spark, sf_dir, "customer")
@@ -265,186 +395,10 @@ def q13_no_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "c_name", "c_mktsegment")
 
 
-ORACLE_SQL: dict[str, str] = {
-    "q01_pricing_summary": """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_quantity), 2) AS sum_qty,
-               round(sum(l_extendedprice), 2) AS sum_base_price,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-               count(*) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        GROUP BY l_returnflag, l_linestatus
-    """,
-    "q02_region_revenue": """
-        SELECT r_name,
-               round(sum(o_totalprice), 2) AS revenue,
-               count(*) AS n_orders
-        FROM orders
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        GROUP BY r_name
-    """,
-    "q03_top_orders": """
-        SELECT l_orderkey,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM lineitem
-        GROUP BY l_orderkey
-        ORDER BY revenue DESC, l_orderkey ASC
-        LIMIT 10
-    """,
-    "q04_needs_recompute": """
-        SELECT p_partkey, strftime(last_ship_ts, '%Y-%m-%d') AS last_ship
-        FROM part
-        LEFT JOIN (
-            SELECT l_partkey, max(l_shipdate) AS last_ship_ts
-            FROM lineitem GROUP BY l_partkey
-        ) ls ON p_partkey = l_partkey
-        WHERE last_ship_ts IS NULL OR last_ship_ts < TIMESTAMP '2001-06-01'
-    """,
-    "q05_top_events_per_user": """
-        SELECT user_id, event_id, round(value, 4) AS value, rn
-        FROM (
-            SELECT user_id, event_id, value, ts,
-                   row_number() OVER (
-                       PARTITION BY user_id
-                       ORDER BY value DESC, ts ASC, event_id ASC
-                   ) AS rn
-            FROM events
-        )
-        WHERE rn <= 3
-    """,
-    "q06_event_type_stats": """
-        SELECT event_type,
-               count(*) AS cnt,
-               round(sum(value), 2) AS sum_value,
-               count(DISTINCT user_id) AS n_users
-        FROM events
-        GROUP BY event_type
-    """,
-    "q07_exact_dedup": """
-        SELECT md5(lower(trim(text))) AS fp,
-               count(*) AS n,
-               min(doc_id) AS keeper_doc_id
-        FROM documents
-        GROUP BY fp
-    """,
-    "q08_url_canonicalize": None,  # filled below (built from the shared recipe)
-    "q09_token_stats": """
-        SELECT doc_id, n_chars,
-               len(string_split(trim(text), ' ')) AS n_tokens,
-               len(list_distinct(string_split(trim(text), ' '))) AS n_uniq_tokens
-        FROM documents
-    """,
-    "q10_lang_quality": """
-        SELECT lang,
-               count(*) AS n_docs,
-               CAST(sum(n_chars) AS BIGINT) AS total_chars,
-               CAST(sum(CASE WHEN len(string_split(trim(text), ' ')) >= 50
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_quality_docs
-        FROM documents
-        GROUP BY lang
-    """,
-    "q11_embedding_topk": """
-        WITH q AS (
-            SELECT embedding::DOUBLE[] AS q_emb FROM embeddings
-            ORDER BY vec_id LIMIT 1
-        )
-        SELECT vec_id,
-               round(
-                   list_dot_product(embedding::DOUBLE[], q_emb) /
-                   (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) *
-                    sqrt(list_dot_product(q_emb, q_emb))), 4
-               ) AS cos_sim
-        FROM embeddings, q
-        ORDER BY cos_sim DESC, vec_id ASC
-        LIMIT 10
-    """,
-    "q12_event_windows": """
-        SELECT strftime(make_timestamp(CAST(floor(epoch(ts) / 300) * 300 AS BIGINT)
-                                       * 1000000),
-                        '%Y-%m-%d %H:%M:%S') AS win_start,
-               event_type,
-               count(*) AS cnt,
-               round(sum(value), 2) AS sum_value
-        FROM events
-        GROUP BY win_start, event_type
-    """,
-    "q13_no_order_customers": """
-        SELECT c_custkey, c_name, c_mktsegment
-        FROM customer
-        WHERE NOT EXISTS (
-            SELECT 1 FROM orders
-            WHERE o_custkey = c_custkey AND o_totalprice > 300000
-        )
-    """,
-}
-
-_MESSY_URL_SQL = (
-    "concat('HTTPS://Portal-', lang, '.Example.ORG:443/data/', source, "
-    "'/?z=', CAST(doc_id % 7 AS VARCHAR), '&a=', CAST(doc_id % 3 AS VARCHAR), "
-    "'#section')"
-)
-ORACLE_SQL["q08_url_canonicalize"] = f"""
-    WITH m AS (SELECT doc_id, {_MESSY_URL_SQL} AS url_raw FROM documents)
-    SELECT doc_id, url_raw, {canonicalize_url_sql('url_raw')} AS url_canon
-    FROM m
-"""
-
-
-from findopendata_spark.queries2 import ORACLE_SQL2, QUERIES2  # noqa: E402
-from findopendata_spark.queries3 import ORACLE_SQL3, QUERIES3  # noqa: E402
-from findopendata_spark.queries4 import ORACLE_SQL4, QUERIES4  # noqa: E402
-from findopendata_spark.queries5 import ORACLE_SQL5, QUERIES5  # noqa: E402
-from findopendata_spark.queries6 import ORACLE_SQL6, QUERIES6  # noqa: E402
-from findopendata_spark.queries7 import ORACLE_SQL7, QUERIES7  # noqa: E402
-from findopendata_spark.queries8 import ORACLE_SQL8, QUERIES8  # noqa: E402
-from findopendata_spark.queries9 import ORACLE_SQL9, QUERIES9  # noqa: E402
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q01_pricing_summary": q01_pricing_summary,
-    "q02_region_revenue": q02_region_revenue,
-    "q03_top_orders": q03_top_orders,
-    "q04_needs_recompute": q04_needs_recompute,
-    "q05_top_events_per_user": q05_top_events_per_user,
-    "q06_event_type_stats": q06_event_type_stats,
-    "q07_exact_dedup": q07_exact_dedup,
-    "q08_url_canonicalize": q08_url_canonicalize,
-    "q09_token_stats": q09_token_stats,
-    "q10_lang_quality": q10_lang_quality,
-    "q11_embedding_topk": q11_embedding_topk,
-    "q12_event_windows": q12_event_windows,
-    "q13_no_order_customers": q13_no_order_customers,
-}
-QUERIES.update(QUERIES2)
-ORACLE_SQL.update(ORACLE_SQL2)
-QUERIES.update(QUERIES3)
-ORACLE_SQL.update(ORACLE_SQL3)
-QUERIES.update(QUERIES4)
-ORACLE_SQL.update(ORACLE_SQL4)
-QUERIES.update(QUERIES5)
-ORACLE_SQL.update(ORACLE_SQL5)
-QUERIES.update(QUERIES6)
-ORACLE_SQL.update(ORACLE_SQL6)
-QUERIES.update(QUERIES7)
-ORACLE_SQL.update(ORACLE_SQL7)
-QUERIES.update(QUERIES8)
-ORACLE_SQL.update(ORACLE_SQL8)
-QUERIES.update(QUERIES9)
-ORACLE_SQL.update(ORACLE_SQL9)
-
-
-# Deprecated queries: registered-surface removals kept callable + oracle-
-# pinned by the local parity test (tests/test_oracle_parity.py). r05:
-# q19_ann_ivf deprecated in favor of q46_ann_ivf_search (same trained-IVF
-# index, stricter probe) — this resolves the r04 51-queries-vs-50-row-cap
-# conflict explicitly instead of reordering the registry around the
-# grading driver's cap (ADVICE r04 item 1).
-from findopendata_spark.queries2 import (  # noqa: E402
-    DEPRECATED2 as DEPRECATED_QUERIES,
-    DEPRECATED_ORACLE2 as DEPRECATED_ORACLE,
-)
+# published sorted by name (q01 ... q51), so the order queries() returns
+# does not depend on which query module was imported first
+QUERIES: dict[str, QueryFn] = {n: REGISTRY[n][0] for n in sorted(REGISTRY)}
+ORACLE_SQL: dict[str, str] = {n: REGISTRY[n][1] for n in sorted(REGISTRY)}
 
 # explicit raise, not assert (ADVICE r05): the 50-entry registry contract
 # (the grading driver records only the first 50 rows) must hold under

@@ -7,16 +7,46 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from findopendata_spark.registry import load, query
 from findopendata_spark.text_analysis import tokens
-
-
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
 
 _Q29_TERMS = ("data", "table", "query", "spark")
 
 
+@query("""
+        WITH tf AS (
+            SELECT doc_id,
+                   """ + ", ".join(
+                       f"len(list_filter(string_split_regex(lower(trim(text)), "
+                       f"'\\s+'), x -> x = '{t}')) AS tf_{t}"
+                       for t in _Q29_TERMS
+                   ) + """
+            FROM documents
+        ), stats AS (
+            SELECT CAST(count(*) AS DOUBLE) AS n,
+                   """ + ", ".join(
+                       f"CAST(sum(CASE WHEN tf_{t} > 0 THEN 1 ELSE 0 END) "
+                       f"AS DOUBLE) AS df_{t}"
+                       for t in _Q29_TERMS
+                   ) + """
+            FROM tf
+        )
+        SELECT doc_id, round(
+            """ + " + ".join(
+                f"(CAST(tf_{t} AS DOUBLE) / (tf_{t} + 1.2)) * "
+                f"ln(1 + (n - df_{t} + 0.5) / (df_{t} + 0.5))"
+                for t in _Q29_TERMS
+            ) + """, 4) AS score
+        FROM tf CROSS JOIN stats
+        WHERE round(
+            """ + " + ".join(
+                f"(CAST(tf_{t} AS DOUBLE) / (tf_{t} + 1.2)) * "
+                f"ln(1 + (n - df_{t} + 0.5) / (df_{t} + 0.5))"
+                for t in _Q29_TERMS
+            ) + """, 4) > 0
+        ORDER BY score DESC, doc_id ASC
+        LIMIT 20
+    """)
 def q29_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyword search with BM25-lite ranking (W2 — the reference's FTS
     ``ts_rank_cd`` cover-density rank, ``apiserver/main.py:128-166``),
@@ -99,6 +129,18 @@ def bm25_rank(
     )
 
 
+@query("""
+        SELECT p_brand,
+               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+               count(*) AS n_items
+        FROM lineitem
+        JOIN orders ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation ON c_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey AND r_name = 'ASIA'
+        JOIN part ON l_partkey = p_partkey
+        GROUP BY p_brand
+    """)
 def q30_region_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-way fk join chain (J4-shape, ``apiserver/main.py:210-254``):
     lineitem⋈orders⋈customer⋈nation⋈region⋈part, one-region filter
@@ -143,6 +185,25 @@ def q30_region_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        WITH head AS (
+            SELECT * FROM documents ORDER BY doc_id LIMIT 25000
+        ), rec AS (
+            SELECT 'lang' AS column_name, lang AS val FROM head
+            UNION ALL SELECT 'n_chars', CAST(n_chars AS VARCHAR) FROM head
+            UNION ALL SELECT 'doc_id', CAST(doc_id AS VARCHAR) FROM head
+        )
+        SELECT column_name,
+               CASE WHEN sum(CASE WHEN try_cast(val AS BIGINT) IS NULL
+                                   AND val IS NOT NULL THEN 1 ELSE 0 END) = 0
+                    THEN 'long'
+                    WHEN sum(CASE WHEN try_cast(val AS DOUBLE) IS NULL
+                                   AND val IS NOT NULL THEN 1 ELSE 0 END) = 0
+                    THEN 'double'
+                    ELSE 'string' END AS inferred_type,
+               (sum(CASE WHEN val IS NULL THEN 1 ELSE 0 END) > 0) AS nullable
+        FROM rec GROUP BY column_name
+    """)
 def q31_schema_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded schema inference (S15, ``parsers/avro.py:83-113``): per
     column over a 25k-record head, infer {long, double, string} + a
@@ -169,6 +230,11 @@ def q31_schema_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT source, lang, count(*) AS n_docs, min(doc_id) AS first_doc,
+               CAST(sum(n_chars) AS BIGINT) AS total_chars
+        FROM documents GROUP BY source, lang
+    """)
 def q32_resource_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Export-manifest shape (S17, ``sql/export_column_sketches.sql``):
     per (source, lang) roll-up with keys for a JSONL dump."""
@@ -180,6 +246,16 @@ def q32_resource_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT event_type,
+               CAST(floor(coalesce(try_cast(json_extract_string(props, '$.k')
+                                            AS BIGINT), -1) / 10) AS BIGINT)
+                   AS k_bucket,
+               count(*) AS cnt,
+               round(avg(coalesce(try_cast(json_extract_string(props, '$.k')
+                                           AS BIGINT), -1)), 4) AS avg_k
+        FROM events GROUP BY event_type, k_bucket
+    """)
 def q33_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON field pulls with defaults (C12, ``metadata.py:48-67``):
     extract props.k, bucket it, aggregate."""
@@ -203,95 +279,3 @@ def q33_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("_k"), 4).alias("avg_k"),
         )
     )
-
-
-QUERIES4 = {
-    "q29_keyword_search": q29_keyword_search,
-    "q30_region_brand_revenue": q30_region_brand_revenue,
-    "q31_schema_inference": q31_schema_inference,
-    "q32_resource_export": q32_resource_export,
-    "q33_json_props": q33_json_props,
-}
-
-ORACLE_SQL4: dict[str, str | None] = {
-    "q29_keyword_search": """
-        WITH tf AS (
-            SELECT doc_id,
-                   """ + ", ".join(
-                       f"len(list_filter(string_split_regex(lower(trim(text)), "
-                       f"'\\s+'), x -> x = '{t}')) AS tf_{t}"
-                       for t in _Q29_TERMS
-                   ) + """
-            FROM documents
-        ), stats AS (
-            SELECT CAST(count(*) AS DOUBLE) AS n,
-                   """ + ", ".join(
-                       f"CAST(sum(CASE WHEN tf_{t} > 0 THEN 1 ELSE 0 END) "
-                       f"AS DOUBLE) AS df_{t}"
-                       for t in _Q29_TERMS
-                   ) + """
-            FROM tf
-        )
-        SELECT doc_id, round(
-            """ + " + ".join(
-                f"(CAST(tf_{t} AS DOUBLE) / (tf_{t} + 1.2)) * "
-                f"ln(1 + (n - df_{t} + 0.5) / (df_{t} + 0.5))"
-                for t in _Q29_TERMS
-            ) + """, 4) AS score
-        FROM tf CROSS JOIN stats
-        WHERE round(
-            """ + " + ".join(
-                f"(CAST(tf_{t} AS DOUBLE) / (tf_{t} + 1.2)) * "
-                f"ln(1 + (n - df_{t} + 0.5) / (df_{t} + 0.5))"
-                for t in _Q29_TERMS
-            ) + """, 4) > 0
-        ORDER BY score DESC, doc_id ASC
-        LIMIT 20
-    """,
-    "q30_region_brand_revenue": """
-        SELECT p_brand,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-               count(*) AS n_items
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey AND r_name = 'ASIA'
-        JOIN part ON l_partkey = p_partkey
-        GROUP BY p_brand
-    """,
-    "q31_schema_inference": """
-        WITH head AS (
-            SELECT * FROM documents ORDER BY doc_id LIMIT 25000
-        ), rec AS (
-            SELECT 'lang' AS column_name, lang AS val FROM head
-            UNION ALL SELECT 'n_chars', CAST(n_chars AS VARCHAR) FROM head
-            UNION ALL SELECT 'doc_id', CAST(doc_id AS VARCHAR) FROM head
-        )
-        SELECT column_name,
-               CASE WHEN sum(CASE WHEN try_cast(val AS BIGINT) IS NULL
-                                   AND val IS NOT NULL THEN 1 ELSE 0 END) = 0
-                    THEN 'long'
-                    WHEN sum(CASE WHEN try_cast(val AS DOUBLE) IS NULL
-                                   AND val IS NOT NULL THEN 1 ELSE 0 END) = 0
-                    THEN 'double'
-                    ELSE 'string' END AS inferred_type,
-               (sum(CASE WHEN val IS NULL THEN 1 ELSE 0 END) > 0) AS nullable
-        FROM rec GROUP BY column_name
-    """,
-    "q32_resource_export": """
-        SELECT source, lang, count(*) AS n_docs, min(doc_id) AS first_doc,
-               CAST(sum(n_chars) AS BIGINT) AS total_chars
-        FROM documents GROUP BY source, lang
-    """,
-    "q33_json_props": """
-        SELECT event_type,
-               CAST(floor(coalesce(try_cast(json_extract_string(props, '$.k')
-                                            AS BIGINT), -1) / 10) AS BIGINT)
-                   AS k_bucket,
-               count(*) AS cnt,
-               round(avg(coalesce(try_cast(json_extract_string(props, '$.k')
-                                           AS BIGINT), -1)), 4) AS avg_k
-        FROM events GROUP BY event_type, k_bucket
-    """,
-}

@@ -6,11 +6,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from findopendata_spark.registry import load, query
 
 
+@query("""
+        WITH d AS (
+            SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
+        )
+        SELECT x.label, x.vec_id AS a, y.vec_id AS b,
+               round(list_dot_product(x.v, y.v) /
+                     (sqrt(list_dot_product(x.v, x.v)) *
+                      sqrt(list_dot_product(y.v, y.v))), 4) AS cos_sim
+        FROM d x JOIN d y ON x.label = y.label AND x.vec_id < y.vec_id
+        WHERE list_dot_product(x.v, y.v) /
+              (sqrt(list_dot_product(x.v, x.v)) *
+               sqrt(list_dot_product(y.v, y.v))) >= 0.35
+    """)
 def q34_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs with metadata blocking.
 
@@ -30,22 +41,3 @@ def q34_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
     return embedding_near_dup(emb, threshold=0.35, block_cap=1000)
-
-
-QUERIES5 = {"q34_embedding_near_dup": q34_embedding_near_dup}
-
-ORACLE_SQL5: dict[str, str | None] = {
-    "q34_embedding_near_dup": """
-        WITH d AS (
-            SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
-        )
-        SELECT x.label, x.vec_id AS a, y.vec_id AS b,
-               round(list_dot_product(x.v, y.v) /
-                     (sqrt(list_dot_product(x.v, x.v)) *
-                      sqrt(list_dot_product(y.v, y.v))), 4) AS cos_sim
-        FROM d x JOIN d y ON x.label = y.label AND x.vec_id < y.vec_id
-        WHERE list_dot_product(x.v, y.v) /
-              (sqrt(list_dot_product(x.v, x.v)) *
-               sqrt(list_dot_product(y.v, y.v))) >= 0.35
-    """,
-}

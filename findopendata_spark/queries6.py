@@ -8,11 +8,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from findopendata_spark.registry import load, query
 
 
+@query("""
+        SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
+               coalesce(l_linestatus, 'ALL') AS linestatus,
+               round(sum(l_extendedprice), 2) AS sum_price,
+               count(*) AS n
+        FROM lineitem
+        GROUP BY ROLLUP (l_returnflag, l_linestatus)
+    """)
 def q35_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over (returnflag, linestatus) with grouping ids."""
     li = load(spark, sf_dir, "lineitem")
@@ -31,6 +37,15 @@ def q35_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT c_mktsegment, count(*) AS n_customers
+        FROM customer
+        WHERE EXISTS (
+            SELECT 1 FROM orders
+            WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT'
+        )
+        GROUP BY c_mktsegment
+    """)
 def q36_exists_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated-EXISTS semi-join (the reference's `id IN %s` J6 shape
     generalized): customers with at least one urgent order, per segment."""
@@ -45,6 +60,13 @@ def q36_exists_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT l_returnflag,
+               count(DISTINCT l_partkey) AS n_parts,
+               count(DISTINCT l_suppkey) AS n_supps,
+               count(*) AS n_rows
+        FROM lineitem GROUP BY l_returnflag
+    """)
 def q37_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiple DISTINCT aggregates in one pass (expand-based plan)."""
     li = load(spark, sf_dir, "lineitem")
@@ -55,6 +77,15 @@ def q37_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT n_name,
+               count(DISTINCT l_orderkey) AS n_orders,
+               round(sum(l_quantity), 2) AS total_qty
+        FROM lineitem
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation ON s_nationkey = n_nationkey
+        GROUP BY n_name
+    """)
 def q38_supplier_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join + two-level agg: orders shipped per supplier nation."""
     li = load(spark, sf_dir, "lineitem")
@@ -71,6 +102,12 @@ def q38_supplier_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT source,
+               ascii(substr(md5(source), 1, 1)) % 3 AS token_idx,
+               count(*) AS n_requests
+        FROM documents GROUP BY source, token_idx
+    """)
 def q39_token_rotation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic API-token rotation (W5 — the reference rotates
     Socrata app tokens randomly, ``socrata_crawler.py:149-153``; we pin
@@ -82,54 +119,3 @@ def q39_token_rotation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "token_idx")
         .agg(F.count(F.lit(1)).alias("n_requests"))
     )
-
-
-QUERIES6 = {
-    "q39_token_rotation": q39_token_rotation,
-    "q35_rollup_revenue": q35_rollup_revenue,
-    "q36_exists_orders": q36_exists_orders,
-    "q37_multi_distinct": q37_multi_distinct,
-    "q38_supplier_order_counts": q38_supplier_order_counts,
-}
-
-ORACLE_SQL6: dict[str, str | None] = {
-    "q39_token_rotation": """
-        SELECT source,
-               ascii(substr(md5(source), 1, 1)) % 3 AS token_idx,
-               count(*) AS n_requests
-        FROM documents GROUP BY source, token_idx
-    """,
-    "q35_rollup_revenue": """
-        SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-               coalesce(l_linestatus, 'ALL') AS linestatus,
-               round(sum(l_extendedprice), 2) AS sum_price,
-               count(*) AS n
-        FROM lineitem
-        GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-    "q36_exists_orders": """
-        SELECT c_mktsegment, count(*) AS n_customers
-        FROM customer
-        WHERE EXISTS (
-            SELECT 1 FROM orders
-            WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT'
-        )
-        GROUP BY c_mktsegment
-    """,
-    "q37_multi_distinct": """
-        SELECT l_returnflag,
-               count(DISTINCT l_partkey) AS n_parts,
-               count(DISTINCT l_suppkey) AS n_supps,
-               count(*) AS n_rows
-        FROM lineitem GROUP BY l_returnflag
-    """,
-    "q38_supplier_order_counts": """
-        SELECT n_name,
-               count(DISTINCT l_orderkey) AS n_orders,
-               round(sum(l_quantity), 2) AS total_qty
-        FROM lineitem
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation ON s_nationkey = n_nationkey
-        GROUP BY n_name
-    """,
-}

@@ -4,16 +4,59 @@ paths VERDICT r01 flagged as partial."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from findopendata_spark.functions.avro_infer import flatten_avro, infer_avro_schema
+from findopendata_spark.registry import load, query
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
+# Value-dependent types recomputed via DuckDB's own fold; structure
+# rows (record/array) follow from the construction; nullable is the
+# reference's unconditional ["null", T] rule.
+@query("""
+        WITH vals AS (
+            SELECT doc_id,
+                   CASE WHEN doc_id % 3 = 0
+                        THEN CAST(doc_id AS VARCHAR) END AS amount_v,
+                   CAST(doc_id / 7.0 AS VARCHAR) AS score_v,
+                   CASE WHEN doc_id % 5 <> 0
+                        THEN CAST(doc_id + 0.5 AS VARCHAR) END AS lat_v,
+                   CASE WHEN doc_id % 5 <> 0
+                        THEN CAST(doc_id % 360 - 180 AS VARCHAR) END AS lon_v
+            FROM documents
+        ), t AS (
+            -- JSON's integer-vs-number split is LEXICAL (a decimal point
+            -- makes it "number"), so the fold tests the rendered form;
+            -- DuckDB try_cast would round '0.5' to BIGINT successfully.
+            SELECT
+              CASE WHEN sum(CASE WHEN amount_v IS NOT NULL
+                                  AND NOT regexp_matches(amount_v, '^-?[0-9]+$')
+                                 THEN 1 ELSE 0 END) = 0
+                   THEN 'long' ELSE 'double' END AS amount_t,
+              CASE WHEN sum(CASE WHEN NOT regexp_matches(score_v, '^-?[0-9]+$')
+                                 THEN 1 ELSE 0 END) = 0
+                   THEN 'long' ELSE 'double' END AS score_t,
+              CASE WHEN sum(CASE WHEN lat_v IS NOT NULL
+                                  AND NOT regexp_matches(lat_v, '^-?[0-9]+$')
+                                 THEN 1 ELSE 0 END) = 0
+                   THEN 'long' ELSE 'double' END AS lat_t,
+              CASE WHEN sum(CASE WHEN lon_v IS NOT NULL
+                                  AND NOT regexp_matches(lon_v, '^-?[0-9]+$')
+                                 THEN 1 ELSE 0 END) = 0
+                   THEN 'long' ELSE 'double' END AS lon_t
+            FROM vals
+        )
+        SELECT path, avro_type, true AS nullable FROM (
+            SELECT 'username' AS path, 'string' AS avro_type FROM t
+            UNION ALL SELECT 'amount', amount_t FROM t
+            UNION ALL SELECT 'score', score_t FROM t
+            UNION ALL SELECT 'location', 'record' FROM t
+            UNION ALL SELECT 'location.latitude', lat_t FROM t
+            UNION ALL SELECT 'location.longitude', lon_t FROM t
+            UNION ALL SELECT 'tags', 'array<string>' FROM t
+        )
+    """)
 def q40_nested_schema_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested JSON→Avro schema inference (S15, ``parsers/avro.py:24-53``).
 
@@ -55,6 +98,41 @@ def q40_nested_schema_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        WITH parts AS (
+            SELECT doc_id,
+                   list_distinct(list_transform(
+                       generate_series(1, length(lower(substr(text, 1, 40))) - 2),
+                       i -> substr(lower(substr(text, 1, 40)), i, 3))) AS tg,
+                   list_distinct(list_transform(
+                       generate_series(1, greatest(
+                           length(lower(substr(text, 41, 200))) - 2, 0)),
+                       i -> substr(lower(substr(text, 41, 200)), i, 3))) AS dg
+            FROM documents WHERE length(text) >= 80
+        ), q AS (
+            SELECT doc_id AS q_doc_id, tg AS qtg, dg AS qdg
+            FROM parts ORDER BY doc_id LIMIT 1
+        ), scored AS (
+            SELECT doc_id,
+                   round(CASE WHEN len(tg) + len(qtg)
+                                   - len(list_intersect(tg, qtg)) > 0
+                         THEN CAST(len(list_intersect(tg, qtg)) AS DOUBLE) /
+                              (len(tg) + len(qtg) - len(list_intersect(tg, qtg)))
+                         ELSE 0 END, 6) AS title_similarity,
+                   round(CASE WHEN len(dg) + len(qdg)
+                                   - len(list_intersect(dg, qdg)) > 0
+                         THEN CAST(len(list_intersect(dg, qdg)) AS DOUBLE) /
+                              (len(dg) + len(qdg) - len(list_intersect(dg, qdg)))
+                         ELSE 0 END, 6) AS description_similarity
+            FROM parts, q
+            WHERE doc_id <> q_doc_id
+        )
+        SELECT doc_id, title_similarity, description_similarity
+        FROM scored
+        WHERE title_similarity > 0
+        ORDER BY title_similarity DESC, description_similarity DESC, doc_id ASC
+        LIMIT 10
+    """)
 def q41_similar_packages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dual-similarity similar-packages ranking (J5 full,
     ``apiserver/main.py:173-207``): candidates must trigram-match on
@@ -103,6 +181,37 @@ def q41_similar_packages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Stub vocabulary rule: a (lower/trim-normalized) value is
+# in-vocabulary iff any whitespace token has >= 3 chars; VEC_DIM=16.
+@query(r"""
+        WITH rec AS (
+            SELECT 'lang' AS column_name, lower(trim(lang)) AS v FROM documents
+            UNION ALL
+            SELECT 'mod7', lower(trim(CAST(doc_id % 7 AS VARCHAR)))
+            FROM documents
+            UNION ALL
+            SELECT 'words', lower(trim(substring(text, 1, 30))) FROM documents
+        ), flags AS (
+            SELECT column_name, v,
+                   (v <> '' AND len(list_filter(
+                        string_split_regex(v, '\s+'),
+                        t -> length(t) >= 3)) = 0) AS is_oov,
+                   (v <> '' AND len(list_filter(
+                        string_split_regex(v, '\s+'),
+                        t -> length(t) >= 3)) > 0) AS is_in
+            FROM rec
+        )
+        SELECT 'documents' AS file_id, column_name,
+               CAST(count(*) AS BIGINT) AS count,
+               CAST(sum(CASE WHEN is_oov THEN 1 ELSE 0 END) AS BIGINT)
+                   AS out_of_vocabulary_count,
+               CAST(sum(CASE WHEN is_in THEN 1 ELSE 0 END) AS BIGINT)
+                   AS in_vocabulary_count,
+               (sum(CASE WHEN is_in THEN 1 ELSE 0 END) > 0) AS has_wv_data,
+               CASE WHEN sum(CASE WHEN is_in THEN 1 ELSE 0 END) > 0
+                    THEN 16 ELSE -1 END AS wv_dim
+        FROM flags GROUP BY column_name
+    """)
 def q42_word_vector_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-vector sketch fields (A8 full, ``create_sketch_tables.sql:
     27-48`` + ``column_sketch.py:127-146,188-197``): sketches built with
@@ -134,125 +243,3 @@ def q42_word_vector_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("word_vector_data").isNotNull().alias("has_wv_data"),
         F.coalesce(F.size("word_vector_data"), F.lit(-1)).alias("wv_dim"),
     )
-
-
-QUERIES7 = {
-    "q40_nested_schema_inference": q40_nested_schema_inference,
-    "q41_similar_packages": q41_similar_packages,
-    "q42_word_vector_sketch": q42_word_vector_sketch,
-}
-
-ORACLE_SQL7: dict[str, str | None] = {
-    # Value-dependent types recomputed via DuckDB's own fold; structure
-    # rows (record/array) follow from the construction; nullable is the
-    # reference's unconditional ["null", T] rule.
-    "q40_nested_schema_inference": """
-        WITH vals AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % 3 = 0
-                        THEN CAST(doc_id AS VARCHAR) END AS amount_v,
-                   CAST(doc_id / 7.0 AS VARCHAR) AS score_v,
-                   CASE WHEN doc_id % 5 <> 0
-                        THEN CAST(doc_id + 0.5 AS VARCHAR) END AS lat_v,
-                   CASE WHEN doc_id % 5 <> 0
-                        THEN CAST(doc_id % 360 - 180 AS VARCHAR) END AS lon_v
-            FROM documents
-        ), t AS (
-            -- JSON's integer-vs-number split is LEXICAL (a decimal point
-            -- makes it "number"), so the fold tests the rendered form;
-            -- DuckDB try_cast would round '0.5' to BIGINT successfully.
-            SELECT
-              CASE WHEN sum(CASE WHEN amount_v IS NOT NULL
-                                  AND NOT regexp_matches(amount_v, '^-?[0-9]+$')
-                                 THEN 1 ELSE 0 END) = 0
-                   THEN 'long' ELSE 'double' END AS amount_t,
-              CASE WHEN sum(CASE WHEN NOT regexp_matches(score_v, '^-?[0-9]+$')
-                                 THEN 1 ELSE 0 END) = 0
-                   THEN 'long' ELSE 'double' END AS score_t,
-              CASE WHEN sum(CASE WHEN lat_v IS NOT NULL
-                                  AND NOT regexp_matches(lat_v, '^-?[0-9]+$')
-                                 THEN 1 ELSE 0 END) = 0
-                   THEN 'long' ELSE 'double' END AS lat_t,
-              CASE WHEN sum(CASE WHEN lon_v IS NOT NULL
-                                  AND NOT regexp_matches(lon_v, '^-?[0-9]+$')
-                                 THEN 1 ELSE 0 END) = 0
-                   THEN 'long' ELSE 'double' END AS lon_t
-            FROM vals
-        )
-        SELECT path, avro_type, true AS nullable FROM (
-            SELECT 'username' AS path, 'string' AS avro_type FROM t
-            UNION ALL SELECT 'amount', amount_t FROM t
-            UNION ALL SELECT 'score', score_t FROM t
-            UNION ALL SELECT 'location', 'record' FROM t
-            UNION ALL SELECT 'location.latitude', lat_t FROM t
-            UNION ALL SELECT 'location.longitude', lon_t FROM t
-            UNION ALL SELECT 'tags', 'array<string>' FROM t
-        )
-    """,
-    "q41_similar_packages": """
-        WITH parts AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                       generate_series(1, length(lower(substr(text, 1, 40))) - 2),
-                       i -> substr(lower(substr(text, 1, 40)), i, 3))) AS tg,
-                   list_distinct(list_transform(
-                       generate_series(1, greatest(
-                           length(lower(substr(text, 41, 200))) - 2, 0)),
-                       i -> substr(lower(substr(text, 41, 200)), i, 3))) AS dg
-            FROM documents WHERE length(text) >= 80
-        ), q AS (
-            SELECT doc_id AS q_doc_id, tg AS qtg, dg AS qdg
-            FROM parts ORDER BY doc_id LIMIT 1
-        ), scored AS (
-            SELECT doc_id,
-                   round(CASE WHEN len(tg) + len(qtg)
-                                   - len(list_intersect(tg, qtg)) > 0
-                         THEN CAST(len(list_intersect(tg, qtg)) AS DOUBLE) /
-                              (len(tg) + len(qtg) - len(list_intersect(tg, qtg)))
-                         ELSE 0 END, 6) AS title_similarity,
-                   round(CASE WHEN len(dg) + len(qdg)
-                                   - len(list_intersect(dg, qdg)) > 0
-                         THEN CAST(len(list_intersect(dg, qdg)) AS DOUBLE) /
-                              (len(dg) + len(qdg) - len(list_intersect(dg, qdg)))
-                         ELSE 0 END, 6) AS description_similarity
-            FROM parts, q
-            WHERE doc_id <> q_doc_id
-        )
-        SELECT doc_id, title_similarity, description_similarity
-        FROM scored
-        WHERE title_similarity > 0
-        ORDER BY title_similarity DESC, description_similarity DESC, doc_id ASC
-        LIMIT 10
-    """,
-    # Stub vocabulary rule: a (lower/trim-normalized) value is
-    # in-vocabulary iff any whitespace token has >= 3 chars; VEC_DIM=16.
-    "q42_word_vector_sketch": r"""
-        WITH rec AS (
-            SELECT 'lang' AS column_name, lower(trim(lang)) AS v FROM documents
-            UNION ALL
-            SELECT 'mod7', lower(trim(CAST(doc_id % 7 AS VARCHAR)))
-            FROM documents
-            UNION ALL
-            SELECT 'words', lower(trim(substring(text, 1, 30))) FROM documents
-        ), flags AS (
-            SELECT column_name, v,
-                   (v <> '' AND len(list_filter(
-                        string_split_regex(v, '\s+'),
-                        t -> length(t) >= 3)) = 0) AS is_oov,
-                   (v <> '' AND len(list_filter(
-                        string_split_regex(v, '\s+'),
-                        t -> length(t) >= 3)) > 0) AS is_in
-            FROM rec
-        )
-        SELECT 'documents' AS file_id, column_name,
-               CAST(count(*) AS BIGINT) AS count,
-               CAST(sum(CASE WHEN is_oov THEN 1 ELSE 0 END) AS BIGINT)
-                   AS out_of_vocabulary_count,
-               CAST(sum(CASE WHEN is_in THEN 1 ELSE 0 END) AS BIGINT)
-                   AS in_vocabulary_count,
-               (sum(CASE WHEN is_in THEN 1 ELSE 0 END) > 0) AS has_wv_data,
-               CASE WHEN sum(CASE WHEN is_in THEN 1 ELSE 0 END) > 0
-                    THEN 16 ELSE -1 END AS wv_dim
-        FROM flags GROUP BY column_name
-    """,
-}

@@ -8,11 +8,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from findopendata_spark.embedding import ivf_index, ivf_oracle_with, ivf_topk
+from findopendata_spark.registry import load, query
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-
+@query("""
+        SELECT lang, count(*) AS n_docs,
+               round(quantile_cont(n_chars, 0.25), 4) AS p25,
+               round(quantile_cont(n_chars, 0.50), 4) AS p50,
+               round(quantile_cont(n_chars, 0.75), 4) AS p75
+        FROM documents GROUP BY lang
+    """)
 def q43_token_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles of document length per lang
     (``F.percentile`` = SQL PERCENTILE_CONT semantics; DuckDB twin is
@@ -30,6 +36,13 @@ def q43_token_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        SELECT user_id, event_id,
+               round(avg(value) OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 4) AS mavg5
+        FROM events
+    """)
 def q44_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window aggregate: per-user 5-event moving average of
     value (ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)."""
@@ -43,6 +56,25 @@ def q44_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("""
+        WITH o AS (
+            SELECT o_orderkey, o_custkey % 50 AS key, o_orderdate
+            FROM orders
+        ), e AS (
+            SELECT user_id % 50 AS key, ts, event_id FROM events
+        ), ranked AS (
+            SELECT o.o_orderkey, o.key, e.ts, e.event_id,
+                   row_number() OVER (
+                       PARTITION BY o.o_orderkey
+                       ORDER BY e.ts DESC, e.event_id DESC) AS rn
+            FROM o LEFT JOIN e
+              ON o.key = e.key AND e.ts <= o.o_orderdate
+        )
+        SELECT o_orderkey, key,
+               event_id AS last_event_id,
+               strftime(ts, '%Y-%m-%d %H:%M:%S') AS last_event_ts
+        FROM ranked WHERE rn = 1
+    """)
 def q45_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AS-OF join: for every order, the latest event in its key bucket
     with ts <= o_orderdate (ties broken by highest event_id).
@@ -98,129 +130,10 @@ def q45_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q46_ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN search end-to-end (the scale path q19 only quantizes):
-    probe the query's 2 nearest of 8 TRAINED cells (2 Lloyd's
-    iterations, VERDICT r02 item 5), exact cosine top-10 within them —
-    served from the session-cached centroid + precomputed assignment
-    tables (``embedding.ivf_index``), so a probe never rescans or
-    reassigns the corpus. Ties broken by (cos desc, id asc), ranking on
-    the 4dp-rounded cosine."""
-    from findopendata_spark.embedding import ivf_index, ivf_topk
-
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    idx = ivf_index(spark, sf_dir, n_cells=8, n_iter=2)
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    query = emb.orderBy("vec_id").limit(1)
-    return ivf_topk(
-        emb, query, k=10, n_probe=2,
-        centroids=idx["centroids"], assigned=idx["assigned"],
-    )
-
-
-def q47_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE with grouping_id (all four grouping-set combinations; q35
-    covers ROLLUP) — Spark's grouping_id() bitmask matches DuckDB's
-    GROUPING(a, b)."""
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.count(F.lit(1)).alias("n"),
-            F.grouping_id().alias("gid"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "sum_qty",
-            "n",
-            "gid",
-        )
-    )
-
-
-def q48_source_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered distinct string aggregation per group (LISTAGG /
-    string_agg shape): deterministic via sort-before-join."""
-    docs = load(spark, sf_dir, "documents")
-    return docs.groupBy("lang").agg(
-        F.array_join(F.array_sort(F.collect_set("source")), ",").alias(
-            "sources"
-        ),
-        F.countDistinct("source").alias("n_sources"),
-    )
-
-
-QUERIES8 = {
-    "q43_token_percentiles": q43_token_percentiles,
-    "q44_moving_average": q44_moving_average,
-    "q45_asof_join": q45_asof_join,
-    "q46_ann_ivf_search": q46_ann_ivf_search,
-    "q47_cube_revenue": q47_cube_revenue,
-    "q48_source_digest": q48_source_digest,
-}
-
-ORACLE_SQL8: dict[str, str | None] = {
-    "q43_token_percentiles": """
-        SELECT lang, count(*) AS n_docs,
-               round(quantile_cont(n_chars, 0.25), 4) AS p25,
-               round(quantile_cont(n_chars, 0.50), 4) AS p50,
-               round(quantile_cont(n_chars, 0.75), 4) AS p75
-        FROM documents GROUP BY lang
-    """,
-    "q44_moving_average": """
-        SELECT user_id, event_id,
-               round(avg(value) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 4) AS mavg5
-        FROM events
-    """,
-    "q45_asof_join": """
-        WITH o AS (
-            SELECT o_orderkey, o_custkey % 50 AS key, o_orderdate
-            FROM orders
-        ), e AS (
-            SELECT user_id % 50 AS key, ts, event_id FROM events
-        ), ranked AS (
-            SELECT o.o_orderkey, o.key, e.ts, e.event_id,
-                   row_number() OVER (
-                       PARTITION BY o.o_orderkey
-                       ORDER BY e.ts DESC, e.event_id DESC) AS rn
-            FROM o LEFT JOIN e
-              ON o.key = e.key AND e.ts <= o.o_orderdate
-        )
-        SELECT o_orderkey, key,
-               event_id AS last_event_id,
-               strftime(ts, '%Y-%m-%d %H:%M:%S') AS last_event_ts
-        FROM ranked WHERE rn = 1
-    """,
-    "q46_ann_ivf_search": None,  # filled below (trained-quantizer CTE)
-    "q47_cube_revenue": """
-        SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-               coalesce(l_linestatus, 'ALL') AS linestatus,
-               round(sum(l_quantity), 2) AS sum_qty,
-               count(*) AS n,
-               CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        FROM lineitem
-        GROUP BY CUBE (l_returnflag, l_linestatus)
-    """,
-    "q48_source_digest": """
-        SELECT lang,
-               string_agg(DISTINCT source, ',' ORDER BY source) AS sources,
-               count(DISTINCT source) AS n_sources
-        FROM documents GROUP BY lang
-    """,
-}
-
 # q46 oracle: trained quantizer (shared CTE) + probe 2 cells + exact
 # top-10 — identical math to ivf_topk over the ivf_index tables.
-from findopendata_spark.embedding import ivf_oracle_with as _ivf_with  # noqa: E402
-
-ORACLE_SQL8["q46_ann_ivf_search"] = f"""
-    WITH {_ivf_with()},
+@query(f"""
+    WITH {ivf_oracle_with()},
     q AS (
         SELECT vec_id AS q_id, v AS qv FROM e ORDER BY vec_id LIMIT 1
     ), probe AS (
@@ -247,4 +160,70 @@ ORACLE_SQL8["q46_ann_ivf_search"] = f"""
         WHERE a.vec_id <> p.q_id
     )
     QUALIFY rank <= 10
-"""
+""")
+def q46_ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN search end-to-end: probe the query's 2 nearest of 8
+    TRAINED cells (2 Lloyd's iterations, VERDICT r02 item 5), exact
+    cosine top-10 within them — served from the session-cached centroid + precomputed assignment
+    tables (``embedding.ivf_index``), so a probe never rescans or
+    reassigns the corpus. Ties broken by (cos desc, id asc), ranking on
+    the 4dp-rounded cosine."""
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    idx = ivf_index(spark, sf_dir, n_cells=8, n_iter=2)
+    emb = load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    query = emb.orderBy("vec_id").limit(1)
+    return ivf_topk(
+        emb, query, k=10, n_probe=2,
+        centroids=idx["centroids"], assigned=idx["assigned"],
+    )
+
+
+@query("""
+        SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
+               coalesce(l_linestatus, 'ALL') AS linestatus,
+               round(sum(l_quantity), 2) AS sum_qty,
+               count(*) AS n,
+               CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
+        FROM lineitem
+        GROUP BY CUBE (l_returnflag, l_linestatus)
+    """)
+def q47_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUBE with grouping_id (all four grouping-set combinations; q35
+    covers ROLLUP) — Spark's grouping_id() bitmask matches DuckDB's
+    GROUPING(a, b)."""
+    li = load(spark, sf_dir, "lineitem")
+    return (
+        li.cube("l_returnflag", "l_linestatus")
+        .agg(
+            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
+            F.count(F.lit(1)).alias("n"),
+            F.grouping_id().alias("gid"),
+        )
+        .select(
+            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
+            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
+            "sum_qty",
+            "n",
+            "gid",
+        )
+    )
+
+
+@query("""
+        SELECT lang,
+               string_agg(DISTINCT source, ',' ORDER BY source) AS sources,
+               count(DISTINCT source) AS n_sources
+        FROM documents GROUP BY lang
+    """)
+def q48_source_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered distinct string aggregation per group (LISTAGG /
+    string_agg shape): deterministic via sort-before-join."""
+    docs = load(spark, sf_dir, "documents")
+    return docs.groupBy("lang").agg(
+        F.array_join(F.array_sort(F.collect_set("source")), ",").alias(
+            "sources"
+        ),
+        F.countDistinct("source").alias("n_sources"),
+    )

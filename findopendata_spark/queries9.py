@@ -12,12 +12,44 @@ from findopendata_spark.dedup import (
     md5_simhash64,
     simhash_near_dup_pairs,
 )
+from findopendata_spark.registry import load, query
+
+# Shared with q23's oracle: md5-derived 60-bit token hash, sign-of-sum
+# SimHash — then an exact all-pairs Hamming scan (the oracle may be
+# O(n^2); the engine must not be).
+_SIMHASH_CTE = """
+    toks AS (
+        SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+'))
+            AS tok
+        FROM documents
+    ), th AS (
+        SELECT doc_id,
+               CAST(list_sum(list_transform(generate_series(1, 15),
+                   p -> CAST(strpos('0123456789abcdef',
+                                    substr(md5(tok), p, 1)) - 1 AS BIGINT)
+                        << (4 * (15 - p)))) AS BIGINT) AS h
+        FROM toks
+    ), bits AS (
+        SELECT doc_id, t.b AS bit,
+               sum(CASE WHEN (h >> t.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
+        FROM th CROSS JOIN generate_series(0, 59) AS t(b)
+        GROUP BY doc_id, t.b
+    ), sh AS (
+        SELECT doc_id,
+               CAST(sum(CASE WHEN s > 0 THEN CAST(1 AS BIGINT) << bit
+                             ELSE 0 END) AS BIGINT) AS simhash
+        FROM bits GROUP BY doc_id
+    )
+"""
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
+@query(f"""
+        WITH {_SIMHASH_CTE}
+        SELECT a.doc_id AS a, b.doc_id AS b,
+               CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+    """)
 def q49_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-duplicate pairs at Hamming <= 3 via 4x15-bit
     band-of-bits buckets (training-data dedup op; reference candidate
@@ -53,6 +85,22 @@ def q49_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_dup_pairs(sigs, max_hamming=3, n_bands=4)
 
 
+@query("""
+        WITH v AS (
+            SELECT doc_id, text,
+                   CAST(doc_id % 240 + 1 AS BIGINT) AS n_frames
+            FROM documents
+        ), idx AS (
+            SELECT doc_id, text,
+                   unnest(list_distinct(list_transform(
+                       generate_series(0, 7),
+                       j -> CAST((j * n_frames) // 8 AS INT)))) AS frame_idx
+            FROM v
+        )
+        SELECT doc_id, frame_idx,
+               md5(text || ':' || CAST(frame_idx AS VARCHAR)) AS frame_digest
+        FROM idx
+    """)
 def q50_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal frame sampling (training-data op): synthesize a video
     manifest from documents (payload = encoded text, n_frames = doc_id %
@@ -72,61 +120,7 @@ def q50_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(clips, k=8, buckets=32)
 
 
-def q51_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT word-3-gram Jaccard near-dup pairs (J >= 0.6) via prefix
-    filtering (AllPairs) — the sketch-free dedup mode. Unlike q22
-    (MinHash, probabilistic recall), this plan is provably exact while
-    still avoiding the O(n^2) cross join: candidates come from an
-    equi-join on rarest-prefix grams + a size-ratio filter; only those
-    pairs are verified. The DuckDB oracle IS the O(n^2) scan."""
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    docs = load(spark, sf_dir, "documents")
-    return allpairs_jaccard_pairs(docs, threshold=0.6, shingle_n=3)
-
-
-QUERIES9 = {
-    "q49_simhash_near_dup": q49_simhash_near_dup,
-    "q50_frame_sample": q50_frame_sample,
-    "q51_ngram_jaccard_pairs": q51_ngram_jaccard_pairs,
-}
-
-# Shared with q23's oracle: md5-derived 60-bit token hash, sign-of-sum
-# SimHash — then an exact all-pairs Hamming scan (the oracle may be
-# O(n^2); the engine must not be).
-_SIMHASH_CTE = """
-    toks AS (
-        SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+'))
-            AS tok
-        FROM documents
-    ), th AS (
-        SELECT doc_id,
-               CAST(list_sum(list_transform(generate_series(1, 15),
-                   p -> CAST(strpos('0123456789abcdef',
-                                    substr(md5(tok), p, 1)) - 1 AS BIGINT)
-                        << (4 * (15 - p)))) AS BIGINT) AS h
-        FROM toks
-    ), bits AS (
-        SELECT doc_id, t.b AS bit,
-               sum(CASE WHEN (h >> t.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        FROM th CROSS JOIN generate_series(0, 59) AS t(b)
-        GROUP BY doc_id, t.b
-    ), sh AS (
-        SELECT doc_id,
-               CAST(sum(CASE WHEN s > 0 THEN CAST(1 AS BIGINT) << bit
-                             ELSE 0 END) AS BIGINT) AS simhash
-        FROM bits GROUP BY doc_id
-    )
-"""
-
-ORACLE_SQL9: dict[str, str | None] = {
-    "q49_simhash_near_dup": f"""
-        WITH {_SIMHASH_CTE}
-        SELECT a.doc_id AS a, b.doc_id AS b,
-               CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-    """,
-    "q51_ngram_jaccard_pairs": """
+@query("""
         WITH t AS (
             SELECT doc_id, list_distinct(list_transform(
                 generate_series(1, greatest(
@@ -145,21 +139,14 @@ ORACLE_SQL9: dict[str, str | None] = {
         WHERE len(a.g) > 0 AND len(b.g) > 0
           AND CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) /
               (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))) >= 0.6
-    """,
-    "q50_frame_sample": """
-        WITH v AS (
-            SELECT doc_id, text,
-                   CAST(doc_id % 240 + 1 AS BIGINT) AS n_frames
-            FROM documents
-        ), idx AS (
-            SELECT doc_id, text,
-                   unnest(list_distinct(list_transform(
-                       generate_series(0, 7),
-                       j -> CAST((j * n_frames) // 8 AS INT)))) AS frame_idx
-            FROM v
-        )
-        SELECT doc_id, frame_idx,
-               md5(text || ':' || CAST(frame_idx AS VARCHAR)) AS frame_digest
-        FROM idx
-    """,
-}
+    """)
+def q51_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT word-3-gram Jaccard near-dup pairs (J >= 0.6) via prefix
+    filtering (AllPairs) — the sketch-free dedup mode. Unlike q22
+    (MinHash, probabilistic recall), this plan is provably exact while
+    still avoiding the O(n^2) cross join: candidates come from an
+    equi-join on rarest-prefix grams + a size-ratio filter; only those
+    pairs are verified. The DuckDB oracle IS the O(n^2) scan."""
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    docs = load(spark, sf_dir, "documents")
+    return allpairs_jaccard_pairs(docs, threshold=0.6, shingle_n=3)

@@ -10,8 +10,19 @@ Arrow for every pandas-UDF hop, shuffle partitions sized to cores (cluster:
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable
+from typing import Any, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
+
+# (applicationId, *key) -> what build() returned, and the lock that lets
+# one thread build it while others asking for the same entry wait
+_SESSION_CACHE: dict[tuple, Any] = {}
+_BUILD_LOCKS: dict[tuple, threading.Lock] = {}
+_BUILD_LOCKS_LOCK = threading.Lock()
 
 
 def get_spark(
@@ -118,3 +129,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def session_cache(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """``build()``'s result, built once per live SparkContext and ``key``.
+
+    Keyed on ``(spark.sparkContext.applicationId, *key)``: cached
+    DataFrames die with their SparkContext, and a stop()+recreate in the
+    same process must not hand back plans bound to the dead JVM.
+    applicationId is unique per SparkContext (unlike id(), which GC can
+    recycle). ``build()`` runs only on a miss, once even when threads
+    miss together; if it raises, nothing is stored and the next call
+    builds again. The sketch store, the IVF index and the trigram
+    posting indexes share this one cache, so each caller's ``key`` must
+    tell its entries apart from the others'.
+    """
+    full = (spark.sparkContext.applicationId, *key)
+    with _BUILD_LOCKS_LOCK:
+        lock = _BUILD_LOCKS.setdefault(full, threading.Lock())
+    with lock:
+        if full not in _SESSION_CACHE:
+            _SESSION_CACHE[full] = build()
+        return _SESSION_CACHE[full]

@@ -33,13 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# session-lifetime index cache: (applicationId, sf_dir, field) -> dict of
-# cached DFs. Keyed on the live application (like queries2._SKETCH_STORE):
-# cached DataFrames die with their SparkSession, and a stop()+recreate in
-# the same process must not hand back plans bound to the dead JVM
-# (ADVICE r04). applicationId is unique per SparkContext.
-_CACHE: dict[tuple[str, str, str], dict] = {}
-
+from findopendata_spark.session import session_cache
 
 _TRIGRAM_RE = r"(?s)(?=([^\p{Cs}].{2}))"
 
@@ -110,35 +104,33 @@ def trigram_index(spark: SparkSession, sf_dir: str, field: str) -> dict:
     Returns {"postings": DF(gram, doc_id), "sizes": DF(doc_id, n_grams),
     "query_row": (q_doc_id, q_grams) for the lowest-doc_id document}.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, field)
-    if key in _CACHE:
-        return _CACHE[key]
     from findopendata_spark.dedup import spread_scan
 
-    # single-row-group parquet = single-task scan (guide §2.5): spread
-    # the docs BEFORE the trigram extraction, so the build
-    # parallelizes AND the cached postings/sizes inherit >= parallelism
-    # partitions — every warm probe then scans the cache in parallel
-    # instead of walking all postings on one core.
-    docs = spread_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"),
-        ["doc_id", "text"],
-    )
-    grams = _field_grams(docs, field)
-    postings = grams.select(
-        "doc_id", F.explode("g").alias("gram")
-    ).cache()
-    sizes = grams.select("doc_id", F.size("g").alias("n_grams")).cache()
-    postings.count()  # materialize the index once
-    sizes.count()
-    qrow = grams.orderBy("doc_id").limit(1).collect()[0]
-    idx = {
-        "postings": postings,
-        "sizes": sizes,
-        "query_row": (qrow["doc_id"], list(qrow["g"])),
-    }
-    _CACHE[key] = idx
-    return idx
+    def build() -> dict:
+        # single-row-group parquet = single-task scan (guide §2.5): spread
+        # the docs BEFORE the trigram extraction, so the build
+        # parallelizes AND the cached postings/sizes inherit >= parallelism
+        # partitions — every warm probe then scans the cache in parallel
+        # instead of walking all postings on one core.
+        docs = spread_scan(
+            spark.read.parquet(f"{sf_dir}/documents.parquet"),
+            ["doc_id", "text"],
+        )
+        grams = _field_grams(docs, field)
+        postings = grams.select(
+            "doc_id", F.explode("g").alias("gram")
+        ).cache()
+        sizes = grams.select("doc_id", F.size("g").alias("n_grams")).cache()
+        postings.count()  # materialize the index once
+        sizes.count()
+        qrow = grams.orderBy("doc_id").limit(1).collect()[0]
+        return {
+            "postings": postings,
+            "sizes": sizes,
+            "query_row": (qrow["doc_id"], list(qrow["g"])),
+        }
+
+    return session_cache(spark, (sf_dir, field), build)
 
 
 def _matched_scores(

@@ -774,13 +774,9 @@ def test_sample_frames_edges_and_resize_stub(spark):
     assert {r["resizer"] for r in rz} == {"stub-passthrough"}
 
 
-def test_allpairs_jaccard_exactness_vs_bruteforce(spark):
-    """Prefix-filtered AllPairs join must equal the O(n^2) scan exactly,
-    including boundary pairs where |B|*t == |A| (the size-filter edge)
-    and J == t exactly (3/5 at t=0.6) — the float-guard cases."""
+def _allpairs_corpus(spark):
+    """Docs with the AllPairs edge cases plus 60 random-vocabulary docs."""
     import random
-
-    from findopendata_spark.dedup import allpairs_jaccard_pairs
 
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(40)]
@@ -797,12 +793,12 @@ def test_allpairs_jaccard_exactness_vs_bruteforce(spark):
         (10 + i, " ".join(rng.choices(vocab, k=rng.randint(3, 30))))
         for i in range(60)
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    t = 0.6
-    got = {
-        (r["a"], r["b"]): r["jaccard"]
-        for r in allpairs_jaccard_pairs(docs, threshold=t, shingle_n=3).collect()
-    }
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _bruteforce_jaccard_pairs(docs, t):
+    """{(a, b): jaccard} of every doc pair with 3-gram Jaccard >= t, by
+    the O(n^2) scan on the driver."""
     from findopendata_spark.dedup import shingles_expr
 
     g = {
@@ -821,9 +817,50 @@ def test_allpairs_jaccard_exactness_vs_bruteforce(spark):
             j = len(g[a] & g[b]) / len(u)
             if j >= t:
                 expect[(a, b)] = round(j, 6)
-    assert got == expect
+    return expect
+
+
+def test_allpairs_jaccard_exactness_vs_bruteforce(spark):
+    """Prefix-filtered AllPairs join must equal the O(n^2) scan exactly,
+    including boundary pairs where |B|*t == |A| (the size-filter edge)
+    and J == t exactly (3/5 at t=0.6) — the float-guard cases."""
+    from findopendata_spark.dedup import allpairs_jaccard_pairs
+
+    docs = _allpairs_corpus(spark)
+    t = 0.6
+    got = {
+        (r["a"], r["b"]): r["jaccard"]
+        for r in allpairs_jaccard_pairs(docs, threshold=t, shingle_n=3).collect()
+    }
+    assert got == _bruteforce_jaccard_pairs(docs, t)
     assert got[(1, 2)] == 0.6      # boundary pair survived the filters
     assert got[(3, 4)] == 1.0
+
+
+def test_allpairs_gram_store_over_byte_budget_is_not_collected(
+    spark, monkeypatch
+):
+    """The verify stage collects the gram store to the driver and
+    broadcasts it only while the store's bytes fit the budget; a larger
+    store takes the shuffled-hash attach (the g_a/g_b join), which must
+    give the same pairs as the broadcast path and the brute force."""
+    from findopendata_spark import dedup
+
+    docs = _allpairs_corpus(spark)
+    t = 0.6
+
+    def run():
+        out = dedup.allpairs_jaccard_pairs(docs, threshold=t, shingle_n=3)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return {(r["a"], r["b"]): r["jaccard"] for r in out.collect()}, plan
+
+    broadcast, broadcast_plan = run()
+    monkeypatch.setattr(dedup, "ALLPAIRS_BROADCAST_BYTES", 0)
+    attached, attached_plan = run()
+    assert "g_a" not in broadcast_plan
+    assert "g_a" in attached_plan and "g_b" in attached_plan
+    assert attached == broadcast == _bruteforce_jaccard_pairs(docs, t)
+    assert attached[(1, 2)] == 0.6
 
 
 def test_allpairs_plan_has_no_cross_join(spark):

@@ -45,24 +45,14 @@ def _norm_rows(cols, rows):
     return sorted(cols), sorted(out, key=repr)
 
 
-from findopendata_spark.queries import (  # noqa: E402
-    DEPRECATED_ORACLE,
-    DEPRECATED_QUERIES,
-)
-
-QUERY_NAMES = sorted(entry_mod.queries().keys()) + sorted(DEPRECATED_QUERIES)
-
-
-@pytest.mark.parametrize("name", QUERY_NAMES)
+@pytest.mark.parametrize("name", list(entry_mod.queries()))
 def test_query_matches_oracle(spark, duck, name):
-    q = entry_mod.queries().get(name) or DEPRECATED_QUERIES[name]
-    oracle = entry_mod.oracle_sql().get(name) or DEPRECATED_ORACLE.get(name)
-    sdf = q(spark, SF_DIR)
+    oracle = entry_mod.oracle_sql().get(name)
+    assert oracle, f"{name}: no oracle SQL"
+    sdf = entry_mod.queries()[name](spark, SF_DIR)
     spark_rows = [tuple(r) for r in sdf.collect()]
     spark_cols = list(sdf.columns)
     assert len(spark_rows) > 0, f"{name}: empty result"
-    if oracle is None:
-        return  # rows-only check (non-SQL-expressible op)
     res = duck.execute(oracle)
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()

@@ -1,0 +1,133 @@
+"""The query registry contract and the session cache, without a Spark job."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
+from types import SimpleNamespace
+
+import pytest
+
+import __spark_entry__ as entry_mod
+from findopendata_spark import registry, session
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# every registered query, in the order queries() returns them
+NAMES = [
+    "q01_pricing_summary", "q02_region_revenue", "q03_top_orders",
+    "q04_needs_recompute", "q05_top_events_per_user", "q06_event_type_stats",
+    "q07_exact_dedup", "q08_url_canonicalize", "q09_token_stats",
+    "q10_lang_quality", "q11_embedding_topk", "q12_event_windows",
+    "q13_no_order_customers", "q14_column_sketch_counters",
+    "q15_first_n_sample", "q16_joinable_column_search",
+    "q17_trigram_similarity", "q18_winnow_fingerprint", "q20_media_manifest",
+    "q21_sessionize", "q22_minhash_near_dup", "q23_simhash",
+    "q24_quality_scores", "q25_lang_id", "q26_bpe_token_stats",
+    "q27_sanitize_filenames", "q28_html_strip", "q29_keyword_search",
+    "q30_region_brand_revenue", "q31_schema_inference", "q32_resource_export",
+    "q33_json_props", "q34_embedding_near_dup", "q35_rollup_revenue",
+    "q36_exists_orders", "q37_multi_distinct", "q38_supplier_order_counts",
+    "q39_token_rotation", "q40_nested_schema_inference",
+    "q41_similar_packages", "q42_word_vector_sketch", "q43_token_percentiles",
+    "q44_moving_average", "q45_asof_join", "q46_ann_ivf_search",
+    "q47_cube_revenue", "q48_source_digest", "q49_simhash_near_dup",
+    "q50_frame_sample", "q51_ngram_jaccard_pairs",
+]
+
+
+def test_registry_names_sorted_and_every_query_has_an_oracle():
+    assert list(entry_mod.queries()) == NAMES
+    assert list(entry_mod.oracle_sql()) == NAMES
+    assert all(
+        isinstance(sql, str) and sql.strip()
+        for sql in entry_mod.oracle_sql().values()
+    )
+    assert "q19_ann_ivf" not in entry_mod.queries()
+    assert "q19_ann_ivf" not in registry.REGISTRY
+
+
+def test_registry_order_does_not_depend_on_import_order():
+    code = (
+        "import findopendata_spark.queries2\n"
+        "import __spark_entry__ as E\n"
+        "print(','.join(E.queries()))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True,
+        text=True, check=True,
+    )
+    assert out.stdout.strip().split(",") == NAMES
+
+
+@pytest.mark.parametrize("oracle", [None, "", "  \n  ", b"SELECT 1"])
+def test_query_without_oracle_sql_is_rejected(oracle):
+    with pytest.raises(ValueError):
+        registry.query(oracle)
+
+
+def _spark(app_id):
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def test_session_cache_builds_once_per_application_and_key(monkeypatch):
+    monkeypatch.setattr(session, "_SESSION_CACHE", {})
+    builds = []
+
+    def build(tag):
+        def fn():
+            builds.append(tag)
+            return tag
+        return fn
+
+    a, b = _spark("app-a"), _spark("app-b")
+    assert session.session_cache(a, ("sf", 1), build("a1")) == "a1"
+    assert session.session_cache(a, ("sf", 1), build("again")) == "a1"
+    # a recreated SparkContext has a new applicationId: rebuild
+    assert session.session_cache(b, ("sf", 1), build("b1")) == "b1"
+    # a distinct key in the same application: rebuild
+    assert session.session_cache(a, ("sf", 2), build("a2")) == "a2"
+    assert builds == ["a1", "b1", "a2"]
+
+
+def test_session_cache_stores_nothing_when_build_raises(monkeypatch):
+    monkeypatch.setattr(session, "_SESSION_CACHE", {})
+    spark = _spark("app-a")
+
+    def fail():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        session.session_cache(spark, ("sf",), fail)
+    assert session._SESSION_CACHE == {}
+    assert session.session_cache(spark, ("sf",), lambda: "built") == "built"
+
+
+def test_session_cache_builds_once_when_threads_miss_together(monkeypatch):
+    monkeypatch.setattr(session, "_SESSION_CACHE", {})
+    spark = _spark("app-threads")
+    builds = []
+    start = threading.Barrier(16)
+
+    def build():
+        builds.append(1)
+        time.sleep(0.05)  # every other thread misses while this one builds
+        return object()
+
+    def get(_):
+        start.wait(timeout=10)
+        return session.session_cache(spark, ("sf",), build)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            got = list(pool.map(get, range(16), timeout=30))
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(builds) == 1
+    assert all(g is got[0] for g in got)
