@@ -99,7 +99,8 @@ def bench_crawl(
 
     # AQE off for the crawl: its per-shuffle materialization barriers
     # serialize this many-stage pipeline; partition counts and skew are
-    # already managed explicitly (salting + two-phase top-k).
+    # already managed explicitly (salted fetch groups, the per-host
+    # top-k limit).
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     conf = {
         "spark.sql.adaptive.enabled": "false",

@@ -30,10 +30,11 @@ class CrawlConfig:
     """Crawl-scheduler parameters.
 
     Politeness is explicit here (the reference gets it implicitly from
-    one serial scroll task per endpoint, README.md:181-196). Every other
-    per-wave choice — the salted pre-rank, the shuffle-partition count
-    and the seen-probe mode — is derived from counts the wave already
-    tracks, not set here.
+    one serial scroll task per endpoint, README.md:181-196).
+    ``hot_host_salt`` salts only the fetch groups: (host, salt) lanes
+    spread a hot host's selected URLs across fetch tasks. Every other
+    per-wave choice — the shuffle-partition count and the seen-probe
+    mode — is derived from counts the wave already tracks, not set here.
     """
 
     # politeness / frontier (north-rule additions; no reference analog)
@@ -44,7 +45,7 @@ class CrawlConfig:
     default_crawl_delay_s: float = 1.0
     per_host_wave_budget: int = 50      # max URLs fetched per host per wave
     host_shards: int = 32               # bucket(K, host) partition count
-    hot_host_salt: int = 8              # salt factor for skewed hosts
+    hot_host_salt: int = 8              # fetch-group salt for hot hosts
     # per-wave index maintenance: trigram postings/sizes for these doc
     # fields are appended INSIDE each wave's atomic commit (reference
     # analog: per-harvest sketch upserts, indexing.py:119-168); probe

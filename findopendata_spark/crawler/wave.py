@@ -22,7 +22,9 @@ Scale notes (the 1000-executor story):
 - frontier and seen are only ever shuffled on ``url_canon`` (dedup) and
   ``host`` (politeness window + fetch groups) — two key spaces, both
   bucket-able in Iceberg for shuffle-free reuse across waves;
-- hot-host skew: fetch groups are (host, salt) with
+- hot-host skew: selection limits each host to the budget per map
+  partition before the host exchange (``_select`` says when Spark can);
+  fetch groups are (host, salt) with
   ``salt = pmod(url_hash, hot_host_salt)``, so one hot host fans across
   executors; the politeness budget cap bounds any group absolutely;
 - the Bloom prefilter keeps definite-new URLs (the vast majority in an
@@ -140,7 +142,7 @@ def init_state(
         f_seen.result()
     cat.commit_wave(0, staged)
     # parquet-footer count of the committed snapshot (metadata-only scan):
-    # wave 1's adaptive top-k needs the frontier size up front
+    # wave 1 sizes its shuffle partitions from it
     state._frontier_count = cat.read(spark, "frontier").count()
 
 
@@ -300,6 +302,30 @@ def _wave_partitions(spark: SparkSession, state: CrawlState) -> int | None:
     return int(min(max(-(-fcount // WAVE_PARTITION_ROWS), floor), 4096))
 
 
+def _select(ready: DataFrame, budget: int) -> DataFrame:
+    """Each host's top ``budget`` ready URLs by (priority desc, url_canon
+    asc); exact, since ``url_canon`` is unique in the frontier. priority
+    is dropped: it has no consumer past selection.
+
+    Filtering the row number directly lets Spark (for budgets up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold``, default 1000) keep
+    only each host's top ``budget`` rows per map partition before the
+    host exchange, so the final per-host sort sees at most budget x
+    map-partitions rows. That holds while ``ready`` arrives without a
+    host partitioning: host_state broadcast, or AQE on (the benchmark
+    and test sessions). With AQE off and host_state sort-merge joined,
+    ``ready`` is already hash-partitioned by host, Spark drops the
+    partial limit with the exchange, and a hot host's whole slice is
+    sorted in one task (ROADMAP item 4). Larger budgets plan the plain
+    exchange and sort."""
+    w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url_canon"))
+    return (
+        ready.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= budget)
+        .select("url_canon", "host", "depth", "url_hash")
+    )
+
+
 def run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
     n_part = _wave_partitions(spark, state)
     if n_part is None:
@@ -361,62 +387,23 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
     )
     fr_cols = ["url_canon", "depth", "priority", "url_hash"]
     f = f.select(*fr_cols, "host", eligible_cond.alias("_elig"))
-    f.cache()  # reused: selection window, lineage count, AND the not-ready
-    # leg of the next frontier (staging must not re-read + re-join state)
-    not_ready = f.filter(~F.col("_elig")).select(*fr_cols)
+    f.cache()  # reused: selection window, lineage count, AND the next
+    # frontier's base (staging must not re-read + re-join state)
     ready = f.filter(F.col("_elig")).drop("_elig")
 
     # 2. per-host selection window (W7/W4): priority desc, url asc, capped.
-    # Two-phase top-k: a salted partial rank bounds every sort task (the
-    # hot host otherwise lands its whole frontier slice in ONE window
-    # task), then the exact rank runs over <= salt*budget survivors/host.
-    # top-B(host) ⊆ ∪_salt top-B(host, salt), so this is exact — and the
-    # pre-phase is PURELY a skew/size guard: the exact window alone IS
-    # the specification. ADAPTIVE (r04): when the tracked frontier size
-    # says no (host, salt) lane can meaningfully exceed the budget
-    # (frontier_count <= salt * budget — even a host owning the whole
-    # frontier would hash-spread to ~budget-sized lanes, so the pre-rank
-    # prunes nothing), skip it and save a full frontier-wide
-    # shuffle+sort. Large politeness budgets hit this (the bench's
-    # bulk waves); the 10^10 production shape (small budget, huge
-    # frontier) keeps the guard on.
-    budget = cfg.per_host_wave_budget
-    fcount = state._frontier_count
-    use_pre = fcount is None or fcount > cfg.hot_host_salt * budget
     # (r06 note: a "rank shortcut" — probe per-host counts, skip the
     # window when every host fits the budget — was implemented and
     # REVERTED: A/B'd at both legs it cost 1.5-2 s MORE than the window
     # (select is one fused job: scan+joins+sort+checkpoint; splitting it
     # into probe-then-checkpoint added a serial job's fixed latency,
     # while the per-host sorts were already parallel and cheap).
-    w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url_canon"))
-    if use_pre:
-        w_pre = Window.partitionBy("host", "_ssalt").orderBy(
-            F.desc("priority"), F.asc("url_canon")
-        )
-        ranked_pre = ready.withColumn(
-            "_ssalt", F.pmod(F.xxhash64("url_canon"), F.lit(cfg.hot_host_salt))
-        ).withColumn("rn", F.row_number().over(w_pre))
-        ranked_pre.cache()  # both the survivors and the leftovers are reused
-        pre = ranked_pre.filter(F.col("rn") <= budget).drop("rn", "_ssalt")
-    else:
-        ranked_pre = None
-        pre = ready
-    ranked = pre.withColumn("rn", F.row_number().over(w))
-    ranked.cache()
-    # priority has no consumer past selection (the window already ranked
-    # on it) — dropping it here keeps 8 bytes/row out of the selected
-    # checkpoint and the (host, salt) fetch exchange (guide §2.3)
-    selected = (
-        ranked.filter(F.col("rn") <= budget)
-        .select("url_canon", "host", "depth", "url_hash")
-    )
     # localCheckpoint (not cache): truncates the logical plan, so the
-    # several downstream actions (staging writes, lineage, bloom delta)
-    # plan against a materialized RDD instead of re-analyzing the whole
-    # window+join tree — Catalyst planning time was the dominant SERIAL
-    # per-wave cost (measured: 4x cores gave only 1.7x speedup before).
-    selected = selected.localCheckpoint()  # reused: fetch, host_state, lineage
+    # several downstream actions (fetch, host_state, lineage, the next
+    # frontier's base) plan against a materialized RDD instead of
+    # re-analyzing the whole window+join tree — Catalyst planning time
+    # was the dominant SERIAL per-wave cost.
+    selected = _select(ready, cfg.per_host_wave_budget).localCheckpoint()
     _mark("select_ckpt")
 
     # Staging executor opens EARLY: every per-wave output whose inputs are
@@ -462,34 +449,20 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         ).unionByName(fetched_hosts)
         f_hosts = ex.submit(_timed, "hosts", cat.stage, host_state_next,
                             "host_state", wave)
-        # frontier leftovers — everything eligible but not selected, WITHOUT an
-        # anti-join: the window rank already partitions ready exactly.
-        leftover = ranked.filter(F.col("rn") > budget).select(*fr_cols)
-        if ranked_pre is not None:
-            leftover = ranked_pre.filter(F.col("rn") > budget).select(
-                *fr_cols
-            ).unionByName(leftover)
-        # next-frontier BASE = leftover ∪ not-ready: ~98% of the next
-        # frontier is known the moment selection lands, so its (big)
-        # write starts NOW and overlaps fetch + candidate compute; only
-        # the small new-URL delta part remains for the post-dedup tail.
-        # Profiling showed the monolithic frontier write was the
-        # largest serial block between dedup and commit.
+        # next-frontier BASE = every frontier row not selected (leftover
+        # ∪ not-ready). ~98% of the next frontier is known the moment
+        # selection lands, so its (big) write starts NOW and overlaps
+        # fetch + candidate compute; only the small new-URL delta part
+        # remains for the post-dedup tail. Profiling showed the
+        # monolithic frontier write was the largest serial block between
+        # dedup and commit.
         cat.prepare_snap("frontier", wave)
         f_frontier_base = ex.submit(
             _timed, "frontier_base", cat.stage,
-            leftover.unionByName(not_ready), "frontier", wave, "base",
-        )
-        # the two selection caches (frontier-sized — the wave's largest
-        # cached frames) have no consumer after the base part is staged;
-        # dropping them immediately shrinks the live set under the
-        # candidate phase (GC pressure was the measured super-linear
-        # term on large waves). `f` stays cached for the lineage scan.
-        f_frontier_base.add_done_callback(
-            lambda _fut: (
-                ranked_pre.unpersist() if ranked_pre is not None else None,
-                ranked.unpersist(),
-            )
+            f.select(*fr_cols).join(
+                selected.select("url_canon"), "url_canon", "left_anti"
+            ),
+            "frontier", wave, "base",
         )
 
         # 3. fetch: salted (host, salt) groups → one NESTED row per doc.
@@ -865,7 +838,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
     n_fetched = int(lin_agg["f"] or 0)
     n_new = int(lin_agg["e"] or 0)
     state._seen_count += n_new
-    f.unpersist()  # ranked/ranked_pre dropped when the base part staged
+    f.unpersist()
     # checkpointed RDDs (selected/spans/cand/new) are reclaimed by the
     # ContextCleaner once these references drop
     if state._frontier_count is None:  # resume: count once

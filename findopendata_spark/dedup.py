@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from findopendata_spark.ranking import global_row_number
 from findopendata_spark.sketch.minhash import MAX_HASH, MinHashPermutations
 
 
@@ -418,6 +419,15 @@ def near_dup_pairs(
     )
 
 
+def gram_codes(gram_df: DataFrame) -> DataFrame:
+    """(gram, df) → (gram, code): dense int codes 0..V-1 in (df asc,
+    gram asc) order, the AllPairs global total order. A range-partitioned
+    rank, so no single task sorts the whole vocabulary."""
+    return global_row_number(
+        gram_df, [F.asc("df"), F.asc("gram")], "code"
+    ).select("gram", F.col("code").cast("int"))
+
+
 # Largest gram store allpairs_jaccard_pairs collects to the driver and
 # broadcasts for its verify stage, in bytes; bigger stores take the
 # shuffled-hash attach instead. The store is int64 ids, lengths and
@@ -491,12 +501,7 @@ def allpairs_jaccard_pairs(
     #  3. codes are int32 (vocab-bounded), halving the broadcast attach.
     ex0 = raw.select("_id", F.explode("g").alias("gram"))
     gram_df = ex0.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    # dictionary-sized single-task sort (tiny: distinct grams only; at
-    # larger vocabularies assign codes with a range-partitioned rank)
-    wd = Window.orderBy(F.asc("df"), F.asc("gram"))
-    gram_dict = gram_df.select(
-        "gram", (F.row_number().over(wd) - 1).cast("int").alias("code")
-    )
+    gram_dict = gram_codes(gram_df)
     sets = (
         ex0.join(F.broadcast(gram_dict), "gram")
         .groupBy("_id")

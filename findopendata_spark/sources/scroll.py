@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from findopendata_spark.ranking import global_row_number
+
 
 def paginate(
     df: DataFrame,
@@ -38,36 +40,19 @@ def paginate(
     (scroll_id = last id) paging whenever order_cols start with the id.
 
     Without ``partition_cols`` the rank is still exact but computed
-    scalably: a naked ``Window.partitionBy()`` would ship EVERY row to
-    one task, so instead the rows are range-repartitioned on the order
-    keys, ranked locally per partition, and offset by the broadcast
-    per-partition prefix counts (the only unpartitioned window runs over
-    the tiny one-row-per-partition count frame).
+    scalably by :func:`findopendata_spark.ranking.global_row_number`.
     """
     order = [F.asc(c) for c in order_cols]
     if partition_cols:
         w = Window.partitionBy(*partition_cols).orderBy(*order)
-        rn = F.row_number().over(w) - 1
-        out = df
+        out = df.withColumn("_rn", F.row_number().over(w) - 1)
     else:
-        d = df.repartitionByRange(*order).withColumn(
-            "_pid", F.spark_partition_id()
-        )
-        w_local = Window.partitionBy("_pid").orderBy(*order)
-        d = d.withColumn("_lrn", F.row_number().over(w_local) - 1)
-        counts = d.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-        w_off = Window.orderBy("_pid").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = counts.select(
-            "_pid", F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_off")
-        )
-        out = d.join(F.broadcast(offsets), "_pid")
-        rn = F.col("_off") + F.col("_lrn")
+        out = global_row_number(df, order, "_rn")
+    rn = F.col("_rn")
     paged = out.withColumn("page", (rn / page_size).cast("int")).withColumn(
         "slot", (rn % page_size).cast("int")
     )
-    return paged.drop("_pid", "_lrn", "_off")
+    return paged.drop("_rn")
 
 
 def pages_in_scroll_order(paged: DataFrame, partition_cols: list[str] | None = None):

@@ -422,21 +422,12 @@ def test_fetch_failure_accounting_and_resume(spark, tmp_path):
     shutil.rmtree(d2, ignore_errors=True)
 
 
-def test_adaptive_topk_parity(spark, tmp_path):
-    """The salted pre-rank is purely a skew guard — the exact per-host
-    window IS the selection spec. With a budget large enough that
-    frontier_count <= salt * budget the wave skips the guard (saving a
-    full frontier shuffle+sort), and the crawl must still match the
-    simulator. (The budget-10 crawl, where the guard runs, is
-    test_visit_ordering_parity.)"""
-    cfg = CrawlConfig(per_host_wave_budget=5000, hot_host_salt=8)
-    frontiers: list[int] = []
-    st = crawl(spark, str(tmp_path / "topk"), waves=2, cfg=cfg, gcfg=GCFG,
-               log=lambda s: frontiers.append(s["frontier"]))
-    # every wave saw a tracked frontier at or below salt * budget, so
-    # none of them ran the pre-rank
-    assert len(frontiers) == 2
-    assert max(frontiers) <= cfg.hot_host_salt * cfg.per_host_wave_budget
+def test_large_budget_selection_parity(spark, tmp_path):
+    """Selection with a budget above Spark's window-group-limit threshold
+    (1000), where Spark plans no partial limit, must still match the
+    simulator. (The budget-10 crawl is test_visit_ordering_parity.)"""
+    cfg = CrawlConfig(per_host_wave_budget=5000)
+    st = crawl(spark, str(tmp_path / "topk"), waves=2, cfg=cfg, gcfg=GCFG)
     visits_sim, seen_sim = simulate(spark, GCFG, cfg, 2)
     docs = st.cat.read_appended(spark, "docs")
     assert sorted(
@@ -445,6 +436,83 @@ def test_adaptive_topk_parity(spark, tmp_path):
     ) == sorted(visits_sim)
     seen = st.cat.read_appended(spark, "seen")
     assert {r["url_canon"] for r in seen.select("url_canon").collect()} == seen_sim
+
+
+def _ready_frame(spark):
+    """A ready frontier with one hot host of 50,000 URLs, six small
+    hosts, and only five distinct priorities (ties broken by url)."""
+    rng = np.random.default_rng(5)
+    hosts = ["hot.example.net"] * 50_000 + [
+        f"h{i}.example.org" for i in range(6) for _ in range(40 * i + 3)
+    ]
+    urls = [f"https://{h}/p{k:06d}" for k, h in enumerate(hosts)]
+    rng.shuffle(urls)
+    pdf = pd.DataFrame({
+        "url_canon": urls,
+        "host": [u.split("/")[2] for u in urls],
+        "depth": rng.integers(0, 4, len(urls)).astype("int32"),
+        "priority": rng.integers(1, 6, len(urls)) / 5.0,
+    })
+    pdf["url_hash"] = np.arange(len(pdf), dtype="int64")
+    return pdf, spark.createDataFrame(pdf)
+
+
+def test_select_equals_pandas_top_k(spark):
+    """The wave's selection is each host's first `budget` URLs by
+    (priority desc, url asc), for budgets below and above Spark's
+    window-group-limit threshold (1000)."""
+    from findopendata_spark.crawler import wave as W
+
+    pdf, ready = _ready_frame(spark)
+    for budget in (1, 40, 5000):
+        got = W._select(ready, budget).toPandas()
+        want = (
+            pdf.sort_values(["host", "priority", "url_canon"],
+                            ascending=[True, False, True])
+            .groupby("host").head(budget)
+        )
+        assert list(got.columns) == ["url_canon", "host", "depth", "url_hash"]
+        key = ["host", "url_canon"]
+        pd.testing.assert_frame_equal(
+            got.sort_values(key).reset_index(drop=True),
+            want[list(got.columns)].sort_values(key).reset_index(drop=True),
+            check_dtype=False,
+        )
+
+
+def test_wave_select_plans_partial_limit_below_exchange(spark, tmp_path,
+                                                        monkeypatch):
+    """In a real wave the selection plan keeps only each host's top
+    `budget` rows per map partition before the host exchange (a partial
+    WindowGroupLimit), so the final per-host rank never sorts a hot
+    host's whole frontier slice. The plan is taken from the wave's own
+    `ready` frame: host_state broadcast, the session's AQE on."""
+    from findopendata_spark.crawler import wave as W
+
+    plans: list[str] = []
+    select = W._select
+
+    def recording_select(ready, budget):
+        out = select(ready, budget)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(W, "_select", recording_select)
+    cfg = CrawlConfig(per_host_wave_budget=40)
+    crawl(spark, str(tmp_path / "crawl_plan"), waves=1, cfg=cfg, gcfg=GCFG)
+    assert len(plans) == 1
+    lines = plans[0].splitlines()
+
+    def at(*words):
+        return [i for i, ln in enumerate(lines) if all(w in ln for w in words)]
+
+    exchange = at("Exchange hashpartitioning(host")
+    partial = at("WindowGroupLimit", "40, Partial")
+    final = at("WindowGroupLimit", "40, Final")
+    assert len(partial) == len(final) == 1, plans[0]
+    # the tree prints parents first: Final above, Partial below, and the
+    # host exchange between them
+    assert any(final[0] < i < partial[0] for i in exchange), plans[0]
 
 
 def test_fetch_adapter_seam_flaky_http(spark, tmp_path):
@@ -905,8 +973,7 @@ def test_steady_state_wave_reuses_generated_code(spark, tmp_path):
     cache every wave evicted and recompiled ~130 classes; sized for the
     wave's working set, only the classes that inline the wave id as a
     literal are new (6). Bulk seeds keep the seen filter from
-    rebuilding and the frontier far above salt x budget, so the pre-rank
-    runs in every wave and wave 3 runs the same plan shapes as wave 2."""
+    rebuilding, so wave 3 runs the same plan shapes as wave 2."""
     cfg = CrawlConfig(per_host_wave_budget=10, index_fields=("text",))
     gcfg = G.GraphConfig(graph_size=5_000, out_links_min=2, out_links_max=4)
     compiles = (
@@ -914,18 +981,13 @@ def test_steady_state_wave_reuses_generated_code(spark, tmp_path):
         .METRIC_COMPILATION_TIME()
     )
     after_wave: list[tuple[int, int]] = []
-    frontiers: list[int] = []
 
     def log(s):
         after_wave.append((s["fetched"], compiles.getCount()))
-        frontiers.append(s["frontier"])
 
     crawl(spark, str(tmp_path / "crawl_codegen"), waves=3, cfg=cfg,
           gcfg=gcfg, bulk_seeds=2_000, log=log)
     assert len(after_wave) == 3
-    # waves 2 and 3 start from these tracked frontiers (wave 1 from the
-    # 2,000 seeds): all above salt x budget, so each ran the pre-rank
-    assert min(frontiers[:2]) > cfg.hot_host_salt * cfg.per_host_wave_budget
     fetched, n3 = after_wave[2]
     assert fetched > 0
     compiled_in_wave_3 = n3 - after_wave[1][1]

@@ -71,3 +71,52 @@ def test_query_matches_oracle(spark, duck, name):
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
+
+
+def _plan_nodes(plan):
+    """Every node of a JVM logical plan, depth first."""
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_q51_gram_dictionary_rank_is_distributed(spark):
+    """q51's gram dictionary assigns its dense codes with a
+    range-partitioned rank: every Window over the grams has a partition
+    spec (Spark runs an unpartitioned one in a single task); the only
+    unpartitioned Window is the prefix sum over the one-row-per-partition
+    count frame, ordered by the range-partition id. On the q51 corpus the
+    codes equal those of the single-window rank over (df asc, gram asc)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from findopendata_spark.dedup import gram_codes, shingle_sets
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    grams = shingle_sets(docs, "text", "doc_id", 3, out_col="g").select(
+        F.explode(F.transform("g", lambda s: F.xxhash64(s))).alias("gram")
+    )
+    gram_df = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
+    codes = gram_codes(gram_df)
+    windows = [
+        n for n in _plan_nodes(codes._jdf.queryExecution().optimizedPlan())
+        if n.nodeName() == "Window"
+    ]
+    partitioned = [w for w in windows if not w.partitionSpec().isEmpty()]
+    assert partitioned, "the local per-partition rank is a window"
+    for w in windows:
+        if w.partitionSpec().isEmpty():
+            order = w.orderSpec()
+            keys = [order.apply(i).child().name() for i in range(order.size())]
+            assert keys == ["_pid"], keys
+    single = gram_df.select(
+        "gram",
+        (F.row_number().over(Window.orderBy(F.asc("df"), F.asc("gram")))
+         - 1).cast("int").alias("code"),
+    )
+    got = {r["gram"]: r["code"] for r in codes.collect()}
+    want = {r["gram"]: r["code"] for r in single.collect()}
+    assert len(got) > 1000
+    assert got == want
+    assert sorted(got.values()) == list(range(len(got)))
