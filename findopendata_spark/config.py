@@ -46,23 +46,18 @@ class CrawlConfig:
     per_host_wave_budget: int = 50      # max URLs fetched per host per wave
     host_shards: int = 32               # bucket(K, host) partition count
     hot_host_salt: int = 8              # fetch-group salt for hot hosts
-    # per-wave index maintenance: trigram postings/sizes for these doc
-    # fields are appended INSIDE each wave's atomic commit (reference
-    # analog: per-harvest sketch upserts, indexing.py:119-168); probe
-    # via indexing.IncrementalIndexes.trigram_index
-    index_fields: tuple = ()            # e.g. ("text",)
-    # r05: the other two index families in the SAME atomic wave commit
+    # per-wave index maintenance, staged INSIDE each wave's atomic commit
     # (reference analog: one harvest run upserts all metadata/sketch
-    # tables, indexing.py:59-192). index_ivf maintains `ivf_centroids`
-    # (trained once on the first indexed wave, then frozen — FAISS
-    # train-then-add) + `ivf_assignments` (re-fetched docs re-assign;
-    # probes resolve latest-wave-wins). index_sketch appends mergeable
-    # `column_sketches` rows for docs never sketched before (file_id =
-    # host, column = canonical URL; a changed doc's sketch refresh is a
-    # compaction, since merged counter state cannot subtract).
+    # tables, indexing.py:59-192); the delta rules live in
+    # findopendata_spark.indexing, reads go through IncrementalIndexes.
+    # index_fields: trigram postings/sizes per doc field (recrawled docs
+    # upsert). index_ivf: `ivf_assignments` of each doc's hashing-trick
+    # text embedding against `ivf_centroids`, trained on the first
+    # indexed wave and then frozen (zero vectors append tombstones).
+    # index_sketch: mergeable `column_sketches` rows for docs never
+    # sketched before (file_id = host, column = canonical URL).
+    index_fields: tuple = ()            # e.g. ("text",)
     index_ivf: bool = False
-    index_ivf_dim: int = 16             # hashing-trick embedding width
-    index_ivf_cells: int = 8
     index_sketch: bool = False
     bloom_bits_per_key: int = 10        # ~1% fpp
     bloom_num_hashes: int = 7

@@ -46,6 +46,7 @@ from findopendata_spark.config import CrawlConfig
 from findopendata_spark.crawler import graph as G
 from findopendata_spark.crawler.seen import ShardedSeenFilter
 from findopendata_spark.functions.urls import canonicalize_url, url_host
+from findopendata_spark.indexing import crawl_deltas
 
 # One NESTED row per fetched document — the interleaved input_hint shape
 # (doc_id, spans array<struct<kind,text,media_ref,offset>>) comes straight
@@ -510,139 +511,18 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         docs = okdocs.select("doc_id", "url_canon", "host", "spans")
         f_docs = ex.submit(_timed, "docs", cat.stage_append, docs, "docs", wave)
 
-        # 4b. per-wave index maintenance (reference analog: per-harvest
-        # sketch upserts, indexing.py:119-168): when cfg.index_fields is
-        # set, this wave's new docs append their trigram postings/sizes
-        # INSIDE the same atomic commit — the "index tables appended per
-        # crawl wave" story executed, probe-able any time via
-        # IncrementalIndexes.trigram_index. Flat text = the doc's text
-        # spans joined in offset order (spans arrive offset-sorted from
-        # the fetch UDF, so no sort is needed).
-        f_index: list = []
-        for field in cfg.index_fields:
-            # TOTAL grams (ADVICE r05): recrawled docs that shrank below
-            # the field threshold still append an n_grams=0 tombstone so
-            # latest-wave-wins retires their old postings
-            from findopendata_spark.sketch.trigram_index import (
-                _field_grams_total,
-            )
-
-            flat = docs.select(
-                "doc_id",
-                F.array_join(
-                    F.transform(
-                        F.filter("spans", lambda s: s["kind"] == "text"),
-                        lambda s: s["text"],
-                    ),
-                    " ",
-                ).alias("text"),
-            )
-            grams = _field_grams_total(flat, field)
-            f_index.append(ex.submit(
-                _timed, f"index_{field}", cat.stage_append,
-                grams.select("doc_id", F.explode("g").alias("gram")),
-                f"trigram_postings_{field}", wave,
-            ))
-            f_index.append(ex.submit(
-                _timed, f"index_sizes_{field}", cat.stage_append,
-                grams.select("doc_id", F.size("g").alias("n_grams")),
-                f"trigram_sizes_{field}", wave,
-            ))
-
-        # 4c. IVF + column-sketch maintenance in the SAME atomic commit
-        # (VERDICT r04 item 5 — one crawl wave updates postings +
-        # assignments + sketches together, the reference's one-harvest-
-        # upserts-all-tables shape, indexing.py:59-192). Tables are the
-        # plain catalog tables IncrementalIndexes probes, so a crawl
-        # catalog serves ivf_index()/sketch_read() with no extra step.
-        extra_snaps: dict[str, str] = {}
-        if cfg.index_ivf or cfg.index_sketch:
-            flat_doc = docs.select(
-                "doc_id", "url_canon", "host",
-                F.array_join(
-                    F.transform(
-                        F.filter("spans", lambda s: s["kind"] == "text"),
-                        lambda s: s["text"],
-                    ),
-                    " ",
-                ).alias("text"),
-            )
-        if cfg.index_ivf:
-            from findopendata_spark.embedding import (
-                assign_cells,
-                hashing_embedding_expr,
-                train_ivf_centroids,
-            )
-
-            vecs = (
-                flat_doc.select(
-                    F.col("doc_id").alias("vec_id"),
-                    hashing_embedding_expr(
-                        F.col("text"), cfg.index_ivf_dim
-                    ).alias("v"),
-                )
-                # zero vectors (no tokens / full sign cancellation) have
-                # no cosine direction — excluded, like len<3 for
-                # trigrams. KNOWN (ADVICE r05): a recrawled doc whose
-                # new embedding is zero appends no assignment row, so
-                # its OLD cell assignment stays live until compaction —
-                # a compaction-only repair by contract (zero vectors are
-                # ~2^-dim of docs; the trigram path, where shrinkage is
-                # common, writes explicit tombstones instead).
-                .filter(
-                    F.aggregate(
-                        "v", F.lit(0.0), lambda s, x: s + x * x
-                    ) > 0
-                )
-            )
-            cents = cat.read(spark, "ivf_centroids")
-            if cents is None:
-                # bootstrap: train on the first indexed wave, then
-                # freeze (FAISS train-then-add; a retrain is a rebuild)
-                cents = train_ivf_centroids(
-                    vecs, n_cells=cfg.index_ivf_cells, n_iter=2
-                ).localCheckpoint()
-                extra_snaps["ivf_centroids"] = cat.stage(
-                    cents, "ivf_centroids", wave
-                )
-            assigned = assign_cells(vecs, cents).withColumnRenamed(
-                "_cell", "cell"
-            )
-            f_index.append(ex.submit(
-                _timed, "index_ivf", cat.stage_append,
-                assigned, "ivf_assignments", wave,
-            ))
-        if cfg.index_sketch:
-            from findopendata_spark.config import SketchConfig
-            from findopendata_spark.sketch.column_sketch import sketch_columns
-
-            rec = flat_doc.select(
-                F.col("host").alias("file_id"),
-                F.lit("url").alias("column_name"),
-                F.col("doc_id").alias("ingest_key"),
-                F.col("url_canon").alias("val"),
-            )
-            # recrawl exclusion: merged counter state cannot subtract, so
-            # only never-sketched doc_ids append (doc-keyed anti-join
-            # against prior waves' docs — delta vs. corpus, the same key
-            # the seen-dedup anti-join uses); a changed doc's sketch
-            # refresh is a sketch compaction by contract (config.py)
-            prev_docs = (
-                cat.read_appended(spark, "docs", upto=wave - 1)
-                if wave > 0 else None
-            )
-            if prev_docs is not None:
-                rec = rec.join(
-                    prev_docs.select(F.col("doc_id").alias("ingest_key")),
-                    "ingest_key", "left_anti",
-                )
-            rows = sketch_columns(
-                rec, SketchConfig(), n_salts=8, keep_merge_state=True
-            )
-            f_index.append(ex.submit(
-                _timed, "index_sketch", cat.stage_append,
-                rows, "column_sketches", wave,
-            ))
+        # 4b. per-wave index maintenance in the SAME atomic commit (the
+        # reference's one-harvest-upserts-all-tables shape,
+        # indexing.py:59-192): the families cfg turns on append this
+        # wave's docs as plain catalog tables, probe-able any time through
+        # IncrementalIndexes. A first IVF wave also stages the centroids
+        # it trained.
+        index_appends, index_snaps = crawl_deltas(spark, cat, cfg, docs, wave)
+        f_index = [
+            ex.submit(_timed, f"index:{table}", cat.stage_append, df, table, wave)
+            for table, df in index_appends
+        ]
+        extra_snaps = {t: cat.stage(df, t, wave) for t, df in index_snaps.items()}
 
         # 5. link extraction + canonicalization + robots gate (pre-enqueue, the
         #    reference checks before download: ckan_crawler.py:161-176).

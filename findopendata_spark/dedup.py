@@ -88,10 +88,6 @@ def shingles_expr(text, n: int = 5):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingle_hashes_expr(text, n: int = 5):
-    return F.transform(shingles_expr(text, n), lambda s: F.xxhash64(s))
-
-
 # Java String.trim strips every char <= U+0020 (not just whitespace)
 _JAVA_TRIM = "".join(chr(i) for i in range(0x21))
 # Java regex \s is ASCII-only: [ \t\n\x0B\f\r] (Python's is Unicode-wide)

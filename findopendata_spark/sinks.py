@@ -75,63 +75,11 @@ def write_avro(
     _write_avro_fallback(df, path, mode)
 
 
-def _is_local_uri(path: str) -> bool:
-    from urllib.parse import urlparse
-
-    return urlparse(path).scheme in ("", "file")
-
-
 def _write_avro_fallback(df: DataFrame, path: str, mode: str) -> None:
-    import os
-    import shutil
-    import uuid
-
-    from findopendata_spark.formats.avro_ocf import write_avro_blob
-    from findopendata_spark.functions.avro_infer import _avro_type
-
-    if not _is_local_uri(path):
-        # cloud/aliased scheme: executors can't open python file handles
-        # on Hadoop URIs, so encode blobs executor-side and stream them
-        # through the driver's Hadoop FileSystem handle one partition at
-        # a time (bounded memory). With the spark-avro jar present (any
-        # real cluster) the native scheme-agnostic path above is taken
-        # instead — this keeps the OWN-codec fallback correct everywhere.
-        _write_avro_fallback_hadoop(df, path, mode)
-        return
-    if mode == "overwrite" and os.path.isdir(path):
-        shutil.rmtree(path)
-    os.makedirs(path, exist_ok=True)
-    schema = _avro_type(df.schema, "Root")
-    cols = [f["name"] for f in schema["fields"]]
-
-    def write_part(batches):
-        import pandas as pd
-
-        recs = []
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                recs.append({c: _py_value(v) for c, v in zip(cols, row)})
-        if recs:
-            blob = write_avro_blob(schema, recs)
-            name = f"part-{uuid.uuid4().hex}.avro"
-            with open(os.path.join(path, name), "wb") as fh:
-                fh.write(blob)
-            yield pd.DataFrame({"file": [name], "n": [len(recs)]})
-
-    df.mapInPandas(write_part, "file string, n long").collect()
-    import glob as _glob
-
-    if not _glob.glob(os.path.join(path, "*.avro")):
-        # empty input: a schema-only OCF file so read_avro round-trips
-        # (write_avro_blob handles zero records — header + no blocks)
-        with open(os.path.join(path, "part-empty.avro"), "wb") as fh:
-            fh.write(write_avro_blob(schema, []))
-
-
-def _write_avro_fallback_hadoop(df: DataFrame, path: str, mode: str) -> None:
-    """Own-codec OCF sink for non-``file:`` schemes WITHOUT the r04
-    driver byte funnel (VERDICT r04 "what's wrong" #2 — the old version
-    pulled every blob through ``toLocalIterator``):
+    """Own-codec OCF sink for every scheme (plain paths, ``file:``,
+    ``viewfs:``, ``gs:``, ...) through the Hadoop FileSystem registry,
+    with no driver byte funnel (no blob passes through the driver's
+    ``toLocalIterator``):
 
     1. **encode** (executors): one OCF blob per non-empty partition
        (:func:`_avro_part_blobs` — the CPU-heavy part).
@@ -155,8 +103,6 @@ def _write_avro_fallback_hadoop(df: DataFrame, path: str, mode: str) -> None:
     own-codec path correct (and the big moves distributed) everywhere.
     """
     import uuid
-
-    from pyspark.sql import functions as F
 
     from findopendata_spark import fs
     from findopendata_spark.formats.avro_ocf import write_avro_blob

@@ -85,12 +85,12 @@ def _field_grams(docs: DataFrame, field: str) -> DataFrame:
 def _field_grams_total(docs: DataFrame, field: str) -> DataFrame:
     """Like :func:`_field_grams` but TOTAL over doc_ids: below-threshold
     docs emit an empty gram set instead of no row. The incremental index
-    appends (``indexing.trigram_append``, crawl in-commit maintenance)
-    use this so a re-indexed doc whose new content falls below the field
-    threshold still writes a sizes tombstone (n_grams=0) under the new
-    wave — latest-wave-wins then retires the doc's OLD postings instead
-    of serving stale content (ADVICE r05 shrink-to-empty hole). Exploded
-    postings are unchanged (empty arrays explode to nothing)."""
+    delta (``indexing.trigram_delta``, staged by the crawl wave and by
+    ``IncrementalIndexes``) uses this so a re-indexed doc whose new
+    content falls below the field threshold still writes a sizes
+    tombstone (n_grams=0) under the new wave — latest-wave-wins then
+    retires the doc's OLD postings instead of serving stale content.
+    Exploded postings are unchanged (empty arrays explode to nothing)."""
     cond, col = _field_rule(field)
     g = F.when(cond, trigram_set_expr(col)).otherwise(
         F.array().cast("array<string>")

@@ -51,7 +51,7 @@ def test_crawl_config_options_inventory():
     assert [f.name for f in dataclasses.fields(CrawlConfig)] == [
         "priority_mode", "default_crawl_delay_s", "per_host_wave_budget",
         "host_shards", "hot_host_salt", "index_fields", "index_ivf",
-        "index_ivf_dim", "index_ivf_cells", "index_sketch",
+        "index_sketch",
         "bloom_bits_per_key", "bloom_num_hashes", "bloom_shards",
     ]
 

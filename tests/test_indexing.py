@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from findopendata_spark.catalog import SnapshotCatalog
 from findopendata_spark.config import SketchConfig
-from findopendata_spark.indexing import IncrementalIndexes
+from findopendata_spark.indexing import IncrementalIndexes, doc_text
 
 SF = "/root/testdata/sf0.001"
 
@@ -64,9 +64,10 @@ def test_trigram_incremental_equals_rebuild(spark, docs, tmp_path):
 
 
 def test_ivf_incremental_assignments_equal_rebuild(spark, tmp_path):
-    """Quantizer trained on the build corpus, frozen; appended vectors'
-    assignments equal assigning the full corpus against the same
-    centroids, and the persisted-index probe equals the in-memory one."""
+    """The first append trains the quantizer on its vectors and freezes
+    it; the second append's assignments, with the first's, equal
+    assigning the full corpus against the same centroids, and the
+    persisted-index probe equals the in-memory one."""
     from findopendata_spark.embedding import assign_cells, ivf_topk
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
@@ -77,7 +78,7 @@ def test_ivf_incremental_assignments_equal_rebuild(spark, tmp_path):
         F.col("vec_id") > half
     )
     idx = IncrementalIndexes(SnapshotCatalog(str(tmp_path / "cat")))
-    idx.ivf_build(spark, base, n_cells=8, n_iter=2)
+    idx.ivf_append(spark, base)
     idx.ivf_append(spark, delta)
 
     persisted = idx.ivf_index(spark)
@@ -99,6 +100,26 @@ def test_ivf_incremental_assignments_equal_rebuild(spark, tmp_path):
     assert [(r["vec_id"], r["cos_sim"]) for r in a] == [
         (r["vec_id"], r["cos_sim"]) for r in b
     ]
+
+
+def test_ivf_zero_vector_retires_cell(spark, tmp_path):
+    """A vec_id re-appended as a zero vector (no cosine direction) writes
+    a tombstone, so the persisted index no longer assigns it a cell —
+    the same upsert rule trigram sizes apply to a doc that shrank below
+    its field threshold."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    idx = IncrementalIndexes(SnapshotCatalog(str(tmp_path / "cat")))
+    idx.ivf_append(spark, emb)
+    gone = emb.orderBy("vec_id").limit(1).select(
+        "vec_id", F.transform("v", lambda x: x * 0.0).alias("v")
+    )
+    gone_id = gone.collect()[0]["vec_id"]
+    idx.ivf_append(spark, gone)
+
+    ids = {r["vec_id"] for r in idx.ivf_index(spark)["assigned"].collect()}
+    assert gone_id not in ids and len(ids) == emb.count() - 1
 
 
 def test_sketch_incremental_merge_equals_rebuild(spark, docs, tmp_path):
@@ -167,16 +188,7 @@ def test_crawl_wave_index_maintenance(spark, tmp_path):
     st = crawl(spark, d, waves=3, cfg=cfg, gcfg=G.GraphConfig(graph_size=500))
 
     docs = st.cat.read_appended(spark, "docs")
-    flat = docs.select(
-        "doc_id",
-        F.array_join(
-            F.transform(
-                F.filter("spans", lambda s: s["kind"] == "text"),
-                lambda s: s["text"],
-            ),
-            " ",
-        ).alias("text"),
-    )
+    flat = doc_text(docs)
     grams = _field_grams(flat, "text")
     batch = {
         "postings": grams.select("doc_id", F.explode("g").alias("gram")),
@@ -314,16 +326,7 @@ def test_recrawl_reindex_probe_equals_rebuild(spark, tmp_path):
     # fresh rebuild over each doc's newest content (content is
     # deterministic per URL, so any surviving row per doc_id is newest)
     docs = st.cat.read_appended(spark, "docs").dropDuplicates(["doc_id"])
-    flat = docs.select(
-        "doc_id",
-        F.array_join(
-            F.transform(
-                F.filter("spans", lambda s: s["kind"] == "text"),
-                lambda s: s["text"],
-            ),
-            " ",
-        ).alias("text"),
-    )
+    flat = doc_text(docs)
     grams = _field_grams(flat, "text")
     batch = {
         "postings": grams.select("doc_id", F.explode("g").alias("gram")),
