@@ -12,17 +12,16 @@ from dataclasses import dataclass
 
 @dataclass(frozen=True)
 class SketchConfig:
-    """Content-sketch parameters (reference: configs-example.yaml:55-63)."""
+    """Content-sketch parameters (reference: configs-example.yaml:55-63).
 
-    max_records_per_dataset: int = 1_000_000   # configs-example.yaml:56
-    table_sample_size: int = 20                # configs-example.yaml:57
+    Only the tunables the sketcher reads are fields. HLL precision is
+    ``sketch.hll.P`` (p=8, as configured); the LSH thresholds are
+    arguments of ``sketch.lsh`` (index 0.1, ``lshserver/main.go:23``)."""
+
     minhash_size: int = 256                    # configs-example.yaml:58
     minhash_seed: int = 43                     # configs-example.yaml:59
-    hyperloglog_p: int = 8                     # configs-example.yaml:60
     column_sample_size: int = 100              # configs-example.yaml:61
     enable_word_vector_data: bool = False      # configs-example.yaml:62
-    minhash_lsh_threshold: float = 0.5         # configs-example.yaml:63
-    lsh_index_threshold: float = 0.1           # lshserver/main.go:23
 
 
 @dataclass(frozen=True)
@@ -35,6 +34,8 @@ class CrawlConfig:
     spread a hot host's selected URLs across fetch tasks. Every other
     per-wave choice — the shuffle-partition count and the seen-probe
     mode — is derived from counts the wave already tracks, not set here.
+    The default crawl delay and the lineage shard count are
+    ``crawler.wave`` constants; the Bloom sizing is ``crawler.seen``'s.
     """
 
     # politeness / frontier (north-rule additions; no reference analog)
@@ -42,9 +43,7 @@ class CrawlConfig:
     # used by the ordering-parity tests); 'richness' = parent-document
     # metadata richness drives child priority (north-star scoring rule)
     priority_mode: str = "bfs"
-    default_crawl_delay_s: float = 1.0
     per_host_wave_budget: int = 50      # max URLs fetched per host per wave
-    host_shards: int = 32               # bucket(K, host) partition count
     hot_host_salt: int = 8              # fetch-group salt for hot hosts
     # per-wave index maintenance, staged INSIDE each wave's atomic commit
     # (reference analog: one harvest run upserts all metadata/sketch
@@ -59,8 +58,6 @@ class CrawlConfig:
     index_fields: tuple = ()            # e.g. ("text",)
     index_ivf: bool = False
     index_sketch: bool = False
-    bloom_bits_per_key: int = 10        # ~1% fpp
-    bloom_num_hashes: int = 7
     bloom_shards: int = 16              # per-shard bitsets (10^10: ~1024)
 
 

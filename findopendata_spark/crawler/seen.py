@@ -41,6 +41,9 @@ import pandas as pd
 from findopendata_spark.config import CrawlConfig
 from findopendata_spark.crawler.graph import mix
 
+BLOOM_BITS_PER_KEY = 10  # ~1% false-positive rate with 7 hashes
+BLOOM_NUM_HASHES = 7
+
 
 def _positions(url_hash: np.ndarray, m_bits: int, k: int) -> np.ndarray:
     """(len(h), k) bit positions of int64 hashes via double hashing."""
@@ -118,10 +121,10 @@ class ShardedSeenFilter:
         """Size for ``n_keys`` (callers pass count*headroom) and build all
         shards from ``seen_df.url_hash`` executor-side."""
         s = cfg.bloom_shards
-        m = max(1024, max(n_keys // s, 1) * cfg.bloom_bits_per_key)
+        m = max(1024, max(n_keys // s, 1) * BLOOM_BITS_PER_KEY)
         m_shard = 1 << int(np.ceil(np.log2(m)))  # pow2 → cheap masking semantics
-        shards = _build_shards(seen_df, m_shard, cfg.bloom_num_hashes, s)
-        return cls(shards, s, cfg.bloom_num_hashes, m_shard, n_keys)
+        shards = _build_shards(seen_df, m_shard, BLOOM_NUM_HASHES, s)
+        return cls(shards, s, BLOOM_NUM_HASHES, m_shard, n_keys)
 
     def needs_rebuild(self, n_keys: int) -> bool:
         return self.force_rebuild or n_keys > self.capacity

@@ -64,6 +64,10 @@ FETCH_DOC_SCHEMA = (
 # richness mode adds ONE doc-level parent score column (r02 carried it
 # on every span row)
 FETCH_DOC_SCHEMA_RICH = FETCH_DOC_SCHEMA + ", rich double"
+# crawl delay (in waves) of a host without a robots row
+DEFAULT_CRAWL_DELAY = 1.0
+# lineage rows per wave: one per pmod(xxhash64(host), HOST_SHARDS)
+HOST_SHARDS = 32
 
 
 @dataclass
@@ -361,7 +365,6 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
 
     cat, cfg, gcfg = state.cat, state.cfg, state.gcfg
     assert cat.current_wave() == wave - 1, "waves must be sequential"
-    shard_k = cfg.host_shards
     rich_mode = cfg.priority_mode == "richness"
 
     # frontier stores only (url_canon, depth, priority, url_hash) — host is
@@ -379,7 +382,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
     f = (
         frontier.join(F.broadcast(robots.select("host", "crawl_delay")), "host", "left")
         .withColumn(
-            "crawl_delay", F.coalesce("crawl_delay", F.lit(cfg.default_crawl_delay_s))
+            "crawl_delay", F.coalesce("crawl_delay", F.lit(DEFAULT_CRAWL_DELAY))
         )
         .join(host_state, "host", "left")
     )
@@ -417,19 +420,6 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
 
     ex = ThreadPoolExecutor(max_workers=6)
     try:
-
-        def _timed(label, fn, *args):
-            if not _timing:
-                return fn(*args)
-            t = _time.time()
-            try:
-                return fn(*args)
-            finally:
-                print(
-                    f"WAVETIME {wave} stage:{label} {_time.time() - t:.2f}",
-                    flush=True,
-                )
-
         # seen-filter warm-up OFF the critical path (r06b, event-log
         # finding): the filter depends only on the wave-start committed
         # seen table, yet _get_seen_filter used to run synchronously at
@@ -438,9 +428,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         # cand at 8 cores. Building it here overlaps selection staging +
         # fetch; the probe joins the future. Single consumer: only this
         # future touches state._seen_filter until .result().
-        f_seen_filter = ex.submit(
-            _timed, "seenfilter", _get_seen_filter, spark, state, seen
-        )
+        f_seen_filter = ex.submit(_get_seen_filter, spark, state, seen)
 
         fetched_hosts = (
             selected.select("host").distinct().withColumn("last_fetch_wave", F.lit(wave))
@@ -448,8 +436,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         host_state_next = host_state.join(
             fetched_hosts.select("host"), "host", "left_anti"
         ).unionByName(fetched_hosts)
-        f_hosts = ex.submit(_timed, "hosts", cat.stage, host_state_next,
-                            "host_state", wave)
+        f_hosts = ex.submit(cat.stage, host_state_next, "host_state", wave)
         # next-frontier BASE = every frontier row not selected (leftover
         # ∪ not-ready). ~98% of the next frontier is known the moment
         # selection lands, so its (big) write starts NOW and overlaps
@@ -459,7 +446,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         # dedup and commit.
         cat.prepare_snap("frontier", wave)
         f_frontier_base = ex.submit(
-            _timed, "frontier_base", cat.stage,
+            cat.stage,
             f.select(*fr_cols).join(
                 selected.select("url_canon"), "url_canon", "left_anti"
             ),
@@ -509,7 +496,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         # 4. docs table (interleaved input_hint shape): the fetch UDF
         # already emits it — staging is a plain append, no shuffle/sort
         docs = okdocs.select("doc_id", "url_canon", "host", "spans")
-        f_docs = ex.submit(_timed, "docs", cat.stage_append, docs, "docs", wave)
+        f_docs = ex.submit(cat.stage_append, docs, "docs", wave)
 
         # 4b. per-wave index maintenance in the SAME atomic commit (the
         # reference's one-harvest-upserts-all-tables shape,
@@ -519,7 +506,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         # it trained.
         index_appends, index_snaps = crawl_deltas(spark, cat, cfg, docs, wave)
         f_index = [
-            ex.submit(_timed, f"index:{table}", cat.stage_append, df, table, wave)
+            ex.submit(cat.stage_append, df, table, wave)
             for table, df in index_appends
         ]
         extra_snaps = {t: cat.stage(df, t, wave) for t, df in index_snaps.items()}
@@ -590,7 +577,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         # checkpoint (r05 — at 17M candidates/wave that is hundreds of MB
         # of checkpoint write+read that memory-bandwidth-bound legs pay)
         cand = cand.withColumn(
-            "host_shard", _shard(F.col("host"), shard_k)
+            "host_shard", _shard(F.col("host"), HOST_SHARDS)
         ).drop("host")
 
         # 6. URL-seen dedup: Bloom prefilter → exact anti-join on maybes only
@@ -607,7 +594,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         # instead of shuffling ~20M tag rows on the critical path.
         def tagged(df, tag):
             return df.select(
-                _shard(F.col("host"), shard_k).alias("host_shard"),
+                _shard(F.col("host"), HOST_SHARDS).alias("host_shard"),
                 F.lit(tag).alias("_t"),
             )
 
@@ -624,10 +611,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
                 F.sum(F.when(F.col("_t") == "c", 1).otherwise(0)).alias("urls_candidates"),
             )
         )
-        f_lineage_pre = ex.submit(
-            _timed, "lineage_pre",
-            lambda df: df.localCheckpoint(), pre_counts,
-        )
+        f_lineage_pre = ex.submit(pre_counts.localCheckpoint)
         definite_new = cand.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe_new = (
             cand.filter(F.col("maybe_seen"))
@@ -658,7 +642,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
             .withColumn(
                 "urls_deduped", F.col("urls_candidates") - F.col("urls_enqueued")
             )
-            .coalesce(1)  # <= host_shards rows: one file, one reduce task
+            .coalesce(1)  # <= HOST_SHARDS rows: one file, one reduce task
         )
 
         # 9. stage the remaining outputs on the SAME executor (docs and
@@ -667,16 +651,14 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
         # happens only after every write lands; the filter is driver state,
         # safe to update pre-commit (rebuilt from tables on resume).
         f_frontier_delta = ex.submit(
-            _timed, "frontier_delta", cat.stage, new.select(*fr_cols),
-            "frontier", wave, "delta",
+            cat.stage, new.select(*fr_cols), "frontier", wave, "delta"
         )
         futs = [
             f_docs,
             f_frontier_base,
             *f_index,
-            ex.submit(_timed, "seen", cat.stage_append, new_seen, "seen", wave),
-            ex.submit(_timed, "lineage", cat.stage_append, lineage, "lineage",
-                      wave),
+            ex.submit(cat.stage_append, new_seen, "seen", wave),
+            ex.submit(cat.stage_append, lineage, "lineage", wave),
         ]
         # seen-filter shard delta: driver-cache maintenance, rebuilt from
         # tables on resume — only the NEXT wave's probe needs it. r04
@@ -691,8 +673,7 @@ def _run_wave(spark: SparkSession, state: CrawlState, wave: int) -> dict:
                 max_workers=1, thread_name_prefix="seen-delta"
             )
         state._seen_delta_fut = state._bg_ex.submit(
-            _timed, "bloomdelta", seen_filter.or_delta,
-            spark, new.select("url_hash"),
+            seen_filter.or_delta, spark, new.select("url_hash"),
         )
         staged = {
             "frontier": f_frontier_delta.result(),

@@ -14,8 +14,16 @@ Exact, MinHash+LSH, and SimHash near-dup — first-class 100 TB operators:
 Token/shingle hashing happens JVM-side (``xxhash64`` inside
 ``transform``); Python only ever sees int64 arrays (north-rule axis A).
 MinHash math is the same permutation family as the sketch engine
-(:mod:`findopendata_spark.sketch.minhash`), so dedup signatures and
-column sketches are mutually comparable.
+(:mod:`findopendata_spark.sketch.minhash`), and the signatures are
+banded by the one band format the column-sketch index uses
+(:func:`findopendata_spark.sketch.lsh.bands_table`), so dedup signatures
+and column sketches are comparable by construction.
+
+Each similarity rule has one implementation here: MinHash and SimHash
+candidates both come from :func:`_bucket_pairs` (the ``bucket_cap``
+window and the ``a < b`` bucket self-join), and both AllPairs verify
+paths run :func:`_jaccard_verify_fn` (one searchsorted-intersect batch
+kernel; the paths differ only in how each side's gram codes arrive).
 """
 
 from __future__ import annotations
@@ -28,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from findopendata_spark.ranking import global_row_number
+from findopendata_spark.sketch.lsh import bands_table, optimal_param
 from findopendata_spark.sketch.minhash import MAX_HASH, MinHashPermutations
 
 
@@ -334,6 +343,37 @@ def simhash64(
 # LSH near-dup pairs
 # ---------------------------------------------------------------------------
 
+def _bucket_pairs(
+    bands: DataFrame, id_col: str, bucket_cap: int | None,
+    carry: str | None = None,
+) -> DataFrame:
+    """Candidate pairs (a < b) of ``bands`` rows (id, band_idx,
+    band_hash[, carry]) sharing a (band_idx, band_hash) bucket — the band
+    self-join, the only candidate-generation shuffle. ``carry`` rides
+    along as ``<carry>_a``/``<carry>_b``.
+
+    ``bucket_cap``, when set, first drops buckets holding more than that
+    many rows: a recall/cost knob for adversarial corpora. A pair that
+    collides only in over-cap buckets is lost; pairs that also collide in
+    an under-cap bucket are still found."""
+    if bucket_cap is not None:
+        wcnt = Window.partitionBy("band_idx", "band_hash")
+        bands = bands.withColumn(
+            "bucket_n", F.count(F.lit(1)).over(wcnt)
+        ).filter(F.col("bucket_n") <= bucket_cap).drop("bucket_n")
+
+    def side(name: str) -> DataFrame:
+        extra = [F.col(carry).alias(f"{carry}_{name}")] if carry else []
+        return bands.select(
+            F.col(id_col).alias(name), "band_idx", "band_hash", *extra
+        )
+
+    return (
+        side("a").join(side("b"), ["band_idx", "band_hash"])
+        .filter(F.col("a") < F.col("b"))
+    )
+
+
 def near_dup_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -354,13 +394,10 @@ def near_dup_pairs(
     Skew guards for the 100 TB shape: docs with an empty shingle set are
     dropped *before* banding (they would all share the identity signature
     and re-create an O(n^2) bucket, yet can never reach a threshold > 0
-    because verify requires union > 0). ``bucket_cap``, when set, drops
-    band buckets holding more than that many docs — a recall/cost knob
-    for adversarial corpora (a capped bucket means those docs collide on
+    because verify requires union > 0). ``bucket_cap`` is
+    :func:`_bucket_pairs`'s (a capped bucket means those docs collide on
     1 of ``b`` bands; the other b-1 bands still surface true pairs).
     """
-    from findopendata_spark.sketch.lsh import optimal_param
-
     b, r = optimal_param(threshold, num_perm)
     # shingle construction via the batch kernel (shingles_expr is
     # interpreted per gram — ~20 s/pass at sf1.0 vs <1 s; see
@@ -375,30 +412,12 @@ def near_dup_pairs(
     sh = sh.filter(F.size("sh") > 0)
     ensure_cached(sh)
     sigs = minhash_signatures(sh, id_col=id_col, num_perm=num_perm)
-    band_hashes = F.transform(
-        F.sequence(F.lit(0), F.lit(b - 1)),
-        lambda i: F.hash(F.slice(F.col("minhash"), i * r + 1, r)),
-    )
-    bands = sigs.select(
-        id_col, F.posexplode(band_hashes).alias("band_idx", "band_hash")
-    )
+    bands = bands_table(sigs, b, r, (id_col,))
     # the band self-join below references `bands` twice; without a cache
     # the whole signature pipeline (minhash kernel + band hashing) is
     # evaluated once per side (guide §2.4 — share one computation)
     ensure_cached(bands)
-    if bucket_cap is not None:
-        wcnt = Window.partitionBy("band_idx", "band_hash")
-        bands = bands.withColumn("bucket_n", F.count(F.lit(1)).over(wcnt)).filter(
-            F.col("bucket_n") <= bucket_cap
-        ).drop("bucket_n")
-    left = bands.withColumnRenamed(id_col, "a")
-    right = bands.withColumnRenamed(id_col, "b")
-    cand = (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    cand = _bucket_pairs(bands, id_col, bucket_cap).select("a", "b").distinct()
     sa = sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -431,6 +450,54 @@ def gram_codes(gram_df: DataFrame) -> DataFrame:
 # The documents corpus averages ~52 distinct word-3-grams per doc (2.1 MiB
 # at sf0.1), so this admits about the 500k docs the old row gate did.
 ALLPAIRS_BROADCAST_BYTES = 256 << 20
+
+
+def _jaccard_verify_fn(codes, V, t: float):
+    """The AllPairs verify kernel for ``mapInArrow``: batches of (a, b,
+    ...) candidate rows → (a, b, jaccard) rows with jaccard >= ``t``.
+
+    ``codes(tbl)`` returns ((lens_a, flat_a), (lens_b, flat_b)): each
+    side's code-sorted gram arrays, concatenated in row order. Because
+    codes are sorted by the GLOBAL dense code (< ``V``), the keys
+    ``row * V + code`` are globally sorted per side, so ONE
+    ``np.searchsorted`` binary-search merge intersects every pair of the
+    batch — no batch sort. Jaccard is the int→double division; union >=
+    1, so NaN is impossible and the >= t gate is a plain IEEE compare."""
+
+    def fn(batches):
+        import pyarrow as paw
+
+        for tbl in batches:
+            n = tbl.num_rows
+            if n == 0:
+                continue
+            (la, flat_a), (lb, flat_b) = codes(tbl)
+            p_a = np.repeat(np.arange(n, dtype=np.int64), la)
+            p_b = np.repeat(np.arange(n, dtype=np.int64), lb)
+            k_a = p_a * V + flat_a
+            k_b = p_b * V + flat_b
+            if len(k_b):
+                pos = np.searchsorted(k_b, k_a)
+                pos[pos == len(k_b)] = 0  # valid slot; equality fails
+                matched = k_b[pos] == k_a
+                inter = np.bincount(p_a[matched], minlength=n)
+            else:
+                inter = np.zeros(n, dtype=np.int64)
+            jacc = inter / (la + lb - inter)
+            keep = jacc >= t
+            if not keep.any():
+                continue
+            mask = paw.array(keep)
+            yield paw.RecordBatch.from_arrays(
+                [
+                    tbl.column(0).filter(mask),
+                    tbl.column(1).filter(mask),
+                    paw.array(jacc[keep]),
+                ],
+                names=["a", "b", "jaccard"],
+            )
+
+    return fn
 
 
 def allpairs_jaccard_pairs(
@@ -557,15 +624,11 @@ def allpairs_jaccard_pairs(
     # corpora is large (~10M pairs at sf1.0 for ~3k true pairs), and
     # per-pair `array_intersect` over string arrays was the query's
     # dominant cost (~20 s — interpreted, one hash set per pair side).
-    # Candidates attach the code-sorted int32 gram arrays, and a
-    # vectorized Arrow kernel intersects ALL pairs of a batch in one
-    # pass. r06b: because arrays are sorted by the GLOBAL dense code,
-    # the batch's (pair, code) keys are already sorted — one
-    # np.searchsorted binary-search merge replaces the np.unique +
-    # np.intersect1d sorts that dominated the r06a kernel (guide §4.2).
-    # Jaccard arithmetic is the same int→double division; the >= t gate
-    # stays in the kernel (plain IEEE compare, NaN impossible since
-    # union >= 1).
+    # Candidates get the code-sorted int32 gram arrays, and one
+    # vectorized Arrow kernel (_jaccard_verify_fn) intersects ALL pairs
+    # of a batch in one pass; its searchsorted merge replaces the
+    # np.unique + np.intersect1d sorts that dominated the r06a kernel
+    # (guide §4.2).
     id_t = sets.schema["_id"].dataType.simpleString()
     # Attach strategy (guide §3.1 + §8): the verify only needs each
     # doc's code array — a lightweight corpus-wide proxy (~10 MB as
@@ -597,9 +660,8 @@ def allpairs_jaccard_pairs(
         )
         bc = spark.sparkContext.broadcast((ids, lens, offs, flat))
 
-        def verify_fn(batches):
-            import pyarrow as paw
-
+        def codes(tbl):
+            """Each side's codes gathered from the broadcast store by id."""
             b_ids, b_lens, b_offs, b_flat = bc.value
 
             def gather(doc_col):
@@ -614,92 +676,30 @@ def allpairs_jaccard_pairs(
                 )
                 return ln, b_flat[pos]
 
-            for tbl in batches:
-                n = tbl.num_rows
-                if n == 0:
-                    continue
-                aa = tbl.column(0).to_numpy(zero_copy_only=False)
-                bb = tbl.column(1).to_numpy(zero_copy_only=False)
-                la, flat_a = gather(aa)
-                lb, flat_b = gather(bb)
-                p_a = np.repeat(np.arange(n, dtype=np.int64), la)
-                p_b = np.repeat(np.arange(n, dtype=np.int64), lb)
-                # globally sorted keys: pair index nondecreasing, each
-                # array code-sorted — binary-search merge, no batch sort
-                k_a = p_a * V + flat_a
-                k_b = p_b * V + flat_b
-                if len(k_b):
-                    pos = np.searchsorted(k_b, k_a)
-                    pos[pos == len(k_b)] = 0  # valid slot; equality fails
-                    matched = k_b[pos] == k_a
-                    inter = np.bincount(p_a[matched], minlength=n)
-                else:
-                    inter = np.zeros(n, dtype=np.int64)
-                jacc = inter / (la + lb - inter)
-                keep = jacc >= t
-                if not keep.any():
-                    continue
-                yield paw.RecordBatch.from_arrays(
-                    [
-                        tbl.column(0).filter(paw.array(keep)),
-                        tbl.column(1).filter(paw.array(keep)),
-                        paw.array(jacc[keep]),
-                    ],
-                    names=["a", "b", "jaccard"],
-                )
+            return (
+                gather(tbl.column(0).to_numpy(zero_copy_only=False)),
+                gather(tbl.column(1).to_numpy(zero_copy_only=False)),
+            )
 
-        verified = cand.mapInArrow(
-            verify_fn, f"a {id_t}, b {id_t}, jaccard double"
-        )
+        pairs = cand
     else:
         ga = sets.select(F.col("_id").alias("a"), F.col("g").alias("g_a"))
         gb = sets.select(F.col("_id").alias("b"), F.col("g").alias("g_b"))
         ga, gb = ga.hint("shuffle_hash"), gb.hint("shuffle_hash")
 
-        def verify_attached_fn(batches):
-            import pyarrow as paw
+        def codes(tbl):
+            """Each side's codes read from its attached list column."""
 
-            def _flat(col):
+            def flat(col):
                 off = col.offsets.to_numpy().astype(np.int64)
-                off = off - off[0]
-                return np.diff(off), col.flatten().to_numpy(), off
+                return np.diff(off), col.flatten().to_numpy()
 
-            for tbl in batches:
-                n = tbl.num_rows
-                if n == 0:
-                    continue
-                la, flat_a, _ = _flat(tbl.column(2))
-                lb, flat_b, _ = _flat(tbl.column(3))
-                p_a = np.repeat(np.arange(n, dtype=np.int64), la)
-                p_b = np.repeat(np.arange(n, dtype=np.int64), lb)
-                k_a = p_a * V + flat_a
-                k_b = p_b * V + flat_b
-                if len(k_b):
-                    pos = np.searchsorted(k_b, k_a)
-                    pos[pos == len(k_b)] = 0
-                    matched = k_b[pos] == k_a
-                    inter = np.bincount(p_a[matched], minlength=n)
-                else:
-                    inter = np.zeros(n, dtype=np.int64)
-                jacc = inter / (la + lb - inter)
-                keep = jacc >= t
-                if not keep.any():
-                    continue
-                yield paw.RecordBatch.from_arrays(
-                    [
-                        tbl.column(0).filter(paw.array(keep)),
-                        tbl.column(1).filter(paw.array(keep)),
-                        paw.array(jacc[keep]),
-                    ],
-                    names=["a", "b", "jaccard"],
-                )
+            return flat(tbl.column(2)), flat(tbl.column(3))
 
-        verified = (
-            cand.join(ga, "a")
-            .join(gb, "b")
-            .select("a", "b", "g_a", "g_b")
-            .mapInArrow(verify_attached_fn, f"a {id_t}, b {id_t}, jaccard double")
-        )
+        pairs = cand.join(ga, "a").join(gb, "b").select("a", "b", "g_a", "g_b")
+    verified = pairs.mapInArrow(
+        _jaccard_verify_fn(codes, V, t), f"a {id_t}, b {id_t}, jaccard double"
+    )
     # candidates skip the pre-verify distinct, so a pair reachable via
     # k prefix grams is verified k times — identical rows, collapsed
     # here on the (tiny) verified output
@@ -797,9 +797,9 @@ def simhash_near_dup_pairs(
     near-empty corpora collapse many docs onto the SAME signature (all
     zero/low-token docs share simhash 0), rebuilding an O(bucket^2) join
     inside every band. ``bucket_cap``, when set, drops band buckets
-    holding more than that many docs (same windowed-count guard as
-    :func:`near_dup_pairs`). Setting it trades recall for cost: a pair
-    colliding ONLY in capped buckets is lost, so the pigeonhole
+    holding more than that many docs (:func:`_bucket_pairs`, the guard
+    :func:`near_dup_pairs` uses). Setting it trades recall for cost: a
+    pair colliding ONLY in capped buckets is lost, so the pigeonhole
     exactness guarantee holds only for pairs whose >= 1 colliding band
     is under the cap. Callers should also drop docs with an empty token
     multiset before :func:`simhash64` (their signature is 0 and the
@@ -866,27 +866,16 @@ def simhash_near_dup_pairs(
         )
     else:  # degenerate tiny signatures: plain single-level banding
         bands_arr = F.array(*outer)
+    # the band's bits are themselves the bucket key
     bands = sigs.select(
         F.col(id_col), F.col(sig_col),
-        F.posexplode(bands_arr).alias("band_idx", "band_val"),
+        F.posexplode(bands_arr).alias("band_idx", "band_hash"),
     )
-    if bucket_cap is not None:
-        wcnt = Window.partitionBy("band_idx", "band_val")
-        bands = bands.withColumn(
-            "bucket_n", F.count(F.lit(1)).over(wcnt)
-        ).filter(F.col("bucket_n") <= bucket_cap).drop("bucket_n")
-    left = bands.select(
-        "band_idx", "band_val",
-        F.col(id_col).alias("a"), F.col(sig_col).alias("sig_a"),
+    ham = F.bit_count(
+        F.col(f"{sig_col}_a").bitwiseXOR(F.col(f"{sig_col}_b"))
     )
-    right = bands.select(
-        "band_idx", "band_val",
-        F.col(id_col).alias("b"), F.col(sig_col).alias("sig_b"),
-    )
-    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
-        left.join(right, ["band_idx", "band_val"])
-        .filter(F.col("a") < F.col("b"))
+        _bucket_pairs(bands, id_col, bucket_cap, carry=sig_col)
         .select("a", "b", ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()

@@ -10,7 +10,10 @@ for boundedness exactly like IVF search does: only within-cell pairs
 are produced (documented, and exercised by the skew pytest).
 
 All dot products fold left-to-right in double precision — bit-identical
-to the DuckDB oracle's loop.
+to the DuckDB oracle's loop. :func:`_cosine` is the one cosine and
+:func:`_nearest_cells` the one nearest-centroid rule (argmax cosine, ties
+to the lower centroid id); quantizer training, cell assignment, the IVF
+probe and the near-dup sub-blocking all call them.
 """
 
 from __future__ import annotations
@@ -21,14 +24,45 @@ from pyspark.sql import functions as F
 from findopendata_spark.session import session_cache
 
 
-def _dot(a: str, b: str):
-    return F.aggregate(
+def _cosine(a: str, b: str):
+    """Cosine of two ``array<double>`` columns. A zero-norm side scores
+    NULL (``try_divide``), which ranks last under a DESC order, instead
+    of raising ``DIVIDE_BY_ZERO`` under ANSI mode."""
+    dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
     )
 
+    def norm(c: str):
+        return F.sqrt(F.aggregate(F.col(c), F.lit(0.0), lambda s, x: s + x * x))
 
-def _norm(c):
-    return F.sqrt(F.aggregate(c, F.lit(0.0), lambda s, x: s + x * x))
+    return F.try_divide(dot, norm(a) * norm(b))
+
+
+def _nearest_cells(
+    df: DataFrame,
+    centroids: DataFrame,
+    id_col: str,
+    vec_col: str,
+    keep: list[str],
+    n: int = 1,
+    on=None,
+) -> DataFrame:
+    """The ``n`` nearest centroids of each ``df`` row: argmax cosine,
+    ties to the lower centroid id. ``centroids`` (c_id, c[, on]) is
+    broadcast and cross-joined, or equi-joined on column ``on``; returns
+    the ``keep`` columns plus the centroid id as ``_cell``, one row per
+    (row, chosen centroid)."""
+    cents = F.broadcast(
+        centroids.withColumnsRenamed({"c_id": "_c_id", "c": "_c"})
+    )
+    w = Window.partitionBy(id_col).orderBy(F.desc("_cos_c"), F.asc("_c_id"))
+    return (
+        df.join(cents, F.lit(True) if on is None else on)
+        .withColumn("_cos_c", _cosine(vec_col, "_c"))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n)
+        .select(*keep, F.col("_c_id").alias("_cell"))
+    )
 
 
 def hashing_embedding_expr(text_col, dim: int = 16):
@@ -78,19 +112,10 @@ def assign_cells(
     id_col: str = "vec_id",
     vec_col: str = "v",
 ) -> DataFrame:
-    """(id, v) × centroids(c_id, c) → (id, v, cell): argmax cosine,
-    ties to the lower centroid id."""
-    cents = F.broadcast(
-        centroids.select(F.col("c_id").alias("_c_id"), F.col("c").alias("_c"))
-    )
-    cos_c = _dot(vec_col, "_c") / (_norm(F.col(vec_col)) * _norm(F.col("_c")))
-    w_best = Window.partitionBy(id_col).orderBy(F.desc("_cos_c"), F.asc("_c_id"))
-    return (
-        emb.join(cents, F.lit(True))
-        .withColumn("_cos_c", cos_c)
-        .withColumn("_rn", F.row_number().over(w_best))
-        .filter(F.col("_rn") == 1)
-        .select(id_col, vec_col, F.col("_c_id").alias("_cell"))
+    """(id, v) × centroids(c_id, c) → (id, v, _cell): the nearest
+    centroid (:func:`_nearest_cells`)."""
+    return _nearest_cells(
+        emb, centroids.select("c_id", "c"), id_col, vec_col, [id_col, vec_col]
     )
 
 
@@ -181,24 +206,18 @@ def ivf_topk(
         if centroids is not None
         else first_n_centroids(emb, n_cells, id_col, vec_col)
     )
-    cents = F.broadcast(
-        cents_df.select(F.col("c_id").alias("_c_id"), F.col("c").alias("_c"))
-    )
     if assigned is None:
         assigned = assign_cells(emb, cents_df, id_col, vec_col)
     q = query.select(
         F.col(id_col).alias("_q_id"), F.col(vec_col).alias("_q")
     )
-    q_cos = _dot("_q", "_c") / (_norm(F.col("_q")) * _norm(F.col("_c")))
-    w_q = Window.partitionBy("_q_id").orderBy(F.desc("_qc"), F.asc("_c_id"))
     probe_cells = F.broadcast(
-        q.join(cents, F.lit(True))
-        .withColumn("_qc", q_cos)
-        .withColumn("_rn", F.row_number().over(w_q))
-        .filter(F.col("_rn") <= n_probe)
-        .select("_q_id", "_q", F.col("_c_id").alias("_cell"))
+        _nearest_cells(
+            q, cents_df.select("c_id", "c"), "_q_id", "_q", ["_q_id", "_q"],
+            n=n_probe,
+        )
     )
-    cos = _dot(vec_col, "_q") / (_norm(F.col(vec_col)) * _norm(F.col("_q")))
+    cos = _cosine(vec_col, "_q")
     w_k = Window.partitionBy("_q_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
     return (
         assigned.join(probe_cells, "_cell")
@@ -279,18 +298,12 @@ def embedding_near_dup(
         .filter(F.col("_r") <= F.ceil(F.col("_n") / block_cap))
         .select(
             F.col(label_col),
-            F.col(id_col).alias("_c_id"),
-            F.col(vec_col).alias("_c"),
+            F.col(id_col).alias("c_id"),
+            F.col(vec_col).alias("c"),
         )
     )
-    scored = big.join(F.broadcast(cents), label_col).withColumn(
-        "_cos_c", _dot(vec_col, "_c") / (_norm(F.col(vec_col)) * _norm(F.col("_c")))
-    )
-    w_best = Window.partitionBy(id_col).orderBy(F.desc("_cos_c"), F.asc("_c_id"))
-    assigned = (
-        scored.withColumn("_rn", F.row_number().over(w_best))
-        .filter(F.col("_rn") == 1)
-        .select(label_col, id_col, vec_col, F.col("_c_id").alias("_cell"))
+    assigned = _nearest_cells(
+        big, cents, id_col, vec_col, [label_col, id_col, vec_col], on=label_col
     )
 
     blocked = small.select(label_col, id_col, vec_col, "_cell").unionByName(
@@ -330,15 +343,19 @@ def embedding_near_dup(
         )
         dim = V.shape[1]
         nrm = np.zeros(m, dtype=np.float64)
-        for d in range(dim):  # left-to-right fold, same order as _norm
+        for d in range(dim):  # left-to-right fold, same order as _cosine
             nrm += V[:, d] * V[:, d]
         nrm = np.sqrt(nrm)
         ia, ib = np.triu_indices(m, k=1)  # ids sorted & unique → a < b
         acc = np.zeros(len(ia), dtype=np.float64)
-        for d in range(dim):  # left-to-right fold, same order as _dot
+        for d in range(dim):  # left-to-right fold, same order as _cosine
             acc += V[ia, d] * V[ib, d]
-        cos = acc / (nrm[ia] * nrm[ib])
-        keep = ~(cos < t)  # == (cos >= t) plus NaN, Spark's NaN-largest
+        den = nrm[ia] * nrm[ib]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = acc / den
+        # _cosine's rules: a zero denominator scores NULL (dropped), and
+        # ~(cos < t) == (cos >= t) plus NaN, Spark's NaN-largest
+        keep = (den != 0) & ~(cos < t)
         if not keep.any():
             return empty
         return pd.DataFrame(

@@ -149,8 +149,8 @@ def q41_similar_packages(spark: SparkSession, sf_dir: str) -> DataFrame:
     Byte-identical to the full scan.
     """
     from findopendata_spark.sketch.trigram_index import (
+        similar_packages,
         trigram_index,
-        trigram_similarity_scores,
     )
 
     spark.conf.set("spark.sql.shuffle.partitions", "32")
@@ -158,27 +158,7 @@ def q41_similar_packages(spark: SparkSession, sf_dir: str) -> DataFrame:
     d_idx = trigram_index(spark, sf_dir, "description")
     q_doc_id, q_tg = t_idx["query_row"]
     _, q_dg = d_idx["query_row"]
-    ts = trigram_similarity_scores(t_idx, q_doc_id, q_tg).select(
-        "doc_id", F.round("jaccard", 6).alias("title_similarity")
-    )
-    ds = trigram_similarity_scores(d_idx, q_doc_id, q_dg).select(
-        "doc_id", F.round("jaccard", 6).alias("description_similarity")
-    )
-    return (
-        ts.filter(F.col("title_similarity") > 0)  # the %% theta-join gate
-        .join(ds, "doc_id", "left")
-        .withColumn(
-            "description_similarity",
-            F.coalesce("description_similarity", F.lit(0.0)),
-        )
-        .orderBy(
-            F.desc("title_similarity"),
-            F.desc("description_similarity"),
-            F.asc("doc_id"),
-        )
-        .limit(10)
-        .select("doc_id", "title_similarity", "description_similarity")
-    )
+    return similar_packages(t_idx, d_idx, q_doc_id, q_tg, q_dg, limit=10)
 
 
 # Stub vocabulary rule: a (lower/trim-normalized) value is

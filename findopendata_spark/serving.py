@@ -158,8 +158,8 @@ class ApiServer:
         query doc — q41's kernel with the query row parameterized
         (reference ``apiserver/main.py:173-207``)."""
         from findopendata_spark.sketch.trigram_index import (
+            similar_packages,
             trigram_set_expr,
-            trigram_similarity_scores,
         )
 
         row = (
@@ -173,26 +173,9 @@ class ApiServer:
         )
         if not row:
             return []
-        q_tg, q_dg = list(row[0]["tg"]), list(row[0]["dg"])
-        ts = trigram_similarity_scores(self._t_idx, doc_id, q_tg).select(
-            "doc_id", F.round("jaccard", 6).alias("title_similarity")
-        )
-        ds = trigram_similarity_scores(self._d_idx, doc_id, q_dg).select(
-            "doc_id", F.round("jaccard", 6).alias("description_similarity")
-        )
-        out = (
-            ts.filter(F.col("title_similarity") > 0)
-            .join(ds, "doc_id", "left")
-            .withColumn(
-                "description_similarity",
-                F.coalesce("description_similarity", F.lit(0.0)),
-            )
-            .orderBy(
-                F.desc("title_similarity"),
-                F.desc("description_similarity"),
-                F.asc("doc_id"),
-            )
-            .limit(limit)
+        out = similar_packages(
+            self._t_idx, self._d_idx, doc_id,
+            list(row[0]["tg"]), list(row[0]["dg"]), limit,
         )
         return [r.asDict() for r in out.collect()]
 

@@ -15,6 +15,14 @@ same verify + top-k, all JVM-side (zip_with for hash-equality counts, a
 window for top-k). At scale the bands table is the shuffle-free
 precomputed index the Go server rebuilds in RAM on every boot.
 
+Every MinHash banding in the package goes through :func:`bands_table`:
+the near-dup operator (``dedup.near_dup_pairs``) bands its document
+signatures with it too, so a document signature and a column sketch
+built from the same permutations land in the same buckets. The two
+joinable-column searches share one candidate generator
+(:func:`_candidates`) and one ranked top-k (:func:`_top_k`); only their
+verify steps differ.
+
 (b, r) come from the standard weighted FP/FN-probability minimization
 (Leskovec/Rajaraman/Ullman, MMDS ch.3 — the same construction datasketch
 uses), re-derived here by numeric integration.
@@ -94,6 +102,54 @@ def containment_expr(j, x, q):
     )
 
 
+def _candidates(
+    query_sketches: DataFrame,
+    index_sketches: DataFrame,
+    num_perm: int,
+    threshold: float,
+    original_hosts: list[str] | None,
+    host_col: str = "file_id",
+) -> DataFrame:
+    """Distinct (q_file_id, q_column_name, file_id, column_name) pairs
+    whose sketches share a band bucket: indexable index columns only,
+    never from the query's own file (``apiserver/main.py:456-458``),
+    optionally restricted to ``original_hosts`` (F8,
+    ``apiserver/main.py:452-454``)."""
+    b, r = optimal_param(threshold, num_perm)
+    idx = indexable(index_sketches)
+    if original_hosts is not None:
+        idx = idx.filter(F.col(host_col).isin(list(original_hosts)))
+    q_bands = bands_table(query_sketches, b, r).withColumnsRenamed(
+        {"file_id": "q_file_id", "column_name": "q_column_name"}
+    )
+    i_bands = bands_table(idx, b, r)
+    return (
+        q_bands.join(i_bands, ["band_idx", "band_hash"])
+        .filter(F.col("q_file_id") != F.col("file_id"))  # self-exclusion SO3
+        .select("q_file_id", "q_column_name", "file_id", "column_name")
+        .distinct()
+    )
+
+
+def _top_k(verified: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best verified candidates per query column: containment
+    desc, then (file_id, column_name) asc; jaccard and containment
+    rounded to 6 places."""
+    w = Window.partitionBy("q_file_id", "q_column_name").orderBy(
+        F.desc("containment"), F.asc("file_id"), F.asc("column_name")
+    )
+    return (
+        verified.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "q_file_id", "q_column_name", "file_id", "column_name",
+            F.round("jaccard", 6).alias("jaccard"),
+            F.round("containment", 6).alias("containment"),
+            "rank",
+        )
+    )
+
+
 def joinable_column_search(
     query_sketches: DataFrame,
     index_sketches: DataFrame,
@@ -112,19 +168,9 @@ def joinable_column_search(
     — ``AND p.original_host in %s``); ``host_col`` names the sketch
     column that carries the host.
     """
-    b, r = optimal_param(threshold, num_perm)
-    idx = indexable(index_sketches)
-    if original_hosts is not None:
-        idx = idx.filter(F.col(host_col).isin(list(original_hosts)))
-    q_bands = bands_table(query_sketches, b, r).withColumnsRenamed(
-        {"file_id": "q_file_id", "column_name": "q_column_name"}
-    )
-    i_bands = bands_table(idx, b, r)
-    cand = (
-        q_bands.join(i_bands, ["band_idx", "band_hash"])
-        .filter(F.col("q_file_id") != F.col("file_id"))  # self-exclusion SO3
-        .select("q_file_id", "q_column_name", "file_id", "column_name")
-        .distinct()
+    cand = _candidates(
+        query_sketches, index_sketches, num_perm, threshold, original_hosts,
+        host_col,
     )
     qs = query_sketches.select(
         F.col("file_id").alias("q_file_id"),
@@ -146,19 +192,7 @@ def joinable_column_search(
             containment_expr(F.col("jaccard"), F.col("x_size"), F.col("q_size")),
         )
     )
-    w = Window.partitionBy("q_file_id", "q_column_name").orderBy(
-        F.desc("containment"), F.asc("file_id"), F.asc("column_name")
-    )
-    return (
-        verified.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_file_id", "q_column_name", "file_id", "column_name",
-            F.round("jaccard", 6).alias("jaccard"),
-            F.round("containment", 6).alias("containment"),
-            "rank",
-        )
-    )
+    return _top_k(verified, k)
 
 
 def joinable_column_search_exact(
@@ -188,19 +222,8 @@ def joinable_column_search_exact(
     true containment = |X ∩ Q| / |Q| replaces the reference's
     MinHash-derived approximation (``apiserver/main.py:408-414``).
     """
-    b, r = optimal_param(threshold, num_perm)
-    idx = indexable(index_sketches)
-    if original_hosts is not None:
-        idx = idx.filter(F.col("file_id").isin(list(original_hosts)))
-    q_bands = bands_table(query_sketches, b, r).withColumnsRenamed(
-        {"file_id": "q_file_id", "column_name": "q_column_name"}
-    )
-    i_bands = bands_table(idx, b, r)
-    cand = (
-        q_bands.join(i_bands, ["band_idx", "band_hash"])
-        .filter(F.col("q_file_id") != F.col("file_id"))
-        .select("q_file_id", "q_column_name", "file_id", "column_name")
-        .distinct()
+    cand = _candidates(
+        query_sketches, index_sketches, num_perm, threshold, original_hosts
     )
     # Distinct normalized non-empty values per column (same C1/F5 rules
     # the sketcher applies: lower/trim, SQL NULL -> "null", skip empty).
@@ -241,16 +264,4 @@ def joinable_column_search_exact(
         .withColumn("containment", F.col("inter").cast("double") / F.col("q_size"))
         .filter(F.col("jaccard") >= threshold)
     )
-    w = Window.partitionBy("q_file_id", "q_column_name").orderBy(
-        F.desc("containment"), F.asc("file_id"), F.asc("column_name")
-    )
-    return (
-        verified.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_file_id", "q_column_name", "file_id", "column_name",
-            F.round("jaccard", 6).alias("jaccard"),
-            F.round("containment", 6).alias("containment"),
-            "rank",
-        )
-    )
+    return _top_k(verified, k)

@@ -213,3 +213,37 @@ def trigram_topk(
         .limit(k - m)
     )
     return top.unionByName(fillers)
+
+
+def similar_packages(
+    t_idx: dict, d_idx: dict, q_doc_id, q_tg: list[str], q_dg: list[str],
+    limit: int,
+) -> DataFrame:
+    """Dual (title, description) trigram ranking for one query doc
+    (reference ``apiserver/main.py:173-207``): docs sharing >= 1 title
+    trigram with the query (the ``title %% title`` theta-join gate),
+    left-joined with their description Jaccard (0 when they share no
+    description trigram), ordered by title_similarity DESC,
+    description_similarity DESC, doc_id ASC; the top ``limit``. Both
+    similarities are rounded to 6 places before ordering."""
+    ts = trigram_similarity_scores(t_idx, q_doc_id, q_tg).select(
+        "doc_id", F.round("jaccard", 6).alias("title_similarity")
+    )
+    ds = trigram_similarity_scores(d_idx, q_doc_id, q_dg).select(
+        "doc_id", F.round("jaccard", 6).alias("description_similarity")
+    )
+    return (
+        ts.filter(F.col("title_similarity") > 0)
+        .join(ds, "doc_id", "left")
+        .withColumn(
+            "description_similarity",
+            F.coalesce("description_similarity", F.lit(0.0)),
+        )
+        .orderBy(
+            F.desc("title_similarity"),
+            F.desc("description_similarity"),
+            F.asc("doc_id"),
+        )
+        .limit(limit)
+        .select("doc_id", "title_similarity", "description_similarity")
+    )

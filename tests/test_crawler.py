@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 from findopendata_spark.config import CrawlConfig
 from findopendata_spark.crawler import crawl
 from findopendata_spark.crawler import graph as G
-from findopendata_spark.crawler.seen import ShardedSeenFilter
+from findopendata_spark.crawler.seen import BLOOM_BITS_PER_KEY, ShardedSeenFilter
+from findopendata_spark.crawler.wave import DEFAULT_CRAWL_DELAY
 
 GCFG = G.GraphConfig(graph_size=500)
 CCFG = CrawlConfig(per_host_wave_budget=10)
@@ -49,10 +50,8 @@ def test_crawl_config_options_inventory():
     as a reviewed diff. Per-wave choices (pre-rank, shuffle partitions,
     seen-probe mode) are derived from tracked counts, not options."""
     assert [f.name for f in dataclasses.fields(CrawlConfig)] == [
-        "priority_mode", "default_crawl_delay_s", "per_host_wave_budget",
-        "host_shards", "hot_host_salt", "index_fields", "index_ivf",
-        "index_sketch",
-        "bloom_bits_per_key", "bloom_num_hashes", "bloom_shards",
+        "priority_mode", "per_host_wave_budget", "hot_host_salt",
+        "index_fields", "index_ivf", "index_sketch", "bloom_shards",
     ]
 
 
@@ -98,7 +97,7 @@ def simulate(spark, gcfg: G.GraphConfig, cfg: CrawlConfig, waves: int):
     for wave in range(1, waves + 1):
         by_host: dict[str, list[str]] = {}
         for url, (host, depth, prio) in frontier.items():
-            delay = robots.get(host, {"crawl_delay": cfg.default_crawl_delay_s})["crawl_delay"]
+            delay = robots.get(host, {"crawl_delay": DEFAULT_CRAWL_DELAY})["crawl_delay"]
             if host not in last_fetch or wave >= last_fetch[host] + delay:
                 by_host.setdefault(host, []).append(url)
         selected = []
@@ -348,7 +347,7 @@ def test_shard_bitset_size_stays_bounded(spark):
         expected_bits = filt.m_bits_shard
         # each shard is sized for n/S keys (pow2-rounded), NOT for n keys
         assert expected_bits * cfg.bloom_shards <= 2 * (
-            n_keys * 4 * cfg.bloom_bits_per_key * 2
+            n_keys * 4 * BLOOM_BITS_PER_KEY * 2
         )
         assert per_shard.pop() == expected_bits // 8
 

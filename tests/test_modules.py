@@ -397,6 +397,20 @@ def test_near_dup_bucket_cap_bounds_candidates(spark):
     assert {(r["a"], r["b"]) for r in tiny.collect()} <= got_full
 
 
+def test_embedding_near_dup_drops_zero_vectors(spark):
+    """A zero vector has no cosine: the pair kernel scores it like the
+    shared cosine and the DuckDB oracle (NULL, below any threshold) and
+    drops its pairs instead of keeping them at NaN."""
+    from findopendata_spark.embedding import embedding_near_dup
+
+    emb = spark.createDataFrame(
+        [(1, "x", [1.0, 0.0]), (2, "x", [1.0, 0.1]), (3, "x", [0.0, 0.0])],
+        "vec_id long, label string, v array<double>",
+    )
+    got = embedding_near_dup(emb, threshold=0.35).collect()
+    assert [(r["a"], r["b"]) for r in got] == [(1, 2)]
+
+
 def test_ivf_topk_recall_on_clustered_data(spark):
     """IVF search: on cluster-structured vectors, probing 2/8 cells
     recovers most of the brute-force top-10 (recall bound), and every
@@ -565,6 +579,32 @@ def test_rolling_min_fingerprint_matches_scalar_reference(spark):
 
     expect = {i: scalar_fp(t) for i, t in rows}
     assert got == expect
+
+
+def test_ivf_topk_zero_vectors_rank_last(spark):
+    """A zero vector has no cosine direction: it scores NULL and ranks
+    last instead of failing the query with DIVIDE_BY_ZERO under ANSI
+    mode — as the query vector (every candidate NULL, ties broken by
+    vec_id) and as a corpus vector (ranked after every scored one)."""
+    from findopendata_spark.embedding import ivf_topk
+
+    rows = [(i, [1.0, float(i), 0.5]) for i in range(1, 9)] + [(9, [0.0] * 3)]
+    emb = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        zero_q = emb.filter("vec_id = 9")
+        got = ivf_topk(emb, zero_q, k=3, n_cells=1, n_probe=1).collect()
+        assert [(r["vec_id"], r["cos_sim"]) for r in got] == [
+            (1, None), (2, None), (3, None)
+        ]
+        q = emb.filter("vec_id = 1")
+        got = ivf_topk(emb, q, k=8, n_cells=1, n_probe=1).collect()
+        assert [r["rank"] for r in got] == list(range(1, 9))
+        assert got[-1]["vec_id"] == 9 and got[-1]["cos_sim"] is None
+        assert all(r["cos_sim"] is not None for r in got[:-1])
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_trained_ivf_recall_not_worse_than_seed(spark):

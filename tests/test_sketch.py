@@ -8,6 +8,8 @@ against the reference semantics in ``column_sketch.py:166-197,119-125``.
 
 from __future__ import annotations
 
+import dataclasses
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -29,6 +31,16 @@ from findopendata_spark.sketch.minhash import (
     jaccard_estimate,
     minhash_partial,
 )
+
+
+def test_sketch_config_options_inventory():
+    """The sketcher's user-set options, pinned: a new knob must show up
+    here as a reviewed diff. HLL precision and the LSH thresholds are
+    module constants and call arguments, not options."""
+    assert [f.name for f in dataclasses.fields(SketchConfig)] == [
+        "minhash_size", "minhash_seed", "column_sample_size",
+        "enable_word_vector_data",
+    ]
 
 
 def scalar_minhash(h32_values, perms: MinHashPermutations):
