@@ -69,7 +69,17 @@ class SnapshotCatalog:
         written by independent jobs at different points in the wave —
         see :meth:`prepare_snap`); snapshots carry no partition columns,
         so a recursive flat listing is always the right read."""
-        snap = self._read_pointer()["tables"].get(table)
+        return self._snapshot(spark, table, self._read_pointer())
+
+    def read_at(self, spark: SparkSession, table: str, wave: int) -> DataFrame | None:
+        """Time travel: the table as of wave `wave` (reads the wave log)."""
+        return self._snapshot(spark, table, self._wave_log(wave))
+
+    def _snapshot(
+        self, spark: SparkSession, table: str, pointer: dict | None
+    ) -> DataFrame | None:
+        """The snapshot of `table` that pointer doc `pointer` names."""
+        snap = (pointer or {}).get("tables", {}).get(table)
         if snap is None:
             return None
         return (
@@ -77,20 +87,15 @@ class SnapshotCatalog:
             .parquet(os.path.join(self.root, table, snap))
         )
 
-    def read_at(self, spark: SparkSession, table: str, wave: int) -> DataFrame | None:
-        """Time travel: the table as of wave `wave` (reads the wave log)."""
+    def _wave_log(self, wave: int) -> dict | None:
+        """The pointer doc wave `wave` committed, or None when that wave
+        has no log entry (pre-log store or uncommitted wave id)."""
         log = os.path.join(self.root, "_waves", f"wave-{wave:06d}.json")
         try:
             with open(log) as f:
-                snap = json.load(f)["tables"].get(table)
+                return json.load(f)
         except FileNotFoundError:
             return None
-        if snap is None:
-            return None
-        return (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(os.path.join(self.root, table, snap))
-        )
 
     # -- write ------------------------------------------------------------
     def prepare_snap(self, table: str, wave: int) -> None:
@@ -229,14 +234,9 @@ class SnapshotCatalog:
         # not the current pointer's.
         pointer = self._read_pointer()
         if upto != int(pointer["wave"]):
-            log = os.path.join(self.root, "_waves", f"wave-{upto:06d}.json")
-            try:
-                with open(log) as f:
-                    pointer = json.load(f)
-            except FileNotFoundError:
-                # pre-log store or uncommitted wave id: no compaction can
-                # have been published at/before it without a log, so no floor
-                pointer = {}
+            # no log entry: no compaction can have been published at or
+            # before `upto` without one, so no floor
+            pointer = self._wave_log(upto) or {}
         floor = int(pointer.get("append_base", {}).get(table, 0))
         df = spark.read.option("basePath", base).parquet(base)
         return df.filter((F.col("wave") >= floor) & (F.col("wave") <= upto))

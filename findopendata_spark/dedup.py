@@ -13,9 +13,9 @@ Exact, MinHash+LSH, and SimHash near-dup — first-class 100 TB operators:
 
 Token/shingle hashing happens JVM-side (``xxhash64`` inside
 ``transform``); Python only ever sees int64 arrays (north-rule axis A).
-MinHash math is the same permutation family as the sketch engine
-(:mod:`findopendata_spark.sketch.minhash`), and the signatures are
-banded by the one band format the column-sketch index uses
+MinHash signatures permute through the sketch engine's own
+:meth:`findopendata_spark.sketch.minhash.MinHashPermutations.permute`
+and are banded by the one band format the column-sketch index uses
 (:func:`findopendata_spark.sketch.lsh.bands_table`), so dedup signatures
 and column sketches are comparable by construction.
 
@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from findopendata_spark.ranking import global_row_number
 from findopendata_spark.sketch.lsh import bands_table, optimal_param
 from findopendata_spark.sketch.minhash import MAX_HASH, MinHashPermutations
+from findopendata_spark.text_analysis import tokens, tokens_py
 
 
 def ensure_cached(df: DataFrame) -> DataFrame:
@@ -79,13 +80,9 @@ def spread_scan(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
 # JVM-side tokenization / shingling
 # ---------------------------------------------------------------------------
 
-def tokens_expr(text):
-    return F.split(F.lower(F.trim(text)), r"\s+")
-
-
 def shingles_expr(text, n: int = 5):
     """Distinct word n-gram shingles as an array column (JVM only)."""
-    toks = tokens_expr(text)
+    toks = tokens(text)
     return F.when(
         F.size(toks) >= n,
         F.array_distinct(
@@ -95,12 +92,6 @@ def shingles_expr(text, n: int = 5):
             )
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-# Java String.trim strips every char <= U+0020 (not just whitespace)
-_JAVA_TRIM = "".join(chr(i) for i in range(0x21))
-# Java regex \s is ASCII-only: [ \t\n\x0B\f\r] (Python's is Unicode-wide)
-_JAVA_WS = __import__("re").compile(r"[ \t\n\x0b\f\r]+")
 
 
 def shingle_sets(
@@ -118,10 +109,9 @@ def shingle_sets(
     ~54 tokens each) the expression costs ~20 s per pass on 32 cores
     while this kernel is <1 s (guide §4.2: hand whole batches to native/
     batch code; the per-doc work here is a tight comprehension over
-    already-split tokens). Exactness notes: trim matches Java
-    ``String.trim`` (strips <= U+0020), the split regex is Java's
-    ASCII-only ``\\s+``, and ``str.lower`` == ``toLowerCase`` on ASCII
-    (the corpus; non-ASCII case edge cases would lower differently).
+    already-split tokens). Tokens come from
+    :func:`~findopendata_spark.text_analysis.tokens_py`, the Python twin
+    of the expression's tokenizer.
     """
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -130,10 +120,7 @@ def shingle_sets(
                 continue
             out: list[list[str]] = []
             for t in pdf[text_col]:
-                if t is None:
-                    out.append([])
-                    continue
-                toks = _JAVA_WS.split(t.strip(_JAVA_TRIM).lower())
+                toks = tokens_py(t)
                 if len(toks) < n:
                     out.append([])
                     continue
@@ -163,7 +150,7 @@ def md5_token_hashes_expr(text):
     SimHash and q49's near-dup pairs share it). Production would use
     ``xxhash64`` (cheaper, property-tested in tests/test_modules.py)."""
     return F.transform(
-        tokens_expr(text),
+        tokens(text),
         lambda tok: F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long"),
     )
 
@@ -178,9 +165,8 @@ def md5_simhash64(
     interpreted ``transform`` (CodegenFallback, per-element allocation)
     and then ships the int64 arrays to the numpy kernel anyway — two
     passes over every token, one of them interpreted (guide §4.2).
-    Here tokenization (Java-``trim``/ASCII-``\\s+``/``lower``, the exact
-    ``tokens_expr`` rules, identical to :func:`shingle_sets`), hashing,
-    and the sign-of-sum fold all happen on the batch.  The corpus
+    Here tokenization (``tokens_py``, as in :func:`shingle_sets`),
+    hashing, and the sign-of-sum fold all happen on the batch.  The corpus
     vocabulary repeats heavily, so tokens are factorized per batch and
     md5 runs once per DISTINCT token; each unique hash expands to its
     ±1 bit row and per-doc bit sums come from one ``np.add.reduceat``
@@ -196,11 +182,7 @@ def md5_simhash64(
             n = len(pdf)
             if n == 0:
                 continue
-            tok_lists = [
-                _JAVA_WS.split(t.strip(_JAVA_TRIM).lower())
-                if t is not None else []
-                for t in pdf[text_col]
-            ]
+            tok_lists = [tokens_py(t) for t in pdf[text_col]]
             lens = np.array([len(t) for t in tok_lists], dtype=np.int64)
             out = np.zeros(n, dtype=np.uint64)
             total = int(lens.sum())
@@ -281,10 +263,7 @@ def minhash_signatures(
             if len(h):
                 ne_starts = starts[nonempty]
                 for p0 in range(0, num_perm, 16):
-                    a = perms.a[p0 : p0 + 16, None]
-                    b = perms.b[p0 : p0 + 16, None]
-                    with np.errstate(over="ignore"):
-                        phv = ((a * h + b) % np.uint64((1 << 61) - 1)) & MAX_HASH
+                    phv = perms.permute(h, p0, p0 + 16)
                     # reduceat segments run start→next-start; trailing
                     # segment ends at the array end — one column per
                     # non-empty doc, in order

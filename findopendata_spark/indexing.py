@@ -30,37 +30,31 @@ ones — the reference's ``ON CONFLICT ... DO UPDATE``, merged on read.
   appends a tombstone (``cell`` null) instead of an assignment, so a
   doc re-indexed to a zero vector leaves no stale cell behind.
 - **column sketches** (:func:`sketch_delta`): each wave appends the new
-  records' sketch rows WITH mergeable state (count sums,
-  elementwise-min MinHash, elementwise-max HLL registers, first-N
-  distinct sample, raw word-vector sum/count); the served sketch merges
-  the per-wave rows per (file_id, column_name) — exactly the
-  reference's ``ColumnSketch.update`` fold, replayed associatively.
-  Derived fields (distinct_count rule, is_numeric rule, hll_estimate,
-  word_vector_data) are recomputed from merged state, so the merged row
-  is BIT-IDENTICAL to a full rebuild for every integer/sample/sketch
-  field (pinned by pytest); ``word_vector_data`` alone matches to
-  float-addition associativity (~1e-12 relative). Merged counters
-  cannot subtract, so sketches are the one family without upserts: the
-  crawl sketches only never-sketched docs.
+  records' sketch rows WITH mergeable state (counters, MinHash, HLL
+  registers, first-N distinct sample, raw word-vector sum/count); the
+  served sketch is
+  :func:`findopendata_spark.sketch.column_sketch.merge_sketch_rows`
+  over the per-wave rows — the reference's ``ColumnSketch.update``
+  fold, replayed associatively through the same merge, sample and
+  derived-field functions ``sketch_columns`` runs. The merged row is
+  therefore BIT-IDENTICAL to a full rebuild for every
+  integer/sample/sketch field (pinned by pytest); ``word_vector_data``
+  alone matches to float-addition associativity (~1e-12 relative).
+  Merged counters cannot subtract, so sketches are the one family
+  without upserts: the crawl sketches only never-sketched docs.
 
 Arrival-order note: the sketch sample's "first N distinct in arrival
 order" extends across waves as (wave asc, ingest_key asc) — appends are
-arrivals. A value dropped from one wave's N-sized sample has >= N
-distinct predecessors in that wave alone, so it can never enter the
-global first-N: per-wave samples concatenated in wave order, deduped
-keep-first, truncated to N are exactly the full-rebuild sample.
+arrivals.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from findopendata_spark.catalog import SnapshotCatalog
 from findopendata_spark.config import CrawlConfig, SketchConfig
-from findopendata_spark.sketch.hll import hll_count
 
 # hashing-trick embedding width of a crawled doc's text, and the IVF
 # coarse quantizer's cell count
@@ -290,87 +284,8 @@ class IncrementalIndexes:
     ) -> DataFrame:
         """Merged sketch per (file_id, column_name) over all waves —
         bit-identical to sketch_columns on the concatenated records."""
+        from findopendata_spark.sketch.column_sketch import merge_sketch_rows
+
         rows = self.cat.read_appended(spark, "column_sketches")
         return merge_sketch_rows(rows, cfg or SketchConfig())
 
-
-def merge_sketch_rows(rows: DataFrame, cfg: SketchConfig) -> DataFrame:
-    """Combine per-wave sketch rows (from ``sketch_columns(...,
-    keep_merge_state=True)`` + a ``wave`` column) into the exact sketch
-    of the union of their inputs.
-
-    One ``applyInPandas`` over (file_id, column_name) groups — each group
-    holds one row per wave, so group size = wave count, never data-sized.
-    All folds are the associative halves of the reference's per-record
-    update loop (``column_sketch.py:166-197``): sums for counters,
-    elementwise min for MinHash, elementwise max for HLL registers,
-    order-preserving first-N dedup for the sample, vector-sum + count for
-    word vectors; the value-dependent derived fields are then re-derived
-    by the same rules ``sketch_columns`` applies."""
-    schema = (
-        "file_id string, column_name string, count long, empty_count long, "
-        "out_of_vocabulary_count long, numeric_count long, "
-        "is_numeric boolean, distinct_count long, sample array<string>, "
-        "word_vector_column_name array<double>, "
-        "word_vector_data array<double>, minhash array<long>, seed long, "
-        "hyperloglog array<long>"
-    )
-    sample_n = cfg.column_sample_size
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("wave")
-        count = int(pdf["count"].sum())
-        empty = int(pdf["empty_count"].sum())
-        numeric = int(pdf["numeric_count"].sum())
-        oov = int(pdf["out_of_vocabulary_count"].sum())
-        mh_rows = [np.asarray(v, np.uint64) for v in pdf["minhash"] if v is not None]
-        mh = np.minimum.reduce(mh_rows).astype(np.int64) if mh_rows else None
-        hl_rows = [np.asarray(v, np.int64) for v in pdf["hyperloglog"] if v is not None]
-        hl = np.maximum.reduce(hl_rows) if hl_rows else None
-        est = hll_count(hl) if hl is not None else None
-        sample: list[str] = []
-        seen: set[str] = set()
-        for s in pdf["sample"]:
-            for v in s:
-                if v not in seen:
-                    seen.add(v)
-                    sample.append(v)
-                if len(sample) >= sample_n:
-                    break
-            if len(sample) >= sample_n:
-                break
-        if len(sample) < sample_n:
-            distinct = len(sample)
-        else:
-            # HALF_UP like Spark's round() — python round() is banker's
-            est_l = int(np.floor(est + 0.5)) if est is not None else 0
-            distinct = max(len(sample), est_l)
-        nonempty = count - empty
-        is_num = False if nonempty == 0 else numeric >= 0.5 * nonempty
-        n_in = int(pdf["wv_n_in"].sum())
-        sv_rows = [np.asarray(v, np.float64) for v in pdf["wv_sum_vec"] if v is not None]
-        wv = (
-            (np.sum(sv_rows, axis=0) / n_in).tolist()
-            if sv_rows and n_in > 0
-            else None
-        )
-        return pd.DataFrame(
-            {
-                "file_id": [pdf["file_id"].iloc[0]],
-                "column_name": [pdf["column_name"].iloc[0]],
-                "count": [count],
-                "empty_count": [empty],
-                "out_of_vocabulary_count": [oov],
-                "numeric_count": [numeric],
-                "is_numeric": [is_num],
-                "distinct_count": [distinct],
-                "sample": [sample],
-                "word_vector_column_name": [pdf["word_vector_column_name"].iloc[0]],
-                "word_vector_data": [wv],
-                "minhash": [mh],
-                "seed": [int(pdf["seed"].iloc[0])],
-                "hyperloglog": [hl],
-            }
-        )
-
-    return rows.groupBy("file_id", "column_name").applyInPandas(fn, schema)

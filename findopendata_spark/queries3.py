@@ -10,7 +10,6 @@ from findopendata_spark.dedup import (
     md5_simhash64,
     near_dup_pairs,
     spread_scan,
-    tokens_expr,
 )
 from findopendata_spark.functions.text import sanitize_filename, strip_html
 from findopendata_spark.registry import load, query
@@ -21,6 +20,7 @@ from findopendata_spark.text_analysis import (
     lang_id,
     quality_features,
     quality_score,
+    tokens,
 )
 
 _EN = ", ".join(f"'{m}'" for m in LANG_MARKERS["en"])
@@ -183,7 +183,7 @@ def q25_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q26_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regex (BPE-ish) tokenizer counts vs whitespace counts.
 
-    Whitespace counting uses the shared ``tokens_expr`` regex tokenizer
+    Whitespace counting uses the shared ``tokens`` regex tokenizer
     (split on ``\\s+``) so the engine and oracle tokenize identically —
     the single-literal-space split both sides used before was a latent
     divergence on multi-space runs (ADVICE r01/r02)."""
@@ -191,7 +191,7 @@ def q26_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         bpe_token_count(F.col("text")).alias("n_bpe_tokens"),
-        F.size(tokens_expr(F.col("text"))).alias("n_ws_tokens"),
+        F.size(tokens(F.col("text"))).alias("n_ws_tokens"),
     )
 
 

@@ -19,25 +19,31 @@ Spark re-expression — three shuffles, no per-row Python:
 3. **final merge** (``applyInPandas`` over (file, col)): elementwise
    min/max of the partials + HLL estimate.
 4. **counters + ordered sample (JVM)**: hash-agg counters; first-N
-   distinct values in arrival order via two windows over ``ingest_key``
+   distinct values in arrival order: each value's first ``ingest_key``
+   as a hash aggregate, then one rank window
    (the reference's sample is a set filled in arrival order,
    ``column_sketch.py:181-183`` — order keys make that reproducible,
    SURVEY §7 hard-parts list).
+
+This module owns every column-sketch rule. The fold is four functions:
+:func:`_fold` (MinHash/HLL merge), :func:`_first_n` (arrival-order
+sample), :func:`_sum_vec` (word-vector sums) and :func:`_finish` (every
+derived field). :func:`sketch_columns` feeds them per-record partials;
+:func:`merge_sketch_rows` feeds them the per-wave rows that incremental
+index maintenance appends, so a merged sketch is the one-shot sketch of
+the concatenated records.
 
 Output column names mirror ``create_sketch_tables.sql:13-51``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from findopendata_spark.config import SketchConfig
-from findopendata_spark.sketch.hll import M as HLL_M
 from findopendata_spark.sketch.hll import hll_count, hll_partial
 from findopendata_spark.sketch.minhash import MinHashPermutations, minhash_partial
 
@@ -70,7 +76,10 @@ def _partial_fn(cfg: SketchConfig):
     return fn
 
 
-def _final_fn(cfg: SketchConfig):
+def _final_fn():
+    """Elementwise min of MinHash partials, elementwise max of HLL
+    registers, and the HLL estimate — the one sketch merge."""
+
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         mh = np.minimum.reduce(
             [np.asarray(v, dtype=np.uint64) for v in pdf["minhash"]]
@@ -162,6 +171,9 @@ def _wv_name_vector(names: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+_KEY = ["file_id", "column_name"]
+
+
 def sketch_columns(
     records: DataFrame,
     cfg: SketchConfig | None = None,
@@ -173,9 +185,9 @@ def sketch_columns(
 
     ``keep_merge_state`` additionally emits the raw mergeable word-vector
     accumulators (``wv_n_in``, ``wv_sum_vec``) so per-wave sketch rows can
-    be combined EXACTLY by :func:`findopendata_spark.indexing.merge_sketch_rows`
-    (``word_vector_data`` alone loses the sum/count split to float
-    division, which would break bit-parity with a full rebuild)."""
+    be combined EXACTLY by :func:`merge_sketch_rows` (``word_vector_data``
+    alone loses the sum/count split to float division, which would break
+    bit-parity with a full rebuild)."""
     cfg = cfg or SketchConfig()
 
     # 1. normalize + flags + hashes, all JVM-side
@@ -200,7 +212,7 @@ def sketch_columns(
     ensure_cached(r)
 
     # 4a. counters (reference properties: column_sketch.py:72-117)
-    counters = r.groupBy("file_id", "column_name").agg(
+    counters = r.groupBy(*_KEY).agg(
         F.count(F.lit(1)).alias("count"),
         F.sum(F.col("is_empty").cast("long")).alias("empty_count"),
         F.sum(
@@ -208,18 +220,15 @@ def sketch_columns(
         ).alias("numeric_count"),
     )
 
-    nonempty = r.filter(~F.col("is_empty")).withColumns(
-        {"h32": F.hash("v"), "h64": F.xxhash64("v")}
+    salted = (
+        r.filter(~F.col("is_empty"))
+        .withColumns({"h32": F.hash("v"), "h64": F.xxhash64("v")})
+        .withColumn("_salt", F.pmod(F.col("h64"), F.lit(n_salts)))
     )
 
     # 2-3. partial+final sketches
-    partials = (
-        nonempty.withColumn("_salt", F.pmod(F.col("h64"), F.lit(n_salts)))
-        .groupBy("file_id", "column_name", "_salt")
-        .applyInPandas(_partial_fn(cfg), _PARTIAL_SCHEMA)
-    )
-    sketches = partials.groupBy("file_id", "column_name").applyInPandas(
-        _final_fn(cfg), _FINAL_SCHEMA
+    partials = salted.groupBy(*_KEY, "_salt").applyInPandas(
+        _partial_fn(cfg), _PARTIAL_SCHEMA
     )
 
     # 4b. first-N distinct values in arrival order (A6). First occurrence
@@ -228,24 +237,120 @@ def sketch_columns(
     # partial agg collapses duplicate values before the exchange and no
     # full-record sort happens (guide §2.3 "aggregate before you
     # shuffle"); only the distinct set pays the rank window's sort.
-    w_rank = Window.partitionBy("file_id", "column_name").orderBy("_k")
     firsts = (
         r.filter(~F.col("is_empty"))
-        .groupBy("file_id", "column_name", "v")
+        .groupBy(*_KEY, "v")
         .agg(F.min("ingest_key").alias("_k"))
-        .withColumn("_rank", F.row_number().over(w_rank))
-        .filter(F.col("_rank") <= cfg.column_sample_size)
-    )
-    samples = firsts.groupBy("file_id", "column_name").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_rank", "v"))),
-            lambda s: s["v"],
-        ).alias("sample")
     )
 
+    # word-vector state (A8): only behind enable_word_vector_data
+    # (configs-example.yaml:62)
+    wv = None
+    if cfg.enable_word_vector_data:
+        wv = (
+            salted.groupBy(*_KEY, "_salt")
+            .applyInPandas(_wv_partial_fn(), _WV_PARTIAL_SCHEMA)
+            .groupBy(*_KEY)
+            .agg(
+                F.sum("n_invocab").alias("wv_n_in"),
+                F.sum("n_oov").alias("out_of_vocabulary_count"),
+                _sum_vec("sum_vec").alias("wv_sum_vec"),
+            )
+        )
+    return _finish(
+        counters, _first_n(firsts, cfg.column_sample_size), _fold(partials),
+        wv, cfg, keep_merge_state,
+    )
+
+
+def merge_sketch_rows(rows: DataFrame, cfg: SketchConfig) -> DataFrame:
+    """Combine per-wave sketch rows (from ``sketch_columns(...,
+    keep_merge_state=True)`` + a ``wave`` column) into the exact sketch
+    of the union of their inputs.
+
+    The same fold as :func:`sketch_columns`, fed per-wave rows instead of
+    per-record partials: counters and word-vector state are sums (rows
+    sketched without word-vector data carry ``wv_n_in = 0``, so they
+    merge to no ``word_vector_data``), MinHash and HLL go through
+    :func:`_fold`, the sample is :func:`_first_n` with arrival = (wave,
+    position in that wave's sample), and :func:`_finish` derives every
+    value-dependent field. A value dropped from one wave's N-sized sample
+    has >= N distinct predecessors in that wave alone, so it can never
+    enter the merged first-N."""
+    counters = rows.groupBy(*_KEY).agg(
+        *[F.sum(c).alias(c) for c in ("count", "empty_count", "numeric_count")]
+    )
+    sketches = _fold(
+        rows.filter(F.col("minhash").isNotNull()).select(
+            *_KEY,
+            (F.col("count") - F.col("empty_count")).alias("n"),
+            "minhash",
+            F.col("hyperloglog").alias("hll"),
+        )
+    )
+    firsts = (
+        rows.select(*_KEY, "wave", F.posexplode("sample").alias("pos", "v"))
+        .groupBy(*_KEY, "v")
+        .agg(F.min(F.struct("wave", "pos")).alias("_k"))
+    )
+    wv = rows.groupBy(*_KEY).agg(
+        F.sum("wv_n_in").alias("wv_n_in"),
+        F.sum("out_of_vocabulary_count").alias("out_of_vocabulary_count"),
+        _sum_vec("wv_sum_vec").alias("wv_sum_vec"),
+    )
+    return _finish(
+        counters, _first_n(firsts, cfg.column_sample_size), sketches, wv, cfg
+    )
+
+
+def _fold(partials: DataFrame) -> DataFrame:
+    """(file_id, column_name, n, minhash, hll) partial sketches → one
+    merged MinHash/HLL row per (file_id, column_name)."""
+    return partials.groupBy(*_KEY).applyInPandas(_final_fn(), _FINAL_SCHEMA)
+
+
+def _first_n(firsts: DataFrame, n: int) -> DataFrame:
+    """(file_id, column_name, v, _k) distinct values keyed by first
+    arrival → (file_id, column_name, sample): the first ``n`` values in
+    arrival order."""
+    w_rank = Window.partitionBy(*_KEY).orderBy("_k")
+    return (
+        firsts.withColumn("_rank", F.row_number().over(w_rank))
+        .filter(F.col("_rank") <= n)
+        .groupBy(*_KEY)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("_rank", "v"))),
+                lambda s: s["v"],
+            ).alias("sample")
+        )
+    )
+
+
+def _sum_vec(col: str) -> Column:
+    """Elementwise sum of a word-vector array column over a group."""
+    return F.array(
+        *[F.sum(F.element_at(col, i + 1)) for i in range(_wv_dim())]
+    )
+
+
+def _finish(
+    counters: DataFrame,
+    samples: DataFrame,
+    sketches: DataFrame,
+    wv: DataFrame | None,
+    cfg: SketchConfig,
+    keep_merge_state: bool = False,
+) -> DataFrame:
+    """Sketch rows from merged state: counters (count, empty_count,
+    numeric_count), the :func:`_first_n` sample, the :func:`_fold`
+    sketch and the word-vector state ``wv`` (wv_n_in,
+    out_of_vocabulary_count, wv_sum_vec; None when no word-vector data
+    was sketched). Every derived field is computed here and nowhere
+    else."""
     out = (
-        counters.join(samples, ["file_id", "column_name"], "left")
-        .join(sketches, ["file_id", "column_name"], "left")
+        counters.join(samples, _KEY, "left")
+        .join(sketches, _KEY, "left")
         .withColumn(
             "sample", F.coalesce("sample", F.array().cast("array<string>"))
         )
@@ -276,43 +381,26 @@ def sketch_columns(
 
     # word-vector fields (A8, create_sketch_tables.sql:27-48):
     # word_vector_column_name always; word_vector_data + oov accounting
-    # only behind enable_word_vector_data (configs-example.yaml:62)
+    # only with word-vector state
     name_vec = F.pandas_udf(_wv_name_vector, "array<double>")
     out = out.withColumn(
         "word_vector_column_name", name_vec(F.col("column_name"))
     )
-    if cfg.enable_word_vector_data:
-        wv_partials = (
-            nonempty.withColumn("_salt", F.pmod(F.col("h64"), F.lit(n_salts)))
-            .groupBy("file_id", "column_name", "_salt")
-            .applyInPandas(_wv_partial_fn(), _WV_PARTIAL_SCHEMA)
-        )
-        wv = wv_partials.groupBy("file_id", "column_name").agg(
-            F.sum("n_invocab").alias("_n_in"),
-            F.sum("n_oov").alias("out_of_vocabulary_count"),
-            F.array(
-                *[
-                    F.sum(F.element_at("sum_vec", i + 1))
-                    for i in range(_wv_dim())
-                ]
-            ).alias("_sum_vec"),
-        )
+    if wv is not None:
         out = (
-            out.join(wv, ["file_id", "column_name"], "left")
+            out.join(wv, _KEY, "left")
             .withColumn(
                 "word_vector_data",
                 F.when(
-                    F.col("_n_in") > 0,
-                    F.transform("_sum_vec", lambda x: x / F.col("_n_in")),
+                    F.col("wv_n_in") > 0,
+                    F.transform("wv_sum_vec", lambda x: x / F.col("wv_n_in")),
                 ),
             )
             .withColumn(
                 "out_of_vocabulary_count",
                 F.coalesce("out_of_vocabulary_count", F.lit(0)).cast("long"),
             )
-            .withColumn("wv_n_in", F.coalesce("_n_in", F.lit(0)).cast("long"))
-            .withColumn("wv_sum_vec", F.col("_sum_vec"))
-            .drop("_n_in", "_sum_vec")
+            .withColumn("wv_n_in", F.coalesce("wv_n_in", F.lit(0)).cast("long"))
         )
     else:
         out = (

@@ -6,7 +6,10 @@ seed=43``): permutations are the standard universal hash family
 ``(a*h + b) mod p  &  0xFFFFFFFF`` with ``p = 2^61 - 1`` and (a, b)
 drawn from ``numpy.random.RandomState(seed)`` — the published datasketch
 construction (MIT-licensed, Zhu & Markovtsev 2016), re-implemented here
-as pure numpy batch ops.
+as pure numpy batch ops. :meth:`MinHashPermutations.permute` is the one
+place that hash is written: the column sketches (:func:`minhash_partial`)
+and the dedup signatures (``dedup.minhash_signatures``) both call it,
+each with its own chunking.
 
 Base hash: the reference uses farmhash.hash32 (``column_sketch.py:53-57``);
 this engine computes the 32-bit value hash JVM-side with Spark's
@@ -41,6 +44,18 @@ class MinHashPermutations:
     def empty(self) -> np.ndarray:
         return np.full(self.num_perm, MAX_HASH, dtype=np.uint64)
 
+    def permute(
+        self, h: np.ndarray, lo: int = 0, hi: int | None = None
+    ) -> np.ndarray:
+        """(hi - lo, len(h)) permuted values of uint64 base hashes ``h``
+        under permutations ``lo:hi``. a*h + b wraps mod 2^64 before the
+        Mersenne mod — the exact uint64 semantics of the published
+        datasketch implementation."""
+        with np.errstate(over="ignore"):
+            return (
+                (self.a[lo:hi, None] * h + self.b[lo:hi, None]) % MERSENNE_PRIME
+            ) & MAX_HASH
+
 
 def minhash_partial(
     h32: np.ndarray, perms: MinHashPermutations, chunk: int = 65536
@@ -55,14 +70,8 @@ def minhash_partial(
     out = perms.empty()
     h = (h32.astype(np.int64) & 0xFFFFFFFF).astype(np.uint64)  # unsign
     for i in range(0, len(h), chunk):
-        hv = h[i : i + chunk]
-        with np.errstate(over="ignore"):
-            # (K, chunk) universal hash; min over the chunk axis. a*h + b
-            # wraps mod 2^64 before the Mersenne mod — the exact uint64
-            # semantics of the published datasketch implementation.
-            phv = (
-                (np.outer(perms.a, hv) + perms.b[:, None]) % MERSENNE_PRIME
-            ) & MAX_HASH
+        # (K, chunk) permuted hashes; min over the chunk axis
+        phv = perms.permute(h[i : i + chunk])
         out = np.minimum(out, phv.min(axis=1))
     return out
 

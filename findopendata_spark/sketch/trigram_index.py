@@ -133,16 +133,19 @@ def trigram_index(spark: SparkSession, sf_dir: str, field: str) -> dict:
     return session_cache(spark, (sf_dir, field), build)
 
 
-def _matched_scores(
-    idx: dict, q_doc_id, q_grams: list[str], exclude_query: bool
+def trigram_similarity_scores(
+    idx: dict, q_doc_id, q_grams: list[str], exclude_query: bool = True
 ) -> DataFrame:
-    """(doc_id, jaccard) for docs sharing >= 1 gram with the query.
+    """(doc_id, jaccard) exact trigram-set Jaccard of docs sharing >= 1
+    gram with the query (jaccard > 0 by construction). Docs sharing no
+    gram have jaccard 0; consumers that need them as top-k fillers use
+    :func:`trigram_topk`, which unions them in only when matches < k.
 
     Probe cost is bounded by the query's posting lengths: the IN-list
     filter walks only the matching posting lists, the hash-agg output is
     at most Σ|posting| rows, and the sizes lookup is an equi-join against
     that small set (Spark broadcasts it under AQE) — never a corpus-wide
-    scan. Every matched doc has inter >= 1, hence jaccard > 0."""
+    scan."""
     postings, sizes = idx["postings"], idx["sizes"]
     qn = len(q_grams)
     inter = (
@@ -163,18 +166,6 @@ def _matched_scores(
     )
 
 
-def trigram_similarity_scores(
-    idx: dict, q_doc_id, q_grams: list[str], exclude_query: bool = True
-) -> DataFrame:
-    """Exact trigram-set Jaccard of docs sharing >= 1 gram with the query
-    (jaccard > 0 by construction). Docs sharing no gram have jaccard 0;
-    consumers that need them as top-k fillers use :func:`trigram_topk`,
-    which unions them in only when matches < k — the r03 version
-    left-joined the full corpus-cardinality ``sizes`` table into EVERY
-    probe just in case (VERDICT r03 item 6)."""
-    return _matched_scores(idx, q_doc_id, q_grams, exclude_query)
-
-
 def trigram_topk(
     idx: dict, q_doc_id, q_grams: list[str], k: int,
     exclude_query: bool = True, round_digits: int | None = None,
@@ -191,7 +182,7 @@ def trigram_topk(
     on a ROUNDED jaccard could in principle tie a matched doc with the
     0.0 fillers, but that needs jaccard < 5e-7, i.e. a gram-set union
     over ~2M — orders of magnitude past these fields' lengths.)"""
-    matched = _matched_scores(idx, q_doc_id, q_grams, exclude_query)
+    matched = trigram_similarity_scores(idx, q_doc_id, q_grams, exclude_query)
     if round_digits is not None:
         # rank on the same rounded value the consumer (and its oracle)
         # sorts by, so boundary tie-breaks match the full scan exactly

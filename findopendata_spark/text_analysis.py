@@ -9,6 +9,8 @@ scale-first equivalents a 100 TB corpus pipeline needs.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -26,8 +28,26 @@ TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 PUNCT_CLASS = r"[.,!?;:'\"()\[\]{}]"
 
 
+# Java String.trim strips every char <= U+0020 (not just whitespace)
+_JAVA_TRIM = "".join(chr(i) for i in range(0x21))
+# Java regex \s is ASCII-only: [ \t\n\x0B\f\r] (Python's is Unicode-wide)
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
 def tokens(text: Column) -> Column:
+    """The one whitespace tokenizer (the DuckDB oracles'
+    ``string_split_regex(lower(trim(x)), '\\s+')``); :func:`tokens_py` is
+    its twin for Python batch kernels."""
     return F.split(F.lower(F.trim(text)), r"\s+")
+
+
+def tokens_py(text: str | None) -> list[str]:
+    """:func:`tokens` for batch kernels: Java ``String.trim``, ASCII-only
+    ``\\s+`` split, ``str.lower`` (== ``toLowerCase`` on ASCII; non-ASCII
+    case edge cases would lower differently). None → []."""
+    if text is None:
+        return []
+    return _JAVA_WS.split(text.strip(_JAVA_TRIM).lower())
 
 
 def marker_score(text: Column, lang: str) -> Column:

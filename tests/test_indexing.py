@@ -130,12 +130,15 @@ def test_sketch_incremental_merge_equals_rebuild(spark, docs, tmp_path):
     from findopendata_spark.sketch.column_sketch import sketch_columns
 
     cfg = SketchConfig(enable_word_vector_data=True, column_sample_size=10)
+    half = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
+    # 'late' is all-empty in the first wave: that wave's sketch row has
+    # null minhash/hyperloglog and an empty sample
     rec = docs.selectExpr(
         "doc_id as ingest_key",
-        "stack(3, 'lang', lang, 'mod7', cast(doc_id % 7 as string), "
-        "'words', substring(text, 1, 30)) as (column_name, val)",
+        "stack(4, 'lang', lang, 'mod7', cast(doc_id % 7 as string), "
+        "'words', substring(text, 1, 30), "
+        f"'late', if(doc_id <= {half}, '', lang)) as (column_name, val)",
     ).withColumn("file_id", F.lit("documents"))
-    half = docs.agg(F.expr("percentile(doc_id, 0.5)")).collect()[0][0]
 
     idx = IncrementalIndexes(SnapshotCatalog(str(tmp_path / "cat")))
     # wave order must match ingest arrival order (lower keys first)
@@ -147,7 +150,7 @@ def test_sketch_incremental_merge_equals_rebuild(spark, docs, tmp_path):
         r["column_name"]: r
         for r in sketch_columns(rec, cfg, n_salts=4).collect()
     }
-    assert set(merged) == set(full) == {"lang", "mod7", "words"}
+    assert set(merged) == set(full) == {"lang", "mod7", "words", "late"}
     exact_fields = [
         "file_id", "count", "empty_count", "out_of_vocabulary_count",
         "numeric_count", "is_numeric", "distinct_count", "sample",

@@ -17,7 +17,6 @@ from findopendata_spark.dedup import (
     near_dup_pairs,
     shingles_expr,
     simhash64,
-    tokens_expr,
 )
 from findopendata_spark.metadata import (
     build_packages,
@@ -28,6 +27,7 @@ from findopendata_spark.multimodal import media_features
 from findopendata_spark.sinks import write_avro, write_csv, write_json_gzip
 from findopendata_spark.sources.csv_blobs import parse_csv_blob, parse_csv_blobs
 from findopendata_spark.streaming import windowed_event_counts
+from findopendata_spark.text_analysis import tokens
 
 
 # ---------------------------------------------------------------- CSV (S12)
@@ -94,6 +94,23 @@ def test_merge_upsert_freshness(spark, tmp_path):
     cat.merge_upsert(spark, "t", upd, ["key"], ts_col="ts")
     got = {r["key"]: (r["v"], r["ts"]) for r in cat.read(spark, "t").collect()}
     assert got == {"k1": ("new", 150), "k2": ("keep", 200), "k3": ("ins", 10)}
+
+
+def test_read_at_time_travel(spark, tmp_path):
+    """Two committed waves of a snapshot table: read_at(0) sees the first
+    wave's rows, read sees the second's, an uncommitted wave has none."""
+    cat = SnapshotCatalog(str(tmp_path / "cat"))
+    for wave, rows in enumerate([[("a", 1)], [("a", 2), ("b", 3)]]):
+        df = spark.createDataFrame(rows, "key string, v long")
+        cat.commit_wave(wave, {"t": cat.stage(df, "t", wave)})
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(cat.read_at(spark, "t", 0)) == [("a", 1)]
+    assert rows(cat.read_at(spark, "t", 1)) == rows(cat.read(spark, "t"))
+    assert rows(cat.read(spark, "t")) == [("a", 2), ("b", 3)]
+    assert cat.read_at(spark, "t", 2) is None
 
 
 # ----------------------------------------------------------- metadata (§3.2)
@@ -301,7 +318,7 @@ def test_near_dup_pairs_match_exact_pairwise(spark, dup_docs):
 
 def test_simhash_hamming_property(spark, dup_docs):
     hashes = dup_docs.select(
-        "doc_id", F.transform(tokens_expr(F.col("text")), lambda t: F.xxhash64(t)).alias("hashes")
+        "doc_id", F.transform(tokens(F.col("text")), lambda t: F.xxhash64(t)).alias("hashes")
     )
     sh = {r["doc_id"]: r["simhash"] for r in simhash64(hashes).collect()}
     ham = lambda a, b: bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")  # noqa: E731
