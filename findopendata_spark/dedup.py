@@ -24,6 +24,9 @@ candidates both come from :func:`_bucket_pairs` (the ``bucket_cap``
 window and the ``a < b`` bucket self-join), and both AllPairs verify
 paths run :func:`_jaccard_verify_fn` (one searchsorted-intersect batch
 kernel; the paths differ only in how each side's gram codes arrive).
+A frame a pipeline reads twice (both sides of a self-join) is cached
+through :func:`findopendata_spark.session.cached`, so its partition count
+follows the cores, not the caller's shuffle setting.
 """
 
 from __future__ import annotations
@@ -36,25 +39,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from findopendata_spark.ranking import global_row_number
+from findopendata_spark.session import cached
 from findopendata_spark.sketch.lsh import bands_table, optimal_param
 from findopendata_spark.sketch.minhash import MAX_HASH, MinHashPermutations
 from findopendata_spark.text_analysis import tokens, tokens_py
-
-
-def ensure_cached(df: DataFrame) -> DataFrame:
-    """``cache()`` unless an identical plan is already cached.
-
-    Repeated invocations of the same query rebuild identical plans;
-    Spark's CacheManager matches and REUSES the first run's blocks, but
-    an unconditional ``.cache()`` logs a ``CacheManager: Asked to cache
-    already cached data`` warning per call (8 of them in the driver's
-    stdout tail budget last round). ``storageLevel`` performs the same
-    canonicalized-plan lookup, so this guard is reuse-preserving."""
-    from pyspark.storagelevel import StorageLevel
-
-    if df.storageLevel == StorageLevel.NONE:
-        df.cache()
-    return df
 
 
 def spread_scan(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -388,14 +376,12 @@ def near_dup_pairs(
     sh = shingle_sets(docs, text_col, id_col, shingle_n, spread=False).withColumn(
         "hashes", F.transform("sh", lambda s: F.xxhash64(s))
     )
-    sh = sh.filter(F.size("sh") > 0)
-    ensure_cached(sh)
+    sh = cached(sh.filter(F.size("sh") > 0))
     sigs = minhash_signatures(sh, id_col=id_col, num_perm=num_perm)
-    bands = bands_table(sigs, b, r, (id_col,))
     # the band self-join below references `bands` twice; without a cache
     # the whole signature pipeline (minhash kernel + band hashing) is
     # evaluated once per side (guide §2.4 — share one computation)
-    ensure_cached(bands)
+    bands = cached(bands_table(sigs, b, r, (id_col,)))
     cand = _bucket_pairs(bands, id_col, bucket_cap).select("a", "b").distinct()
     sa = sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
@@ -544,25 +530,23 @@ def allpairs_jaccard_pairs(
     ex0 = raw.select("_id", F.explode("g").alias("gram"))
     gram_df = ex0.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
     gram_dict = gram_codes(gram_df)
-    sets = (
+    sets = cached(
         ex0.join(F.broadcast(gram_dict), "gram")
         .groupBy("_id")
         .agg(F.sort_array(F.collect_list("code")).alias("g"))
         .withColumn("s", F.size("g"))
     )
-    ensure_cached(sets)
     n_grams_total = gram_dict.count()  # V — the verify kernel's key base
 
     # prefix = first (s - ceil(t*s) + 1) codes (rarest-first by
     # construction) — a narrow slice+posexplode over the cached sets,
     # no shuffle, no window
     plen = F.col("s") - F.ceil(t * F.col("s") - eps) + 1
-    prefix = sets.select(
+    # both sides of the candidate self-join read `prefix`
+    prefix = cached(sets.select(
         "_id", "s",
         F.posexplode(F.slice("g", F.lit(1), plen)).alias("p0", "gram"),
-    ).select("gram", "_id", "s", (F.col("p0") + 1).alias("rn"))
-    # both sides of the candidate self-join read `prefix`
-    ensure_cached(prefix)
+    ).select("gram", "_id", "s", (F.col("p0") + 1).alias("rn")))
     left = prefix.select(
         F.col("gram"), F.col("_id").alias("a"),
         F.col("s").alias("sa"), F.col("rn").alias("pa"),

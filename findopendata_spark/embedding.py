@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from findopendata_spark.session import session_cache
+from findopendata_spark.session import cached, session_cache
 
 
 def _cosine(a: str, b: str):
@@ -170,8 +170,8 @@ def ivf_index(
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
-        cents = train_ivf_centroids(emb, n_cells=n_cells, n_iter=n_iter).cache()
-        assigned = assign_cells(emb, cents).cache()
+        cents = cached(train_ivf_centroids(emb, n_cells=n_cells, n_iter=n_iter))
+        assigned = cached(assign_cells(emb, cents))
         cents.count()
         assigned.count()
         return {"centroids": cents, "assigned": assigned}

@@ -2,135 +2,19 @@
 
 Design for interleaved text+media documents (BASELINE.json input_hint):
 media stays an opaque ``binary`` column (or a ``media_ref`` pointer into
-a blob store) with a typed metadata struct beside it; decode /
-feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages over bucketed partitions.
+a blob store) with typed metadata beside it, and every operator over it
+is a JVM expression: no row crosses into Python.
 
-This container ships no image/audio libraries, so the decode step is a
-STUB: with PIL/soundfile importable the real decoder runs; otherwise a
-clearly-marked deterministic fake derives "features" from the payload
-digest. Everything Spark-side — schema, partitioning, UDF signature,
-batch shape — is real and tested; swapping the stub for a real decoder
-changes no plumbing.
+This container ships no video library, so the per-frame decode is a
+STUB: a sampled frame is represented by ``md5(payload || ':' || idx)``,
+deterministic, so the DuckDB oracle replicates it exactly. A real
+extractor replaces only that digest expression.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_FEATURES_SCHEMA = (
-    "doc_id long, media_kind string, n_bytes long, digest string, "
-    "width int, height int, n_frames int, feature array<float>, "
-    "decoder string"
-)
-
-
-def decode_image(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """(width, height, feature) via PIL — NotImplemented without it."""
-    try:
-        import PIL.Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "image decode requires Pillow (not in this container); "
-            "callers fall back to the deterministic digest-derived stub"
-        ) from e
-    import io
-
-    import PIL.Image as Image
-
-    img = Image.open(io.BytesIO(payload))
-    arr = np.asarray(img, dtype=np.float32)
-    feat = arr.mean(axis=tuple(range(arr.ndim - 1))) if arr.ndim > 1 else arr
-    return img.width, img.height, feat[:8].astype(np.float32)
-
-
-def _stub_features(digests: list[bytes], dim: int = 8) -> np.ndarray:
-    """Deterministic FAKE features from payload digests (decoder absent).
-    Clearly synthetic: derived from sha256, NOT pixel data."""
-    out = np.zeros((len(digests), dim), dtype=np.float32)
-    for i, d in enumerate(digests):
-        h = np.frombuffer(d[: dim * 4], dtype=np.uint32).astype(np.float32)
-        out[i] = h / np.float32(2**32)
-    return out
-
-
-def media_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    kind_col: str = "media_kind",
-    id_col: str = "doc_id",
-    buckets: int = 64,
-) -> DataFrame:
-    """Binary payloads → typed media feature rows.
-
-    Partitioning: repartition by a payload-size-agnostic hash of the id
-    so decode work (the expensive step at 100 TB) spreads evenly
-    regardless of how the docs table is laid out. r06: hash the raw id
-    (full cardinality) instead of a precomputed ``pmod(hash, buckets)``
-    bucket — with only ``buckets`` distinct synthetic values, hash
-    collisions left ~1/e of the partitions empty and others with 2-3
-    buckets of work (guide §2.5 "synthetic partitioning keys with too
-    few distinct values").
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            payloads = [bytes(b) if b is not None else b"" for b in pdf[payload_col]]
-            digests = [hashlib.sha256(p).digest() for p in payloads]
-            widths = np.zeros(n, dtype=np.int32)
-            heights = np.zeros(n, dtype=np.int32)
-            frames = np.ones(n, dtype=np.int32)
-            stub = _stub_features(digests)
-            feats = stub.copy()
-            decoder = "stub-sha256"
-            try:
-                # per-payload decode: capture (w, h, feat); a corrupt
-                # payload falls back to the stub for THAT row only
-                # instead of failing the whole task
-                for i, p in enumerate(payloads):  # pragma: no cover - PIL
-                    try:
-                        w, h, f = decode_image(p)
-                        widths[i], heights[i] = w, h
-                        k = min(len(f), feats.shape[1])
-                        feats[i, :k] = f[:k]
-                    except NotImplementedError:
-                        raise
-                    except Exception:  # noqa: BLE001 - corrupt payload
-                        pass  # row keeps stub features + 0x0 dims
-                decoder = "pil"
-            except NotImplementedError:
-                pass  # no PIL in container: all rows keep the stub
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].to_numpy(),
-                    "media_kind": pdf[kind_col].to_numpy(),
-                    "n_bytes": [len(p) for p in payloads],
-                    "digest": [d.hex() for d in digests],
-                    "width": widths,
-                    "height": heights,
-                    "n_frames": frames,
-                    "feature": [f for f in feats],
-                    "decoder": decoder,
-                }
-            )
-
-    return (
-        df.repartition(buckets, F.col(id_col))
-        .select(id_col, kind_col, payload_col)
-        .mapInPandas(fn, MEDIA_FEATURES_SCHEMA)
-    )
-
-
-FRAME_SAMPLE_SCHEMA = "doc_id long, frame_idx int, frame_digest string"
 
 
 def sample_frames(
@@ -139,107 +23,26 @@ def sample_frames(
     nframes_col: str = "n_frames",
     id_col: str = "doc_id",
     k: int = 8,
-    buckets: int = 64,
 ) -> DataFrame:
     """Evenly-spaced frame sampling over opaque video payloads: one row
-    per sampled frame, ``frame_idx = floor(j * n_frames / k)`` for
-    j = 0..k-1, deduplicated (so a clip shorter than ``k`` yields every
-    frame once).
-
-    The frame DECODE is stubbed (no video lib in this container): the
-    per-frame payload is represented by ``md5(payload || ':' || idx)`` —
-    deterministic, so the DuckDB oracle replicates it exactly; a real
-    extractor (pyav/decord) replaces only the digest line, the Spark
-    plumbing (bucketed repartition, vectorized index generation, Arrow
-    batches) is the production shape.
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        j = np.arange(k, dtype=np.int64)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            nf = np.maximum(pdf[nframes_col].to_numpy(np.int64), 1)
-            idx = (j[None, :] * nf[:, None]) // k          # (n, k), nondecr.
-            keep = np.ones_like(idx, dtype=bool)
-            keep[:, 1:] = idx[:, 1:] != idx[:, :-1]        # dedupe per row
-            rows, cols = np.nonzero(keep)
-            sel = idx[rows, cols].astype(np.int32)
-            ids = pdf[id_col].to_numpy()[rows]
-            payloads = pdf[payload_col].to_numpy()[rows]
-            digests = [
-                hashlib.md5(
-                    (bytes(p) if p is not None else b"")
-                    + b":" + str(int(i)).encode()
-                ).hexdigest()
-                for p, i in zip(payloads, sel)
-            ]
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": sel, "frame_digest": digests}
-            )
-
-    return (
-        df.repartition(buckets, F.col(id_col))
-        .select(id_col, nframes_col, payload_col)
-        .mapInPandas(fn, FRAME_SAMPLE_SCHEMA)
+    ``(doc_id, frame_idx, frame_digest)`` per sampled frame, with
+    ``frame_idx = (j * n_frames) div k`` for j = 0..k-1, deduplicated (so
+    a clip shorter than ``k`` yields every frame once, and a clip with
+    fewer than one frame yields frame 0). A NULL payload has a NULL
+    digest, as SQL's ``||`` gives."""
+    n = F.greatest(F.col(nframes_col).cast("long"), F.lit(1))
+    idx = F.array_distinct(F.transform(
+        F.sequence(F.lit(0), F.lit(k - 1)),
+        lambda j: F.floor(j * n / k).cast("int"),
+    ))
+    frames = df.select(
+        id_col, payload_col, F.explode(idx).alias("frame_idx")
     )
-
-
-RESIZE_SCHEMA = (
-    "doc_id long, width int, height int, payload binary, resizer string"
-)
-
-
-def resize_images(
-    df: DataFrame,
-    target: tuple[int, int] = (224, 224),
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    buckets: int = 64,
-) -> DataFrame:
-    """Image resize stage: with PIL present each payload re-encodes at
-    ``target``; without it the payload passes through unchanged with
-    ``resizer='stub-passthrough'`` and width/height = target (documented
-    stub — the Spark plumbing is real either way; corrupt payloads fall
-    back per-row instead of failing the task)."""
-    tw, th = target
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            import io
-
-            import PIL.Image as Image  # pragma: no cover - PIL absent here
-
-            def one(p: bytes) -> tuple[bytes, str]:
-                try:
-                    img = Image.open(io.BytesIO(p)).resize((tw, th))
-                    buf = io.BytesIO()
-                    img.save(buf, format=img.format or "PNG")
-                    return buf.getvalue(), "pil"
-                except Exception:  # noqa: BLE001 - corrupt payload
-                    return p, "stub-corrupt-passthrough"
-        except ImportError:
-            def one(p: bytes) -> tuple[bytes, str]:
-                return p, "stub-passthrough"
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            outs = [one(bytes(p) if p is not None else b"")
-                    for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].to_numpy(),
-                    "width": np.full(len(pdf), tw, dtype=np.int32),
-                    "height": np.full(len(pdf), th, dtype=np.int32),
-                    "payload": [o[0] for o in outs],
-                    "resizer": [o[1] for o in outs],
-                }
-            )
-
-    return (
-        df.repartition(buckets, F.col(id_col))
-        .select(id_col, payload_col)
-        .mapInPandas(fn, RESIZE_SCHEMA)
+    tag = F.concat(F.lit(":"), F.col("frame_idx").cast("string"))
+    return frames.select(
+        id_col,
+        "frame_idx",
+        F.md5(F.concat(F.col(payload_col), tag.cast("binary"))).alias(
+            "frame_digest"
+        ),
     )

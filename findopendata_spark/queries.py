@@ -362,11 +362,13 @@ def q11_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY win_start, event_type
     """)
 def q12_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 5-min window aggregation (SURVEY §2.8 streaming analog)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    """Tumbling 5-min window aggregation (SURVEY §2.8 streaming analog).
+    ``ts`` is a naive parquet timestamp, read as ``TIMESTAMP_NTZ``: the
+    window start and its wall-clock rendering stay in NTZ, so the result
+    does not depend on the session time zone."""
     ev = load(spark, sf_dir, "events")
-    win = F.from_unixtime(
-        F.floor(F.unix_timestamp("ts") / 300) * 300, "yyyy-MM-dd HH:mm:ss"
+    win = F.date_format(
+        F.window("ts", "5 minutes").start, "yyyy-MM-dd HH:mm:ss"
     )
     return (
         ev.withColumn("win_start", win)

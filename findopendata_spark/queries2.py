@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from findopendata_spark.config import SketchConfig
 from findopendata_spark.dedup import FP_BASE, FP_MOD, rolling_min_fingerprint
 from findopendata_spark.registry import load, query
-from findopendata_spark.session import session_cache
+from findopendata_spark.session import cached, session_cache
 from findopendata_spark.sketch.column_sketch import sketch_columns
 from findopendata_spark.sketch.lsh import joinable_column_search_exact
 
@@ -57,7 +57,6 @@ def _doc_records(docs: DataFrame) -> DataFrame:
 def q14_column_sketch_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full column-sketch counter set via the sketch engine (A3/A4 rules:
     count/empty/numeric/is_numeric/distinct, ``column_sketch.py:72-125``)."""
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     sk = sketch_columns(_doc_records(load(spark, sf_dir, "documents")),
                         SketchConfig(), n_salts=4)
     return sk.select(
@@ -149,7 +148,6 @@ def q16_joinable_column_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic — LSH recall for identical sets is exactly 1 (equal
     signatures collide in every band).
     """
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     records, sk = _sketch_store(spark, sf_dir)
     qf = sk.filter(F.col("file_id") == "q_probe")
     return joinable_column_search_exact(qf, sk, records, threshold=0.1, k=10)
@@ -175,8 +173,8 @@ def _sketch_store(spark: SparkSession, sf_dir: str):
         probe = base.join(
             base.select(F.min("file_id").alias("file_id")), "file_id"
         ).withColumn("file_id", F.lit("q_probe"))
-        records = base.unionByName(probe).cache()
-        sk = sketch_columns(records, SketchConfig(), n_salts=4).cache()
+        records = cached(base.unionByName(probe))
+        sk = cached(sketch_columns(records, SketchConfig(), n_salts=4))
         sk.count()  # materialize the store once
         return records, sk
 
@@ -220,7 +218,6 @@ def q17_trigram_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         trigram_topk,
     )
 
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     idx = trigram_index(spark, sf_dir, "text")
     q_doc_id, q_grams = idx["query_row"]
     top = trigram_topk(idx, q_doc_id, q_grams, k=10, round_digits=6)
@@ -276,8 +273,8 @@ def q18_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q20_media_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: opaque binary payloads + typed metadata
     (training-data op). Payload here is the encoded text (the container
-    has no image libs — decode stubs live in multimodal.py); byte length
-    and digest are computed on the real binary column."""
+    has no image libs); byte length and digest are computed on the real
+    binary column."""
     docs = load(spark, sf_dir, "documents")
     payload = F.encode("text", "UTF-8")
     kind = (
@@ -309,7 +306,6 @@ def q20_media_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q21_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows via 30-min gap rule (streaming-state analog,
     SURVEY §2.8) — lag + running sum of session starts."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))

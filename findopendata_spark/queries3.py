@@ -49,7 +49,6 @@ def q22_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (training-data dedup op). The oracle is a full O(n^2) exact pairwise
     scan — the LSH path must find exactly the same >= 0.5 pairs (the
     corpus separates at ~0.88 vs ~0.02, so banding recall is ~1)."""
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     docs = load(spark, sf_dir, "documents")
     return near_dup_pairs(docs, threshold=0.5, num_perm=128, shingle_n=5)
 

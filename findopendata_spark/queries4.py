@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from findopendata_spark.registry import load, query
+from findopendata_spark.session import cached
 from findopendata_spark.text_analysis import tokens
 
 _Q29_TERMS = ("data", "table", "query", "spark")
@@ -91,7 +92,8 @@ def bm25_rank(
     from findopendata_spark.dedup import spread_scan
 
     toks = tokens(F.col(text_col))
-    cnts = (
+    # cached: reused by the df stats and the scoring (hits-only, small)
+    cnts = cached(
         # spread the single-row-group docs scan so the tokenize+explode
         # +partial-agg stage parallelizes (guide §2.5)
         spread_scan(docs, [id_col, text_col])
@@ -107,8 +109,6 @@ def bm25_rank(
             ]
         )
     )
-    from findopendata_spark.dedup import ensure_cached
-    ensure_cached(cnts)  # reused: df stats + scoring (hits-only, small)
     n = float(docs.count())
     stats = cnts.agg(
         *[F.sum((F.col(f"tf_{i}") > 0).cast("long")).alias(f"df_{i}")

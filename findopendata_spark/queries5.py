@@ -36,7 +36,6 @@ def q34_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from findopendata_spark.embedding import embedding_near_dup
 
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )

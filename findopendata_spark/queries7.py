@@ -153,7 +153,6 @@ def q41_similar_packages(spark: SparkSession, sf_dir: str) -> DataFrame:
         trigram_index,
     )
 
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     t_idx = trigram_index(spark, sf_dir, "title")
     d_idx = trigram_index(spark, sf_dir, "description")
     q_doc_id, q_tg = t_idx["query_row"]
@@ -204,7 +203,6 @@ def q42_word_vector_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from findopendata_spark.config import SketchConfig
     from findopendata_spark.sketch.column_sketch import sketch_columns
 
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     docs = load(spark, sf_dir, "documents")
     rec = docs.selectExpr(
         "doc_id as ingest_key",

@@ -46,7 +46,6 @@ def q43_token_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q44_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window aggregate: per-user 5-event moving average of
     value (ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-4, 0)
     return ev.select(
@@ -87,7 +86,6 @@ def q45_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     an explicit ranked range join (its native ASOF JOIN leaves ties
     unspecified, so the oracle ranks deterministically instead).
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = load(spark, sf_dir, "events").select(
         F.pmod(F.col("user_id"), F.lit(50)).alias("key"),
         F.col("ts"),
@@ -168,7 +166,6 @@ def q46_ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables (``embedding.ivf_index``), so a probe never rescans or
     reassigns the corpus. Ties broken by (cos desc, id asc), ranking on
     the 4dp-rounded cosine."""
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     idx = ivf_index(spark, sf_dir, n_cells=8, n_iter=2)
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")

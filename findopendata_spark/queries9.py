@@ -13,6 +13,7 @@ from findopendata_spark.dedup import (
     simhash_near_dup_pairs,
 )
 from findopendata_spark.registry import load, query
+from findopendata_spark.session import cached
 
 # Shared with q23's oracle: md5-derived 60-bit token hash, sign-of-sum
 # SimHash — then an exact all-pairs Hamming scan (the oracle may be
@@ -58,7 +59,6 @@ def q49_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidate recall is exactly 1 by pigeonhole (3 differing bits cannot
     ruin all 4 disjoint bands), so the result equals the O(n^2) scan the
     DuckDB oracle runs — while the engine only joins band buckets."""
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     docs = load(spark, sf_dir, "documents")
     # Skew guard 1: drop zero-token docs BEFORE signing — they all share
     # simhash 0 and would rebuild an O(n^2) bucket in every band (the
@@ -79,9 +79,7 @@ def q49_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The band self-join references the signature frame on both sides;
     # cached, the kernel runs ONCE instead of once per join side
     # (measured r06: q49 10.4 s -> ~4 s at sf1.0, guide §2.4).
-    sigs = md5_simhash64(docs.filter(F.col("text").isNotNull()))
-    from findopendata_spark.dedup import ensure_cached
-    ensure_cached(sigs)
+    sigs = cached(md5_simhash64(docs.filter(F.col("text").isNotNull())))
     return simhash_near_dup_pairs(sigs, max_hamming=3, n_bands=4)
 
 
@@ -104,20 +102,19 @@ def q49_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q50_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal frame sampling (training-data op): synthesize a video
     manifest from documents (payload = encoded text, n_frames = doc_id %
-    240 + 1), sample 8 evenly-spaced frames per clip via the bucketed
-    ``mapInPandas`` sampler (``multimodal.sample_frames``). The stubbed
+    240 + 1), sample 8 evenly-spaced frames per clip with the one-
+    expression sampler (``multimodal.sample_frames``). The stubbed
     per-frame digest (md5(payload || ':' || idx)) is deterministic, so
     the DuckDB oracle replicates the whole operator."""
     from findopendata_spark.multimodal import sample_frames
 
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     docs = load(spark, sf_dir, "documents")
     clips = docs.select(
         "doc_id",
         F.encode("text", "UTF-8").alias("payload"),
         (F.col("doc_id") % 240 + 1).cast("long").alias("n_frames"),
     )
-    return sample_frames(clips, k=8, buckets=32)
+    return sample_frames(clips, k=8)
 
 
 @query("""
@@ -147,6 +144,5 @@ def q51_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     still avoiding the O(n^2) cross join: candidates come from an
     equi-join on rarest-prefix grams + a size-ratio filter; only those
     pairs are verified. The DuckDB oracle IS the O(n^2) scan."""
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     docs = load(spark, sf_dir, "documents")
     return allpairs_jaccard_pairs(docs, threshold=0.6, shingle_n=3)

@@ -35,6 +35,8 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from findopendata_spark.session import cached
+
 _LOG = logging.getLogger(__name__)
 
 
@@ -66,9 +68,9 @@ class ApiServer:
         from findopendata_spark.queries2 import _sketch_store
         from findopendata_spark.sketch.trigram_index import trigram_index
 
-        self._docs = self.spark.read.parquet(
-            f"{self.sf_dir}/documents.parquet"
-        ).cache()
+        self._docs = cached(
+            self.spark.read.parquet(f"{self.sf_dir}/documents.parquet")
+        )
         self._docs.count()
         self._t_idx = self._warm_trigram("title")
         self._d_idx = self._warm_trigram("description")
@@ -84,7 +86,7 @@ class ApiServer:
             from findopendata_spark.indexing import IncrementalIndexes
 
             idx = IncrementalIndexes(SnapshotCatalog(self.catalog_root))
-            self._sketches = idx.sketch_read(self.spark).cache()
+            self._sketches = cached(idx.sketch_read(self.spark))
             self._sketches.count()
             recs = idx.cat.read_appended(self.spark, "sketch_records")
             if recs is None:
@@ -97,7 +99,7 @@ class ApiServer:
                     "keep_records=True), or serve sketch-only routes"
                     % self.catalog_root
                 )
-            self._records = recs.drop("wave").cache()
+            self._records = cached(recs.drop("wave"))
             self._records.count()
         else:
             self._records, self._sketches = _sketch_store(
@@ -122,10 +124,7 @@ class ApiServer:
                 self.spark, f"trigram_postings_{field}"
             ) is not None:
                 d = idx.trigram_index(self.spark, field)
-                d = {
-                    "postings": d["postings"].cache(),
-                    "sizes": d["sizes"].cache(),
-                }
+                d = {k: cached(d[k]) for k in ("postings", "sizes")}
                 d["postings"].count()
                 d["sizes"].count()
                 return d

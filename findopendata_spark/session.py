@@ -1,10 +1,18 @@
-"""SparkSession factory tuned for the engine.
+"""SparkSession factory tuned for the engine, and the two session-scoped
+caches every query and serving path shares.
 
 Local mode is single-JVM (the sandbox), but every setting here is the one
 you'd ship to a 1000-executor cluster: AQE with skew-join handling on,
 Arrow for every pandas-UDF hop, shuffle partitions sized to cores (cluster:
 2-3x total cores), broadcast threshold left at default so small dims
 (region/nation/robots/seeds) broadcast automatically.
+
+Queries never change session conf: they run in whatever session the
+caller hands them (a vanilla one has 200 shuffle partitions and the
+host's time zone) and leave it as they found it.
+:func:`cached` is the one way a query or serving path caches a frame, so
+a cached frame's partition count comes from the cluster's cores, not
+from the session's shuffle setting.
 """
 
 from __future__ import annotations
@@ -14,7 +22,8 @@ import threading
 from collections.abc import Callable
 from typing import Any, TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 T = TypeVar("T")
 
@@ -151,3 +160,22 @@ def session_cache(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
         if full not in _SESSION_CACHE:
             _SESSION_CACHE[full] = build()
         return _SESSION_CACHE[full]
+
+
+def cached(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to the session's default parallelism and cached,
+    unless the same plan is already cached; use the returned frame.
+
+    A frame that ends in a shuffle would otherwise keep the session's
+    shuffle partition count (adaptive execution does not coalesce a
+    cached plan's output), and every later scan of the cache pays one
+    task per partition: 200 in a vanilla session. Cores is the rule
+    :func:`findopendata_spark.dedup.spread_scan` already uses.
+    Repeated runs of a query rebuild identical plans; ``storageLevel``
+    does the CacheManager's canonicalized-plan lookup, so a rerun reuses
+    the first run's blocks without a "cache already cached data"
+    warning."""
+    out = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+    if out.storageLevel == StorageLevel.NONE:
+        out.cache()
+    return out

@@ -44,15 +44,15 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from findopendata_spark.config import SketchConfig
+from findopendata_spark.session import cached
 from findopendata_spark.sketch.hll import hll_count, hll_partial
 from findopendata_spark.sketch.minhash import MinHashPermutations, minhash_partial
 
 _PARTIAL_SCHEMA = (
-    "file_id string, column_name string, n long, "
-    "minhash array<long>, hll array<long>"
+    "file_id string, column_name string, minhash array<long>, hll array<long>"
 )
 _FINAL_SCHEMA = (
-    "file_id string, column_name string, sketch_count long, "
+    "file_id string, column_name string, "
     "minhash array<long>, hyperloglog array<long>, hll_estimate double"
 )
 
@@ -67,7 +67,6 @@ def _partial_fn(cfg: SketchConfig):
             {
                 "file_id": [pdf["file_id"].iloc[0]],
                 "column_name": [pdf["column_name"].iloc[0]],
-                "n": [len(pdf)],
                 "minhash": [mh.astype(np.int64)],
                 "hll": [hl],
             }
@@ -89,7 +88,6 @@ def _final_fn():
             {
                 "file_id": [pdf["file_id"].iloc[0]],
                 "column_name": [pdf["column_name"].iloc[0]],
-                "sketch_count": [int(pdf["n"].sum())],
                 "minhash": [mh.astype(np.int64)],
                 "hyperloglog": [hl],
                 "hll_estimate": [hll_count(hl)],
@@ -192,7 +190,8 @@ def sketch_columns(
 
     # 1. normalize + flags + hashes, all JVM-side
     norm = F.lower(F.trim(F.coalesce(F.col("val"), F.lit("null"))))
-    r = records.select(
+    # cached: counters, partials and firsts all read it
+    r = cached(records.select(
         "file_id",
         "column_name",
         "ingest_key",
@@ -203,13 +202,7 @@ def sketch_columns(
             # try_cast: ANSI mode (Spark 4 default) makes plain cast throw
             "is_numeric": F.col("v").try_cast("double").isNotNull(),
         }
-    )
-    # ensure_cached: repeated invocations (the bench's best-of-2 per
-    # query) rebuild an identical plan; the guard keeps CacheManager
-    # reuse without its "already cached" warning per rerun
-    from findopendata_spark.dedup import ensure_cached
-
-    ensure_cached(r)
+    ))
 
     # 4a. counters (reference properties: column_sketch.py:72-117)
     counters = r.groupBy(*_KEY).agg(
@@ -283,7 +276,6 @@ def merge_sketch_rows(rows: DataFrame, cfg: SketchConfig) -> DataFrame:
     sketches = _fold(
         rows.filter(F.col("minhash").isNotNull()).select(
             *_KEY,
-            (F.col("count") - F.col("empty_count")).alias("n"),
             "minhash",
             F.col("hyperloglog").alias("hll"),
         )
@@ -304,7 +296,7 @@ def merge_sketch_rows(rows: DataFrame, cfg: SketchConfig) -> DataFrame:
 
 
 def _fold(partials: DataFrame) -> DataFrame:
-    """(file_id, column_name, n, minhash, hll) partial sketches → one
+    """(file_id, column_name, minhash, hll) partial sketches → one
     merged MinHash/HLL row per (file_id, column_name)."""
     return partials.groupBy(*_KEY).applyInPandas(_final_fn(), _FINAL_SCHEMA)
 

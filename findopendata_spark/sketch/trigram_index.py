@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from findopendata_spark.session import session_cache
+from findopendata_spark.session import cached, session_cache
 
 _TRIGRAM_RE = r"(?s)(?=([^\p{Cs}].{2}))"
 
@@ -117,10 +117,8 @@ def trigram_index(spark: SparkSession, sf_dir: str, field: str) -> dict:
             ["doc_id", "text"],
         )
         grams = _field_grams(docs, field)
-        postings = grams.select(
-            "doc_id", F.explode("g").alias("gram")
-        ).cache()
-        sizes = grams.select("doc_id", F.size("g").alias("n_grams")).cache()
+        postings = cached(grams.select("doc_id", F.explode("g").alias("gram")))
+        sizes = cached(grams.select("doc_id", F.size("g").alias("n_grams")))
         postings.count()  # materialize the index once
         sizes.count()
         qrow = grams.orderBy("doc_id").limit(1).collect()[0]

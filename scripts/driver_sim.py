@@ -1,10 +1,16 @@
 """Simulate the grading driver: vanilla session, __spark_entry__ contract,
 DuckDB oracle hash-compare at sf=0.01. Run with TZ=America/New_York to
-probe timezone stability."""
+probe timezone stability.
+
+A query is RED when its result differs from the oracle's, or when running
+it changed the session's shuffle partitions or time zone (queries leave
+the session as they found it). Prints each query's wall seconds and the
+total."""
 from __future__ import annotations
 
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -15,6 +21,8 @@ from pyspark.sql import SparkSession
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+# session conf no query may change
+CONTRACT = ("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
 
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
@@ -43,16 +51,23 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
     n_green = n_bad = n_noracle = 0
+    total_s = 0.0
     only = sys.argv[1:]
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        conf = {k: spark.conf.get(k) for k in CONTRACT}
+        t0 = time.time()
         try:
             sdf = fn(spark, SF_DIR).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"{name}: SPARK ERROR {str(e)[:300]}")
             n_bad += 1
             continue
+        dt = time.time() - t0
+        total_s += dt
+        changed = {k: (v, spark.conf.get(k)) for k, v in conf.items()
+                   if spark.conf.get(k) != v}
         sql = osql.get(name)
         if sql is None:
             print(f"{name}: no_oracle ({len(sdf)} rows)")
@@ -79,12 +94,16 @@ def main() -> int:
         else:
             print(f"{name}: ROWS/SCHEMA {len(s)}/{len(o)} "
                   f"{list(s.columns)} vs {list(o.columns)}")
+        if changed:
+            ok = False
+            print(f"{name}: CHANGED SESSION CONF {changed}")
         if ok:
             n_green += 1
         else:
             n_bad += 1
-        print(f"{name}: {'GREEN' if ok else 'RED'}")
-    print(f"\nTOTAL green={n_green} bad={n_bad} no_oracle={n_noracle}")
+        print(f"{name}: {'GREEN' if ok else 'RED'} {dt:.2f} s")
+    print(f"\nTOTAL green={n_green} bad={n_bad} no_oracle={n_noracle} "
+          f"wall={total_s:.2f} s")
     spark.stop()
     return 1 if n_bad else 0
 

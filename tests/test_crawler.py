@@ -879,18 +879,21 @@ def test_wave_sets_adaptive_partitions(spark, tmp_path, monkeypatch):
     # 2,000 bulk seeds: 150k rows/task hits the floor, 100 rows/task
     # gives 20 partitions or more
     default = W.WAVE_PARTITION_ROWS
-    for rows in (default, 100):
-        monkeypatch.setattr(W, "WAVE_PARTITION_ROWS", rows)
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        d = str(tmp_path / f"crawl_{rows}")
-        st = crawl(spark, d, waves=2,
-                   cfg=CrawlConfig(per_host_wave_budget=50),
-                   gcfg=gcfg, bulk_seeds=2_000)
-        seen = st.cat.read_appended(spark, "seen")
-        outs[rows] = sorted(r["url_canon"] for r in seen.collect())
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
-    assert outs[default] == outs[100]
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    found = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for rows in (default, 100):
+            monkeypatch.setattr(W, "WAVE_PARTITION_ROWS", rows)
+            spark.conf.set("spark.sql.shuffle.partitions", "32")
+            d = str(tmp_path / f"crawl_{rows}")
+            st = crawl(spark, d, waves=2,
+                       cfg=CrawlConfig(per_host_wave_budget=50),
+                       gcfg=gcfg, bulk_seeds=2_000)
+            seen = st.cat.read_appended(spark, "seen")
+            outs[rows] = sorted(r["url_canon"] for r in seen.collect())
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+        assert outs[default] == outs[100]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", found)
 
 
 def test_fetch_partitions_not_host_skewed(spark, tmp_path):

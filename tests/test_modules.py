@@ -23,7 +23,6 @@ from findopendata_spark.metadata import (
     freshness_filter,
     stale_work_list,
 )
-from findopendata_spark.multimodal import media_features
 from findopendata_spark.sinks import write_avro, write_csv, write_json_gzip
 from findopendata_spark.sources.csv_blobs import parse_csv_blob, parse_csv_blobs
 from findopendata_spark.streaming import windowed_event_counts
@@ -250,25 +249,6 @@ def test_streaming_matches_batch(spark, tmp_path):
     )
     assert j.count() == 0
     assert got.count() >= batch.count()  # emitted set ⊇ finalized set
-
-
-# ----------------------------------------------------------------- multimodal
-
-def test_media_features_plumbing(spark):
-    docs = spark.createDataFrame(
-        [(1, "image", bytearray(b"payload-1")), (2, "audio", bytearray(b""))],
-        "doc_id long, media_kind string, payload binary",
-    )
-    rows = {r["doc_id"]: r for r in media_features(docs, buckets=4).collect()}
-    import hashlib
-
-    assert rows[1]["digest"] == hashlib.sha256(b"payload-1").hexdigest()
-    assert rows[1]["n_bytes"] == 9 and rows[2]["n_bytes"] == 0
-    assert rows[1]["decoder"] == "stub-sha256"
-    assert len(rows[1]["feature"]) == 8
-    # deterministic: rerun gives identical features
-    rows2 = {r["doc_id"]: r for r in media_features(docs, buckets=4).collect()}
-    assert rows2[1]["feature"] == rows[1]["feature"]
 
 
 # ----------------------------------------------------------------- dedup
@@ -804,15 +784,14 @@ def test_stateful_sessionize_three_batches_with_mid_stream_kill(
 
 def test_sample_frames_edges_and_resize_stub(spark):
     """Frame sampler: n_frames < k yields each frame exactly once, in
-    order; resize stage passes payloads through unchanged without PIL
-    (documented stub) with the target dims stamped."""
-    from findopendata_spark.multimodal import resize_images, sample_frames
+    order."""
+    from findopendata_spark.multimodal import sample_frames
 
     rows = [(1, b"aa", 3), (2, b"bb", 1), (3, b"cc", 16), (4, None, 240)]
     df = spark.createDataFrame(
         rows, "doc_id long, payload binary, n_frames long"
     )
-    got = sample_frames(df, k=8, buckets=4).collect()
+    got = sample_frames(df, k=8).collect()
     by_doc = {}
     for r in got:
         by_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
@@ -824,11 +803,6 @@ def test_sample_frames_edges_and_resize_stub(spark):
 
     d1 = {r["frame_idx"]: r["frame_digest"] for r in got if r["doc_id"] == 1}
     assert d1[2] == _h.md5(b"aa:2").hexdigest()
-
-    rz = resize_images(df, target=(224, 224), buckets=4).collect()
-    assert {r["doc_id"]: bytes(r["payload"]) for r in rz}[1] == b"aa"
-    assert all(r["width"] == 224 and r["height"] == 224 for r in rz)
-    assert {r["resizer"] for r in rz} == {"stub-passthrough"}
 
 
 def _allpairs_corpus(spark):

@@ -120,3 +120,86 @@ def test_q51_gram_dictionary_rank_is_distributed(spark):
     assert len(got) > 1000
     assert got == want
     assert sorted(got.values()) == list(range(len(got)))
+
+
+def _plan_text(df) -> str:
+    """The initial executed plan with expression and plan ids removed,
+    so two builds of the same plan compare equal."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.sub(r"#\d+L?|plan_id=\d+", "", plan)
+
+
+def test_queries_leave_session_conf_and_plans_alone(spark, duck):
+    """In a vanilla-like session (200 shuffle partitions, a US time zone)
+    no query changes session conf, so a query's plan does not depend on
+    which query ran before it; the timestamp queries match their oracles
+    in that time zone without pinning one."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
+    vanilla = dict(zip(keys, ("200", "America/New_York")))
+    found = {k: spark.conf.get(k) for k in keys}
+    qs = entry_mod.queries()
+    try:
+        q01_plans = []
+        for order in (("q14_column_sketch_counters", "q01_pricing_summary"),
+                      ("q01_pricing_summary", "q14_column_sketch_counters")):
+            for k, v in vanilla.items():
+                spark.conf.set(k, v)
+            for name in order:
+                df = qs[name](spark, SF_DIR)
+                if name == "q01_pricing_summary":
+                    q01_plans.append(_plan_text(df))
+                df.collect()
+                assert {k: spark.conf.get(k) for k in keys} == vanilla, name
+        assert q01_plans[0] == q01_plans[1]
+        for name in ("q12_event_windows", "q21_sessionize",
+                     "q44_moving_average", "q45_asof_join"):
+            sdf = qs[name](spark, SF_DIR)
+            res = duck.execute(entry_mod.oracle_sql()[name])
+            got = _norm_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+            want = _norm_rows([d[0] for d in res.description], res.fetchall())
+            assert got == want, name
+    finally:
+        for k, v in found.items():
+            spark.conf.set(k, v)
+
+
+def test_session_cached_indexes_ignore_shuffle_partitions(spark):
+    """The session-cached index frames (sketch store, trigram postings,
+    IVF index) have the same partition count whatever the session's
+    shuffle partition count was when they were built."""
+    from findopendata_spark import session
+    from findopendata_spark.embedding import ivf_index
+    from findopendata_spark.queries2 import _sketch_store
+    from findopendata_spark.sketch.trigram_index import trigram_index
+
+    def partitions() -> dict[str, int]:
+        session._SESSION_CACHE.clear()
+        spark.catalog.clearCache()
+        records, sketches = _sketch_store(spark, SF_DIR)
+        frames = {"records": records, "sketches": sketches}
+        frames.update(trigram_index(spark, SF_DIR, "text"))
+        frames.update(ivf_index(spark, SF_DIR, n_cells=8, n_iter=2))
+        del frames["query_row"]
+        return {k: f.rdd.getNumPartitions() for k, f in frames.items()}
+
+    key = "spark.sql.shuffle.partitions"
+    found = spark.conf.get(key)
+    got = {}
+    try:
+        for n in ("8", "200"):
+            spark.conf.set(key, n)
+            got[n] = partitions()
+    finally:
+        spark.conf.set(key, found)
+        session._SESSION_CACHE.clear()
+        spark.catalog.clearCache()
+    assert got["8"] == got["200"], got
+
+
+def test_q50_runs_without_python(spark):
+    """q50's frame sampler is one JVM expression: no Python UDF or
+    mapInPandas node in its physical plan."""
+    plan = _plan_text(entry_mod.queries()["q50_frame_sample"](spark, SF_DIR))
+    assert not [n for n in ("Python", "Pandas", "Arrow") if n in plan], plan
