@@ -7,14 +7,19 @@ snapshot-versioned tables with **one atomic commit per wave** — the
 Iceberg model. This module is a minimal file-based implementation of that
 model (the sandbox has no Iceberg jars): each table is a directory of
 immutable parquet snapshots, and a single ``_current.json`` pointer names
-the committed snapshot of every table plus the last complete wave id.
+the committed snapshot of every table plus the last complete wave id,
+and the schema of every table (Iceberg's ``schemas`` in table metadata).
+Readers pass that schema to the parquet reader, so no read of a table
+starts a Spark job to infer it from a file footer.
 
 Commit protocol (crash-safe, exactly the Iceberg sequence):
 
 1. every table touched by wave *k* is **staged** — written to a new
    ``<table>/snap-<k>`` parquet dir; nothing reads staged data;
-2. a new pointer doc naming all tables' current snapshots is written to a
-   temp file and ``os.replace``-d onto ``_current.json`` (atomic on POSIX).
+2. a new pointer doc naming all tables' current snapshots and schemas is
+   written to a temp file and ``os.replace``-d onto ``_current.json``
+   (atomic on POSIX); the same doc is kept as the wave's log entry
+   (``_waves/wave-<k>.json``), which time-travel reads use.
 
 A run killed anywhere before step 2 leaves only unreferenced snapshot
 dirs; resume reads ``_current.json`` and sees the previous wave's state
@@ -31,6 +36,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructType
 
 _POINTER = "_current.json"
 
@@ -41,6 +47,9 @@ class SnapshotCatalog:
         # append dirs staged by THIS process for the in-flight wave;
         # distinguishes live staging from a killed run's leftovers
         self._session_staged: set[str] = set()
+        # table -> schema (StructType.jsonValue) of what this process
+        # staged for the in-flight wave; commit_wave publishes them
+        self._staged_schemas: dict[str, dict] = {}
         os.makedirs(root, exist_ok=True)
 
     # -- pointer ----------------------------------------------------------
@@ -78,12 +87,14 @@ class SnapshotCatalog:
     def _snapshot(
         self, spark: SparkSession, table: str, pointer: dict | None
     ) -> DataFrame | None:
-        """The snapshot of `table` that pointer doc `pointer` names."""
+        """The snapshot of `table` that pointer doc `pointer` names, read
+        with the schema the same doc records."""
         snap = (pointer or {}).get("tables", {}).get(table)
         if snap is None:
             return None
         return (
-            spark.read.option("recursiveFileLookup", "true")
+            spark.read.schema(_schema(pointer, table))
+            .option("recursiveFileLookup", "true")
             .parquet(os.path.join(self.root, table, snap))
         )
 
@@ -128,6 +139,7 @@ class SnapshotCatalog:
         if os.path.exists(path):  # leftover from a killed run — overwrite
             shutil.rmtree(path)
         df.write.mode("overwrite").parquet(path)
+        self._staged_schemas[table] = df.schema.jsonValue()
         return snap
 
     # -- keyed upsert (MERGE INTO semantics) --------------------------------
@@ -200,45 +212,47 @@ class SnapshotCatalog:
         path = os.path.join(self.root, table, f"wave={wave}")
         self._session_staged.add(path)
         df.write.mode("overwrite").parquet(path)
+        self._staged_schemas[table] = df.schema.jsonValue()
 
     def read_append_wave(
         self, spark: SparkSession, table: str, wave: int
     ) -> DataFrame:
         """One wave's append dir (no visibility filter — callers that
-        staged the wave themselves may read it pre/post commit)."""
-        return spark.read.parquet(
+        staged the wave themselves may read it pre/post commit). The
+        schema is the one wave `wave` committed, or, before that commit,
+        the one this process staged."""
+        doc = self._wave_log(wave) or {"schemas": self._staged_schemas}
+        return spark.read.schema(_schema(doc, table)).parquet(
             os.path.join(self.root, table, f"wave={wave}")
         )
 
     def read_appended(
         self, spark: SparkSession, table: str, upto: int | None = None
     ) -> DataFrame | None:
-        """Union of all committed wave appends (wave partition col included).
+        """Union of all committed wave appends (wave partition col included),
+        or None when `upto` is not a committed wave or no wave up to it
+        committed an append to `table`.
 
         Waves below the table's ``append_base`` (set by a compaction —
         see :meth:`commit_wave`) are invisible: a compaction rewrote
         their surviving rows into its own wave dir, Iceberg's
         rewrite-manifests move at directory granularity."""
-        from pyspark.sql import functions as F
-
-        base = os.path.join(self.root, table)
-        if not os.path.isdir(base) or not any(
-            e.startswith("wave=") for e in os.listdir(base)
-        ):
-            return None
-        upto = self.current_wave() if upto is None else upto
         # Time-travel floor (ADVICE r03): a compaction at wave c raises
         # append_base — but a read at upto < c must see the PRE-compaction
-        # dirs (they are kept on disk for exactly this). The floor in
-        # effect at `upto` is the one recorded in that wave's log entry,
-        # not the current pointer's.
-        pointer = self._read_pointer()
-        if upto != int(pointer["wave"]):
-            # no log entry: no compaction can have been published at or
-            # before `upto` without one, so no floor
-            pointer = self._wave_log(upto) or {}
+        # dirs (they are kept on disk for exactly this). The floor and the
+        # schema in effect at `upto` are the ones recorded in that wave's
+        # log entry, not the current pointer's.
+        pointer = self._read_pointer() if upto is None else self._wave_log(upto)
+        if table not in (pointer or {}).get("schemas", {}):
+            return None
+        upto = int(pointer["wave"])
         floor = int(pointer.get("append_base", {}).get(table, 0))
-        df = spark.read.option("basePath", base).parquet(base)
+        base = os.path.join(self.root, table)
+        df = (
+            spark.read.schema(_schema(pointer, table).add("wave", IntegerType()))
+            .option("basePath", base)
+            .parquet(base)
+        )
         return df.filter((F.col("wave") >= floor) & (F.col("wave") <= upto))
 
     def commit_wave(
@@ -251,7 +265,9 @@ class SnapshotCatalog:
 
         `staged` maps table → snapshot name returned by :meth:`stage`.
         Tables not in `staged` keep their previous snapshot (copy-on-write
-        at table granularity). ``append_base`` marks append tables whose
+        at table granularity). The schemas of every table this process
+        staged since the last commit are published with the snapshot
+        names. ``append_base`` marks append tables whose
         content this wave REWROTE wholesale (compaction/eviction): their
         pre-`wave` append dirs become invisible atomically with the
         commit — the physical dirs stay (time travel), readers skip them.
@@ -260,6 +276,7 @@ class SnapshotCatalog:
         if wave <= pointer["wave"]:
             raise ValueError(f"wave {wave} already committed (at {pointer['wave']})")
         pointer["tables"].update(staged)
+        pointer.setdefault("schemas", {}).update(self._staged_schemas)
         if append_base:
             ab = pointer.setdefault("append_base", {})
             ab.update({t: int(w) for t, w in append_base.items()})
@@ -276,3 +293,9 @@ class SnapshotCatalog:
         self._session_staged = {
             p for p in self._session_staged if not p.endswith(f"wave={wave}")
         }
+        self._staged_schemas = {}
+
+
+def _schema(pointer: dict, table: str) -> StructType:
+    """The schema pointer doc `pointer` records for `table`."""
+    return StructType.fromJson(pointer["schemas"][table])

@@ -321,7 +321,7 @@ def _select(ready: DataFrame, budget: int) -> DataFrame:
     and test sessions). With AQE off and host_state sort-merge joined,
     ``ready`` is already hash-partitioned by host, Spark drops the
     partial limit with the exchange, and a hot host's whole slice is
-    sorted in one task (ROADMAP item 4). Larger budgets plan the plain
+    sorted in one task (ROADMAP item 6). Larger budgets plan the plain
     exchange and sort."""
     w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url_canon"))
     return (

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from findopendata_spark.registry import load
 from findopendata_spark.session import cached, session_cache
 
 
@@ -167,7 +168,7 @@ def ivf_index(
     both live as Iceberg tables bucketed by cell)."""
 
     def build() -> dict:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        emb = load(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
         cents = cached(train_ivf_centroids(emb, n_cells=n_cells, n_iter=n_iter))

@@ -13,9 +13,12 @@ does not depend on which query module happens to be imported first.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from findopendata_spark.session import session_cache
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -24,7 +27,21 @@ REGISTRY: dict[str, tuple[QueryFn, str]] = {}
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """The sf table ``name`` under ``sf_dir``, read with a known schema.
+
+    Reading parquet without a schema starts a one-task Spark job that
+    reads a file footer, on every read. The schema is inferred once and
+    kept in :func:`findopendata_spark.session.session_cache`, keyed on the
+    path with its ``st_mtime_ns`` and size, so a rewritten file is never
+    read with a stale schema; every later read passes it and starts no
+    job."""
+    path = f"{sf_dir}/{name}.parquet"
+    st = os.stat(path)
+    schema = session_cache(
+        spark, ("sf_schema", path, st.st_mtime_ns, st.st_size),
+        lambda: spark.read.parquet(path).schema,
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def query(oracle_sql: str) -> Callable[[QueryFn], QueryFn]:

@@ -35,6 +35,7 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from findopendata_spark.registry import load
 from findopendata_spark.session import cached
 
 _LOG = logging.getLogger(__name__)
@@ -68,9 +69,7 @@ class ApiServer:
         from findopendata_spark.queries2 import _sketch_store
         from findopendata_spark.sketch.trigram_index import trigram_index
 
-        self._docs = cached(
-            self.spark.read.parquet(f"{self.sf_dir}/documents.parquet")
-        )
+        self._docs = cached(load(self.spark, self.sf_dir, "documents"))
         self._docs.count()
         self._t_idx = self._warm_trigram("title")
         self._d_idx = self._warm_trigram("description")

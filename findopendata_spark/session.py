@@ -149,9 +149,10 @@ def session_cache(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
     applicationId is unique per SparkContext (unlike id(), which GC can
     recycle). ``build()`` runs only on a miss, once even when threads
     miss together; if it raises, nothing is stored and the next call
-    builds again. The sketch store, the IVF index and the trigram
-    posting indexes share this one cache, so each caller's ``key`` must
-    tell its entries apart from the others'.
+    builds again. The sketch store, the IVF index, the trigram
+    posting indexes and the sf table schemas (``registry.load``) share
+    this one cache, so each caller's ``key`` must tell its entries apart
+    from the others'.
     """
     full = (spark.sparkContext.applicationId, *key)
     with _BUILD_LOCKS_LOCK:

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from findopendata_spark.registry import load
 from findopendata_spark.session import cached, session_cache
 
 _TRIGRAM_RE = r"(?s)(?=([^\p{Cs}].{2}))"
@@ -113,7 +114,7 @@ def trigram_index(spark: SparkSession, sf_dir: str, field: str) -> dict:
         # partitions — every warm probe then scans the cache in parallel
         # instead of walking all postings on one core.
         docs = spread_scan(
-            spark.read.parquet(f"{sf_dir}/documents.parquet"),
+            load(spark, sf_dir, "documents"),
             ["doc_id", "text"],
         )
         grams = _field_grams(docs, field)

@@ -969,6 +969,31 @@ def test_wave_restores_partitions_when_selection_fails(spark, tmp_path,
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
+def test_recorded_schemas_match_footers(spark, crawl_state):
+    """The schema each commit records for a table is the one schema
+    inference would read from its files, so reading with it changes no
+    column or type: every snapshot table and every append table
+    (with its ``wave`` partition column)."""
+    import json
+    import os
+
+    cat = crawl_state.cat
+    with open(os.path.join(cat.root, "_current.json")) as f:
+        ptr = json.load(f)
+    assert set(ptr["schemas"]) >= {"frontier", "host_state", "robots",
+                                   "seen", "docs", "lineage"}
+    for table in ptr["schemas"]:
+        if table in ptr["tables"]:
+            got = cat.read(spark, table)
+            inferred = spark.read.option("recursiveFileLookup", "true").parquet(
+                os.path.join(cat.root, table, ptr["tables"][table]))
+        else:
+            got = cat.read_appended(spark, table)
+            base = os.path.join(cat.root, table)
+            inferred = spark.read.option("basePath", base).parquet(base)
+        assert got.schema == inferred.schema, table
+
+
 def test_steady_state_wave_reuses_generated_code(spark, tmp_path):
     """A steady-state wave finds its generated classes in Spark's codegen
     cache instead of compiling them again. With the default 100-entry
@@ -994,3 +1019,32 @@ def test_steady_state_wave_reuses_generated_code(spark, tmp_path):
     assert fetched > 0
     compiled_in_wave_3 = n3 - after_wave[1][1]
     assert compiled_in_wave_3 <= 10, compiled_in_wave_3
+
+
+def test_steady_state_wave_job_count(spark, tmp_path):
+    """A steady-state wave runs a pinned number of Spark jobs. The wave
+    is bound by job latency, so a job added to it should be a decision:
+    this count moves only with an edit here. Table reads pass their
+    recorded schemas and start no footer-inference job (38 jobs per wave
+    when each of the five reads inferred). Same shape as
+    test_steady_state_wave_reuses_generated_code; each wave's seen-filter
+    delta is awaited before counting, so its jobs land in its own wave."""
+    from findopendata_spark.catalog import SnapshotCatalog
+    from findopendata_spark.crawler import wave as W
+
+    cfg = CrawlConfig(per_host_wave_budget=10, index_fields=("text",))
+    gcfg = G.GraphConfig(graph_size=5_000, out_links_min=2, out_links_max=4)
+    state = W.CrawlState(SnapshotCatalog(str(tmp_path / "crawl_jobs")), cfg, gcfg)
+    W.init_state(spark, state, bulk_seeds=2_000)
+    tracker = spark.sparkContext.statusTracker()
+    last_job = []
+    try:
+        for wave in (1, 2, 3):
+            assert W.run_wave(spark, state, wave)["fetched"] > 0
+            W._await_seen_delta(state)
+            last_job.append(max(tracker.getJobIdsForGroup(None)))
+    finally:
+        W._await_seen_delta(state)
+        if state._bg_ex is not None:
+            state._bg_ex.shutdown(wait=True)
+    assert last_job[2] - last_job[1] == 33

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from findopendata_spark.enrichment import VEC_DIM, enrich_titles
+from findopendata_spark.ranking import global_row_number
 from findopendata_spark.sources.scroll import paginate, pages_in_scroll_order
 
 
@@ -47,3 +48,27 @@ def test_pages_in_scroll_order(spark):
         ids = sorted(r["rec_id"] for r in page_df.collect())
         seen.append((p, ids))
     assert seen == [(0, [0, 1, 2, 3]), (1, [4, 5, 6, 7]), (2, [8, 9])]
+
+
+def test_global_row_number_has_no_unpartitioned_window(spark):
+    """The global rank over many range partitions is exact, and every
+    Window in its physical plan has partition keys (one without logs "No
+    Partition Defined for Window operation" on every call)."""
+    df = spark.range(0, 1000, 1, 7).select(
+        (F.col("id") * 7919 % 1000).alias("k")
+    )
+    out = global_row_number(df, [F.asc("k")], "rn")
+    assert all(r["rn"] == r["k"] for r in out.collect())
+
+    def nodes(plan):
+        yield plan
+        kids = plan.children()
+        for i in range(kids.size()):
+            yield from nodes(kids.apply(i))
+
+    windows = [
+        n for n in nodes(out._jdf.queryExecution().sparkPlan())
+        if n.nodeName() == "Window"
+    ]
+    assert windows
+    assert [w.partitionSpec().isEmpty() for w in windows] == [False] * len(windows)

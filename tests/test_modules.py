@@ -112,6 +112,71 @@ def test_read_at_time_travel(spark, tmp_path):
     assert cat.read_at(spark, "t", 2) is None
 
 
+def _jobs_started(spark, read) -> int:
+    """Spark jobs started while ``read()`` builds its DataFrame. Job ids
+    grow by one per job; the count of retained ids would stop growing
+    once the status store trims old jobs."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def last():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    before = last()
+    read()
+    return last() - before
+
+
+def test_table_reads_start_no_spark_job(spark, tmp_path):
+    """Every read of a committed table passes the schema its commit
+    recorded, so no read starts the one-task footer job schema inference
+    costs: the catalog's four readers, on the live catalog and on a fresh
+    one over the same root (resume), and a repeated registry.load.
+    read_at(k) reads wave k's columns, and a rewritten sf table is read
+    with its new schema."""
+    from findopendata_spark.registry import load
+
+    root = str(tmp_path / "cat")
+    cat = SnapshotCatalog(root)
+    w0 = spark.createDataFrame([("a", 1)], "key string, v long")
+    w1 = spark.createDataFrame([("b", 2.5, True)], "key string, x double, flag boolean")
+    cat.stage_append(w0, "log", 0)
+    cat.commit_wave(0, {"t": cat.stage(w0, "t", 0)})
+    cat.stage_append(w0.select("key", (F.col("v") + 1).alias("v")), "log", 1)
+    cat.commit_wave(1, {"t": cat.stage(w1, "t", 1)})
+
+    for c in (cat, SnapshotCatalog(root)):
+        reads = {
+            "read": lambda: c.read(spark, "t"),
+            "read_at": lambda: c.read_at(spark, "t", 0),
+            "read_append_wave": lambda: c.read_append_wave(spark, "log", 1),
+            "read_appended": lambda: c.read_appended(spark, "log"),
+            "read_appended_upto": lambda: c.read_appended(spark, "log", upto=0),
+        }
+        assert {k: _jobs_started(spark, r) for k, r in reads.items()} == {
+            k: 0 for k in reads
+        }
+        assert c.read(spark, "t").columns == ["key", "x", "flag"]
+        assert c.read_at(spark, "t", 0).columns == ["key", "v"]
+        assert [tuple(r) for r in c.read_at(spark, "t", 1).collect()] == [
+            ("b", 2.5, True)
+        ]
+        assert sorted(
+            tuple(r) for r in c.read_appended(spark, "log").collect()
+        ) == [("a", 1, 0), ("a", 2, 1)]
+        assert [tuple(r) for r in c.read_append_wave(spark, "log", 1).collect()] == [
+            ("a", 2)
+        ]
+        assert c.read_appended(spark, "log", upto=0).count() == 1
+
+    sf = str(tmp_path / "sf")
+    w0.write.parquet(f"{sf}/tiny.parquet")
+    load(spark, sf, "tiny")  # the first read infers the schema
+    assert _jobs_started(spark, lambda: load(spark, sf, "tiny")) == 0
+    w1.write.mode("overwrite").parquet(f"{sf}/tiny.parquet")
+    assert load(spark, sf, "tiny").columns == ["key", "x", "flag"]
+    assert _jobs_started(spark, lambda: load(spark, sf, "tiny")) == 0
+
+
 # ----------------------------------------------------------- metadata (§3.2)
 
 def test_build_packages_strip_and_coalesce(spark):
