@@ -1,7 +1,8 @@
 """The crawl wave: politeness-scheduled fetch micro-batches over the frontier.
 
-One wave = one deterministic Spark job, the re-expression of the
-reference's Celery fan-out (``harvest_datasets.py:16-19`` →
+One wave = one deterministic sequence of Spark jobs (a steady wave runs
+33, pinned by ``test_steady_state_wave_job_count``), the re-expression
+of the reference's Celery fan-out (``harvest_datasets.py:16-19`` →
 ``ckan_crawler.py:278-297`` per-endpoint tasks → per-package → per-resource
 tasks). Stage map:
 
@@ -321,7 +322,7 @@ def _select(ready: DataFrame, budget: int) -> DataFrame:
     and test sessions). With AQE off and host_state sort-merge joined,
     ``ready`` is already hash-partitioned by host, Spark drops the
     partial limit with the exchange, and a hot host's whole slice is
-    sorted in one task (ROADMAP item 6). Larger budgets plan the plain
+    sorted in one task (an open ROADMAP item). Larger budgets plan the plain
     exchange and sort."""
     w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url_canon"))
     return (

@@ -7,9 +7,7 @@ need Python (canonical JSON, model-backed enrichment).
 
 from findopendata_spark.functions.urls import canonicalize_url, url_host  # noqa: F401
 from findopendata_spark.functions.text import (  # noqa: F401
-    normalize_value,
     strip_html,
     sanitize_filename,
     coalesce_timestamps,
-    is_numeric_str,
 )

@@ -15,16 +15,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 
-def normalize_value(v: Column) -> Column:
-    """String normalization applied before sketching.
-
-    Reference: ``findopendata/column_sketch.py:171-174`` — every value is
-    stringified then ``strip().lower()``-ed. For string columns this is the
-    whole story; non-scalar values go through :func:`canonical_json_udf`.
-    """
-    return F.lower(F.trim(v.cast("string")))
-
-
 @F.pandas_udf(StringType())
 def canonical_json_udf(v: pd.Series) -> pd.Series:
     """``json.dumps(value, sort_keys=True)`` for non-scalar values.
@@ -74,12 +64,3 @@ def coalesce_timestamps(*cols: Column) -> Column:
     """
     return F.coalesce(*[F.to_timestamp(c) for c in cols])
 
-
-def is_numeric_str(v: Column) -> Column:
-    """True when the string parses as a float.
-
-    Reference: ``findopendata/column_sketch.py:9-15`` (``float(x)``
-    try/except). ``try_cast("double")`` accepts the same lexical space
-    and returns NULL (not an ANSI error) on malformed input.
-    """
-    return v.try_cast("double").isNotNull()

@@ -31,8 +31,10 @@ ones — the reference's ``ON CONFLICT ... DO UPDATE``, merged on read.
   doc re-indexed to a zero vector leaves no stale cell behind.
 - **column sketches** (:func:`sketch_delta`): each wave appends the new
   records' sketch rows WITH mergeable state (counters, MinHash, HLL
-  registers, first-N distinct sample, raw word-vector sum/count); the
-  served sketch is
+  registers, first-N distinct sample, raw word-vector sum/count) and
+  each column's distinct normalized values (``column_values``, the sets
+  exact joinable-column search verifies against, read as their distinct
+  union); the served sketch is
   :func:`findopendata_spark.sketch.column_sketch.merge_sketch_rows`
   over the per-wave rows — the reference's ``ColumnSketch.update``
   fold, replayed associatively through the same merge, sample and
@@ -120,21 +122,15 @@ def ivf_delta(spark: SparkSession, cat: SnapshotCatalog, vecs: DataFrame) -> Del
     return [("ivf_assignments", rows)], snaps
 
 
-def sketch_delta(
-    records: DataFrame, cfg: SketchConfig, n_salts: int,
-    keep_records: bool = False,
-) -> Delta:
-    """Mergeable sketch rows of (file_id, column_name, ingest_key, val)
-    records; ``keep_records`` also appends the records themselves."""
-    from findopendata_spark.sketch.column_sketch import sketch_columns
+def sketch_delta(records: DataFrame, cfg: SketchConfig, n_salts: int) -> Delta:
+    """Mergeable sketch rows and distinct value sets of (file_id,
+    column_name, ingest_key, val) records. Nothing is cached, so a wave
+    leaves the session cache as it found it (the sketch plan reuses its
+    exchanges across its three reads of the records)."""
+    from findopendata_spark.sketch import column_sketch as cs
 
-    appends = [(
-        "column_sketches",
-        sketch_columns(records, cfg, n_salts, keep_merge_state=True),
-    )]
-    if keep_records:
-        appends.append(("sketch_records", records))
-    return appends, {}
+    rows = cs.sketch_rows(cs.normalized(records), cfg, n_salts, keep_merge_state=True)
+    return [("column_sketches", rows), ("column_values", cs.column_values(records))], {}
 
 
 def crawl_deltas(
@@ -264,20 +260,10 @@ class IncrementalIndexes:
     def sketch_append(
         self, spark: SparkSession, records: DataFrame,
         cfg: SketchConfig | None = None, n_salts: int = 16,
-        keep_records: bool = False,
     ) -> int:
-        """Sketch this wave's NEW records and append the mergeable rows.
-
-        ``keep_records`` additionally appends the raw records to a
-        ``sketch_records`` table — the verify corpus for exact-set
-        containment search (serving's joinable-column route). In a crawl
-        catalog the records are a projection of the ``docs`` table and
-        need not be kept twice; standalone sketch pipelines (the
-        reference's sketch tables, ``create_sketch_tables.sql``) keep
-        them so the serving cluster can verify without the source lake."""
-        return self._commit(sketch_delta(
-            records, cfg or SketchConfig(), n_salts, keep_records
-        ))
+        """Sketch this wave's NEW records and append the mergeable rows
+        and the columns' value sets."""
+        return self._commit(sketch_delta(records, cfg or SketchConfig(), n_salts))
 
     def sketch_read(
         self, spark: SparkSession, cfg: SketchConfig | None = None
@@ -288,4 +274,10 @@ class IncrementalIndexes:
 
         rows = self.cat.read_appended(spark, "column_sketches")
         return merge_sketch_rows(rows, cfg or SketchConfig())
+
+    def values_read(self, spark: SparkSession) -> DataFrame:
+        """Each column's distinct normalized values: the distinct union of
+        the per-wave value sets (appends never retract)."""
+        rows = self.cat.read_appended(spark, "column_values")
+        return rows.drop("wave").distinct()
 

@@ -14,7 +14,7 @@ from findopendata_spark.config import SketchConfig
 from findopendata_spark.dedup import FP_BASE, FP_MOD, rolling_min_fingerprint
 from findopendata_spark.registry import load, query
 from findopendata_spark.session import cached, session_cache
-from findopendata_spark.sketch.column_sketch import sketch_columns
+from findopendata_spark.sketch.column_sketch import column_values, sketch_columns
 from findopendata_spark.sketch.lsh import joinable_column_search_exact
 
 
@@ -135,9 +135,9 @@ def q16_joinable_column_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-banded joinable-column search, exact-verified (J7/C8/C9/W1).
 
     Candidate generation is MinHash banding (engine-internal, parity
-    pinned by tests/test_sketch.py); the verify stage recomputes Jaccard
-    and true containment exactly from the distinct normalized value sets
-    and drops candidates below threshold, so the emitted quantities are
+    pinned by tests/test_sketch.py); the verify stage computes Jaccard
+    and true containment exactly from the store's distinct normalized
+    value sets and drops candidates below threshold, so the emitted quantities are
     SQL-expressible and the DuckDB oracle checks them exactly (set
     algebra over grouped distinct values).
 
@@ -148,35 +148,44 @@ def q16_joinable_column_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic — LSH recall for identical sets is exactly 1 (equal
     signatures collide in every band).
     """
-    records, sk = _sketch_store(spark, sf_dir)
+    values, sk = _sketch_store(spark, sf_dir)
     qf = sk.filter(F.col("file_id") == "q_probe")
-    return joinable_column_search_exact(qf, sk, records, threshold=0.1, k=10)
+    return joinable_column_search_exact(qf, sk, values, threshold=0.1, k=10)
 
 
-# session-lifetime sketch store per sf_dir: the reference PERSISTS
-# column_sketches as tables written once by the sketch pipeline
-# (``sql/create_sketch_tables.sql:13-51``) and its join-search API only
-# PROBES them (``apiserver/main.py:408-458``); rebuilding the whole
-# store inside every query call was an engine artifact. Same pattern as
-# the trigram posting index (sketch/trigram_index.py). At 100 TB this
-# cache is the persisted `column_sketches` Iceberg table, appended
-# incrementally per crawl wave.
+def _dockey_records(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q16's corpus as sketch records: one "dockey" column per source
+    (file_id), plus the q_probe file duplicating the lexicographically
+    first source's column."""
+    docs = load(spark, sf_dir, "documents")
+    base = docs.select(
+        F.col("source").alias("file_id"),
+        F.lit("dockey").alias("column_name"),
+        F.col("doc_id").alias("ingest_key"),
+        F.col("doc_id").cast("string").alias("val"),
+    )
+    probe = base.join(
+        base.select(F.min("file_id").alias("file_id")), "file_id"
+    ).withColumn("file_id", F.lit("q_probe"))
+    return base.unionByName(probe)
+
+
+# session-lifetime sketch store per sf_dir: (value sets, sketches). The
+# reference PERSISTS column_sketches as tables written once by the sketch
+# pipeline (``sql/create_sketch_tables.sql:13-51``) and its join-search
+# API only PROBES them (``apiserver/main.py:408-458``); rebuilding the
+# whole store inside every query call was an engine artifact. Same
+# pattern as the trigram posting index (sketch/trigram_index.py). At
+# 100 TB this cache is the persisted `column_sketches` and
+# `column_values` tables, appended incrementally per crawl wave.
 def _sketch_store(spark: SparkSession, sf_dir: str):
     def build():
-        docs = load(spark, sf_dir, "documents")
-        base = docs.select(
-            F.col("source").alias("file_id"),
-            F.lit("dockey").alias("column_name"),
-            F.col("doc_id").alias("ingest_key"),
-            F.col("doc_id").cast("string").alias("val"),
-        )
-        probe = base.join(
-            base.select(F.min("file_id").alias("file_id")), "file_id"
-        ).withColumn("file_id", F.lit("q_probe"))
-        records = cached(base.unionByName(probe))
+        records = _dockey_records(spark, sf_dir)
         sk = cached(sketch_columns(records, SketchConfig(), n_salts=4))
+        values = cached(column_values(records))
         sk.count()  # materialize the store once
-        return records, sk
+        values.count()
+        return values, sk
 
     return session_cache(spark, (sf_dir,), build)
 

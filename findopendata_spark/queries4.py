@@ -61,7 +61,7 @@ def q29_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the identical quantities, so the score is exact on both
     sides (round 4dp)."""
     docs = load(spark, sf_dir, "documents")
-    return bm25_rank(docs, _Q29_TERMS, limit=20)
+    return bm25_rank(docs, _Q29_TERMS, limit=20)[0]
 
 
 def bm25_rank(
@@ -70,8 +70,11 @@ def bm25_rank(
     text_col: str = "text",
     id_col: str = "doc_id",
     limit: int = 20,
-) -> DataFrame:
-    """BM25-lite ranking kernel (shared by q29 and the serving layer).
+) -> tuple[DataFrame, DataFrame]:
+    """BM25-lite ranking kernel (shared by q29 and the serving layer):
+    the ranked (id, score) frame, and the cached per-doc term-count frame
+    it reads. Reruns of the same terms reuse that cache; a caller whose
+    terms will not come back (a serving request) unpersists it.
 
     r06 shape: ONE tokenize+explode pass computes every per-doc term
     frequency as a codegen'd hash aggregate (`sum(when(tok = t))`), and
@@ -86,9 +89,8 @@ def bm25_rank(
     the same order with the same arithmetic."""
     terms = list(dict.fromkeys(terms))  # unique, order-preserving
     if not terms:
-        return docs.select(
-            F.col(id_col), F.lit(0.0).alias("score")
-        ).limit(0)
+        empty = docs.select(F.col(id_col), F.lit(0.0).alias("score")).limit(0)
+        return empty, empty
     from findopendata_spark.dedup import spread_scan
 
     toks = tokens(F.col(text_col))
@@ -121,12 +123,13 @@ def bm25_rank(
         tf_c = F.col(f"tf_{i}")
         sat = tf_c.cast("double") / (tf_c + F.lit(1.2))
         score = score + sat * idf
-    return (
+    ranked = (
         cnts.select(F.col(id_col), F.round(score, 4).alias("score"))
         .filter(F.col("score") > 0)
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(limit)
     )
+    return ranked, cnts
 
 
 @query("""

@@ -3,7 +3,7 @@
 | reference                                           | here |
 |------------------------------------------------------|------|
 | ``put_json(records, gzip_compress=True)`` (S11)      | :func:`write_json_gzip` |
-| ``put_avro(schema, records, codec="snappy")`` (S10)  | :func:`write_avro` (needs the spark-avro jar — import-gated) |
+| ``put_avro(schema, records, codec="snappy")`` (S10)  | :func:`write_avro` (spark-avro if its jar is present, else the engine's OCF encoder) |
 | ``\\COPY (row_to_json(...)) TO PROGRAM 'gzip'`` (S17) | :func:`export_column_sketches` |
 | resource-URL CSV export (S17)                        | :func:`write_csv` |
 

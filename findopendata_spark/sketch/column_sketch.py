@@ -8,10 +8,10 @@ row per (file, column) into ``column_sketches``
 
 Spark re-expression — three shuffles, no per-row Python:
 
-1. **normalize + hash (JVM)**: ``lower(trim(val))`` (C1), empty/numeric
-   flags (F5/F6), murmur3-32 + xxhash64 of the normalized value. SQL
-   NULLs become the string ``"null"`` exactly like the reference's
-   ``json.dumps(None)`` (``column_sketch.py:171-172``).
+1. **normalize + hash (JVM)**: :func:`normalized` — ``lower(trim(val))``
+   (C1), empty/numeric flags (F5/F6) — then murmur3-32 + xxhash64 of the
+   normalized value. SQL NULLs become the string ``"null"`` exactly like
+   the reference's ``json.dumps(None)`` (``column_sketch.py:171-172``).
 2. **partial sketch** (``applyInPandas`` over (file, col, salt)): numpy
    MinHash partial (K=256, seed 43 permutation table) + HLL registers.
    The salt bounds group size, so no single Python task ever holds a
@@ -25,7 +25,10 @@ Spark re-expression — three shuffles, no per-row Python:
    ``column_sketch.py:181-183`` — order keys make that reproducible,
    SURVEY §7 hard-parts list).
 
-This module owns every column-sketch rule. The fold is four functions:
+This module owns every column-sketch rule, the value normalization
+included: :func:`column_values` (each column's distinct value set, which
+exact joinable-column search verifies against) applies the same
+:func:`normalized` rule the sketch does. The fold is four functions:
 :func:`_fold` (MinHash/HLL merge), :func:`_first_n` (arrival-order
 sample), :func:`_sum_vec` (word-vector sums) and :func:`_finish` (every
 derived field). :func:`sketch_columns` feeds them per-record partials;
@@ -172,38 +175,52 @@ def _wv_name_vector(names: pd.Series) -> pd.Series:
 _KEY = ["file_id", "column_name"]
 
 
-def sketch_columns(
-    records: DataFrame,
-    cfg: SketchConfig | None = None,
-    n_salts: int = 16,
-    keep_merge_state: bool = False,
-) -> DataFrame:
-    """records(file_id, column_name, ingest_key, val) → one sketch row per
-    (file_id, column_name), reference-rule semantics throughout.
-
-    ``keep_merge_state`` additionally emits the raw mergeable word-vector
-    accumulators (``wv_n_in``, ``wv_sum_vec``) so per-wave sketch rows can
-    be combined EXACTLY by :func:`merge_sketch_rows` (``word_vector_data``
-    alone loses the sum/count split to float division, which would break
-    bit-parity with a full rebuild)."""
-    cfg = cfg or SketchConfig()
-
-    # 1. normalize + flags + hashes, all JVM-side
-    norm = F.lower(F.trim(F.coalesce(F.col("val"), F.lit("null"))))
-    # cached: counters, partials and firsts all read it
-    r = cached(records.select(
+def normalized(records: DataFrame) -> DataFrame:
+    """records(file_id, column_name, ingest_key, val) → (file_id,
+    column_name, ingest_key, v, is_empty, is_numeric): the one value
+    normalization, ``lower(trim(val))`` with a SQL NULL as ``"null"``.
+    An empty ``v`` is counted but is never a value."""
+    return records.select(
         "file_id",
         "column_name",
         "ingest_key",
-        norm.alias("v"),
+        F.lower(F.trim(F.coalesce(F.col("val"), F.lit("null")))).alias("v"),
     ).withColumns(
         {
             "is_empty": F.length("v") == 0,
             # try_cast: ANSI mode (Spark 4 default) makes plain cast throw
             "is_numeric": F.col("v").try_cast("double").isNotNull(),
         }
-    ))
+    )
 
+
+def column_values(records: DataFrame) -> DataFrame:
+    """records → (file_id, column_name, v), each column's distinct
+    :func:`normalized` non-empty values."""
+    norm = normalized(records)
+    return norm.filter(~F.col("is_empty")).select(*_KEY, "v").distinct()
+
+
+def sketch_columns(
+    records: DataFrame, cfg: SketchConfig | None = None, n_salts: int = 16
+) -> DataFrame:
+    """records(file_id, column_name, ingest_key, val) → one sketch row per
+    (file_id, column_name), reference-rule semantics throughout. The
+    normalized records are cached: counters, partials and firsts all
+    read them."""
+    return sketch_rows(cached(normalized(records)), cfg or SketchConfig(), n_salts)
+
+
+def sketch_rows(
+    r: DataFrame, cfg: SketchConfig, n_salts: int, keep_merge_state: bool = False
+) -> DataFrame:
+    """:func:`normalized` records → sketch rows; reads ``r`` three times.
+
+    ``keep_merge_state`` additionally emits the raw mergeable word-vector
+    accumulators (``wv_n_in``, ``wv_sum_vec``) so per-wave sketch rows can
+    be combined EXACTLY by :func:`merge_sketch_rows` (``word_vector_data``
+    alone loses the sum/count split to float division, which would break
+    bit-parity with a full rebuild)."""
     # 4a. counters (reference properties: column_sketch.py:72-117)
     counters = r.groupBy(*_KEY).agg(
         F.count(F.lit(1)).alias("count"),

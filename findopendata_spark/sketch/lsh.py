@@ -198,7 +198,7 @@ def joinable_column_search(
 def joinable_column_search_exact(
     query_sketches: DataFrame,
     index_sketches: DataFrame,
-    records: DataFrame,
+    values: DataFrame,
     num_perm: int = 256,
     threshold: float = 0.1,
     k: int = 50,
@@ -208,53 +208,45 @@ def joinable_column_search_exact(
 
     Same candidate pipeline as :func:`joinable_column_search` (bands
     equi-join, indexability, self-exclusion, host filter), but the
-    verify stage recomputes Jaccard and containment exactly from the
-    columns' distinct normalized value sets, then drops candidates below
-    ``threshold`` — so the output is fully deterministic and
-    SQL-expressible (the driver oracles it with ``list_intersect``-style
-    set algebra; the reference's estimate-based verify lives in
-    :func:`joinable_column_search`).
+    verify stage computes Jaccard and containment exactly from the
+    indexed value sets ``values`` (file_id, column_name, v: each
+    column's distinct normalized values, ``column_sketch.column_values``),
+    then drops candidates below ``threshold`` — so the output is fully
+    deterministic and SQL-expressible (q16's DuckDB oracle checks it
+    with set algebra; the reference's estimate-based verify lives in
+    :func:`joinable_column_search`). Column sizes are value counts.
 
-    Scale shape: the intersection is an equi-join on the normalized
-    value between the probe's distinct values and the candidate columns'
-    distinct values — never a per-column array collect. At 100 TB the
-    value join touches only candidate columns (the LSH prefilter), and
-    true containment = |X ∩ Q| / |Q| replaces the reference's
+    Scale shape: one pass over the candidate columns' values (the LSH
+    prefilter bounds it), each left-joined against the broadcast query
+    column values; per candidate, the row count is |X| and the matched
+    count |X ∩ Q|, so a zero-overlap candidate scores 0 rather than
+    vanishing. True containment |X ∩ Q| / |Q| replaces the reference's
     MinHash-derived approximation (``apiserver/main.py:408-414``).
     """
     cand = _candidates(
         query_sketches, index_sketches, num_perm, threshold, original_hosts
     )
-    # Distinct normalized non-empty values per column (same C1/F5 rules
-    # the sketcher applies: lower/trim, SQL NULL -> "null", skip empty).
-    norm = F.lower(F.trim(F.coalesce(F.col("val"), F.lit("null"))))
-    vals = (
-        records.select("file_id", "column_name", norm.alias("v"))
-        .filter(F.length("v") > 0)
-        .distinct()
-    )
-    sizes = vals.groupBy("file_id", "column_name").agg(
-        F.count(F.lit(1)).alias("x_size")
-    )
-    q_files = query_sketches.select("file_id").distinct()
-    q_vals = vals.join(q_files, "file_id").select(
+    q_vals = values.join(
+        query_sketches.select("file_id", "column_name"),
+        ["file_id", "column_name"],
+    ).select(
         F.col("file_id").alias("q_file_id"),
         F.col("column_name").alias("q_column_name"),
         "v",
+        F.lit(True).alias("_in_q"),
     )
     q_sizes = q_vals.groupBy("q_file_id", "q_column_name").agg(
         F.count(F.lit(1)).alias("q_size")
     )
-    inter = (
-        cand.join(vals, ["file_id", "column_name"])
-        .join(q_vals, ["q_file_id", "q_column_name", "v"])
-        .groupBy("q_file_id", "q_column_name", "file_id", "column_name")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
     verified = (
-        cand.join(inter, ["q_file_id", "q_column_name", "file_id", "column_name"], "left")
-        .withColumn("inter", F.coalesce("inter", F.lit(0)))
-        .join(sizes, ["file_id", "column_name"])
+        cand.join(values, ["file_id", "column_name"])
+        # probe-sized: broadcast, so the plan never hinges on AQE stage order
+        .join(F.broadcast(q_vals), ["q_file_id", "q_column_name", "v"], "left")
+        .groupBy("q_file_id", "q_column_name", "file_id", "column_name")
+        .agg(
+            F.count(F.lit(1)).alias("x_size"),
+            F.count("_in_q").alias("inter"),
+        )
         .join(q_sizes, ["q_file_id", "q_column_name"])
         .withColumn(
             "jaccard",

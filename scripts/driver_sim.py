@@ -2,10 +2,13 @@
 DuckDB oracle hash-compare at sf=0.01. Run with TZ=America/New_York to
 probe timezone stability.
 
+Usage: python scripts/driver_sim.py [qNN_name ...]   (no names: all 50)
+
 A query is RED when its result differs from the oracle's, or when running
 it changed the session's shuffle partitions or time zone (queries leave
-the session as they found it). Prints each query's wall seconds and the
-total."""
+the session as they found it). A mismatch prints both sides' heads and
+column dtypes (a dtype difference is the usual cause of a hash mismatch).
+Prints each query's wall seconds and the total."""
 from __future__ import annotations
 
 import os
@@ -94,6 +97,9 @@ def main() -> int:
         else:
             print(f"{name}: ROWS/SCHEMA {len(s)}/{len(o)} "
                   f"{list(s.columns)} vs {list(o.columns)}")
+        if not ok:
+            print("  dtypes spark:", dict(s.dtypes.astype(str)),
+                  "oracle:", dict(o.dtypes.astype(str)))
         if changed:
             ok = False
             print(f"{name}: CHANGED SESSION CONF {changed}")

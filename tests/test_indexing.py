@@ -279,6 +279,68 @@ def test_crawl_wave_index_maintenance(spark, tmp_path):
     )
     assert merged == rebuilt and len(merged) > 0
 
+    # value sets: the distinct union over waves == a rebuild
+    from findopendata_spark.sketch.column_sketch import column_values
+
+    assert _rows(idx.values_read(spark)) == _rows(column_values(rec))
+
+
+def _rows(df) -> set:
+    return {tuple(r) for r in df.select("file_id", "column_name", "v").collect()}
+
+
+def test_column_values_incremental_equals_rebuild(spark, docs, tmp_path):
+    """Value sets appended over three waves — overlapping values across
+    waves, NULLs, blanks and case/whitespace variants — read back as the
+    distinct normalized values of all records, on the live catalog and
+    on a fresh catalog over the same root."""
+    from findopendata_spark.sketch.column_sketch import column_values
+
+    rec = docs.selectExpr(
+        "doc_id as ingest_key",
+        "stack(3, 'lang', if(doc_id % 5 = 0, upper(lang), lang), "
+        "'mod7', if(doc_id % 11 = 0, null, concat(' ', cast(doc_id % 7 as string))), "
+        "'blank', if(doc_id % 2 = 0, '  ', source)) as (column_name, val)",
+    ).withColumn("file_id", F.lit("documents"))
+    root = str(tmp_path / "cat")
+    idx = IncrementalIndexes(SnapshotCatalog(root))
+    for part in range(3):
+        idx.sketch_append(spark, rec.filter(F.col("ingest_key") % 3 == part))
+
+    want = _rows(column_values(rec))
+    assert {v for f, c, v in want if c == "mod7"} == {
+        "null", *(str(i) for i in range(7))
+    }
+    assert "" not in {v for _, _, v in want}
+    assert all(v == v.lower() for _, c, v in want if c == "lang")
+    assert _rows(idx.values_read(spark)) == want
+    assert _rows(IncrementalIndexes(SnapshotCatalog(root)).values_read(spark)) == want
+
+
+def test_sketch_indexing_crawl_leaves_cache_as_found(spark, tmp_path):
+    """A wave that sketches its new docs caches nothing it keeps: the
+    session's cached-plan count after each wave equals the count before
+    the crawl."""
+    import gc
+
+    from findopendata_spark.config import CrawlConfig
+    from findopendata_spark.crawler import crawl
+    from findopendata_spark.crawler import graph as G
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def n_cached() -> int:
+        gc.collect()
+        return cache.cachedData().size()
+
+    before = n_cached()
+    after_wave = []
+    cfg = CrawlConfig(per_host_wave_budget=10, index_sketch=True)
+    crawl(spark, str(tmp_path / "crawl_cache"), waves=3, cfg=cfg,
+          gcfg=G.GraphConfig(graph_size=500),
+          log=lambda s: after_wave.append(n_cached()))
+    assert after_wave == [before] * 3
+
 
 def test_sketch_incremental_resume_from_disk(spark, docs, tmp_path):
     """A new IncrementalIndexes over the same catalog root (fresh

@@ -177,8 +177,8 @@ def test_session_cached_indexes_ignore_shuffle_partitions(spark):
     def partitions() -> dict[str, int]:
         session._SESSION_CACHE.clear()
         spark.catalog.clearCache()
-        records, sketches = _sketch_store(spark, SF_DIR)
-        frames = {"records": records, "sketches": sketches}
+        values, sketches = _sketch_store(spark, SF_DIR)
+        frames = {"values": values, "sketches": sketches}
         frames.update(trigram_index(spark, SF_DIR, "text"))
         frames.update(ivf_index(spark, SF_DIR, n_cells=8, n_iter=2))
         del frames["query_row"]
@@ -203,3 +203,17 @@ def test_q50_runs_without_python(spark):
     mapInPandas node in its physical plan."""
     plan = _plan_text(entry_mod.queries()["q50_frame_sample"](spark, SF_DIR))
     assert not [n for n in ("Python", "Pandas", "Arrow") if n in plan], plan
+
+
+def test_q16_warm_call_job_count(spark):
+    """A warm q16 call (sketch store cached) verifies against the
+    store's value sets and runs a pinned number of Spark jobs, the same
+    on every call: the query values are broadcast, so the order in which
+    adaptive stages finish cannot add a shuffle (19 jobs when verify
+    re-normalized the raw records and planned the candidates twice)."""
+    q16 = entry_mod.queries()["q16_joinable_column_search"]
+    want = q16(spark, SF_DIR).collect()
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None))
+    assert q16(spark, SF_DIR).collect() == want
+    assert max(tracker.getJobIdsForGroup(None)) - before == 10

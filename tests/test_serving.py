@@ -145,21 +145,20 @@ def test_concurrent_requests(api):
 
 def test_joinable_route_from_persisted_store(api, spark, tmp_path):
     """VERDICT r04 item 6: with a catalog supplied, warm() probes the
-    PERSISTED column_sketches table IncrementalIndexes maintains (plus
-    its kept verify records) instead of the session-cached store — and
-    the joinable-column route answers identically (the reference's LSH
+    PERSISTED column_sketches and column_values tables IncrementalIndexes
+    maintains instead of the session-cached store — and the
+    joinable-column route answers identically (the reference's LSH
     server boots from the sketch table the same way,
     lshserver/main.go:26-82)."""
     from findopendata_spark.catalog import SnapshotCatalog
     from findopendata_spark.config import SketchConfig
     from findopendata_spark.indexing import IncrementalIndexes
-    from findopendata_spark.queries2 import _sketch_store
+    from findopendata_spark.queries2 import _dockey_records
     from findopendata_spark.serving import ApiServer
 
-    records, _ = _sketch_store(spark, SF)
     root = str(tmp_path / "serve_cat")
     IncrementalIndexes(SnapshotCatalog(root)).sketch_append(
-        spark, records, SketchConfig(), n_salts=4, keep_records=True
+        spark, _dockey_records(spark, SF), SketchConfig(), n_salts=4
     )
     srv = ApiServer(spark, SF, catalog_root=root)
     srv.warm()
@@ -202,3 +201,78 @@ def test_similar_packages_route_from_persisted_trigram_store(
     got = srv.similar_packages(q_doc, 10)
     want = api.similar_packages(q_doc, 10)
     assert got == want and len(got) == 10
+
+
+def test_joinable_route_from_crawl_catalog(spark, tmp_path):
+    """A crawl with index_sketch=True appends each column's value set
+    next to its sketch, so a server over the crawl's catalog answers the
+    joinable-column route: a probe file duplicating one host's URL
+    column finds exactly that host, with Jaccard and containment 1."""
+    from findopendata_spark.config import CrawlConfig
+    from findopendata_spark.crawler import crawl
+    from findopendata_spark.crawler import graph as G
+    from findopendata_spark.indexing import IncrementalIndexes
+    from findopendata_spark.serving import ApiServer
+
+    root = str(tmp_path / "crawl_cat")
+    st = crawl(spark, root, waves=3,
+               cfg=CrawlConfig(per_host_wave_budget=10, index_sketch=True),
+               gcfg=G.GraphConfig(graph_size=500))
+    docs = st.cat.read_appended(spark, "docs")
+    host = (
+        docs.groupBy("host").count().orderBy(F.desc("count"), "host")
+        .first()["host"]
+    )
+    IncrementalIndexes(st.cat).sketch_append(spark, docs.filter(
+        F.col("host") == host
+    ).select(
+        F.lit("q_probe").alias("file_id"),
+        F.lit("url").alias("column_name"),
+        F.col("doc_id").alias("ingest_key"),
+        F.col("url_canon").alias("val"),
+    ))
+    srv = ApiServer(spark, SF, catalog_root=root)
+    srv.start()
+    try:
+        code, body = _get(
+            srv,
+            "/api/joinable-column-search?file_id=q_probe&column_name=url"
+            "&threshold=0.5&limit=5",
+        )
+    finally:
+        srv.stop()
+    assert code == 200
+    assert [
+        (r["file_id"], r["column_name"], r["jaccard"], r["containment"])
+        for r in body["results"]
+    ] == [(host, "url", 1.0, 1.0)]
+
+
+def test_keyword_routes_release_their_cache(api, spark):
+    """Each distinct keyword query caches its term counts for the
+    request only: the session's cached-plan count is the same after
+    the requests as before."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
+    for q in ("data", "open+data", "table+query", "spark+data+table"):
+        assert _get(api, f"/api/keyword-search?q={q}&limit=5")[0] == 200
+        assert _get(api, f"/api/keyword-search-title?q={q}")[0] == 200
+    assert cache.cachedData().size() == before
+
+
+def test_malformed_parameters_answer_400(api):
+    """A parameter that does not parse, or a negative limit, answers 400
+    naming the parameter."""
+    cases = [
+        ("/api/keyword-search?q=data&limit=ten", "limit"),
+        ("/api/keyword-search-title?q=data&limit=-1", "limit"),
+        ("/api/similar-packages?id=abc", "id"),
+        ("/api/package/abc", "id"),
+        ("/api/joinable-column-search?file_id=q_probe&column_name=dockey"
+         "&threshold=high", "threshold"),
+    ]
+    for path, name in cases:
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _get(api, path)
+        assert e.value.code == 400, path
+        assert name in json.loads(e.value.read())["error"], path

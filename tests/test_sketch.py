@@ -270,6 +270,7 @@ def test_word_vector_sketch_fields(spark):
 def test_joinable_search_host_filter(spark):
     """F8 (apiserver/main.py:452-454): original_hosts restricts candidate
     files; self-exclusion still applies; exact variant honors it too."""
+    from findopendata_spark.sketch.column_sketch import column_values
     from findopendata_spark.sketch.lsh import joinable_column_search_exact
 
     rows = []
@@ -290,7 +291,59 @@ def test_joinable_search_host_filter(spark):
     ).collect()
     assert {r["file_id"] for r in only_h2} == {"h2"}
     exact_h2 = joinable_column_search_exact(
-        qf, sk, rec, threshold=0.1, k=5, original_hosts=["h2"]
+        qf, sk, column_values(rec), threshold=0.1, k=5,
+        original_hosts=["h2"],
     ).collect()
     assert {r["file_id"] for r in exact_h2} == {"h2"}
     assert exact_h2[0]["containment"] == 1.0  # q ⊂ big exactly
+
+
+def test_exact_verify_scores_zero_overlap_candidates_at_threshold_zero(spark):
+    """Exact verify over indexed value sets: column sizes are value
+    counts after normalization (trim, lowercase, NULL as "null", empty
+    skipped); a candidate that shares no value with the query scores 0
+    and is kept at threshold 0, dropped above it."""
+    from findopendata_spark.sketch.column_sketch import column_values
+    from findopendata_spark.sketch.lsh import joinable_column_search_exact
+
+    rows = [("qf", "q", i, f"k{i:04d}") for i in range(60)]
+    rows += [("h1", "big", i, f"K{i:04d} ") for i in range(80)]
+    rows += [("h2", "part", i, f"k{i + 50:04d}") for i in range(80)]
+    rows += [("h3", "dup", i, f"k{i:04d}") for i in range(60)]
+    rows += [
+        ("h4", "sm", i, None if i == 0 else "" if i == 1 else f"k{i:04d}")
+        for i in range(40)
+    ]
+    schema = "file_id string, column_name string, ingest_key long, val string"
+    sk = sketch_columns(spark.createDataFrame(rows, schema), SketchConfig(), n_salts=2)
+    qf = sk.filter(F.col("file_id") == "qf")
+    # h3's sketch matches the query's, but its indexed values share none
+    verify_rows = [
+        (f, c, k, "z" + v if f == "h3" else v) for f, c, k, v in rows
+    ]
+    values = column_values(spark.createDataFrame(verify_rows, schema))
+
+    sets: dict[tuple, set] = {}
+    for f, c, _, v in verify_rows:
+        v = "null" if v is None else v.strip().lower()
+        if v:
+            sets.setdefault((f, c), set()).add(v)
+    q = sets[("qf", "q")]
+
+    def scores(threshold):
+        return {
+            (r["file_id"], r["column_name"]): (r["jaccard"], r["containment"])
+            for r in joinable_column_search_exact(
+                qf, sk, values, threshold=threshold, k=10
+            ).collect()
+        }
+
+    got = scores(0.0)
+    assert set(got) == {("h1", "big"), ("h2", "part"), ("h3", "dup"), ("h4", "sm")}
+    for key, (j, c) in got.items():
+        x = sets[key]
+        inter = len(x & q)
+        assert j == round(inter / len(x | q), 6), key
+        assert c == round(inter / len(q), 6), key
+    assert got[("h3", "dup")] == (0.0, 0.0)
+    assert set(scores(0.05)) == set(got) - {("h3", "dup")}
