@@ -24,7 +24,7 @@ from findopendata_spark import queries as Q  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (pricing summary) on /root/testdata/sf0.001."""
-    return Q.q01_pricing_summary(spark, "/root/testdata/sf0.001")
+    return Q.QUERIES["q01_pricing_summary"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

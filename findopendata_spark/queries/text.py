@@ -1,21 +1,20 @@
-"""Third batch of driver-contract queries: dedup / text-analysis /
-scalar-function operators (SURVEY §2.7, training-data ops)."""
+"""Text-analysis queries over documents (SURVEY §2.7 scalar functions,
+§2.4 aggregations; training-data text ops): token counts, language ID,
+quality scores, BPE-ish tokenization, filename and HTML cleaning, and
+length percentiles."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from findopendata_spark.dedup import (
-    md5_simhash64,
-    near_dup_pairs,
-    spread_scan,
-)
+from findopendata_spark.dedup import spread_scan
 from findopendata_spark.functions.text import sanitize_filename, strip_html
 from findopendata_spark.registry import load, query
 from findopendata_spark.text_analysis import (
     LANG_MARKERS,
     PUNCT_CLASS,
+    TOKENS_SQL,
     bpe_token_count,
     lang_id,
     quality_features,
@@ -23,89 +22,64 @@ from findopendata_spark.text_analysis import (
     tokens,
 )
 
+
+@query("""
+        SELECT doc_id, n_chars,
+               len(string_split(trim(text), ' ')) AS n_tokens,
+               len(list_distinct(string_split(trim(text), ' '))) AS n_uniq_tokens
+        FROM documents
+    """)
+def q09_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token counting / doc stats (training-data op: text analysis)."""
+    docs = load(spark, sf_dir, "documents")
+    toks = F.split(F.trim(F.col("text")), " ")
+    return docs.select(
+        "doc_id",
+        "n_chars",
+        F.size(toks).alias("n_tokens"),
+        F.size(F.array_distinct(toks)).alias("n_uniq_tokens"),
+    )
+
+
+@query("""
+        SELECT lang,
+               count(*) AS n_docs,
+               CAST(sum(n_chars) AS BIGINT) AS total_chars,
+               CAST(sum(CASE WHEN len(string_split(trim(text), ' ')) >= 50
+                             THEN 1 ELSE 0 END) AS BIGINT) AS n_quality_docs
+        FROM documents
+        GROUP BY lang
+    """)
+def q10_lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Language distribution + quality gate (training-data op)."""
+    docs = load(spark, sf_dir, "documents")
+    toks = F.size(F.split(F.trim(F.col("text")), " "))
+    return (
+        docs.withColumn("n_tokens", toks)
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+            F.sum(F.when(F.col("n_tokens") >= 50, 1).otherwise(0)).alias(
+                "n_quality_docs"
+            ),
+        )
+    )
+
+
 _EN = ", ".join(f"'{m}'" for m in LANG_MARKERS["en"])
-_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 _PUNCT_SQL = PUNCT_CLASS.replace("'", "''")  # SQL string-literal escaping
-
-
-@query(f"""
-        WITH t AS (
-            SELECT doc_id, list_distinct(list_transform(
-                generate_series(1, greatest(len({_TOKS}) - 4, 0)),
-                i -> array_to_string({_TOKS}[i:i+4], ' '))) AS sh
-            FROM documents
-        )
-        SELECT a.doc_id AS a, b.doc_id AS b,
-               round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                     (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))),
-                     6) AS jaccard
-        FROM t a JOIN t b ON a.doc_id < b.doc_id
-        WHERE len(a.sh) + len(b.sh) > 0
-          AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-              (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5
-    """)
-def q22_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-duplicate pairs with exact shingle-set verify
-    (training-data dedup op). The oracle is a full O(n^2) exact pairwise
-    scan — the LSH path must find exactly the same >= 0.5 pairs (the
-    corpus separates at ~0.88 vs ~0.02, so banding recall is ~1)."""
-    docs = load(spark, sf_dir, "documents")
-    return near_dup_pairs(docs, threshold=0.5, num_perm=128, shingle_n=5)
-
-
-# Exact SimHash twin: same md5-derived 60-bit token hash, same
-# sign-of-sum rule per bit, computed with set algebra in DuckDB.
-@query(f"""
-        WITH toks AS (
-            SELECT doc_id, unnest({_TOKS}) AS tok FROM documents
-        ), th AS (
-            SELECT doc_id,
-                   CAST(list_sum(list_transform(generate_series(1, 15),
-                       p -> CAST(strpos('0123456789abcdef',
-                                        substr(md5(tok), p, 1)) - 1 AS BIGINT)
-                            << (4 * (15 - p)))) AS BIGINT) AS h
-            FROM toks
-        ), bits AS (
-            SELECT doc_id, t.b AS bit,
-                   sum(CASE WHEN (h >> t.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-            FROM th CROSS JOIN generate_series(0, 59) AS t(b)
-            GROUP BY doc_id, t.b
-        )
-        SELECT doc_id,
-               CAST(sum(CASE WHEN s > 0 THEN CAST(1 AS BIGINT) << bit
-                             ELSE 0 END) AS BIGINT) AS simhash
-        FROM bits GROUP BY doc_id
-    """)
-def q23_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash per document over md5-derived 60-bit token hashes.
-
-    The token hash is the first 15 hex chars of md5(token) parsed as an
-    integer — a deterministic hash both engines share, so the DuckDB
-    oracle recomputes the identical SimHash exactly (bit b of the
-    fingerprint = sign of the ±1 sum over the token multiset). The
-    engine side stays vectorized: hashing is JVM-side (md5 + conv inside
-    ``transform``), the bit-sum fold is the numpy ``simhash64`` kernel.
-    (xxhash64-based SimHash — the cheaper production variant — keeps its
-    property tests in tests/test_modules.py.)
-
-    r06: served by the fused ``md5_simhash64`` kernel — tokenize + md5 +
-    sign-fold in one ``mapInPandas`` pass with per-batch token
-    factorization (md5 once per distinct token), replacing the
-    interpreted JVM ``transform(md5+conv)`` (guide §4.2; bit-exact).
-    """
-    docs = load(spark, sf_dir, "documents")
-    return md5_simhash64(docs)
 
 
 @query(f"""
         WITH f AS (
             SELECT doc_id, text,
-                   len(string_split_regex(lower(trim(text)), '\\s+')) AS n_tokens,
+                   len({TOKENS_SQL}) AS n_tokens,
                    length(text) AS n_chars,
                    length(text) - length(regexp_replace(text,
                        '{_PUNCT_SQL}', '', 'g')) AS punct,
                    len(list_intersect(
-                       string_split_regex(lower(trim(text)), '\\s+'),
+                       {TOKENS_SQL},
                        [{_EN}])) AS stop_hits
             FROM documents
         )
@@ -143,9 +117,9 @@ def q24_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lang-ID oracle: same scores, same tie-break (earlier lang wins ties)
 _SCORES = {
     lg: (
-        f"CAST(len(list_intersect({_TOKS}, "
+        f"CAST(len(list_intersect({TOKENS_SQL}, "
         f"[{', '.join(repr(m) for m in ms)}])) AS DOUBLE) / "
-        f"greatest(len({_TOKS}), 1)"
+        f"greatest(len({TOKENS_SQL}), 1)"
     )
     for lg, ms in LANG_MARKERS.items()
 }
@@ -170,12 +144,12 @@ def q25_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("""
+@query(f"""
         SELECT doc_id,
                CAST(len(regexp_extract_all(text,
                    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS INT)
                    AS n_bpe_tokens,
-               CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS INT)
+               CAST(len({TOKENS_SQL}) AS INT)
                    AS n_ws_tokens
         FROM documents
     """)
@@ -235,3 +209,27 @@ def q28_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("<h1>"), F.substring("text", 1, 40), F.lit("</h1><p>body</p>")
     )
     return docs.select("doc_id", strip_html(html).alias("title"))
+
+
+@query("""
+        SELECT lang, count(*) AS n_docs,
+               round(quantile_cont(n_chars, 0.25), 4) AS p25,
+               round(quantile_cont(n_chars, 0.50), 4) AS p50,
+               round(quantile_cont(n_chars, 0.75), 4) AS p75
+        FROM documents GROUP BY lang
+    """)
+def q43_token_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact interpolated percentiles of document length per lang
+    (``F.percentile`` = SQL PERCENTILE_CONT semantics; DuckDB twin is
+    ``quantile_cont``)."""
+    docs = load(spark, sf_dir, "documents")
+    pct = F.percentile("n_chars", F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
+    return (
+        docs.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.round(F.element_at(pct, 1), 4).alias("p25"),
+            F.round(F.element_at(pct, 2), 4).alias("p50"),
+            F.round(F.element_at(pct, 3), 4).alias("p75"),
+        )
+    )

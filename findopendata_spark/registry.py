@@ -6,9 +6,9 @@ DuckDB SQL twin the correctness gate compares it against::
     @query('''SELECT ... FROM documents''')
     def q07_exact_dedup(spark, sf_dir): ...
 
-This module imports no query module. :mod:`findopendata_spark.queries`
-imports them all and publishes the registry sorted by name, so its order
-does not depend on which query module happens to be imported first.
+This module imports no query module. The :mod:`findopendata_spark.queries`
+package imports its domain modules and publishes the registry sorted by
+name, so its order does not depend on which module is imported first.
 """
 
 from __future__ import annotations

@@ -12,7 +12,7 @@ indexes, never scan the corpus):
 | reference route                     | engine kernel |
 |-------------------------------------|---------------|
 | ``/api/original-hosts``             | distinct sources (tiny agg) |
-| ``/api/keyword-search``             | BM25-lite (`queries4.bm25_rank`) |
+| ``/api/keyword-search``             | BM25-lite (`ranking.bm25_rank`) |
 | ``/api/keyword-search-title``       | BM25-lite over the title slice |
 | ``/api/similar-packages``           | dual trigram posting-index probe |
 | ``/api/package/<id>``               | brief row lookup |
@@ -35,8 +35,16 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from findopendata_spark.ranking import bm25_rank
 from findopendata_spark.registry import load
 from findopendata_spark.session import cached
+from findopendata_spark.sketch.lsh import joinable_column_search_exact, sketch_store
+from findopendata_spark.sketch.trigram_index import (
+    field_rule,
+    similar_packages,
+    trigram_index,
+    trigram_set_expr,
+)
 
 _LOG = logging.getLogger(__name__)
 
@@ -70,8 +78,6 @@ class ApiServer:
 
     # -- warm-up ----------------------------------------------------------
     def warm(self) -> None:
-        from findopendata_spark.queries2 import _sketch_store
-
         self._docs = cached(load(self.spark, self.sf_dir, "documents"))
         self._docs.count()
         self._t_idx = self._warm_trigram("title")
@@ -93,9 +99,7 @@ class ApiServer:
             self._values.count()
             self._sketches.count()
         else:
-            self._values, self._sketches = _sketch_store(
-                self.spark, self.sf_dir
-            )
+            self._values, self._sketches = sketch_store(self.spark, self.sf_dir)
 
     def _warm_trigram(self, field: str) -> dict:
         """Probe-ready trigram index for one field: from the PERSISTED
@@ -104,8 +108,6 @@ class ApiServer:
         way the reference LSH server boots from the sketch table,
         lshserver/main.go:26-82), else the session-built sf_dir index
         (catalog-less demo path)."""
-        from findopendata_spark.sketch.trigram_index import trigram_index
-
         if self.catalog_root is not None:
             from findopendata_spark.catalog import SnapshotCatalog
             from findopendata_spark.indexing import IncrementalIndexes
@@ -130,8 +132,6 @@ class ApiServer:
     def _bm25(docs, query: str, **kw) -> list[dict]:
         """``bm25_rank`` rows for one request. Its term-count cache is
         released afterwards: distinct queries never reuse it."""
-        from findopendata_spark.queries4 import bm25_rank
-
         out, cnts = bm25_rank(docs, query.lower().split(), **kw)
         try:
             return [r.asDict() for r in out.collect()]
@@ -142,26 +142,22 @@ class ApiServer:
         return self._bm25(self._docs, query, limit=limit)
 
     def keyword_search_title(self, query: str, limit: int = 10) -> list[dict]:
-        titles = self._docs.select(
-            "doc_id", F.substring("text", 1, 40).alias("title")
-        )
+        _, title = field_rule("title")
+        titles = self._docs.select("doc_id", title.alias("title"))
         return self._bm25(titles, query, text_col="title", limit=limit)
 
     def similar_packages(self, doc_id: int, limit: int = 50) -> list[dict]:
         """Dual (title, description) trigram ranking for an arbitrary
         query doc — q41's kernel with the query row parameterized
         (reference ``apiserver/main.py:173-207``)."""
-        from findopendata_spark.sketch.trigram_index import (
-            similar_packages,
-            trigram_set_expr,
-        )
-
+        cond, title = field_rule("title")
+        _, description = field_rule("description")
         row = (
             self._docs.filter(F.col("doc_id") == doc_id)
-            .filter(F.length("text") >= 80)
+            .filter(cond)
             .select(
-                trigram_set_expr(F.substring("text", 1, 40)).alias("tg"),
-                trigram_set_expr(F.substring("text", 41, 200)).alias("dg"),
+                trigram_set_expr(title).alias("tg"),
+                trigram_set_expr(description).alias("dg"),
             )
             .collect()
         )
@@ -174,14 +170,16 @@ class ApiServer:
         return [r.asDict() for r in out.collect()]
 
     def package_brief(self, doc_id: int) -> dict | None:
+        _, title = field_rule("title")
+        _, description = field_rule("description")
         rows = (
             self._docs.filter(F.col("doc_id") == doc_id)
             .select(
                 "doc_id",
                 "source",
                 "lang",
-                F.substring("text", 1, 40).alias("title"),
-                F.substring("text", 41, 200).alias("description"),
+                title.alias("title"),
+                description.alias("description"),
                 F.length("text").alias("n_chars"),
             )
             .collect()
@@ -192,8 +190,6 @@ class ApiServer:
         self, file_id: str, column_name: str, threshold: float = 0.1,
         limit: int = 10,
     ) -> list[dict]:
-        from findopendata_spark.sketch.lsh import joinable_column_search_exact
-
         qf = self._sketches.filter(
             (F.col("file_id") == file_id)
             & (F.col("column_name") == column_name)

@@ -33,8 +33,13 @@ from __future__ import annotations
 from functools import lru_cache
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from findopendata_spark.config import SketchConfig
+from findopendata_spark.registry import load
+from findopendata_spark.session import cached, session_cache
+from findopendata_spark.sketch.column_sketch import column_values, sketch_columns
 
 
 @lru_cache(maxsize=None)
@@ -257,3 +262,38 @@ def joinable_column_search_exact(
         .filter(F.col("jaccard") >= threshold)
     )
     return _top_k(verified, k)
+
+
+def dockey_records(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q16's corpus as sketch records: one "dockey" column per source
+    (file_id), plus the q_probe file duplicating the lexicographically
+    first source's column."""
+    docs = load(spark, sf_dir, "documents")
+    base = docs.select(
+        F.col("source").alias("file_id"),
+        F.lit("dockey").alias("column_name"),
+        F.col("doc_id").alias("ingest_key"),
+        F.col("doc_id").cast("string").alias("val"),
+    )
+    probe = base.join(
+        base.select(F.min("file_id").alias("file_id")), "file_id"
+    ).withColumn("file_id", F.lit("q_probe"))
+    return base.unionByName(probe)
+
+
+def sketch_store(spark: SparkSession, sf_dir: str):
+    """(value sets, sketches) of :func:`dockey_records`, built once per
+    session and sf_dir: the store q16 and the catalog-less serving path
+    probe. The reference persists column_sketches once
+    (``sql/create_sketch_tables.sql:13-51``) and its join-search API only
+    probes them (``apiserver/main.py:408-458``); at 100 TB this cache is
+    the `column_sketches` and `column_values` tables a crawl appends."""
+    def build():
+        records = dockey_records(spark, sf_dir)
+        sk = cached(sketch_columns(records, SketchConfig(), n_salts=4))
+        values = cached(column_values(records))
+        sk.count()  # materialize the store once
+        values.count()
+        return values, sk
+
+    return session_cache(spark, (sf_dir,), build)

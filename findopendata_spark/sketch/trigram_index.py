@@ -64,10 +64,11 @@ def trigram_set_expr(col):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _field_rule(field: str):
-    """(condition, column) for an indexed field — mirrors the query
-    synthesis q17/q41 use (title = first 40 chars, description = chars
-    41-240); docs failing the condition have no grams for the field."""
+def field_rule(field: str):
+    """(condition, column) for an indexed field: the one title/description
+    synthesis q17, q41 and the serving routes use (title = first 40
+    chars, description = chars 41-240, both only for docs of >= 80
+    chars); docs failing the condition have no grams for the field."""
     if field == "text":
         return F.length("text") >= 3, F.col("text")
     if field == "title":
@@ -79,7 +80,7 @@ def _field_rule(field: str):
 
 def _field_grams(docs: DataFrame, field: str) -> DataFrame:
     """(doc_id, g) for the docs that pass the field's condition."""
-    cond, col = _field_rule(field)
+    cond, col = field_rule(field)
     return docs.filter(cond).select("doc_id", trigram_set_expr(col).alias("g"))
 
 
@@ -92,7 +93,7 @@ def _field_grams_total(docs: DataFrame, field: str) -> DataFrame:
     tombstone (n_grams=0) under the new wave — latest-wave-wins then
     retires the doc's OLD postings instead of serving stale content.
     Exploded postings are unchanged (empty arrays explode to nothing)."""
-    cond, col = _field_rule(field)
+    cond, col = field_rule(field)
     g = F.when(cond, trigram_set_expr(col)).otherwise(
         F.array().cast("array<string>")
     )

@@ -35,10 +35,14 @@ _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def tokens(text: Column) -> Column:
-    """The one whitespace tokenizer (the DuckDB oracles'
-    ``string_split_regex(lower(trim(x)), '\\s+')``); :func:`tokens_py` is
-    its twin for Python batch kernels."""
+    """The one whitespace tokenizer. :data:`TOKENS_SQL` is its DuckDB twin
+    over the ``text`` column, :func:`tokens_py` its twin for Python batch
+    kernels."""
     return F.split(F.lower(F.trim(text)), r"\s+")
+
+
+# :func:`tokens` of the ``text`` column in the DuckDB oracles
+TOKENS_SQL = "string_split_regex(lower(trim(text)), '\\s+')"
 
 
 def tokens_py(text: str | None) -> list[str]:

@@ -171,13 +171,13 @@ def test_session_cached_indexes_ignore_shuffle_partitions(spark):
     shuffle partition count was when they were built."""
     from findopendata_spark import session
     from findopendata_spark.embedding import ivf_index
-    from findopendata_spark.queries2 import _sketch_store
+    from findopendata_spark.sketch.lsh import sketch_store
     from findopendata_spark.sketch.trigram_index import trigram_index
 
     def partitions() -> dict[str, int]:
         session._SESSION_CACHE.clear()
         spark.catalog.clearCache()
-        values, sketches = _sketch_store(spark, SF_DIR)
+        values, sketches = sketch_store(spark, SF_DIR)
         frames = {"values": values, "sketches": sketches}
         frames.update(trigram_index(spark, SF_DIR, "text"))
         frames.update(ivf_index(spark, SF_DIR, n_cells=8, n_iter=2))

@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import subprocess
 import sys
 import threading
 import time
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 from types import SimpleNamespace
 
@@ -53,7 +56,7 @@ def test_registry_names_sorted_and_every_query_has_an_oracle():
 
 def test_registry_order_does_not_depend_on_import_order():
     code = (
-        "import findopendata_spark.queries2\n"
+        "import findopendata_spark.queries.similarity\n"
         "import __spark_entry__ as E\n"
         "print(','.join(E.queries()))\n"
     )
@@ -62,6 +65,47 @@ def test_registry_order_does_not_depend_on_import_order():
         text=True, check=True,
     )
     assert out.stdout.strip().split(",") == NAMES
+
+
+# query count of each domain module of findopendata_spark.queries
+LAYOUT = {
+    "relational": 11, "events": 6, "text": 8, "records": 7,
+    "similarity": 9, "dedup": 7, "multimodal": 2,
+}
+
+
+def test_queries_are_filed_in_the_seven_domain_modules():
+    counts = Counter(fn.__module__ for fn in entry_mod.queries().values())
+    assert counts == {
+        f"findopendata_spark.queries.{m}": n for m, n in LAYOUT.items()
+    }
+    assert glob.glob(os.path.join(REPO, "findopendata_spark", "queries*.py")) == []
+
+
+def test_no_engine_module_imports_a_query_module():
+    """Query modules sit on top of the engine: no module outside them
+    imports one (the package imports by absolute name only)."""
+    offenders = []
+    pattern = os.path.join(REPO, "findopendata_spark", "**", "*.py")
+    for path in glob.glob(pattern, recursive=True):
+        mod = os.path.relpath(path, REPO)[: -len(".py")].replace(os.sep, ".")
+        if mod.startswith("findopendata_spark.queries"):
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                assert node.level == 0, f"relative import in {mod}"
+                names = [f"{node.module}.{a.name}" for a in node.names]
+            else:
+                continue
+            offenders += [
+                (mod, n) for n in names
+                if n.startswith("findopendata_spark.queries")
+            ]
+    assert offenders == []
 
 
 @pytest.mark.parametrize("oracle", [None, "", "  \n  ", b"SELECT 1"])

@@ -153,12 +153,12 @@ def test_joinable_route_from_persisted_store(api, spark, tmp_path):
     from findopendata_spark.catalog import SnapshotCatalog
     from findopendata_spark.config import SketchConfig
     from findopendata_spark.indexing import IncrementalIndexes
-    from findopendata_spark.queries2 import _dockey_records
     from findopendata_spark.serving import ApiServer
+    from findopendata_spark.sketch.lsh import dockey_records
 
     root = str(tmp_path / "serve_cat")
     IncrementalIndexes(SnapshotCatalog(root)).sketch_append(
-        spark, _dockey_records(spark, SF), SketchConfig(), n_salts=4
+        spark, dockey_records(spark, SF), SketchConfig(), n_salts=4
     )
     srv = ApiServer(spark, SF, catalog_root=root)
     srv.warm()
