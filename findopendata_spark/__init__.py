@@ -8,11 +8,11 @@ Architecture (Spark-first, NOT a port):
 - The reference's Celery-task dataflow (RabbitMQ boundaries) becomes
   DataFrame transformation stages inside a per-wave Spark job; the queue
   boundary becomes the shuffle.
-- Postgres registry tables (URL-seen, packages, package_files,
-  column_sketches) become snapshot-versioned parquet tables with atomic
-  commits and MERGE semantics (:mod:`findopendata_spark.catalog`) — the
-  interface mirrors Iceberg's (``append``/``merge``/``snapshot``/time
-  travel) so a real deployment swaps in an Iceberg catalog unchanged.
+- Postgres registry tables (URL-seen, column_sketches) become
+  snapshot-versioned parquet tables with one atomic commit per wave
+  (:mod:`findopendata_spark.catalog`) — the interface mirrors Iceberg's
+  (snapshot/append staging, atomic commit, time travel) so a real
+  deployment swaps in an Iceberg catalog unchanged.
 - Per-record Python operators become vectorized column expressions or
   Arrow-batched pandas UDFs; no per-row Python anywhere on the hot path.
 """

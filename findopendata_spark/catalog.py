@@ -44,9 +44,6 @@ _POINTER = "_current.json"
 class SnapshotCatalog:
     def __init__(self, root: str):
         self.root = root
-        # append dirs staged by THIS process for the in-flight wave;
-        # distinguishes live staging from a killed run's leftovers
-        self._session_staged: set[str] = set()
         # table -> schema (StructType.jsonValue) of what this process
         # staged for the in-flight wave; commit_wave publishes them
         self._staged_schemas: dict[str, dict] = {}
@@ -142,64 +139,6 @@ class SnapshotCatalog:
         self._staged_schemas[table] = df.schema.jsonValue()
         return snap
 
-    # -- keyed upsert (MERGE INTO semantics) --------------------------------
-    def merge_upsert(
-        self,
-        spark: SparkSession,
-        table: str,
-        updates: DataFrame,
-        keys: list[str],
-        ts_col: str | None = None,
-    ) -> None:
-        """Iceberg-style ``MERGE INTO table USING updates ON keys``.
-
-        WHEN MATCHED: the update wins — unless ``ts_col`` is given, in
-        which case the row with the greater timestamp wins (the
-        reference's conditional upsert + freshness rule, S16/F3,
-        ``ckan_crawler.py:52-58`` + ``:161-171``). WHEN NOT MATCHED:
-        insert. Copy-on-write snapshot commit; on a real cluster this is
-        one Iceberg MERGE statement.
-        """
-        from pyspark.sql import Window
-
-        current = self.read(spark, table)
-        if current is None:
-            combined = updates.withColumn("_src", F.lit(1))
-        else:
-            combined = current.withColumn("_src", F.lit(0)).unionByName(
-                updates.withColumn("_src", F.lit(1))
-            )
-        order = (
-            [F.col(ts_col).desc_nulls_last(), F.col("_src").desc()]
-            if ts_col
-            else [F.col("_src").desc()]
-        )
-        w = Window.partitionBy(*keys).orderBy(*order)
-        merged = (
-            combined.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_src")
-        )
-        wave = self.current_wave() + 1
-        # Invariant guard: committing wave k makes any append-table dir
-        # `<t>/wave=k` visible (readers filter wave <= current). A run
-        # killed mid-wave-k may have staged such dirs without committing —
-        # remove those before publishing, so "staged data is invisible
-        # until its wave commits" holds even when merge tables and append
-        # tables share a catalog root. Scope (ADVICE r02): only dirs NOT
-        # staged by this process are dead weight; appends staged live via
-        # stage_append for this wave are legitimate and publish with it.
-        for entry in os.listdir(self.root):
-            stale = os.path.join(self.root, entry, f"wave={wave}")
-            if (
-                not entry.startswith("_")
-                and os.path.isdir(stale)
-                and stale not in self._session_staged
-            ):
-                shutil.rmtree(stale)
-        snap = self.stage(merged, table, wave)
-        self.commit_wave(wave, {table: snap})
-
     # -- append-only tables (seen / docs / lineage) -------------------------
     # One immutable parquet dir per wave (``<table>/wave=<k>``); readers
     # filter ``wave <= current_wave()`` so dirs staged by a killed run are
@@ -210,7 +149,6 @@ class SnapshotCatalog:
 
     def stage_append(self, df: DataFrame, table: str, wave: int) -> None:
         path = os.path.join(self.root, table, f"wave={wave}")
-        self._session_staged.add(path)
         df.write.mode("overwrite").parquet(path)
         self._staged_schemas[table] = df.schema.jsonValue()
 
@@ -290,9 +228,6 @@ class SnapshotCatalog:
         with open(tmp, "w") as f:
             json.dump(pointer, f)
         os.replace(tmp, self._pointer_path())  # the atomic publish
-        self._session_staged = {
-            p for p in self._session_staged if not p.endswith(f"wave={wave}")
-        }
         self._staged_schemas = {}
 
 

@@ -1,8 +1,8 @@
 """Deduplication operators for training-data pipelines.
 
-Exact, MinHash+LSH, and SimHash near-dup — first-class 100 TB operators:
+MinHash+LSH and SimHash near-dup — first-class 100 TB operators (exact
+dedup is one fingerprint hash-agg, spelled by q07 itself):
 
-- **exact**: fingerprint hash-agg (one shuffle on the digest).
 - **MinHash+LSH**: word-shingle sets → per-doc MinHash signature
   (vectorized ``mapInPandas``, no shuffle — signatures are computed where
   the docs live) → banding → band-bucket self-join → exact shingle-set
@@ -842,20 +842,4 @@ def simhash_near_dup_pairs(
         .select("a", "b", ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
-    )
-
-
-def exact_dup_groups(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact dedup by normalized-content fingerprint (one hash-agg)."""
-    fp = F.md5(F.lower(F.trim(F.col(text_col))))
-    return (
-        docs.withColumn("fp", fp)
-        .groupBy("fp")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(id_col).alias("keeper"),
-        )
-        .filter(F.col("n") > 1)
     )

@@ -1,11 +1,12 @@
-"""NLP enrichment with a lazy per-executor model (SURVEY §2.7 C6, §2.4 A8).
+"""Word-vector model with a lazy per-executor load (SURVEY §2.4 A8).
 
-The reference runs spaCy over titles/descriptions inside Celery workers,
-sharing the model copy-on-write across forked processes
-(``metadata.py:50-54``, ``models/word_vector_models.py:1-11``,
-``models/__init__.py:5-19``). The Spark equivalent of that pattern is a
-module-level lazy singleton INSIDE the UDF's module: each Python worker
-loads the model once, every Arrow batch reuses it.
+The reference loads a spaCy model inside its Celery workers, sharing it
+copy-on-write across forked processes (``models/word_vector_models.py:1-11``,
+``models/__init__.py:5-19``), and sketches a column's word vectors with
+it. The Spark equivalent of that pattern is a module-level lazy
+singleton: each Python worker loads the model once, every Arrow batch of
+the column-sketch word-vector UDFs
+(:mod:`findopendata_spark.sketch.column_sketch`) reuses it.
 
 spaCy isn't in this container, so the model is pluggable:
 ``_load_model()`` returns the real pipeline when importable, else a
@@ -17,9 +18,6 @@ exercise the real Spark plumbing and a deployment only swaps the loader.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 VEC_DIM = 16
 _MODEL = None  # per-executor lazy singleton (one load per Python worker)
@@ -30,11 +28,9 @@ class _HashVectorModel:
     tokens shorter than 3 chars count as out-of-vocabulary (a fixed,
     documented rule so oov accounting is testable)."""
 
-    name = "hash-vector-stub"
-
     def vectors(self, tokens: list[str]) -> tuple[np.ndarray, int]:
-        """Per-token vectors for one value (scalar API; the batch path
-        below produces identical numbers without per-token Python)."""
+        """Per-token vectors for one value (scalar API over the same
+        vectorized kernel the column-sketch batch path calls)."""
         toks = np.asarray(tokens, dtype=object)
         if len(toks) == 0:
             return np.zeros((0, VEC_DIM), dtype=np.float32), 0
@@ -62,31 +58,6 @@ class _HashVectorModel:
             base = splitmix64(grid)
         return (base.astype(np.float64) / 2**64).astype(np.float32), ok
 
-    def batch_mean_vectors(
-        self, texts: "pd.Series"
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """(mean vector, oov count) per text for a whole Arrow batch —
-        one flat token explode + segment means, no per-row Python."""
-        tok_lists = texts.fillna("").str.lower().str.split()
-        lens = np.array([len(t) for t in tok_lists], dtype=np.int64)
-        n = len(texts)
-        means = np.zeros((n, VEC_DIM), dtype=np.float32)
-        oov = np.zeros(n, dtype=np.int64)
-        if lens.sum() == 0:
-            return means, oov
-        flat = np.concatenate([np.asarray(t, dtype=object) for t in tok_lists])
-        vecs, ok = self._token_vectors(flat)
-        row_of = np.repeat(np.arange(n), lens)
-        np.add.at(oov, row_of[~ok], 1)
-        in_rows = row_of[ok]
-        if len(in_rows):
-            sums = np.zeros((n, VEC_DIM), dtype=np.float64)
-            np.add.at(sums, in_rows, vecs.astype(np.float64))
-            counts = np.bincount(in_rows, minlength=n)
-            nz = counts > 0
-            means[nz] = (sums[nz] / counts[nz, None]).astype(np.float32)
-        return means, oov
-
 
 def _load_model():
     global _MODEL
@@ -98,104 +69,3 @@ def _load_model():
         except Exception:  # noqa: BLE001
             _MODEL = _HashVectorModel()
     return _MODEL
-
-
-def enrich_titles(df: DataFrame, text_col: str = "title") -> DataFrame:
-    """Add word_vector (mean token vector, A8) + oov_count (C6 accounting)
-    via an Arrow-batched pandas UDF; the model loads once per executor."""
-    from pyspark.sql.types import (
-        ArrayType,
-        FloatType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    out_t = StructType(
-        [
-            StructField("word_vector", ArrayType(FloatType())),
-            StructField("oov_count", IntegerType()),
-        ]
-    )
-
-    @F.pandas_udf(out_t)
-    def enrich(texts: pd.Series) -> pd.DataFrame:
-        model = _load_model()  # lazy singleton — loaded once per worker
-        if hasattr(model, "batch_mean_vectors"):
-            # stub path: one vectorized sweep per Arrow batch
-            means, oov = model.batch_mean_vectors(texts)
-            return pd.DataFrame(
-                {
-                    "word_vector": [m.tolist() for m in means],
-                    "oov_count": oov.astype(int),
-                }
-            )
-        vec_out, oov_out = [], []
-        for t in texts:  # real spaCy pipeline   # pragma: no cover
-            doc = model(t or "")
-            vv = [tok.vector for tok in doc if tok.has_vector]
-            vecs = np.stack(vv) if vv else np.zeros((0, VEC_DIM))
-            oov = sum(1 for tok in doc if not tok.has_vector)
-            mean = (
-                vecs.mean(axis=0) if len(vecs) else np.zeros(VEC_DIM, np.float32)
-            )
-            vec_out.append([float(x) for x in mean])
-            oov_out.append(int(oov))
-        return pd.DataFrame({"word_vector": vec_out, "oov_count": oov_out})
-
-    return df.withColumn("_e", enrich(F.col(text_col))).select(
-        "*", F.col("_e.word_vector").alias("word_vector"),
-        F.col("_e.oov_count").alias("oov_count"),
-    ).drop("_e")
-
-
-def enrich_doc_json(df: DataFrame, text_col: str = "title") -> DataFrame:
-    """Add the spaCy doc-JSON payload column (C6 full — the reference
-    stores ``lm.process(title).to_json()`` as jsonb,
-    ``metadata.py:50-54``). With the real pipeline the payload is
-    spaCy's own ``Doc.to_json()`` (tokens, entities, sentence spans);
-    with the stub it is the deterministic analog — token spans with the
-    in-vocabulary flag, an empty ``ents`` list, and the model name —
-    clearly marked via ``"model": "hash-vector-stub"``. Arrow-batched;
-    stub path builds every span from one vectorized tokenize pass."""
-    import json as _json
-
-    from pyspark.sql.types import StringType
-
-    @F.pandas_udf(StringType())
-    def doc_json(texts: pd.Series) -> pd.Series:
-        model = _load_model()
-        out = []
-        if hasattr(model, "_token_vectors"):
-            tok_lists = texts.fillna("").str.lower().str.split()
-            for toks in tok_lists:
-                arr = np.asarray(toks, dtype=object)
-                _, ok = (
-                    model._token_vectors(arr)
-                    if len(arr)
-                    else (None, np.zeros(0, dtype=bool))
-                )
-                pos = 0
-                spans = []
-                for t, in_vocab in zip(toks, ok):
-                    spans.append(
-                        {
-                            "text": t,
-                            "start": pos,
-                            "end": pos + len(t),
-                            "has_vector": bool(in_vocab),
-                        }
-                    )
-                    pos += len(t) + 1
-                out.append(
-                    _json.dumps(
-                        {"model": model.name, "tokens": spans, "ents": []},
-                        sort_keys=True,
-                    )
-                )
-        else:  # real spaCy   # pragma: no cover
-            for t in texts:
-                out.append(_json.dumps(model(t or "").to_json()))
-        return pd.Series(out)
-
-    return df.withColumn("doc_json", doc_json(F.col(text_col)))

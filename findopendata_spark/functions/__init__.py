@@ -1,8 +1,7 @@
 """Scalar / vectorized functions (SURVEY.md §2.7, §2.9).
 
-Everything here is a pure Spark column expression where possible (JVM-side,
-whole-stage-codegen friendly); pandas UDFs only where semantics genuinely
-need Python (canonical JSON, model-backed enrichment).
+Everything here is a pure Spark column expression (JVM-side,
+whole-stage-codegen friendly).
 """
 
 from findopendata_spark.functions.urls import canonicalize_url, url_host  # noqa: F401

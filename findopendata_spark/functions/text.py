@@ -1,34 +1,10 @@
-"""Text / timestamp / numeric scalar functions (SURVEY.md §2.7).
-
-All pure column expressions; the canonical-JSON normalizer for non-scalar
-values is the one pandas-UDF exception (dict-key ordering is not
-expressible with ``to_json``).
-"""
+"""Text / timestamp scalar functions (SURVEY.md §2.7), all pure column
+expressions."""
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
-
-
-@F.pandas_udf(StringType())
-def canonical_json_udf(v: pd.Series) -> pd.Series:
-    """``json.dumps(value, sort_keys=True)`` for non-scalar values.
-
-    Reference: ``findopendata/column_sketch.py:171-173``. Spark's
-    ``to_json`` keeps struct field order, the reference sorts keys — this
-    Arrow-batched UDF pins the reference's ordering. Used only on the
-    (rare) non-scalar columns; scalar columns never leave the JVM.
-    """
-    return v.map(
-        lambda x: None
-        if x is None
-        else json.dumps(x, sort_keys=True, separators=(",", ":"), default=str)
-    )
 
 
 def strip_html(text: Column) -> Column:
@@ -63,4 +39,3 @@ def coalesce_timestamps(*cols: Column) -> Column:
     assumed UTC (the session timezone is pinned to UTC in session.py).
     """
     return F.coalesce(*[F.to_timestamp(c) for c in cols])
-

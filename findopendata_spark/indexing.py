@@ -267,17 +267,21 @@ class IncrementalIndexes:
 
     def sketch_read(
         self, spark: SparkSession, cfg: SketchConfig | None = None
-    ) -> DataFrame:
+    ) -> DataFrame | None:
         """Merged sketch per (file_id, column_name) over all waves —
-        bit-identical to sketch_columns on the concatenated records."""
+        bit-identical to sketch_columns on the concatenated records —
+        or None when no wave appended sketches."""
         from findopendata_spark.sketch.column_sketch import merge_sketch_rows
 
         rows = self.cat.read_appended(spark, "column_sketches")
+        if rows is None:
+            return None
         return merge_sketch_rows(rows, cfg or SketchConfig())
 
-    def values_read(self, spark: SparkSession) -> DataFrame:
+    def values_read(self, spark: SparkSession) -> DataFrame | None:
         """Each column's distinct normalized values: the distinct union of
-        the per-wave value sets (appends never retract)."""
+        the per-wave value sets (appends never retract), or None when no
+        wave appended value sets."""
         rows = self.cat.read_appended(spark, "column_values")
-        return rows.drop("wave").distinct()
+        return None if rows is None else rows.drop("wave").distinct()
 

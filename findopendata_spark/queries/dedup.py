@@ -101,28 +101,39 @@ def q22_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_pairs(docs, threshold=0.5, num_perm=128, shingle_n=5)
 
 
-# Exact SimHash twin: same md5-derived 60-bit token hash, same
-# sign-of-sum rule per bit, computed with set algebra in DuckDB.
-@query(f"""
-        WITH toks AS (
-            SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
-        ), th AS (
-            SELECT doc_id,
-                   CAST(list_sum(list_transform(generate_series(1, 15),
-                       p -> CAST(strpos('0123456789abcdef',
-                                        substr(md5(tok), p, 1)) - 1 AS BIGINT)
-                            << (4 * (15 - p)))) AS BIGINT) AS h
-            FROM toks
-        ), bits AS (
-            SELECT doc_id, t.b AS bit,
-                   sum(CASE WHEN (h >> t.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-            FROM th CROSS JOIN generate_series(0, 59) AS t(b)
-            GROUP BY doc_id, t.b
-        )
+# The DuckDB SimHash twin, one CTE both SimHash oracles (q23, q49) start
+# from: the same md5-derived 60-bit token hash, the same sign-of-sum
+# rule per bit, computed with set algebra; ``sh`` holds
+# (doc_id, simhash).
+_SIMHASH_CTE = f"""
+    toks AS (
+        SELECT doc_id, unnest({TOKENS_SQL})
+            AS tok
+        FROM documents
+    ), th AS (
+        SELECT doc_id,
+               CAST(list_sum(list_transform(generate_series(1, 15),
+                   p -> CAST(strpos('0123456789abcdef',
+                                    substr(md5(tok), p, 1)) - 1 AS BIGINT)
+                        << (4 * (15 - p)))) AS BIGINT) AS h
+        FROM toks
+    ), bits AS (
+        SELECT doc_id, t.b AS bit,
+               sum(CASE WHEN (h >> t.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
+        FROM th CROSS JOIN generate_series(0, 59) AS t(b)
+        GROUP BY doc_id, t.b
+    ), sh AS (
         SELECT doc_id,
                CAST(sum(CASE WHEN s > 0 THEN CAST(1 AS BIGINT) << bit
                              ELSE 0 END) AS BIGINT) AS simhash
         FROM bits GROUP BY doc_id
+    )
+"""
+
+
+@query(f"""
+        WITH {_SIMHASH_CTE}
+        SELECT doc_id, simhash FROM sh
     """)
 def q23_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash per document over md5-derived 60-bit token hashes.
@@ -178,35 +189,8 @@ def q34_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_near_dup(emb, threshold=0.35, block_cap=1000)
 
 
-# q23's oracle SimHash (md5-derived 60-bit token hash, sign-of-sum) as a
-# CTE — then an exact all-pairs Hamming scan (the oracle may be O(n^2);
-# the engine must not be).
-_SIMHASH_CTE = f"""
-    toks AS (
-        SELECT doc_id, unnest({TOKENS_SQL})
-            AS tok
-        FROM documents
-    ), th AS (
-        SELECT doc_id,
-               CAST(list_sum(list_transform(generate_series(1, 15),
-                   p -> CAST(strpos('0123456789abcdef',
-                                    substr(md5(tok), p, 1)) - 1 AS BIGINT)
-                        << (4 * (15 - p)))) AS BIGINT) AS h
-        FROM toks
-    ), bits AS (
-        SELECT doc_id, t.b AS bit,
-               sum(CASE WHEN (h >> t.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        FROM th CROSS JOIN generate_series(0, 59) AS t(b)
-        GROUP BY doc_id, t.b
-    ), sh AS (
-        SELECT doc_id,
-               CAST(sum(CASE WHEN s > 0 THEN CAST(1 AS BIGINT) << bit
-                             ELSE 0 END) AS BIGINT) AS simhash
-        FROM bits GROUP BY doc_id
-    )
-"""
-
-
+# q49's oracle runs an exact all-pairs Hamming scan over the SimHash CTE
+# (the oracle may be O(n^2); the engine must not be).
 @query(f"""
         WITH {_SIMHASH_CTE}
         SELECT a.doc_id AS a, b.doc_id AS b,

@@ -32,7 +32,7 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from findopendata_spark.ranking import bm25_rank
@@ -59,7 +59,8 @@ class ApiServer:
     ``port=0`` binds an ephemeral port (read it from ``.port`` after
     :meth:`start`). ``warm()`` builds/caches the posting-list indexes
     and the column-sketch store once — request latency is then probe
-    cost, not build cost.
+    cost, not build cost. ``stop()`` releases the frames ``warm()``
+    cached itself; the session-cached indexes it reused stay cached.
     """
 
     def __init__(
@@ -75,11 +76,24 @@ class ApiServer:
         self._docs = None
         self._t_idx = None
         self._d_idx = None
+        self._values = self._sketches = None
+        # catalog tables the joinable route needs but the catalog lacks
+        self._missing: list[str] = []
+        self._owned: list[DataFrame] = []
 
     # -- warm-up ----------------------------------------------------------
+    def _cache(self, df: DataFrame) -> DataFrame:
+        """``cached(df)``, materialized. A frame this call cached (not one
+        a query or another server already cached) is released by
+        :meth:`stop`."""
+        out = cached(df)
+        if out.is_cached:
+            self._owned.append(out)
+        out.count()
+        return out
+
     def warm(self) -> None:
-        self._docs = cached(load(self.spark, self.sf_dir, "documents"))
-        self._docs.count()
+        self._docs = self._cache(load(self.spark, self.sf_dir, "documents"))
         self._t_idx = self._warm_trigram("title")
         self._d_idx = self._warm_trigram("description")
         if self.catalog_root is not None:
@@ -88,16 +102,23 @@ class ApiServer:
             # column_values tables that IncrementalIndexes maintains per
             # wave (a crawl with index_sketch=True appends both) — the
             # reference's LSH server boots from the sketch table the
-            # same way (lshserver/main.go:26-82). The session cache
-            # below is only the catalog-less demo path.
+            # same way (lshserver/main.go:26-82). A catalog whose crawl
+            # ran without index_sketch holds neither table: the other
+            # routes serve, the joinable one answers 503. The session
+            # cache below is only the catalog-less demo path.
             from findopendata_spark.catalog import SnapshotCatalog
             from findopendata_spark.indexing import IncrementalIndexes
 
             idx = IncrementalIndexes(SnapshotCatalog(self.catalog_root))
-            self._values = cached(idx.values_read(self.spark))
-            self._sketches = cached(idx.sketch_read(self.spark))
-            self._values.count()
-            self._sketches.count()
+            values = idx.values_read(self.spark)
+            sketches = idx.sketch_read(self.spark)
+            self._missing = [
+                t for t, df in (("column_sketches", sketches),
+                                ("column_values", values)) if df is None
+            ]
+            if not self._missing:
+                self._values = self._cache(values)
+                self._sketches = self._cache(sketches)
         else:
             self._values, self._sketches = sketch_store(self.spark, self.sf_dir)
 
@@ -117,10 +138,7 @@ class ApiServer:
                 self.spark, f"trigram_postings_{field}"
             ) is not None:
                 d = idx.trigram_index(self.spark, field)
-                d = {k: cached(d[k]) for k in ("postings", "sizes")}
-                d["postings"].count()
-                d["sizes"].count()
-                return d
+                return {k: self._cache(d[k]) for k in ("postings", "sizes")}
         return trigram_index(self.spark, self.sf_dir, field)
 
     # -- endpoint kernels (plain python -> list[dict]) --------------------
@@ -239,6 +257,11 @@ class ApiServer:
                 return 404, {"error": "package not found"}
             return 200, brief
         if path == "/api/joinable-column-search":
+            if self._missing:
+                return 503, {
+                    "error": "catalog holds no "
+                    + " or ".join(self._missing) + " table"
+                }
             return 200, {
                 "results": self.joinable_column_search(
                     one("file_id", ""),
@@ -289,3 +312,7 @@ class ApiServer:
             self._httpd.shutdown()
             self._httpd.server_close()
             self._httpd = None
+        for df in self._owned:
+            df.unpersist()
+        self._owned = []
+        self._docs = None  # a later start() warms again

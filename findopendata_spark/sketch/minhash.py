@@ -74,20 +74,3 @@ def minhash_partial(
         phv = perms.permute(h[i : i + chunk])
         out = np.minimum(out, phv.min(axis=1))
     return out
-
-
-def jaccard_estimate(mh_a: np.ndarray, mh_b: np.ndarray) -> float:
-    """Fraction of equal hashvalues (reference: LeanMinHash.jaccard,
-    used at ``apiserver/main.py:460-461``)."""
-    return float(np.count_nonzero(mh_a == mh_b)) / len(mh_a)
-
-
-def containment_estimate(j: float, x: int, q: int) -> float:
-    """Containment of the query set (size q) in a candidate set (size x)
-    from the Jaccard estimate — the reference's exact formula with its
-    edge cases (``apiserver/main.py:408-414``)."""
-    if j == 1.0:
-        return 1.0
-    if j == 0.0 or x == 0 or q == 0:
-        return 0.0
-    return max(j, min(min(x, q) / float(q), j * (1.0 + x) / (1.0 - j)))

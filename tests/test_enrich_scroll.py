@@ -1,27 +1,11 @@
-"""Tests for enrichment (C6/A8 lazy-model UDF) and scroll pagination (S2-S4)."""
+"""Tests for scroll pagination (S2-S4) and the distributed global rank."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from findopendata_spark.enrichment import VEC_DIM, enrich_titles
 from findopendata_spark.ranking import global_row_number
 from findopendata_spark.sources.scroll import paginate, pages_in_scroll_order
-
-
-def test_enrich_titles_vectors_and_oov(spark):
-    df = spark.createDataFrame(
-        [(1, "hello world"), (2, "a of xx"), (3, None)],
-        "id long, title string",
-    )
-    rows = {r["id"]: r for r in enrich_titles(df).collect()}
-    assert len(rows[1]["word_vector"]) == VEC_DIM
-    assert rows[1]["oov_count"] == 0
-    assert rows[2]["oov_count"] == 3  # 'a','of','xx' all < 3 chars
-    assert rows[3]["word_vector"] == [0.0] * VEC_DIM
-    # deterministic across runs (per-executor model is stateless)
-    rows2 = {r["id"]: r for r in enrich_titles(df).collect()}
-    assert rows2[1]["word_vector"] == rows[1]["word_vector"]
 
 
 def test_paginate_matches_offset_scroll(spark):

@@ -1,11 +1,6 @@
-"""Tests for sources / metadata / sinks / streaming / multimodal / dedup."""
+"""Tests for sources / metadata / catalog reads / multimodal / dedup."""
 
 from __future__ import annotations
-
-import glob
-import gzip
-import json
-import os
 
 import numpy as np
 import pytest
@@ -13,7 +8,6 @@ from pyspark.sql import functions as F
 
 from findopendata_spark.catalog import SnapshotCatalog
 from findopendata_spark.dedup import (
-    exact_dup_groups,
     near_dup_pairs,
     shingles_expr,
     simhash64,
@@ -23,9 +17,7 @@ from findopendata_spark.metadata import (
     freshness_filter,
     stale_work_list,
 )
-from findopendata_spark.sinks import write_avro, write_csv, write_json_gzip
 from findopendata_spark.sources.csv_blobs import parse_csv_blob, parse_csv_blobs
-from findopendata_spark.streaming import windowed_event_counts
 from findopendata_spark.text_analysis import tokens
 
 
@@ -78,22 +70,7 @@ def test_csv_blobs_distributed(spark, tmp_path):
     ]
 
 
-# ------------------------------------------------------- catalog MERGE (S16)
-
-def test_merge_upsert_freshness(spark, tmp_path):
-    cat = SnapshotCatalog(str(tmp_path / "cat"))
-    base = spark.createDataFrame(
-        [("k1", "old", 100), ("k2", "keep", 200)], "key string, v string, ts long"
-    )
-    cat.merge_upsert(spark, "t", base, ["key"])
-    upd = spark.createDataFrame(
-        [("k1", "new", 150), ("k2", "stale", 50), ("k3", "ins", 10)],
-        "key string, v string, ts long",
-    )
-    cat.merge_upsert(spark, "t", upd, ["key"], ts_col="ts")
-    got = {r["key"]: (r["v"], r["ts"]) for r in cat.read(spark, "t").collect()}
-    assert got == {"k1": ("new", 150), "k2": ("keep", 200), "k3": ("ins", 10)}
-
+# ------------------------------------------------------- catalog reads
 
 def test_read_at_time_travel(spark, tmp_path):
     """Two committed waves of a snapshot table: read_at(0) sees the first
@@ -266,56 +243,6 @@ def test_arrays_zip_column_pairs(spark):
     ]
 
 
-# ----------------------------------------------------------------- sinks
-
-def test_sinks_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([(1, "x"), (2, "y")], "id long, v string")
-    p = str(tmp_path / "j")
-    write_json_gzip(df, p)
-    files = glob.glob(os.path.join(p, "*.json.gz"))
-    assert files
-    rows = []
-    for fn in files:
-        with gzip.open(fn, "rt") as f:
-            rows += [json.loads(line) for line in f if line.strip()]
-    assert sorted(r["id"] for r in rows) == [1, 2]
-    write_csv(df, str(tmp_path / "c"))
-    back = spark.read.option("header", "true").csv(str(tmp_path / "c"))
-    assert back.count() == 2
-    # no spark-avro jar here → write_avro falls back to the engine's own
-    # OCF encoder (deep roundtrip coverage lives in tests/test_avro_ocf.py)
-    write_avro(df, str(tmp_path / "a"))
-    assert glob.glob(os.path.join(str(tmp_path / "a"), "*.avro"))
-
-
-# ----------------------------------------------------------------- streaming
-
-def test_streaming_matches_batch(spark, tmp_path):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "src")
-    ev.write.parquet(src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    windowed_event_counts(spark, src, ckpt, out)
-    got = spark.read.parquet(out)
-    # append mode only emits windows the watermark has passed; the final
-    # window(s) within `watermark` of max event time stay in state
-    cutoff = ev.agg(
-        (F.max("ts") - F.expr("INTERVAL 10 MINUTES")).alias("c")
-    ).collect()[0]["c"]
-    batch = (
-        ev.groupBy(F.window("ts", "5 minutes").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sum_value"))
-        .filter(F.col("win.end") <= F.lit(cutoff))
-    )
-    finalized = got.filter(F.col("win_end") <= F.lit(cutoff))
-    assert finalized.count() == batch.count()
-    j = finalized.select("win_start", "event_type", "cnt").exceptAll(
-        batch.select(F.col("win.start").alias("win_start"), "event_type", "cnt")
-    )
-    assert j.count() == 0
-    assert got.count() >= batch.count()  # emitted set ⊇ finalized set
-
-
 # ----------------------------------------------------------------- dedup
 
 @pytest.fixture(scope="module")
@@ -329,11 +256,6 @@ def dup_docs(spark):
         (5, "yet another entirely distinct body of text with no shared shingles at all"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_dup_groups(spark, dup_docs):
-    groups = exact_dup_groups(dup_docs).collect()
-    assert len(groups) == 1 and groups[0]["n"] == 2 and groups[0]["keeper"] == 1
 
 
 def test_near_dup_pairs_match_exact_pairwise(spark, dup_docs):
@@ -415,26 +337,6 @@ def test_embedding_near_dup_skew_guard(spark):
         for j in range(i + 1, n_cold):
             expect.add((n_hot + i, n_hot + j))
     assert got == expect
-
-
-def test_enrich_doc_json(spark):
-    """C6 full: the doc-JSON payload column (reference metadata.py:50-54
-    stores lm.process(title).to_json()); stub payload carries token
-    spans with offsets + in-vocab flags and names the stub model."""
-    import json as _json
-
-    from findopendata_spark.enrichment import enrich_doc_json
-
-    df = spark.createDataFrame(
-        [(1, "New York la"), (2, None)], "id long, title string"
-    )
-    rows = {r["id"]: r["doc_json"] for r in enrich_doc_json(df).collect()}
-    d = _json.loads(rows[1])
-    assert d["model"] == "hash-vector-stub"
-    assert [t["text"] for t in d["tokens"]] == ["new", "york", "la"]
-    assert [t["has_vector"] for t in d["tokens"]] == [True, True, False]
-    assert d["tokens"][1]["start"] == 4 and d["tokens"][1]["end"] == 8
-    assert _json.loads(rows[2])["tokens"] == []
 
 
 def test_near_dup_bucket_cap_bounds_candidates(spark):
@@ -713,140 +615,6 @@ def test_trained_ivf_recall_not_worse_than_seed(spark):
     assert 1 <= len(cells) <= 8
 
 
-def test_stateful_sessionize_stream_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionizer (SURVEY §2.8): the availableNow
-    run's final per-user update must equal the batch q21 sessionize, and
-    a SECOND availableNow run over appended data must continue from the
-    checkpointed state (counts grow, never reset)."""
-    import __spark_entry__ as E
-
-    from findopendata_spark.streaming.stateful import (
-        read_session_totals,
-        sessionize_stream,
-    )
-
-    src = str(tmp_path / "events_src")
-    out = str(tmp_path / "events_out")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    first = ev.filter(F.col("event_id") % 2 == 0)
-    second = ev.filter(F.col("event_id") % 2 == 1)
-    first.write.mode("overwrite").parquet(src)
-
-    ck = str(tmp_path / "ck")
-    sessionize_stream(spark, src, ck, out)
-    got1 = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in read_session_totals(spark, out).collect()
-    }
-    n_first = {
-        r["user_id"]: r["n"]
-        for r in first.groupBy("user_id").agg(F.count("*").alias("n")).collect()
-    }
-    assert {u: v[1] for u, v in got1.items()} == n_first
-
-    # append the rest; resumed query continues from the state store
-    second.write.mode("append").parquet(src)
-    sessionize_stream(spark, src, ck, out)
-    got2 = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in read_session_totals(spark, out).collect()
-    }
-    total_events = {
-        r["user_id"]: r["n"]
-        for r in ev.groupBy("user_id").agg(F.count("*").alias("n")).collect()
-    }
-    batch = {
-        r["user_id"]: r["n_sessions"]
-        for r in E.queries()["q21_sessionize"](
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    # the split interleaves arrival order, so session counts may differ
-    # from the batch answer (out-of-order arrival can split OR merge);
-    # the order-robust invariants: every event counted exactly once, and
-    # the resumed run strictly extends the first run's state
-    for u, n in total_events.items():
-        assert got2[u][1] == n
-        assert got2[u][1] >= got1.get(u, (0, 0))[1]
-        assert got2[u][0] >= got1.get(u, (0, 0))[0]
-
-    # clean single-pass parity: one run over ALL events, event-time order
-    src2 = str(tmp_path / "events_all")
-    out2 = str(tmp_path / "events_out2")
-    ev.orderBy("ts", "event_id").coalesce(1).write.parquet(src2)
-    sessionize_stream(spark, src2, str(tmp_path / "ck2"), out2)
-    got3 = {
-        r["user_id"]: r["n_sessions"]
-        for r in read_session_totals(spark, out2).collect()
-    }
-    assert got3 == batch
-
-
-def test_stateful_sessionize_three_batches_with_mid_stream_kill(
-    spark, tmp_path
-):
-    """VERDICT r03 item 8 (resume half): >= 3 micro-batches over the
-    query's lifetime with a KILLED attempt in the middle — a sink that
-    raises mid-batch fails before the commit log advances, so the
-    state-store version rolls back; the resumed run replays the same
-    planned batch and the final totals equal a clean one-pass run."""
-    from pyspark.sql.streaming import StreamingQueryException
-
-    from findopendata_spark.streaming.stateful import (
-        read_session_totals,
-        sessionize_stream,
-    )
-
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    # three chronological chunks (global window is fine at test scale)
-    tiled = ev.withColumn(
-        "_tile", F.ntile(3).over(Window.orderBy("ts", "event_id"))
-    )
-    chunks = [
-        tiled.filter(F.col("_tile") == i).drop("_tile") for i in (1, 2, 3)
-    ]
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-
-    # batch 1
-    chunks[0].write.mode("append").parquet(src)
-    sessionize_stream(spark, src, ck, out)
-    # batch 2 attempt is KILLED mid-sink (after a partial write — the
-    # replay appends identical rows under the same batch_id, which the
-    # latest-update reader tolerates by construction)
-    chunks[1].write.mode("append").parquet(src)
-
-    def killing_sink(batch_df, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out)
-        raise RuntimeError("injected mid-stream kill")
-
-    with pytest.raises(StreamingQueryException):
-        sessionize_stream(spark, src, ck, out, sink=killing_sink)
-    # resume: replays the failed batch exactly, then batch 3
-    sessionize_stream(spark, src, ck, out)
-    chunks[2].write.mode("append").parquet(src)
-    sessionize_stream(spark, src, ck, out)
-
-    got = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in read_session_totals(spark, out).collect()
-    }
-    # clean single-pass reference over the same events in event-time order
-    src2, out2 = str(tmp_path / "src2"), str(tmp_path / "out2")
-    ev.orderBy("ts", "event_id").coalesce(1).write.parquet(src2)
-    sessionize_stream(spark, src2, str(tmp_path / "ck2"), out2)
-    want = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in read_session_totals(spark, out2).collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_sample_frames_edges_and_resize_stub(spark):
     """Frame sampler: n_frames < k yields each frame exactly once, in
     order."""
@@ -973,45 +741,3 @@ def test_allpairs_plan_has_no_cross_join(spark):
     ).executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_stateful_sessionize_late_events_surfaced(spark, tmp_path):
-    """VERDICT r04 item 7: a micro-batch arriving with event times older
-    than the state's last-seen time is an ordering-contract violation —
-    it must be SURFACED (per-user n_late counter in every update), not
-    silently miscounted; in-order streams report n_late == 0."""
-    import datetime as dt
-
-    from findopendata_spark.streaming.stateful import (
-        read_session_totals,
-        sessionize_stream,
-    )
-
-    def ev_df(rows):
-        return spark.createDataFrame(
-            [
-                (i, dt.datetime(2024, 1, 1, 0, 0, s), u, "click", 1.0, "{}")
-                for i, (u, s) in enumerate(rows)
-            ],
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        )
-
-    src = str(tmp_path / "late_src")
-    out = str(tmp_path / "late_out")
-    ck = str(tmp_path / "late_ck")
-    # batch 1: user 7 at t=10,20; user 8 at t=30 (in order)
-    ev_df([(7, 10), (7, 20), (8, 30)]).write.mode("append").parquet(src)
-    sessionize_stream(spark, src, ck, out)
-    t1 = {r["user_id"]: r for r in read_session_totals(spark, out).collect()}
-    assert t1[7]["n_late"] == 0 and t1[8]["n_late"] == 0
-
-    # batch 2: user 7 gets TWO events older than its last_ts (t=5, 15)
-    # and one in order (t=25); user 8 stays in order (t=40)
-    ev_df([(7, 5), (7, 15), (7, 25), (8, 40)]).write.mode("append").parquet(src)
-    sessionize_stream(spark, src, ck, out)
-    t2 = {r["user_id"]: r for r in read_session_totals(spark, out).collect()}
-    assert t2[7]["n_late"] == 2, t2
-    assert t2[8]["n_late"] == 0
-    # every event still counted exactly once
-    assert t2[7]["n_events"] == 5 and t2[8]["n_events"] == 2

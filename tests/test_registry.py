@@ -108,6 +108,63 @@ def test_no_engine_module_imports_a_query_module():
     assert offenders == []
 
 
+def _package_imports(path: str) -> set[str]:
+    """The ``findopendata_spark`` names a file imports absolutely: each
+    ``from M import a`` gives both ``M`` and ``M.a`` (``a`` may be a
+    submodule); callers keep the names that are modules."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names |= {a.name for a in node.names}
+        elif isinstance(node, ast.ImportFrom) and node.level == 0:
+            names.add(node.module)
+            names |= {f"{node.module}.{a.name}" for a in node.names}
+    return {n for n in names if n.split(".")[0] == "findopendata_spark"}
+
+
+# The dataset-ingest modules no entry point reaches yet: CSV-blob parsing,
+# scroll pagination and package metadata. They leave the package with
+# their tests in a change of their own (ROADMAP open item 3); until then
+# they are the only modules allowed to be unreached.
+_UNREACHED_INGEST = {
+    "findopendata_spark.metadata",
+    "findopendata_spark.sources",
+    "findopendata_spark.sources.csv_blobs",
+    "findopendata_spark.sources.scroll",
+}
+
+
+def test_every_package_module_is_reachable_from_an_entry_point():
+    """Every package module is imported, directly or through other
+    package modules, by an entry point: ``__spark_entry__``, the crawler
+    CLI, the API server, the benchmark, the scripts or the bench files.
+    A module only tests import is dead code; ``_UNREACHED_INGEST`` names
+    the ones still awaiting deletion."""
+    files = {}
+    for path in glob.glob(
+        os.path.join(REPO, "findopendata_spark", "**", "*.py"), recursive=True
+    ):
+        mod = os.path.relpath(path, REPO)[: -len(".py")].replace(os.sep, ".")
+        files[mod.removesuffix(".__init__")] = path
+    todo = ["findopendata_spark.crawler.__main__", "findopendata_spark.serving"]
+    for pattern in ("__spark_entry__.py", "perfbench/*.py", "scripts/*.py",
+                    "bench*.py"):
+        for path in glob.glob(os.path.join(REPO, pattern)):
+            todo += _package_imports(path)
+    reached = set()
+    while todo:
+        name = todo.pop()
+        parts = name.split(".")
+        for i in range(1, len(parts) + 1):  # importing a.b.c imports a, a.b
+            mod = ".".join(parts[:i])
+            if mod in files and mod not in reached:
+                reached.add(mod)
+                todo += _package_imports(files[mod])
+    assert sorted(set(files) - reached) == sorted(_UNREACHED_INGEST)
+
+
 @pytest.mark.parametrize("oracle", [None, "", "  \n  ", b"SELECT 1"])
 def test_query_without_oracle_sql_is_rejected(oracle):
     with pytest.raises(ValueError):

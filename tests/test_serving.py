@@ -5,6 +5,7 @@ HTTP server, probe-cost requests, parity with the batch queries."""
 from __future__ import annotations
 
 import json
+import os
 import urllib.request
 
 import pytest
@@ -28,6 +29,50 @@ def _get(srv, path):
         f"http://127.0.0.1:{srv.port}{path}", timeout=120
     ) as r:
         return r.status, json.loads(r.read())
+
+
+def _get_error(srv, path):
+    """(status, body) of a request that answers an HTTP error."""
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(srv, path)
+    return e.value.code, json.loads(e.value.read())
+
+
+@pytest.fixture(scope="module")
+def tri_root(spark, tmp_path_factory):
+    """A catalog holding the crawl-maintained trigram tables of the
+    documents' titles and descriptions, and no sketch tables (a crawl
+    run without index_sketch)."""
+    from findopendata_spark.catalog import SnapshotCatalog
+    from findopendata_spark.indexing import IncrementalIndexes
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    root = str(tmp_path_factory.mktemp("serve") / "tri_cat")
+    idx = IncrementalIndexes(SnapshotCatalog(root))
+    idx.trigram_append(spark, docs, "title")
+    idx.trigram_append(spark, docs, "description")
+    return root
+
+
+@pytest.fixture(scope="module")
+def full_root(spark, tri_root):
+    """``tri_root``'s tables plus the column sketches and value sets of
+    q16's dockey records."""
+    import shutil
+
+    from findopendata_spark.catalog import SnapshotCatalog
+    from findopendata_spark.config import SketchConfig
+    from findopendata_spark.indexing import IncrementalIndexes
+    from findopendata_spark.sketch.lsh import dockey_records
+
+    root = os.path.join(os.path.dirname(tri_root), "full_cat")
+    shutil.copytree(tri_root, root)
+    IncrementalIndexes(SnapshotCatalog(root)).sketch_append(
+        spark, dockey_records(spark, SF), SketchConfig(), n_salts=4
+    )
+    return root
 
 
 def test_original_hosts(api, spark):
@@ -143,64 +188,97 @@ def test_concurrent_requests(api):
     assert codes == [200, 200, 200, 200]
 
 
-def test_joinable_route_from_persisted_store(api, spark, tmp_path):
+def test_joinable_route_from_persisted_store(api, spark, full_root):
     """VERDICT r04 item 6: with a catalog supplied, warm() probes the
     PERSISTED column_sketches and column_values tables IncrementalIndexes
     maintains instead of the session-cached store — and the
     joinable-column route answers identically (the reference's LSH
     server boots from the sketch table the same way,
     lshserver/main.go:26-82)."""
-    from findopendata_spark.catalog import SnapshotCatalog
-    from findopendata_spark.config import SketchConfig
-    from findopendata_spark.indexing import IncrementalIndexes
     from findopendata_spark.serving import ApiServer
-    from findopendata_spark.sketch.lsh import dockey_records
 
-    root = str(tmp_path / "serve_cat")
-    IncrementalIndexes(SnapshotCatalog(root)).sketch_append(
-        spark, dockey_records(spark, SF), SketchConfig(), n_salts=4
-    )
-    srv = ApiServer(spark, SF, catalog_root=root)
+    srv = ApiServer(spark, SF, catalog_root=full_root)
     srv.warm()
-    got = srv.joinable_column_search("q_probe", "dockey", 0.1, 10)
+    try:
+        got = srv.joinable_column_search("q_probe", "dockey", 0.1, 10)
+    finally:
+        srv.stop()
     want = api.joinable_column_search("q_probe", "dockey", 0.1, 10)
     assert got == want and len(got) > 0
 
 
 def test_similar_packages_route_from_persisted_trigram_store(
-    api, spark, tmp_path
+    api, spark, tri_root
 ):
     """VERDICT r05 item 8: with a catalog carrying the crawl-maintained
     trigram tables, warm() probes the PERSISTED postings/sizes
     (IncrementalIndexes latest-wave-wins read) instead of the
     session-built index — and the similar-packages route answers
-    identically to the session-path server."""
-    from findopendata_spark.catalog import SnapshotCatalog
-    from findopendata_spark.indexing import IncrementalIndexes
+    identically to the session-path server. The catalog holds no sketch
+    tables, and warm() needs none for this route."""
     from findopendata_spark.serving import ApiServer
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    root = str(tmp_path / "serve_tri_cat")
-    idx = IncrementalIndexes(SnapshotCatalog(root))
-    idx.trigram_append(spark, docs, "title")
-    idx.trigram_append(spark, docs, "description")
-
-    srv = ApiServer(spark, SF, catalog_root=root)
-    # warm only the trigram side (the sketch tables are absent in this
-    # catalog on purpose — the route under test does not need them)
-    srv._docs = spark.read.parquet(f"{SF}/documents.parquet").cache()
-    srv._t_idx = srv._warm_trigram("title")
-    srv._d_idx = srv._warm_trigram("description")
-
     q_doc = (
-        docs.filter(F.length("text") >= 80).agg(F.min("doc_id"))
+        spark.read.parquet(f"{SF}/documents.parquet")
+        .filter(F.length("text") >= 80).agg(F.min("doc_id"))
         .collect()[0][0]
     )
-    got = srv.similar_packages(q_doc, 10)
+    srv = ApiServer(spark, SF, catalog_root=tri_root)
+    srv.warm()
+    try:
+        got = srv.similar_packages(q_doc, 10)
+    finally:
+        srv.stop()
     want = api.similar_packages(q_doc, 10)
     assert got == want and len(got) == 10
+
+
+def test_sketchless_catalog_serves_five_routes_and_503s_joinable(
+    spark, tri_root
+):
+    """A catalog whose crawl ran without index_sketch has no sketch
+    tables: its server answers the five other routes, and the joinable
+    route answers 503 naming the missing table."""
+    from findopendata_spark.serving import ApiServer
+
+    doc_id = (
+        spark.read.parquet(f"{SF}/documents.parquet")
+        .filter(F.length("text") >= 80).agg(F.min("doc_id"))
+        .collect()[0][0]
+    )
+    srv = ApiServer(spark, SF, catalog_root=tri_root)
+    srv.start()
+    try:
+        paths = [
+            "/api/original-hosts",
+            "/api/keyword-search?q=data&limit=5",
+            "/api/keyword-search-title?q=data&limit=5",
+            f"/api/similar-packages?id={doc_id}&limit=5",
+            f"/api/package/{doc_id}",
+        ]
+        assert [_get(srv, p)[0] for p in paths] == [200] * 5
+        code, body = _get_error(
+            srv, "/api/joinable-column-search?file_id=q_probe&column_name=dockey"
+        )
+    finally:
+        srv.stop()
+    assert code == 503 and "column_sketches" in body["error"]
+
+
+def test_stop_releases_what_warm_cached(spark, full_root):
+    """warm() over a catalog caches the documents frame, the persisted
+    trigram postings/sizes and the sketch store; stop() releases them,
+    so the session's cached-plan count is the same after warm() and
+    stop() as before."""
+    from findopendata_spark.serving import ApiServer
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
+    srv = ApiServer(spark, SF, catalog_root=full_root)
+    srv.warm()
+    assert cache.cachedData().size() > before
+    srv.stop()
+    assert cache.cachedData().size() == before
 
 
 def test_joinable_route_from_crawl_catalog(spark, tmp_path):
@@ -272,7 +350,6 @@ def test_malformed_parameters_answer_400(api):
          "&threshold=high", "threshold"),
     ]
     for path, name in cases:
-        with pytest.raises(urllib.error.HTTPError) as e:
-            _get(api, path)
-        assert e.value.code == 400, path
-        assert name in json.loads(e.value.read())["error"], path
+        code, body = _get_error(api, path)
+        assert code == 400, path
+        assert name in body["error"], path

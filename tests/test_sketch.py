@@ -20,15 +20,15 @@ from findopendata_spark.sketch.column_sketch import sketch_columns
 from findopendata_spark.sketch.hll import hll_count, hll_partial
 from findopendata_spark.sketch.lsh import (
     bands_table,
+    containment_expr,
     joinable_column_search,
+    minhash_jaccard_expr,
     optimal_param,
 )
 from findopendata_spark.sketch.minhash import (
     MAX_HASH,
     MERSENNE_PRIME,
     MinHashPermutations,
-    containment_estimate,
-    jaccard_estimate,
     minhash_partial,
 )
 
@@ -73,28 +73,53 @@ def test_minhash_partials_merge():
     assert (whole == merged).all()
 
 
-def test_minhash_jaccard_accuracy():
+def test_minhash_jaccard_accuracy(spark):
+    """The JVM Jaccard the joinable search runs, over numpy signatures:
+    identical sets give 1, disjoint ones 0, overlapping ones their
+    Jaccard within MinHash error."""
     from findopendata_spark.crawler.graph import splitmix64
 
     perms = MinHashPermutations(256, 43)
-    # elements must enter as (uniform) hashes — the reference feeds
-    # farmhash32(value); sequential ints would break the universal-hash
-    # uniformity assumption
-    ha = splitmix64(np.arange(0, 1000, dtype=np.uint64)).astype(np.int64)
-    hb = splitmix64(np.arange(300, 1300, dtype=np.uint64)).astype(np.int64)
-    j = jaccard_estimate(minhash_partial(ha, perms), minhash_partial(hb, perms))
-    assert abs(j - 700 / 1300) < 0.1
+
+    def sig(lo, hi):
+        # elements must enter as (uniform) hashes — the reference feeds
+        # farmhash32(value); sequential ints would break the
+        # universal-hash uniformity assumption
+        h = splitmix64(np.arange(lo, hi, dtype=np.uint64)).astype(np.int64)
+        return [int(v) for v in minhash_partial(h, perms)]
+
+    pairs = [(sig(0, 1000), sig(300, 1300)), (sig(0, 1000), sig(0, 1000)),
+             (sig(0, 1000), sig(5000, 6000))]
+    df = spark.createDataFrame(pairs, "a array<bigint>, b array<bigint>")
+    got = [
+        r["j"] for r in df.select(
+            minhash_jaccard_expr(F.col("a"), F.col("b"), 256).alias("j")
+        ).collect()
+    ]
+    assert abs(got[0] - 700 / 1300) < 0.1
+    assert got[1:] == [1.0, 0.0]
 
 
-def test_containment_reference_cases():
-    assert containment_estimate(1.0, 5, 10) == 1.0
-    assert containment_estimate(0.0, 5, 10) == 0.0
-    assert containment_estimate(0.5, 0, 10) == 0.0
-    assert containment_estimate(0.5, 10, 0) == 0.0
-    # general formula: max(j, min(min(x,q)/q, j(1+x)/(1-j)))
+def test_containment_reference_cases(spark):
+    """The JVM containment the joinable search runs: the reference's
+    edge cases (j == 1, j == 0, x == 0, q == 0) and its general formula
+    max(j, min(min(x, q)/q, j(1+x)/(1-j)))."""
     j, x, q = 0.2, 50, 100
-    expect = max(j, min(min(x, q) / q, j * (1 + x) / (1 - j)))
-    assert containment_estimate(j, x, q) == pytest.approx(expect)
+    cases = [
+        (1.0, 5, 10, 1.0),
+        (0.0, 5, 10, 0.0),
+        (0.5, 0, 10, 0.0),
+        (0.5, 10, 0, 0.0),
+        (j, x, q, max(j, min(min(x, q) / q, j * (1 + x) / (1 - j)))),
+    ]
+    df = spark.createDataFrame(
+        cases, "j double, x bigint, q bigint, want double"
+    )
+    rows = df.select(
+        containment_expr(F.col("j"), F.col("x"), F.col("q")).alias("got"),
+        "want",
+    ).collect()
+    assert [r["got"] for r in rows] == pytest.approx([r["want"] for r in rows])
 
 
 def test_hll_estimate_tolerance():
